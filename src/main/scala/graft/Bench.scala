@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run benchmark: one JSON line with per-query wall seconds at
   * SPARK_GRAFT_SF_DIR. Each query gets one untimed warmup execution (JIT +
   * whole-stage-codegen compile + file-listing caches), then one timed run —
@@ -12,47 +10,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // AQE's partition coalescing is BYTE-targeted (64 MB advisory by
-    // default) and blind to per-byte CPU cost. This engine's hot stages
-    // are CPU-DENSE text/similarity kernels (Levenshtein verification,
-    // shingle intersection, posting dots) that chew ~1-5 MB/s per core,
-    // so a 64 MB reduce partition is minutes of single-task CPU — at
-    // sf0.1 the SNM verify stage coalesced to 2 tasks on 32 cores
-    // (q197 3.9 s -> 0.9 s with a 1 MB advisory; q133 4.8 -> 2.3,
-    // q23/q58 ~2x). Scale-dependent, so PARAMETERISED: deployments with
-    // byte-bound ETL stages should set 64-256 MB (the guide §2.2 block-
-    // count regime — 1 MB at a 100 TB shuffle would be a block
-    // explosion); the local default suits the CPU-dense kernel regime
-    // these fixtures exercise. See OPTIMIZATION_r16.md.
-    val advisory = sys.env.getOrElse("SPARK_GRAFT_ADVISORY_PARTITION", "1m")
-    val minPart = sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION", "64k")
-    // round-17 conf probes (VERDICT #7), both A/B'd at sf0.1 AND the
-    // 500k guard before deciding defaults (OPTIMIZATION_r17.md "Conf
-    // probes"; rows identical across configs in every leg):
-    // - preferSortMergeJoin=false (guide §3.1/§9: let the planner pick
-    //   shuffled-hash when its size conditions fit) ADOPTED: −6–15% on
-    //   the 24-query shuffle-heavy sf0.1 subset twice, −4% net over the
-    //   500k stages (hits −14%, snm −17%, jaccard +3–9%). Env-restorable;
-    //   deployments whose per-partition build sides risk OOM (the known
-    //   §3.1 trade) set SPARK_GRAFT_PREFER_SMJ=true.
-    // - io codec zstd REJECTED at both scales (+20% sf0.1, +28% 500k —
-    //   these shuffles are small and CPU-dense, the §2.3 regime where
-    //   compression CPU is pure overhead); knob kept for byte-bound
-    //   100 TB shuffles where the guide expects zstd to win.
-    val preferSmj = sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "false")
-    val ioCodec = sys.env.getOrElse("SPARK_GRAFT_IO_CODEC", "lz4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", advisory)
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", minPart)
-      .config("spark.sql.join.preferSortMergeJoin", preferSmj)
-      .config("spark.io.compression.codec", ioCodec)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session(cpus.toInt, Session.tuned)
     // dev loop: SPARK_GRAFT_BENCH_ONLY=q23,q58 times just those queries
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
@@ -70,9 +28,15 @@ object Bench {
           fn(spark, sfDir).count()
           (System.nanoTime() - t0) / 1e9
         }
-        name -> times.min
-      } catch { case _: Throwable => name -> -1.0 }
+        name -> Some(times.min)
+      } catch { case e: Throwable =>
+        // a failed query fails the run: it is named here, shows as null in
+        // the artifact, and the process exits non-zero below
+        System.err.println(s"[bench] $name failed: $e")
+        name -> None
+      }
     }
+    val failed = results.count(_._2.isEmpty)
     // The driver parses the metric line out of a 2000-char tail of the sbt
     // output (measured: BENCH_r01/r02 both landed `parsed: null` because the
     // full-name 9-decimal line was ~2.3k chars and its head fell outside the
@@ -81,9 +45,9 @@ object Bench {
     def fmt(v: Double): String = BigDecimal(v)
       .setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
     val qs = results.map { case (k, v) =>
-      "\"" + k.takeWhile(_ != '_') + "\":" + fmt(v)
+      "\"" + k.takeWhile(_ != '_') + "\":" + v.fold("null")(fmt)
     }.mkString("{", ",", "}")
-    val total = results.map(_._2).filter(_ >= 0).sum
+    val total = results.flatMap(_._2).sum
     val line = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"sf":"$sfDir"}"""
     println(line)
     // The driver parses its metric out of a 2000-char TAIL of the sbt
@@ -93,7 +57,7 @@ object Bench {
     // complete JSON line LAST (additive: the full line and the
     // bench_result.json artifact are unchanged) so the tail always holds
     // one parseable metric line end to end.
-    val summary = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n":${results.size},"sf":"$sfDir"}"""
+    val summary = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n":${results.size},"failed":$failed,"sf":"$sfDir"}"""
     println(summary)
     // Belt and braces: the same line goes to a file, so results never
     // depend on stdout-tail parsing (BENCH_r01/r02 were lost that way).
@@ -104,5 +68,6 @@ object Bench {
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(outFile), line + "\n")
     catch { case e: Throwable => System.err.println(s"[bench] file write failed: $e") }
     spark.stop()
+    if (failed > 0) sys.exit(1)
   }
 }

@@ -195,13 +195,7 @@ object EpssCli {
   }
 
   def main(argv: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session(4, sys.env.get("SPARK_MASTER").map("spark.master" -> _).toMap)
     try run(spark, argv.toSeq) finally spark.stop()
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, SaveMode}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, Sampling, Similarity, TextAnalysis}
@@ -19,25 +19,11 @@ object PipelineScaleBench {
     val nDocs = args.headOption.map(_.toInt).getOrElse(500000)
     val work = args.drop(1).headOption.getOrElse("/tmp/graft-pipescale")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // the CC loop is RDD-based; its tuple shuffles serialize through
-      // spark.serializer (DataFrame exchanges use UnsafeRow regardless),
-      // and Kryo is several times faster than Java serialization there
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      // the same round-17 conf-probe knobs as Bench.scala so a config
-      // candidate is A/B-able at THIS scale too before any default
-      // changes — fixture-only wins don't count. Defaults match Bench
-      // (shuffled-hash preference adopted on both-scale evidence).
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "false"))
-      .config("spark.io.compression.codec",
-        sys.env.getOrElse("SPARK_GRAFT_IO_CODEC", "lz4"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the CC loop is RDD-based; its tuple shuffles serialize through
+    // spark.serializer (DataFrame exchanges use UnsafeRow regardless),
+    // and Kryo is several times faster than Java serialization there
+    val spark = Session(cpus.toInt, Session.hashJoins ++
+      Map("spark.serializer" -> "org.apache.spark.serializer.KryoSerializer"))
 
     // synthetic corpus: 40 tokens drawn deterministically from a vocabulary
     // that GROWS with corpus size (Heaps'-law shape: real corpora add

@@ -1,9 +1,10 @@
 package graft
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 
 import graft.engine.Changes
+import graft.sources.ScoreStore
 
 /** Baseline-scale self-check: synthesize an EPSS-shaped dense matrix at the
   * reference's published workload size (NOTES.md:38 — 68.9M rows: ~300k
@@ -19,19 +20,8 @@ object ScaleBench {
     val nDays = args.drop(1).headOption.map(_.toInt).getOrElse(230)
     val work = args.drop(2).headOption.getOrElse("/tmp/graft-scale")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // more shuffle partitions than cores shrinks each window sort run
-    // (better cache locality + earlier spill-free finish); AQE coalesces
-    // them back if they come out too small
-    val shufflePartitions = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", s"$work/warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val first = java.time.LocalDate.parse("2023-03-07")
+    val spark = Session(cpus.toInt, Map("spark.sql.warehouse.dir" -> s"$work/warehouse"))
 
     // dense matrix: score changes only when hash(cve, day) falls under the
     // change rate; epss = deterministic function of (cve, last-change day)
@@ -40,7 +30,7 @@ object ScaleBench {
         (col("id") % nDays).as("day"),
         (col("id") / nDays).cast("long").as("cveNum"))
       .select(
-        date_add(lit(java.sql.Date.valueOf("2023-03-07")), col("day").cast("int")).as("date"),
+        date_add(lit(java.sql.Date.valueOf(first)), col("day").cast("int")).as("date"),
         concat(lit("CVE-2023-"), col("cveNum")).as("cve"),
         // piecewise-constant score: changes at pseudo-random days (~0.8%/day)
         (pmod(xxhash64(col("cveNum"),
@@ -76,7 +66,8 @@ object ScaleBench {
       .mode(SaveMode.Overwrite).saveAsTable("dense_bucketed")
     val t1 = System.nanoTime()
     val changedB = Changes.changedRows(
-      spark.table("dense_bucketed"), "cve", Seq("date"), "epss").count()
+      ScoreStore.readBucketedTable(spark, "dense_bucketed", first, first.plusDays(nDays - 1)),
+      "cve", Seq("date"), "epss").count()
     val secsB = (System.nanoTime() - t1) / 1e9
     require(changedB == changed, s"bucketed path disagrees: $changedB vs $changed")
     println(f"""{"metric":"scale_quantize_bucketed","dense_rows":$rows,"changed_rows":$changedB,"value":$secsB%.2f,"unit":"sec","rows_per_sec":${(rows / secsB).toLong}}""")

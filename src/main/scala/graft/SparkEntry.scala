@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.engine.{Changes, Sql, Summaries}
 import graft.functions.SimHash64Expr
-import graft.operators.{Dedup, Multimodal, Regression, Sampling, Similarity, TextAnalysis}
+import graft.operators.{Dedup, Multimodal, Par, Regression, Sampling, Similarity, TextAnalysis}
 import graft.streaming.EventStreams
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
@@ -61,17 +61,6 @@ object SparkEntry {
     */
   private def evalSampleN(df: DataFrame, idCol: String, target: Int): DataFrame =
     graft.operators.Sampling.hashSampleN(df, idCol, target).localCheckpoint()
-
-  /** Build two INDEPENDENT eager arms concurrently (optimization guide
-    * §2.6 — overlap independent jobs): the hybrid queries each construct
-    * a dense index (Lloyd/PQ collect barriers) and a sparse index
-    * (localCheckpoint materializations) with no data dependency, so one
-    * arm's jobs back-fill the executor tail of the other's instead of
-    * serializing behind the driver. Purely a wall-clock overlap — each
-    * arm runs the exact jobs it ran sequentially.
-    */
-  private def par2[A, B](a: => A, b: => B): (A, B) =
-    graft.operators.Par.par2(a, b)
 
   /** [[evalSampleN]]'s SQL twin: a winners CTE of the `target`
     * smallest-ticket ids of `table.idCol`, stated with the identical
@@ -2781,7 +2770,7 @@ object SparkEntry {
     "q260_hybrid_index_search" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
       val emb = t(s, dir, "embeddings")
-      val (dIdx, sIdx) = par2(
+      val (dIdx, sIdx) = Par.par2(
         Similarity.ivfPqIndexBuild(emb, "vec_id", "embedding",
           nCentroids = 16, subspaces = 4, subDim = 16, pqK = 4, pqIters = 2),
         TextAnalysis.sparseIndexBuild(docs, "doc_id", "text",
@@ -2866,7 +2855,7 @@ object SparkEntry {
     "q265_hybrid_query_serving" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
       val emb = t(s, dir, "embeddings")
-      val (dIdx, sIdx) = par2(
+      val (dIdx, sIdx) = Par.par2(
         Similarity.ivfPqIndexBuild(emb, "vec_id", "embedding",
           nCentroids = 16, subspaces = 4, subDim = 16, pqK = 4, pqIters = 2),
         TextAnalysis.sparseIndexBuild(docs, "doc_id", "text",
@@ -2910,7 +2899,7 @@ object SparkEntry {
       val base = evalSample(emb, "vec_id", 900)
       val delta = emb.filter(
         graft.operators.Sampling.hashBucket(col("vec_id")) >= 900)
-      val (dIdx, sIdx) = par2(
+      val (dIdx, sIdx) = Par.par2(
         Similarity.ivfPqIndexBuild(base, "vec_id", "embedding",
           nCentroids = 16, subspaces = 4, subDim = 16, pqK = 4, pqIters = 0),
         TextAnalysis.sparseIndexBuild(docs, "doc_id", "text",
@@ -2932,7 +2921,7 @@ object SparkEntry {
     "q268_score_fusion" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
       val qsamp = evalSampleN(docs, "doc_id", 16)
-      val (tpost, bpost) = par2(
+      val (tpost, bpost) = Par.par2(
         TextAnalysis.tfidfPostings(docs, "doc_id", "text",
           minDf = 2).localCheckpoint(),
         TextAnalysis.bm25Postings(docs, "doc_id", "text",
@@ -3080,7 +3069,7 @@ object SparkEntry {
       val base = java.nio.file.Files.createTempDirectory("graft-q278-").toString
       // the two index LIFECYCLES (build → save → reload) are independent
       // end to end — overlap them (guide §2.6)
-      val (dIdx, sIdx) = par2(
+      val (dIdx, sIdx) = Par.par2(
         {
           Similarity.ivfPqIndexSaveClustered(
             Similarity.ivfPqIndexBuild(emb, "vec_id", "embedding",
@@ -3112,7 +3101,7 @@ object SparkEntry {
     "q279_hybrid_weighted" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
       val emb = t(s, dir, "embeddings")
-      val (dIdx, sIdx) = par2(
+      val (dIdx, sIdx) = Par.par2(
         Similarity.ivfPqIndexBuild(emb, "vec_id", "embedding",
           nCentroids = 16, subspaces = 4, subDim = 16, pqK = 4, pqIters = 2),
         TextAnalysis.sparseIndexBuild(docs, "doc_id", "text",
@@ -3211,7 +3200,7 @@ object SparkEntry {
     "q282_hybrid_score_serving" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
       val emb = t(s, dir, "embeddings")
-      val (dIdx, sIdx) = par2(
+      val (dIdx, sIdx) = Par.par2(
         Similarity.ivfPqIndexBuild(emb, "vec_id", "embedding",
           nCentroids = 16, subspaces = 4, subDim = 16, pqK = 4, pqIters = 2),
         TextAnalysis.sparseIndexBuild(docs, "doc_id", "text",
@@ -3238,7 +3227,7 @@ object SparkEntry {
       val emb = t(s, dir, "embeddings")
       val base = java.nio.file.Files.createTempDirectory("graft-q283-").toString
       // independent lifecycles overlapped, exactly as q278 (guide §2.6)
-      val (dIdx, sIdx) = par2(
+      val (dIdx, sIdx) = Par.par2(
         {
           Similarity.ivfPqIndexSaveClustered(
             Similarity.ivfPqIndexBuild(emb, "vec_id", "embedding",

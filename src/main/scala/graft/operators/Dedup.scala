@@ -572,19 +572,6 @@ object Dedup {
       .agg(count(lit(1)).as("n_hits"))
   }
 
-  /** Fuzzy decontamination: keep corpus documents whose contaminated
-    * shingle fraction is at most `maxFraction` (documents too short to
-    * have any n-gram are kept — they cannot match anything).
-    */
-  def decontaminateFuzzy(corpus: DataFrame, benchmark: DataFrame,
-                         idCol: String, textCol: String, n: Int = 3,
-                         maxFraction: Double = 0.8): DataFrame = {
-    val tooContaminated = contaminationFraction(corpus, benchmark, idCol, textCol, n)
-      .filter(col("frac") > maxFraction)
-      .select(idCol)
-    corpus.join(tooContaminated, Seq(idCol), "left_anti")
-  }
-
   /** Cross-document duplicated span mining: n-gram shingles occurring in
     * at least `minDocs` DISTINCT documents, with document frequency and
     * total occurrence count — the boilerplate/template detector (CCNet's

@@ -300,7 +300,7 @@ object Graph {
       // extra exchange per half-step).
       // the half-step's global mass rides the CHECKPOINT'S OWN JOB as an
       // `observe` metric (CollectMetrics aggregates the rows as they
-      // stream into the checkpoint — verified by tools.ObserveProbe:
+      // stream into the checkpoint — pinned by GraphSpec's observe spec:
       // eager localCheckpoint is a `withAction`, so the metric is
       // available the moment the checkpoint returns), then normalizes as
       // a LITERAL. The previous form — a one-row aggregate over the

@@ -59,10 +59,6 @@ object IO {
     }
   }
 
-  /** S9: directory-level re-encode (util.py:69-119) — one declarative
-    * read→write; Spark parallelizes per file split, replacing the
-    * reference's thread pool.
-    */
   /** Lenient line-format ingest with corrupt-record ACCOUNTING: parse
     * `path` as jsonl/csv in PERMISSIVE mode with an explicit schema,
     * routing unparsable lines into `_corrupt_record` instead of failing
@@ -107,6 +103,10 @@ object IO {
     (good, bad)
   }
 
+  /** S9: directory-level re-encode (util.py:69-119) — one declarative
+    * read→write; Spark parallelizes per file split, replacing the
+    * reference's thread pool.
+    */
   def convert(spark: SparkSession, inPath: String, outPath: String,
               inFormat: String, outFormat: String, schema: Option[StructType] = None): Unit =
     write(read(spark, inPath, Some(inFormat), schema), outPath, Some(outFormat))

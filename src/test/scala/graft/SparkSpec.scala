@@ -7,20 +7,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * the forked test JVM).
   */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse-").toString)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Session(4, Map(
+    "spark.app.name" -> "graft-test",
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    "spark.sql.warehouse.dir" ->
+      java.nio.file.Files.createTempDirectory("graft-warehouse-").toString))
 }
 
 abstract class SparkSpec extends AnyFunSuite {

@@ -36,6 +36,28 @@ class GraphSpec extends SparkSpec {
     assert(m(2L) > m(3L))
   }
 
+  test("an observe() metric fires on the job an eager localCheckpoint runs") {
+    // hits normalizes each half-step by a mass observed on its checkpoint
+    // job, which needs the metric ready as soon as localCheckpoint returns
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    import org.apache.spark.sql.Observation
+    import org.apache.spark.sql.functions._
+    def observed(n: Long): (Option[Any], Long) = {
+      val obs = new Observation
+      val df = spark.range(n).select((col("id") * 2).as("v"))
+        .observe(obs, sum(col("v").cast("decimal(38,12)")).cast("double").as("__mass"))
+        .localCheckpoint()
+      // bounded wait, BEFORE any other action: a metric that never fires
+      // (or fires only on a later job) fails here instead of hanging
+      val mass = Await.result(Future(obs.get), 30.seconds).get("__mass")
+      (mass, df.count())
+    }
+    assert(observed(100) == ((Some(9900.0), 100L)))
+    assert(observed(0) == ((Some(null), 0L)))
+  }
+
   test("pageRank validates damping and the fixed-iteration contract") {
     val edges = Seq((0L, 1L)).toDF("src", "dst")
     intercept[IllegalArgumentException](Graph.pageRank(edges, "src", "dst", 1.0, 5))

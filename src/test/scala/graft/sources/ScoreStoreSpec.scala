@@ -75,7 +75,8 @@ class ScoreStoreSpec extends SparkSpec {
     ScoreStore.writeBucketedTable(threeDays.union(
       Seq(Score(d("2024-01-01"), "CVE-B", 0.5, 0.5),
         Score(d("2024-01-02"), "CVE-B", 0.6, 0.6)).toDF()), "scores_bucketed", 4)
-    val scan = spark.table("scores_bucketed")
+    val scan = ScoreStore.readBucketedTable(spark, "scores_bucketed",
+      LocalDate.parse("2024-01-01"), LocalDate.parse("2024-01-03"))
     val changed = graft.engine.Changes.changedRows(scan, "cve", Seq("date"), "epss")
     val plan = changed.queryExecution.executedPlan
     val exchanges = plan.collect {
