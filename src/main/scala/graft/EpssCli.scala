@@ -142,7 +142,7 @@ object EpssCli {
   private def scores(spark: SparkSession, a: Args): Unit = {
     val store = a.one("store").getOrElse(sys.error("--store required"))
     val latest = ScoreStore.maxDate(spark, store)
-      .getOrElse(sys.error("empty store"))
+      .getOrElse(sys.error(s"empty store: $store"))
     val date = a.one("date").map(LocalDate.parse)
     // model-epoch inclusion flags (cli.py include_v{1,2,3}_scores):
     // requested ranges clamp to the selected epoch window

@@ -36,6 +36,12 @@ object Schemas {
     StructField(Epss, DoubleType, nullable = false),
     StructField(Percentile, DoubleType, nullable = false)))
 
+  /** On-disk store schema: the feed columns in each file plus the `date`
+    * partition column taken from the `date=YYYY-MM-DD` directory name.
+    * Store scans pass it to the reader, so no scan infers a schema.
+    */
+  val storeSchema: StructType = csvSchema.add(StructField(Date, DateType, nullable = false))
+
   /** Default decimal precision for published scores (constants.py:48). */
   val ScorePrecision = 5
 }

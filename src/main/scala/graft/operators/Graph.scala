@@ -1,6 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Observation}
+import java.util.concurrent.TimeoutException
+
+import scala.concurrent.Await
+import scala.concurrent.duration._
+
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Rounding.zround
@@ -197,6 +202,22 @@ object Graph {
           .otherwise(lit(0.0)))
   }
 
+  /** A hits half-step's observed `__mass` as a double literal Column: a
+    * java.lang.Double, or (zero-row half-step, edge-free degenerate graphs)
+    * the metric row's NULL — the same NULL the one-row sum aggregate
+    * produced, so the division semantics are unchanged. The metric is set
+    * when the half-step's eager checkpoint returns, so the wait is bounded:
+    * a metric that never fires fails naming the half-step instead of
+    * blocking forever.
+    */
+  private[operators] def observedMass(obs: Observation, halfStep: String,
+                                      wait: FiniteDuration = 2.minutes): Column =
+    try lit(Await.result(obs.future, wait).getAs[Any]("__mass")).cast("double")
+    catch {
+      case _: TimeoutException => throw new IllegalStateException(
+        s"hits: the $halfStep half-step's mass metric did not arrive within $wait")
+    }
+
   /** HITS hubs/authorities over a DIRECTED edge list, `iters` fixed
     * iterations of the sum-normalized (L1) recurrence:
     * `a(v) ∝ Σ_{u→v} h(u)`, `h(u) ∝ Σ_{u→v} a(v)`, uniform init, each
@@ -278,12 +299,6 @@ object Graph {
     // reinstated ONCE at the end from the final half-step frames.
     def massOf(c: org.apache.spark.sql.Column) =
       sum(c.cast("decimal(38,12)")).cast("double")
-    // the observed metric value as a literal Column: a java.lang.Double,
-    // or (zero-row half-step, edge-free degenerate graphs) the metric
-    // row's NULL — the same NULL the one-row sum aggregate produced, so
-    // the division semantics are unchanged
-    def observedMass(obs: Observation): org.apache.spark.sql.Column =
-      lit(obs.get.get("__mass").orNull).cast("double")
     var hub = nodes.withColumn("hub", round(lit(1.0 / n.toDouble), 12))
     var auth: DataFrame = null
     for (_ <- 1 to iters) {
@@ -318,7 +333,7 @@ object Graph {
         .observe(authObs, massOf(col("auth")).as("__mass"))
         .localCheckpoint()
       auth = authRaw
-        .select(col("node"), round(col("auth") / observedMass(authObs), 12).as("auth"))
+        .select(col("node"), round(col("auth") / observedMass(authObs, "auth"), 12).as("auth"))
       val hubObs = new Observation
       val hubRaw = auth.join(eDst, auth("node") === eDst("__dst"))
         .groupBy(col("__src"))
@@ -327,7 +342,7 @@ object Graph {
         .observe(hubObs, massOf(col("hub")).as("__mass"))
         .localCheckpoint()
       hub = hubRaw
-        .select(col("node"), round(col("hub") / observedMass(hubObs), 12).as("hub"))
+        .select(col("node"), round(col("hub") / observedMass(hubObs, "hub"), 12).as("hub"))
     }
     // reinstate the dense view ONCE: both final half-steps left-join the
     // node table (absent = exact 0, the sparse-state convention — the

@@ -2,7 +2,10 @@ package graft.sources
 
 import java.time.LocalDate
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.Try
+
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DateType
 
@@ -10,27 +13,64 @@ import graft.engine.Schemas
 
 /** Columnar snapshot store (SURVEY.md §1.4).
   *
-  * Layout: Hive-partitioned parquet `root/date=YYYY-MM-DD/part-*.parquet` so
-  * Catalyst prunes partitions on date predicates for free — the idiomatic
-  * twin of the reference's one-file-per-date naming
+  * Layout: Hive-partitioned parquet `root/date=YYYY-MM-DD/part-*.parquet`,
+  * the idiomatic twin of the reference's one-file-per-date naming
   * `{workdir}/{YYYY-MM-DD}.parquet` (client.py:302-314). A flat-file layout
   * reader is kept for compatibility (S5: date inferred from the filename,
   * util.py:242-247).
+  *
+  * Listing contract: the days a store holds are the `date=` directory names
+  * of ONE Hadoop-FS `listStatus` of `root` on the driver ([[days]]). That
+  * listing alone answers [[maxDate]], picks the directories [[read]] scans
+  * and is [[ingestMany]]'s skip-if-present set, so the three cannot
+  * disagree. A missing root holds no days; a `date=` name that is not an
+  * ISO date fails naming the directory and the store.
   */
 object ScoreStore {
 
   private val DatePattern = "(\\d{4}-\\d{2}-\\d{2})"
 
-  /** Read the partitioned store, pruned to [min, max]. The range filter lands
-    * on the partition column, so only the needed `date=` directories are
-    * listed and scanned (PruneFileSourcePartitions).
+  /** The store's days with their partition directories, ascending. Runs no
+    * Spark job. Uses the store path's Hadoop FileSystem, not java.io, which
+    * sees nothing on hdfs:// or s3a://.
     */
-  def read(spark: SparkSession, root: String, min: LocalDate, max: LocalDate): DataFrame =
-    spark.read.parquet(root)
-      .withColumn(Schemas.Date, col(Schemas.Date).cast(DateType))
+  private def days(spark: SparkSession, root: String): Seq[(LocalDate, Path)] = {
+    val rootPath = new Path(root)
+    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(rootPath)) Seq.empty
+    else fs.listStatus(rootPath).toSeq
+      .filter(s => s.isDirectory && s.getPath.getName.startsWith("date="))
+      .map { s =>
+        val name = s.getPath.getName
+        val day = Try(LocalDate.parse(name.stripPrefix("date="))).getOrElse(
+          throw new IllegalArgumentException(
+            s"store $root: partition dir $name is not date=YYYY-MM-DD"))
+        day -> s.getPath
+      }
+      .sortBy(_._1.toEpochDay)
+  }
+
+  /** Read the store over [min, max]. Only the in-window `date=` directories
+    * from [[days]] are handed to the reader, with the fixed
+    * [[Schemas.storeSchema]] and `basePath` = root, so building the frame
+    * infers no schema and, for up to 32 directories (Spark's stock
+    * `parallelPartitionDiscovery.threshold`), lists files on the driver
+    * with no Spark job. A longer window (e.g. full-window quantize) pays one
+    * parallel listing job. A window with no partitions yields an empty frame
+    * with the canonical columns and types.
+    */
+  def read(spark: SparkSession, root: String, min: LocalDate, max: LocalDate): DataFrame = {
+    val dirs = days(spark, root).collect {
+      case (d, p) if !d.isBefore(min) && !d.isAfter(max) => p.toString
+    }
+    val scan =
+      if (dirs.isEmpty) spark.createDataFrame(java.util.List.of[Row](), Schemas.storeSchema)
+      else spark.read.schema(Schemas.storeSchema).option("basePath", root).parquet(dirs: _*)
+    scan
       .filter(col(Schemas.Date).between(
         lit(java.sql.Date.valueOf(min)), lit(java.sql.Date.valueOf(max))))
       .select(Schemas.scoreColumns.map(col): _*)
+  }
 
   /** Read with the quantization baseline: one extra day before `min` so the
     * first requested day has a diff baseline (intent of client.py:213-214,
@@ -111,36 +151,25 @@ object ScoreStore {
       .select(Schemas.scoreColumns.map(col): _*)
 
   /** S2: bulk idempotent ingest — fan one-day CSV ingests across a date
-    * range, skipping dates whose partition already exists (the store-level
-    * twin of the reference's exists-check skip, client.py:126-161). The
-    * per-file work is Spark-parallel; the loop is driver-side control only.
+    * range, skipping dates whose partition already exists in [[days]] (the
+    * store-level twin of the reference's exists-check skip,
+    * client.py:126-161). The per-file work is Spark-parallel; the loop is
+    * driver-side control only.
     */
   def ingestMany(spark: SparkSession, root: String,
                  files: Seq[(LocalDate, String)]): Seq[LocalDate] = {
-    // list existing partitions through the Hadoop FileSystem of the store
-    // path (NOT java.io.File, which sees nothing on hdfs:// or s3a:// and
-    // would silently re-ingest every date, degrading the idempotence
-    // contract twin of client.py's exists-check)
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val done: Set[String] =
-      if (fs.exists(rootPath))
-        fs.listStatus(rootPath).map(_.getPath.getName)
-          .filter(_.startsWith("date=")).map(_.stripPrefix("date=")).toSet
-      else Set.empty[String]
-    files.filterNot { case (d, _) => done.contains(d.toString) }.map { case (d, path) =>
+    val done = days(spark, root).map(_._1).toSet
+    files.filterNot { case (d, _) => done.contains(d) }.map { case (d, path) =>
       write(ingestCsv(spark, path, d), root)
       d
     }
   }
 
   /** Max date present in the store — the offline twin of the reference's
-    * network max-date discovery (client.py:386-402; SURVEY.md §7.6.4).
-    * Partition-column-only scan: no data files are read.
+    * network max-date discovery (client.py:386-402; SURVEY.md §7.6.4): the
+    * last day of the [[days]] listing, with no Spark job. None for a missing
+    * or empty store.
     */
-  def maxDate(spark: SparkSession, root: String): Option[LocalDate] = {
-    val r = spark.read.parquet(root)
-      .select(max(col(Schemas.Date).cast(DateType))).head()
-    Option(r.getDate(0)).map(_.toLocalDate)
-  }
+  def maxDate(spark: SparkSession, root: String): Option[LocalDate] =
+    days(spark, root).lastOption.map(_._1)
 }

@@ -65,19 +65,18 @@ object ScoreStream {
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: Dataset[Score], _: Long) =>
-        import org.apache.spark.sql.functions.col
-        val sp = batch.sparkSession
+        import org.apache.spark.sql.functions.{col, max, min}
         val b = batch.toDF()
-        val rootPath = new org.apache.hadoop.fs.Path(root)
-        val fs = rootPath.getFileSystem(sp.sparkContext.hadoopConfiguration)
-        val merged = if (fs.exists(rootPath)) {
-          val existing = sp.read.parquet(root)
-            .withColumn("date", col("date").cast(org.apache.spark.sql.types.DateType))
-            .select(b.columns.map(col): _*)
+        val span = b.agg(min(col("date")), max(col("date"))).head()
+        val merged = if (span.isNullAt(0)) b else {
+          // only the stored days the batch touches: ScoreStore.read scans
+          // the [batch min, batch max] date= dirs with the fixed schema
+          val existing = graft.sources.ScoreStore.read(batch.sparkSession, root,
+              span.getDate(0).toLocalDate, span.getDate(1).toLocalDate)
             .join(b.select("date").distinct(), Seq("date"), "left_semi")
             .join(b.select("date", "cve"), Seq("date", "cve"), "left_anti")
           b.unionByName(existing)
-        } else b
+        }
         graft.sources.ScoreStore.write(merged, root)
       }
       .start()

@@ -114,6 +114,28 @@ class EpssCliSpec extends SparkSpec {
     assert(out.contains("\"max_date\": \"2024-01-02\""))
   }
 
+  test("date-range on a missing or empty store prints an empty max_date") {
+    val tmp = Files.createTempDirectory("graft-cli-empty-")
+    Files.createDirectory(tmp.resolve("empty"))
+    for (root <- Seq(s"$tmp/missing", s"$tmp/empty")) {
+      val out = captureOut {
+        EpssCli.run(spark, Seq("date-range", "--store", root))
+      }
+      assert(out.contains("\"max_date\": \"\""), s"$root: $out")
+    }
+  }
+
+  test("scores on a missing or empty store fails with 'empty store: <root>'") {
+    val tmp = Files.createTempDirectory("graft-cli-empty-")
+    Files.createDirectory(tmp.resolve("empty"))
+    for (root <- Seq(s"$tmp/missing", s"$tmp/empty")) {
+      val e = intercept[RuntimeException] {
+        EpssCli.run(spark, Seq("scores", "--store", root, "--date", "2024-01-02"))
+      }
+      assert(e.getMessage == s"empty store: $root")
+    }
+  }
+
   test("writeJsonArray emits one JSON array with ISO dates (S4 row-oriented)") {
     val p = s"${Files.createTempDirectory("graft-json-")}/out.json"
     graft.engine.Outputs.writeJsonArray(

@@ -58,6 +58,15 @@ class GraphSpec extends SparkSpec {
     assert(observed(0) == ((Some(null), 0L)))
   }
 
+  test("a hits mass metric that never fires fails naming its half-step") {
+    import scala.concurrent.duration._
+    val never = new org.apache.spark.sql.Observation
+    val e = intercept[IllegalStateException] {
+      Graph.observedMass(never, "auth", 200.millis)
+    }
+    assert(e.getMessage.contains("auth half-step"))
+  }
+
   test("pageRank validates damping and the fixed-iteration contract") {
     val edges = Seq((0L, 1L)).toDF("src", "dst")
     intercept[IllegalArgumentException](Graph.pageRank(edges, "src", "dst", 1.0, 5))

@@ -4,6 +4,11 @@ import java.nio.file.Files
 import java.sql.Date
 import java.time.LocalDate
 
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -91,5 +96,103 @@ class ScoreStoreSpec extends SparkSpec {
     val root = s"$tmp/scores3"
     ScoreStore.write(threeDays, root)
     assert(ScoreStore.maxDate(spark, root).contains(LocalDate.parse("2024-01-03")))
+  }
+
+  /** A 40-day store: more `date=` dirs than Spark's parallel-listing
+    * threshold (32), so a scan of the whole root would run a listing job.
+    */
+  private lazy val fortyDays = {
+    val root = s"$tmp/forty"
+    ScoreStore.write((0 until 40).map(i =>
+      Score(Date.valueOf(LocalDate.parse("2024-01-01").plusDays(i)), "CVE-A", i / 100.0, 0.5)
+    ).toDF(), root)
+    root
+  }
+
+  /** Spark jobs `body` submits from this thread. Listeners hear job starts
+    * asynchronously, in order, so a sentinel job run after `body` marks the
+    * end: once the listener has seen it, it has seen every earlier job.
+    */
+  private def jobsRunBy(body: => Unit): Seq[String] = {
+    val sc = spark.sparkContext
+    val group = s"store-jobs-${java.util.UUID.randomUUID}"
+    val jobs = new ConcurrentLinkedQueue[String]
+    val sentinelSeen = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group) {
+          val desc = e.properties.getProperty("spark.job.description")
+          if (desc == "sentinel") sentinelSeen.countDown() else jobs.add(s"job ${e.jobId}: $desc")
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "store probe")
+      body
+      sc.setJobDescription("sentinel")
+      sc.parallelize(Seq(1), 1).count()
+      assert(sentinelSeen.await(30, TimeUnit.SECONDS), "listener never saw the sentinel job")
+      jobs.toArray(Array.empty[String]).toSeq
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  private def rootPaths(df: DataFrame): Seq[org.apache.hadoop.fs.Path] =
+    df.queryExecution.analyzed.collect {
+      case l: LogicalRelation if l.relation.isInstanceOf[HadoopFsRelation] =>
+        l.relation.asInstanceOf[HadoopFsRelation].location.rootPaths
+    }.flatten
+
+  test("maxDate plus building a 31-day read run no Spark job, before any action") {
+    val root = fortyDays
+    var df: DataFrame = null
+    val jobs = jobsRunBy {
+      assert(ScoreStore.maxDate(spark, root).contains(LocalDate.parse("2024-02-09")))
+      // 31 requested days + the baseline day = 32 dirs, the most Spark
+      // lists on the driver
+      df = ScoreStore.readWithBaseline(spark, root,
+        LocalDate.parse("2024-01-02"), LocalDate.parse("2024-02-01"))
+      df.queryExecution.optimizedPlan
+    }
+    assert(jobs.isEmpty, s"expected no Spark job, got: ${jobs.mkString("; ")}")
+    assert(df.count() == 32)
+  }
+
+  test("the scan's root paths are exactly the in-window date= dirs") {
+    val df = ScoreStore.read(spark, fortyDays,
+      LocalDate.parse("2024-01-05"), LocalDate.parse("2024-01-07"))
+    val roots = rootPaths(df)
+    assert(roots.map(_.getName).sorted ==
+      Seq("date=2024-01-05", "date=2024-01-06", "date=2024-01-07"))
+    assert(roots.map(_.getParent.getName).distinct == Seq("forty"))
+    assert(df.select("date").as[Date].collect().map(_.toString).sorted.toSeq ==
+      Seq("2024-01-05", "2024-01-06", "2024-01-07"))
+  }
+
+  test("a window with no partitions reads an empty frame with the canonical columns and types") {
+    for (root <- Seq(fortyDays, s"$tmp/no-such-store")) {
+      val df = ScoreStore.read(spark, root,
+        LocalDate.parse("2023-01-01"), LocalDate.parse("2023-01-31"))
+      assert(df.columns.toSeq == Schemas.scoreColumns)
+      assert(df.schema.map(_.dataType) == Schemas.scoreSchema.map(_.dataType))
+      assert(rootPaths(df).isEmpty)
+      assert(df.count() == 0)
+    }
+  }
+
+  test("a date= dir that is not an ISO date fails naming the dir and the store") {
+    val root = s"$tmp/malformed"
+    ScoreStore.write(threeDays, root)
+    Files.createDirectories(java.nio.file.Paths.get(s"$root/date=latest"))
+    val reads = Seq[() => Any](
+      () => ScoreStore.maxDate(spark, root),
+      () => ScoreStore.read(spark, root, LocalDate.parse("2024-01-01"), LocalDate.parse("2024-01-03")),
+      () => ScoreStore.ingestMany(spark, root, Nil))
+    for (r <- reads) {
+      val e = intercept[IllegalArgumentException](r())
+      assert(e.getMessage.contains("date=latest") && e.getMessage.contains(root), e.getMessage)
+    }
   }
 }
