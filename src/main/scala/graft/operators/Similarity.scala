@@ -1690,20 +1690,14 @@ object Similarity {
       .localCheckpoint()
     val (codebook, cents, subspaces, pqK) = collectIndexCodebooks(index)
     val pMax = nProbes.max
-    // query side ONCE at pMax: ADC lookup table + posexploded probe
-    // cells with their best-first rank — exactly ivfPqRank's probe shape
-    // plus the rank column the prefix filters read
-    val adc = array((0 until subspaces).map(sp =>
-      array((0 until pqK).map { c =>
-        val cv = if (c < cents(sp).length) cents(sp)(c).toSeq
-                 else Seq.fill(index.subDim)(0.0)
-        dot(pqSliceExpr(col("__qv"), sp, index.subDim), typedlit(cv))
-      }: _*)): _*)
+    // query side ONCE at pMax: the ADC lookup table ([[adcTable]]) +
+    // posexploded probe cells with their best-first rank — exactly
+    // ivfPqRank's probe shape plus the rank column the prefix filters read
     val probes0 = qs
       .select(col(idCol).as("query_id"), asDouble(col(vecCol)).as("__qv"))
       .withColumn("__qn", norm(col("__qv")))
       .filter(col("__qn") > 0)
-      .withColumn("__adc", adc)
+      .withColumn("__adc", adcTable(col("__qv"), cents, index.subDim, pqK))
       .select(col("query_id"), col("__qv"), col("__adc"),
         posexplode(nearestCells(codebook, col("__qv"), pMax))
           .as(Seq("__pos", "cell")))
@@ -2187,10 +2181,30 @@ object Similarity {
   }
 
   /** 9-dp slice `sp` of a kernel-ready double vector column — the PQ
-    * training space restated inline for per-row coding.
+    * training space restated inline for per-row coding. `sp` is a column
+    * so [[adcTable]] can pass its lambda's subspace index; a literal
+    * constant-folds to the fixed-offset slice.
     */
-  private def pqSliceExpr(v: Column, sp: Int, subDim: Int): Column =
-    transform(slice(v, sp * subDim + 1, subDim), x => round(x, 9))
+  private def pqSliceExpr(v: Column, sp: Column, subDim: Int): Column =
+    transform(slice(v, sp * subDim + 1, lit(subDim)), x => round(x, 9))
+
+  /** The per-query ADC lookup table
+    * `adc[sp][c] = q_sp(9 dp) · centroid(sp, c)` as ONE expression whose
+    * size does not grow with the codebook: the codebooks ride a single
+    * nested-array literal (a subspace with fewer than `pqK` codes is
+    * padded with zero vectors) and two nested `transform`s dot each
+    * subspace's 9-dp query slice with each of its centroids at run time —
+    * `subspaces·pqK` subDim-wide dots per query. A short or null-holding
+    * query slice dots to NULL.
+    */
+  private[operators] def adcTable(qv: Column,
+                                  cents: Array[Array[Array[Double]]],
+                                  subDim: Int, pqK: Int): Column = {
+    val padded = cents.toSeq.map(cs => (0 until pqK).map(c =>
+      if (c < cs.length) cs(c).toSeq else Seq.fill(subDim)(0.0)))
+    transform(typedlit(padded), (cb, sp) =>
+      transform(cb, cv => dot(pqSliceExpr(qv, sp, subDim), cv)))
+  }
 
   /** The kmeansLloyd argmin over ONE subspace codebook as a per-row
     * expression — the native kernel, bit-identical to [[pqAssigned]]'s
@@ -2279,7 +2293,7 @@ object Similarity {
                              subspaces: Int, subDim: Int): DataFrame =
     (0 until subspaces).foldLeft(src) { (acc, sp) =>
       acc.withColumn(s"__code_$sp",
-        pqCodeExpr(pqSliceExpr(vec, sp, subDim), cents(sp)))
+        pqCodeExpr(pqSliceExpr(vec, lit(sp), subDim), cents(sp)))
     }
 
   /** The shared IVF-PQ probe → ADC → survivor → rerank composition —
@@ -2311,18 +2325,13 @@ object Similarity {
                         rerank: Int, withScore: Boolean = false): DataFrame = {
     require(k >= 1 && rerank >= k, s"need rerank >= k >= 1, got k=$k rerank=$rerank")
     // query side: nProbe probe cells + the ADC lookup table
-    // `__adc[sp][c] = q_sp(9 dp) · centroid(sp, c)` — pqK·subspaces dots
-    // per QUERY, computed once, broadcast with the probes
-    val adc = array((0 until subspaces).map(sp =>
-      array((0 until pqK).map { c =>
-        val cv = if (c < cents(sp).length) cents(sp)(c).toSeq
-                 else Seq.fill(subDim)(0.0)
-        dot(pqSliceExpr(col("__qv"), sp, subDim), typedlit(cv))
-      }: _*)): _*)
+    // `__adc[sp][c] = q_sp(9 dp) · centroid(sp, c)` ([[adcTable]]: one
+    // constant-size expression, evaluated once per QUERY and broadcast
+    // with the probes)
     val probes0 = queries.select(col(idCol).as("query_id"), asDouble(col(vecCol)).as("__qv"))
       .withColumn("__qn", norm(col("__qv")))
       .filter(col("__qn") > 0)
-      .withColumn("__adc", adc)
+      .withColumn("__adc", adcTable(col("__qv"), cents, subDim, pqK))
       .withColumn("cell", explode(nearestCells(codebook, col("__qv"), nProbe)))
     val probes = baseDot.fold(probes0)(b => probes0.withColumn("__base", b))
 
@@ -2469,19 +2478,31 @@ object Similarity {
     * directory.
     */
   final case class IvfPqIndex(codes: DataFrame, coarse: DataFrame,
-                              pq: DataFrame, residual: Boolean, subDim: Int,
-                              // the codebooks as DRIVER-SIDE literals when the
-                              // constructor already has them (a build holds the
-                              // trained arrays; a load collects the relations to
-                              // validate them anyway) — [[collectIndexCodebooks]]
-                              // then skips its per-search collect job. Scoped to
-                              // one index VALUE inside one query invocation
-                              // (never persisted, never keyed on inputs across
-                              // runs); `.copy(codes = …)` keeps it valid because
-                              // coarse/pq travel unchanged through every copy
-                              // site (pruned scan, add, merge, cell filter).
-                              codebooksMemo: Option[(Array[(Long, Seq[Double])],
-                                Array[Array[Array[Double]]], Int, Int)] = None) {
+                              pq: DataFrame, residual: Boolean, subDim: Int) {
+
+    // the codebooks as DRIVER-SIDE literals when the value was made with
+    // them in hand (a build holds the trained arrays; a load collects the
+    // relations to validate them anyway) — [[collectIndexCodebooks]] then
+    // skips its per-search collect job. Scoped to one index VALUE (never
+    // persisted, never keyed on inputs across runs), and NOT a
+    // constructor parameter, so no caller can hand in a stale one:
+    // [[copy]] carries it only while `coarse` and `pq` are the very
+    // relations it was read from (the `copy(codes = …)` sites — pruned
+    // scan, add, merge, remove, cell filter); replacing either drops it.
+    private[Similarity] var codebooksMemo: Option[(Array[(Long, Seq[Double])],
+      Array[Array[Array[Double]]], Int, Int)] = None
+
+    /** The case-class copy; it keeps the codebook memo only while `coarse`
+      * and `pq` are unchanged.
+      */
+    def copy(codes: DataFrame = codes, coarse: DataFrame = coarse,
+             pq: DataFrame = pq, residual: Boolean = residual,
+             subDim: Int = subDim): IvfPqIndex = {
+      val c = IvfPqIndex(codes, coarse, pq, residual, subDim)
+      if ((coarse eq this.coarse) && (pq eq this.pq))
+        c.codebooksMemo = codebooksMemo
+      c
+    }
 
     /** The index's one-row self-description
       * `(residual, sub_dim, dim, subspaces, pq_k, n_centroids)` — scalar
@@ -2557,10 +2578,25 @@ object Similarity {
     * columns) is re-derived and REQUIRED to match — a stale meta, a
     * mixed directory, or a truncated codebook fails here, not as
     * plausible-looking wrong neighbors. Cost: two bounded aggregates
-    * over the codebook relations plus the one-row meta read.
+    * over the codebook relations plus the one-row meta read. A `coarse`
+    * or `pq` relation over [[IvfPqCodebookCapBytes]] on disk is refused
+    * before anything is collected.
     */
   def ivfPqIndexLoad(spark: org.apache.spark.sql.SparkSession,
-                     dir: String): IvfPqIndex = {
+                     dir: String): IvfPqIndex =
+    ivfPqIndexLoad(spark, dir, IvfPqCodebookCapBytes)
+
+  /** The on-disk size cap for each of an index's `coarse` and `pq`
+    * relations: [[ivfPqIndexLoad]] collects both onto the driver and every
+    * search inlines them as plan literals, so a larger codebook is refused
+    * at load instead of exhausting driver memory.
+    */
+  private val IvfPqCodebookCapBytes: Long = 64L << 20
+
+  /** [[ivfPqIndexLoad]] with an explicit codebook size cap. */
+  private[operators] def ivfPqIndexLoad(spark: org.apache.spark.sql.SparkSession,
+                                        dir: String,
+                                        codebookCapBytes: Long): IvfPqIndex = {
     // a cell-clustered layout ([[ivfPqIndexSaveClustered]]) reads `cell`
     // back as the partition directory's INFERRED type (int); read with
     // the cell field REQUESTED as long so both layouts expose ONE codes
@@ -2596,6 +2632,17 @@ object Similarity {
     }
     val coarse = spark.read.parquet(s"$dir/coarse")
     val pq = spark.read.parquet(s"$dir/pq")
+    // size-bound the codebook collect below BEFORE it runs: the files'
+    // on-disk length comes from one driver-side FS summary per relation
+    // (no Spark job)
+    Seq("coarse", "pq").foreach { rel =>
+      val p = new org.apache.hadoop.fs.Path(s"$dir/$rel")
+      val bytes = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .getContentSummary(p).getLength
+      require(bytes <= codebookCapBytes,
+        s"$dir/$rel holds $bytes bytes, over the $codebookCapBytes-byte cap " +
+          "on codebooks collected onto the driver")
+    }
     // ONE bounded collect both VALIDATES and KEEPS the codebooks: the
     // one-row meta unions with the FULL coarse and pq relations
     // (nCentroids + subspaces·pqK rows — the same rows every search
@@ -2633,6 +2680,8 @@ object Similarity {
     val pqTriples = rows.filter(_.getInt(0) == 1)
       .map(r => (r.getLong(1), r.getLong(2), r.getSeq[Double](3)))
     require(pqTriples.nonEmpty, s"$dir/pq holds no codebook rows — a torn directory")
+    require(coarsePairs.nonEmpty,
+      s"$dir/coarse holds no centroids — a torn directory")
     val pqS = pqTriples.map(_._1).max.toInt + 1
     val pqKGot = pqTriples.map(_._2).max.toInt + 1
     val (pqLo, pqHi) = (pqTriples.map(_._3.size).min, pqTriples.map(_._3.size).max)
@@ -2654,8 +2703,8 @@ object Similarity {
         s"[$cLo, $cHi] dims — a mixed directory")
     (0 until pqS).foreach(sp => require(codes.columns.contains(s"code_$sp"),
       s"$dir/codes is missing column code_$sp for the $pqS-subspace codebook"))
-    IvfPqIndex(codes, coarse, pq, residual, subDim,
-      codebooksMemo = Some(assembleCodebooks(coarsePairs, pqTriples)))
+    withCodebooks(IvfPqIndex(codes, coarse, pq, residual, subDim),
+      assembleCodebooks(coarsePairs, pqTriples))
   }
 
   /** Train and encode ONCE — the index half of the IVF-PQ split. One
@@ -2724,9 +2773,8 @@ object Similarity {
     // this index skip their codebook collect ([[collectIndexCodebooks]]'s
     // memo; the tuple matches the collect's reconstruction exactly:
     // cell-ascending codebook, (subspace, code)-indexed cents)
-    IvfPqIndex(codes, coarse, pq, residual, subDim,
-      codebooksMemo = Some((codebook.sortBy(_._1), cents,
-        cents.length, cents.map(_.length).max)))
+    withCodebooks(IvfPqIndex(codes, coarse, pq, residual, subDim),
+      (codebook.sortBy(_._1), cents, cents.length, cents.map(_.length).max))
   }
 
   /** Search a PERSISTED IVF-PQ index — retrain-free by construction:
@@ -2865,6 +2913,16 @@ object Similarity {
       baseDot, k, nProbe, subspaces, index.subDim, pqK, rerank, withScore)
   }
 
+  /** `index` carrying `cbs` as its codebook memo — only for a value just
+    * constructed from the relations `cbs` was read from (build, load).
+    */
+  private def withCodebooks(index: IvfPqIndex,
+                            cbs: (Array[(Long, Seq[Double])],
+                              Array[Array[Array[Double]]], Int, Int)): IvfPqIndex = {
+    index.codebooksMemo = Some(cbs)
+    index
+  }
+
   /** The two bounded codebook-relation collects every retrain-free verb
     * shares (search, encode, add): coarse → `(cell, centroid)` literals,
     * pq → ragged `centroids(subspace)(code)(dim)` — nCentroids +
@@ -2874,8 +2932,8 @@ object Similarity {
     */
   private def collectIndexCodebooks(index: IvfPqIndex)
       : (Array[(Long, Seq[Double])], Array[Array[Array[Double]]], Int, Int) = {
-    // an index whose constructor already held the codebooks driver-side
-    // (build: the trained arrays; load: the validation collect) answers
+    // an index made with the codebooks already driver-side (build: the
+    // trained arrays; load: the validation collect) answers
     // without a job — the memoized tuple is byte-identical to what the
     // collect below reconstructs (same rows, same sort keys)
     index.codebooksMemo.foreach(cb => return cb)
@@ -3038,7 +3096,7 @@ object Similarity {
           element_at(typedlit(codebook.toMap), col("cell")), (x, c) => x - c)
       else col("__cv")
     val errCols = (0 until subspaces).map { sp =>
-      val slice9 = pqSliceExpr(vec, sp, index.subDim)
+      val slice9 = pqSliceExpr(vec, lit(sp), index.subDim)
       val code = pqCodeExpr(slice9, cents(sp))
       val centArr = element_at(typedlit(cents(sp).map(_.toSeq)), code + 1)
       val diff = zip_with(slice9, centArr, (x, c) => x - c)

@@ -1440,19 +1440,16 @@ object TextAnalysis {
     var nv = -1L
     // the capped relation's footer count used to run SEQUENTIALLY after
     // the meta parse (its presence is meta-gated) — probe the directory
-    // up front instead and count it INSIDE the concurrent batch; the
-    // meta cross-checks below still fire in the original order (a mixed
-    // directory fails the same requires; a capped-schema problem now
-    // surfaces before the meta checks rather than after — messages
-    // unchanged)
+    // up front instead and count it INSIDE the concurrent batch (a
+    // filterless count reads no column); the meta cross-checks below
+    // fire in the original order, and the capped schema is checked only
+    // once meta says the index is capped, so a stray capped/ under an
+    // uncapped meta fails as the mixed directory it is
     val cappedPath = new org.apache.hadoop.fs.Path(s"$dir/capped")
     val fs = cappedPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val cappedExisting = if (fs.exists(cappedPath)) {
-      val cp = spark.read.parquet(s"$dir/capped")
-      require(Set("doc_id", "token", "weight").subsetOf(cp.columns.toSet),
-        s"$dir/capped must hold (doc_id, token, weight), got ${cp.columns.mkString(", ")}")
-      Some(cp)
-    } else None
+    val cappedExisting =
+      if (fs.exists(cappedPath)) Some(spark.read.parquet(s"$dir/capped"))
+      else None
     var nc = -1L
     graft.operators.Par.run(Seq(
       () => metaRows = spark.read.parquet(s"$dir/meta")
@@ -1505,6 +1502,9 @@ object TextAnalysis {
         require(c >= 1, s"$dir/meta: cap must be >= 1, got $c")
         require(cappedExisting.isDefined,
           s"$dir/meta says cap=$c but $dir/capped is missing — a mixed directory")
+        val cpCols = cappedExisting.get.columns
+        require(Set("doc_id", "token", "weight").subsetOf(cpCols.toSet),
+          s"$dir/capped must hold (doc_id, token, weight), got ${cpCols.mkString(", ")}")
         require(nc == nCapO.get,
           s"meta says ${nCapO.get} capped postings but $dir/capped holds $nc")
         cappedExisting

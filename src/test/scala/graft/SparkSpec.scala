@@ -1,5 +1,8 @@
 package graft
 
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -17,4 +20,38 @@ object TestSpark {
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   val sfDir = "/root/testdata/sf0.001"
+
+  /** Spark jobs `body` submits from this thread, each as
+    * `job <id>: <stage names>` (a stage is named for its action's call
+    * site, e.g. `collect at Similarity.scala:123`). Listeners hear job
+    * starts asynchronously, in order, so a sentinel job run after `body`
+    * marks the end: once the listener has seen it, it has seen every
+    * earlier job.
+    */
+  protected def jobsRunBy(body: => Unit): Seq[String] = {
+    val sc = spark.sparkContext
+    val group = s"spec-jobs-${java.util.UUID.randomUUID}"
+    val jobs = new ConcurrentLinkedQueue[String]
+    val sentinelSeen = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group) {
+          val desc = e.properties.getProperty("spark.job.description")
+          if (desc == "sentinel") sentinelSeen.countDown()
+          else jobs.add(s"job ${e.jobId}: ${e.stageInfos.map(_.name).distinct.mkString(", ")}")
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "job probe")
+      body
+      sc.setJobDescription("sentinel")
+      sc.parallelize(Seq(1), 1).count()
+      assert(sentinelSeen.await(30, TimeUnit.SECONDS), "listener never saw the sentinel job")
+      jobs.toArray(Array.empty[String]).toSeq
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
 }

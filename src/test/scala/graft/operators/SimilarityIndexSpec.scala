@@ -1033,4 +1033,136 @@ class SimilarityIndexSpec extends SparkSpec {
       assert(!r.isNullAt(r.fieldIndex("frac_index")))
     }
   }
+
+  /** The ADC table as it was written before [[Similarity.adcTable]]: one
+    * inline `dot(9-dp query slice, literal centroid)` column per
+    * (subspace, code), zero vectors padding a short subspace.
+    */
+  private def inlineAdc(qv: org.apache.spark.sql.Column,
+                        cents: Array[Array[Array[Double]]], subDim: Int,
+                        pqK: Int): org.apache.spark.sql.Column =
+    array(cents.indices.map(sp =>
+      array((0 until pqK).map { c =>
+        val cv = if (c < cents(sp).length) cents(sp)(c).toSeq
+                 else Seq.fill(subDim)(0.0)
+        Similarity.dot(
+          transform(slice(qv, sp * subDim + 1, subDim), x => round(x, 9)),
+          typedlit(cv))
+      }: _*)): _*)
+
+  private def dotsIn(df: org.apache.spark.sql.DataFrame): Int =
+    df.queryExecution.analyzed.collect { case p =>
+      p.expressions.map(_.collect {
+        case d: graft.functions.DotProductExpr => d
+      }.size).sum
+    }.sum
+
+  test("adcTable is bit-identical to the inline per-(subspace, code) dots: ragged subspace, short query, null element") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    // subspace 1 holds 2 of pqK = 3 codes (zero-padded); values off the
+    // 9-dp grid exercise the slice rounding
+    val cents = Array(
+      Array(Array(1.0, 2.0), Array(0.5, -1.25), Array(3.0, 0.1 + 0.2)),
+      Array(Array(-2.0, 1.5), Array(1e-10, 7.0)))
+    val schema = StructType(Seq(StructField("id", LongType),
+      StructField("qv", ArrayType(DoubleType, containsNull = true))))
+    val qs = spark.createDataFrame(java.util.Arrays.asList(
+      Row(0L, Seq(0.1, 0.2, 0.3, 0.4)),
+      Row(1L, Seq(1.0000000004, -3.5, 2.0 / 3.0, 1e-12)),
+      Row(2L, Seq(1.0, 2.0, 3.0)),              // short: subspace 1 slice is 1 wide
+      Row(3L, Seq[Any](1.0, null, 2.0, 4.0)),   // null element in subspace 0
+      Row(4L, null)), schema)
+    def bits(r: Row): Seq[Seq[Option[Long]]] =
+      if (r.isNullAt(0)) Seq.empty
+      else r.getSeq[scala.collection.Seq[Any]](0).map(_.toSeq.map(x =>
+        Option(x).map(d => java.lang.Double.doubleToRawLongBits(
+          d.asInstanceOf[Double]))))
+    val got = qs.orderBy("id")
+      .select(Similarity.adcTable(col("qv"), cents, 2, 3)).collect().map(bits)
+    val want = qs.orderBy("id")
+      .select(inlineAdc(col("qv"), cents, 2, 3)).collect().map(bits)
+    assert(got.toSeq == want.toSeq)
+    assert(got(0).map(_.size) == Seq(3, 3), "every subspace padded to pqK")
+    assert(got(0)(1)(2).contains(0L), "a padded code dots to +0.0")
+    assert(got(2)(0).forall(_.isDefined) && got(2)(1).forall(_.isEmpty),
+      "a short query's missing subspace is NULL")
+    assert(got(3)(0).forall(_.isEmpty) && got(3)(1).forall(_.isDefined),
+      "a null element nulls only its own subspace")
+  }
+
+  test("adcTable: the search plan's dot-product count does not grow with pqK") {
+    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    val qs = emb.filter($"vec_id" % 20 === 0)
+    def search(pqK: Int) = {
+      val idx = Similarity.ivfPqIndexBuild(emb, "vec_id", "embedding",
+        nCentroids = 8, subspaces = 4, subDim = 16, pqK = pqK, pqIters = 0)
+      val codes = idx.pq.agg(max(col("code"))).head().getInt(0) + 1
+      (codes, Similarity.ivfPqSearch(idx, emb, qs, "vec_id", "embedding",
+        k = 5, nProbe = 4, rerank = 20))
+    }
+    val (k4, s4) = search(4)
+    val (k32, s32) = search(32)
+    assert(k4 == 4 && k32 == 32)
+    assert(dotsIn(s4) == dotsIn(s32),
+      s"pqK=4: ${dotsIn(s4)} dots, pqK=32: ${dotsIn(s32)} dots")
+    assert(dotsIn(s4) < 4 * 4, "the ADC table is not spelled out per code")
+  }
+
+  test("IvfPqIndex.copy drops the codebook memo when pq changes, keeps it when only codes do") {
+    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    val qs = emb.filter($"vec_id" % 20 === 0)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.as[(Long, Long, Long)].collect().toSet
+    def search(idx: Similarity.IvfPqIndex) =
+      rows(Similarity.ivfPqSearch(idx, emb, qs, "vec_id", "embedding",
+        k = 5, nProbe = 4, rerank = 5))
+    // same coarse quantizer, different PQ codebooks (and codes)
+    val a = Similarity.ivfPqIndexBuild(emb, "vec_id", "embedding",
+      nCentroids = 8, subspaces = 4, subDim = 16, pqK = 8, pqIters = 0)
+    val b = Similarity.ivfPqIndexBuild(emb, "vec_id", "embedding",
+      nCentroids = 8, subspaces = 4, subDim = 16, pqK = 8, pqIters = 3)
+    assert(search(a.copy(codes = b.codes)) != search(b),
+      "the fixture's two codebooks rank differently")
+    assert(search(a.copy(codes = b.codes, pq = b.pq)) == search(b),
+      "a copy carrying b's pq ranks with b's codebooks")
+    // a codes-only copy (the pruned scan, add, merge, remove) keeps the
+    // memo: building its search runs no codebook collect
+    val pruned = a.copy(codes = a.codes.filter(col("cell") < 4))
+    assert(jobsRunBy(Similarity.ivfPqSearch(pruned, emb, qs, "vec_id",
+      "embedding", k = 5)).isEmpty)
+    assert(jobsRunBy(Similarity.ivfPqSearch(a.copy(pq = b.pq), emb, qs,
+      "vec_id", "embedding", k = 5)).nonEmpty,
+      "a copy with a replaced pq collects its codebooks")
+  }
+
+  test("ivfPqIndexLoad: an empty coarse relation fails as a torn directory") {
+    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    val idx = Similarity.ivfPqIndexBuild(emb, "vec_id", "embedding",
+      nCentroids = 4, subspaces = 4, subDim = 16, pqK = 4, pqIters = 0)
+    val dir = Files.createTempDirectory("graft-ivfpq-torn-").toString
+    Similarity.ivfPqIndexSave(idx, dir)
+    idx.coarse.limit(0).write.mode("overwrite").parquet(s"$dir/coarse")
+    val e = intercept[IllegalArgumentException](Similarity.ivfPqIndexLoad(spark, dir))
+    assert(e.getMessage.contains(s"$dir/coarse holds no centroids"), e.getMessage)
+  }
+
+  test("ivfPqIndexLoad refuses a codebook over the size cap before collecting it") {
+    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    val idx = Similarity.ivfPqIndexBuild(emb, "vec_id", "embedding",
+      nCentroids = 4, subspaces = 4, subDim = 16, pqK = 4, pqIters = 0)
+    val dir = Files.createTempDirectory("graft-ivfpq-cap-").toString
+    Similarity.ivfPqIndexSave(idx, dir)
+    var e: IllegalArgumentException = null
+    val jobs = jobsRunBy {
+      e = intercept[IllegalArgumentException](
+        Similarity.ivfPqIndexLoad(spark, dir, codebookCapBytes = 1000L))
+    }
+    assert(e.getMessage.contains(s"$dir/coarse") &&
+      e.getMessage.contains("1000-byte cap"), e.getMessage)
+    assert(!jobs.exists(_.contains("collect at")),
+      s"refused before the codebook collect, ran: ${jobs.mkString("; ")}")
+    // the default cap admits it
+    assert(Similarity.ivfPqIndexLoad(spark, dir).subDim == 16)
+  }
 }

@@ -1015,6 +1015,32 @@ class TextAnalysisSpec extends SparkSpec {
     assert(reUn.cap.isEmpty && reUn.capped.isEmpty)
   }
 
+  test("sparseIndexLoad: a stray capped/ with a foreign schema is a mixed directory under an uncapped meta") {
+    val corpus = Seq(
+      (0L, "apple banana apple"),
+      (1L, "apple cherry"),
+      (2L, "banana cherry")).toDF("doc_id", "text")
+    val foreign = Seq((1, "x")).toDF("a", "b")
+    val dir = java.nio.file.Files.createTempDirectory("sparsestray").toString
+    TextAnalysis.sparseIndexSave(
+      TextAnalysis.sparseIndexBuild(corpus, "doc_id", "text", minDf = 2), dir)
+    foreign.write.parquet(s"$dir/capped")
+    val e = intercept[IllegalArgumentException](
+      TextAnalysis.sparseIndexLoad(spark, dir))
+    assert(e.getMessage.contains(
+      s"$dir/meta says uncapped but $dir/capped exists — a mixed directory"),
+      e.getMessage)
+    // under a capped meta the same foreign relation is refused on its schema
+    val capped = java.nio.file.Files.createTempDirectory("sparseforeign").toString
+    TextAnalysis.sparseIndexSave(TextAnalysis.sparseIndexBuild(corpus, "doc_id",
+      "text", minDf = 2, cap = Some(2)), capped)
+    foreign.write.mode("overwrite").parquet(s"$capped/capped")
+    val e2 = intercept[IllegalArgumentException](
+      TextAnalysis.sparseIndexLoad(spark, capped))
+    assert(e2.getMessage.contains(s"$capped/capped must hold (doc_id, token, weight)"),
+      e2.getMessage)
+  }
+
   test("SparseIndex lifecycle: flag-free round-trip, search parity, fail-fast refusals") {
     val corpus = Seq(
       (0L, "apple banana apple"),

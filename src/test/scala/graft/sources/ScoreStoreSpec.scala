@@ -4,9 +4,6 @@ import java.nio.file.Files
 import java.sql.Date
 import java.time.LocalDate
 
-import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
@@ -107,36 +104,6 @@ class ScoreStoreSpec extends SparkSpec {
       Score(Date.valueOf(LocalDate.parse("2024-01-01").plusDays(i)), "CVE-A", i / 100.0, 0.5)
     ).toDF(), root)
     root
-  }
-
-  /** Spark jobs `body` submits from this thread. Listeners hear job starts
-    * asynchronously, in order, so a sentinel job run after `body` marks the
-    * end: once the listener has seen it, it has seen every earlier job.
-    */
-  private def jobsRunBy(body: => Unit): Seq[String] = {
-    val sc = spark.sparkContext
-    val group = s"store-jobs-${java.util.UUID.randomUUID}"
-    val jobs = new ConcurrentLinkedQueue[String]
-    val sentinelSeen = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group) {
-          val desc = e.properties.getProperty("spark.job.description")
-          if (desc == "sentinel") sentinelSeen.countDown() else jobs.add(s"job ${e.jobId}: $desc")
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "store probe")
-      body
-      sc.setJobDescription("sentinel")
-      sc.parallelize(Seq(1), 1).count()
-      assert(sentinelSeen.await(30, TimeUnit.SECONDS), "listener never saw the sentinel job")
-      jobs.toArray(Array.empty[String]).toSeq
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
   }
 
   private def rootPaths(df: DataFrame): Seq[org.apache.hadoop.fs.Path] =
