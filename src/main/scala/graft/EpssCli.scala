@@ -83,10 +83,17 @@ object EpssCli {
     (cmd, Args(m.toMap))
   }
 
-  def run(spark: SparkSession, argv: Seq[String]): Unit = {
+  def run(spark: SparkSession, argv: Seq[String]): Unit =
+    run(spark, argv, Outputs.DriverMaxRows)
+
+  /** [[run]] with an explicit cap on the rows `scores` prints to the
+    * console; more fails loudly.
+    */
+  private[graft] def run(spark: SparkSession, argv: Seq[String],
+                         consoleCapRows: Int): Unit = {
     val (cmd, a) = parseArgs(argv)
     cmd match {
-      case "scores" => scores(spark, a)
+      case "scores" => scores(spark, a, consoleCapRows)
       case "urls" =>
         // --date collapses to min=max (cli.py:132-134); without a store
         // there is no offline "latest" date, so max defaults to min
@@ -139,7 +146,7 @@ object EpssCli {
       s""""skipped": ${feeds.size - ingested.size}}""")
   }
 
-  private def scores(spark: SparkSession, a: Args): Unit = {
+  private def scores(spark: SparkSession, a: Args, consoleCapRows: Int): Unit = {
     val store = a.one("store").getOrElse(sys.error("--store required"))
     val latest = ScoreStore.maxDate(spark, store)
       .getOrElse(sys.error(s"empty store: $store"))
@@ -187,10 +194,7 @@ object EpssCli {
       case (None, Some("excel" | "xlsx")) =>
         sys.error("excel output requires --output PATH (a workbook cannot go to the console)")
       case (Some(path), f) => Outputs.write(base, path, f.getOrElse("parquet"), singleFile = true)
-      case (None, Some("json")) =>
-        println(base.toJSON.collect().mkString("[", ",", "]"))
-      case (None, Some("jsonl")) => Outputs.showJsonl(base, Int.MaxValue)
-      case (None, _) => Outputs.show(base, Int.MaxValue)
+      case (None, f) => Outputs.printConsole(base, f, consoleCapRows)
     }
   }
 

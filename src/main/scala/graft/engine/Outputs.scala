@@ -7,18 +7,48 @@ import graft.sources.IO
 /** Result sinks (S4/S6/S7 — cli.py:166-182, util.py:33-52).
   *
   * `table` = console pretty-print (`pl.Config.set_tbl_rows(-1)` means the
-  * reference prints ALL rows, cli.py:15-16 — here capped by default; pass
-  * n = Int.MaxValue for strict parity on small results). `json` console sink
+  * reference prints ALL rows, cli.py:15-16 — [[printConsole]] prints every
+  * row too, and fails loudly past a driver-side row cap). `json` console sink
   * relies on Spark rendering DateType as ISO-8601, which subsumes the
   * reference's custom encoder (json_encoder.py:5-9).
   */
 object Outputs {
 
-  def show(df: DataFrame, n: Int = 1000): Unit = df.show(n, truncate = false)
+  /** The default row cap of every driver-side sink. */
+  val DriverMaxRows = 1000000
 
-  /** S7: JSONL lines to the console — for small results only (driver-side). */
-  def showJsonl(df: DataFrame, n: Int = 1000): Unit =
-    df.limit(n).toJSON.collect().foreach(println)
+  /** The driver-side fetch every collecting sink shares: `fetch` runs on
+    * at most `maxRows + 1` rows of `df`, and more than `maxRows` fails
+    * loudly naming the `sink` and the `alternative` for large outputs,
+    * rather than silently truncating.
+    */
+  private def fetchBounded[T](df: DataFrame, maxRows: Int, sink: String,
+                              alternative: String)(fetch: DataFrame => Array[T]): Array[T] = {
+    val rows = fetch(df.limit(maxRows + 1))
+    require(rows.length <= maxRows,
+      s"$sink is a driver-side sink for small results (> $maxRows rows); " +
+        s"use $alternative for large outputs")
+    rows
+  }
+
+  /** The console sinks of `EpssCli scores` — every row or a loud failure
+    * past `maxRows` ([[fetchBounded]]): `json` prints one array, `jsonl`
+    * one object per line (S7), anything else a table with nothing
+    * truncated.
+    */
+  def printConsole(df: DataFrame, format: Option[String], maxRows: Int): Unit = {
+    val kind = format.filter(Set("json", "jsonl")).getOrElse("table")
+    def fetch[T](f: DataFrame => Array[T]): Array[T] =
+      fetchBounded(df, maxRows, s"console $kind output", "--output")(f)
+    kind match {
+      case "json" => println(fetch(_.toJSON.collect()).mkString("[", ",", "]"))
+      case "jsonl" => fetch(_.toJSON.collect()).foreach(println)
+      case _ =>
+        val rows = fetch(_.collect())
+        df.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
+          .show(rows.length, truncate = false)
+    }
+  }
 
   /** File sinks: csv / json(l) / parquet via the shared IO layer. */
   def write(df: DataFrame, path: String, format: String, singleFile: Boolean = false): Unit =
@@ -30,11 +60,9 @@ object Outputs {
     * to small results by `maxRows` (fails loudly rather than silently
     * truncating).
     */
-  def writeJsonArray(df: DataFrame, path: String, maxRows: Int = 1000000): Unit = {
-    val rows = df.limit(maxRows + 1).toJSON.collect()
-    require(rows.length <= maxRows,
-      s"writeJsonArray is a driver-side sink for small results (> $maxRows rows); " +
-        "use format=jsonl for large outputs")
+  def writeJsonArray(df: DataFrame, path: String, maxRows: Int = DriverMaxRows): Unit = {
+    val rows = fetchBounded(df, maxRows, "writeJsonArray", "format=jsonl")(
+      _.toJSON.collect())
     java.nio.file.Files.writeString(java.nio.file.Paths.get(path),
       rows.mkString("[", ",", "]"))
   }
@@ -51,12 +79,9 @@ object Outputs {
     * (dates are ISO-8601, matching the JSON sink). Driver-side by design —
     * like the reference — so `maxRows` bounds it loudly.
     */
-  def writeExcel(df: DataFrame, path: String, maxRows: Int = 1000000): Unit = {
+  def writeExcel(df: DataFrame, path: String, maxRows: Int = DriverMaxRows): Unit = {
     require(path.endsWith(".xlsx"), s"excel sink expects an .xlsx path, got $path")
-    val rows = df.limit(maxRows + 1).collect()
-    require(rows.length <= maxRows,
-      s"writeExcel is a driver-side sink for small results (> $maxRows rows); " +
-        "use parquet/csv for large outputs")
+    val rows = fetchBounded(df, maxRows, "writeExcel", "parquet/csv")(_.collect())
     // through the Hadoop FS like every other sink, so hdfs:// / s3a://
     // output paths work the same as local ones; checksum sidecars are
     // disabled so a local write yields report.xlsx, not a stray

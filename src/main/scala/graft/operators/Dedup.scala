@@ -225,15 +225,6 @@ object Dedup {
       lshBands(minhashSignatures(df, idCol, textCol, n, k), idCol, k, rowsPerBand),
       idCol, maxBucketDocs)
 
-  /** [[lshCandidates]] over a PRE-BUILT signature table (lets callers reuse
-    * one shingle/signature pass across the banding and verification
-    * branches).
-    */
-  def lshCandidatesFromSigs(sigs: DataFrame, idCol: String,
-                            k: Int = 8, rowsPerBand: Int = 2,
-                            maxBucketDocs: Int = DefaultMaxBucketDocs): DataFrame =
-    candidatesFromBands(lshBands(sigs, idCol, k, rowsPerBand), idCol, maxBucketDocs)
-
   /** The end-to-end corpus dedup: drop every document that is an exact OR
     * verified near-duplicate of a lower-id document. Edges = exact-dup
     * pairs (content digest groups) ∪ Jaccard-verified near-dup pairs;
@@ -247,13 +238,6 @@ object Dedup {
                   rowsPerBand: Int = 2): DataFrame =
     dedupCorpusKeeping(df, idCol, textCol, minJaccard, None, n, k, rowsPerBand)
 
-  /** [[dedupCorpus]] with a keep strategy: when `keepBy` is given, the
-    * survivor of each duplicate cluster is the row maximizing that
-    * column (id as tiebreak) — e.g. `n_chars` to keep the longest
-    * variant, a quality score to keep the best — instead of the min id.
-    * One extra broadcast-sized join against the (small) clustered-node
-    * set; the anti-join shape is unchanged.
-    */
   /** Shared duplicate-graph builder behind [[dedupCorpusKeeping]] and
     * [[dedupAudit]]: `(exactEdges, components)` — exact min-id-per-digest
     * edges plus Jaccard-verified near edges over exact-canonical docs,
@@ -341,6 +325,13 @@ object Dedup {
       .drop("component")
   }
 
+  /** [[dedupCorpus]] with a keep strategy: when `keepBy` is given, the
+    * survivor of each duplicate cluster is the row maximizing that
+    * column (id as tiebreak) — e.g. `n_chars` to keep the longest
+    * variant, a quality score to keep the best — instead of the min id.
+    * One extra broadcast-sized join against the (small) clustered-node
+    * set; the anti-join shape is unchanged.
+    */
   def dedupCorpusKeeping(df: DataFrame, idCol: String, textCol: String,
                          minJaccard: Double, keepBy: Option[String],
                          n: Int = 2, k: Int = 8, rowsPerBand: Int = 2): DataFrame = {

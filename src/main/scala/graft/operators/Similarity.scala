@@ -17,6 +17,12 @@ import graft.functions.Rounding.zround
   *     partial-aggregated bounded-heap top-k
   *     ([[graft.functions.BoundedTopK]]) — the only exchange carries
   *     `queries × partitions × k` heap entries, never the candidate set;
+  *   - the two-stage (filter-then-refine) verbs — int8, 1-bit, prefix-dim,
+  *     IVF-PQ and cell-pruned binary — share one skeleton: a cheap
+  *     stage-1 score feeds [[survivors]] (self-exclusion plus a bounded
+  *     `rerank` heap per query), and [[exactRerank]] is the one exact
+  *     cosine tail. The cell-pruned serves share [[probedCells]] and
+  *     [[rerankVectors]] (a stored `vec` payload or the corpus);
   *   - all-pairs near-dup is LSH-bucketed, not a cross join. Two
   *     generators share one exact verification tail: [[nearDupPairs]]
   *     (single table + 1-bit multi-probe, explicit-knob; its planes cap
@@ -99,17 +105,63 @@ object Similarity {
     * zero-vector suite.
     */
   private def cosinePairs(corpus: DataFrame, queries: DataFrame,
-                          idCol: String, vecCol: String): DataFrame = {
-    val c = corpus.select(col(idCol).as("neighbor_id"), asDouble(col(vecCol)).as("__cv"))
-      .withColumn("__cn", norm(col("__cv")))
-      .filter(col("__cn") > 0)
-    val q = queries.select(col(idCol).as("query_id"), asDouble(col(vecCol)).as("__qv"))
-      .withColumn("__qn", norm(col("__qv")))
-      .filter(col("__qn") > 0)
-    c.crossJoin(broadcast(q))
+                          idCol: String, vecCol: String): DataFrame =
+    normed(corpus, idCol, vecCol, "neighbor_id", "__cv", "__cn")
+      .crossJoin(broadcast(normed(queries, idCol, vecCol, "query_id", "__qv", "__qn")))
       .filter(col("neighbor_id") =!= col("query_id"))
       .withColumn("cos", dot(col("__cv"), col("__qv")) / (col("__cn") * col("__qn")))
-  }
+
+  /** `(id, v, n)`: `df`'s ids, its vectors widened to double, and their
+    * norms — norm-positive rows only (the [[cosinePairs]] policy). Both
+    * sides of every exact cosine in this file.
+    */
+  private def normed(df: DataFrame, idCol: String, vecCol: String,
+                     id: String, v: String, n: String): DataFrame =
+    df.select(col(idCol).as(id), asDouble(col(vecCol)).as(v))
+      .withColumn(n, norm(col(v)))
+      .filter(col(n) > 0)
+
+  /** Stage 1 of every two-stage (filter-then-refine) verb: from
+    * `(query_id, neighbor_id, …)` candidate pairs, drop self-matches,
+    * keep each query's top `rerank` by `score` (id ties) in a bounded
+    * heap, and explode the survivors to `(query_id, neighbor_id)` —
+    * ≤ queries·rerank rows. Stage 1's exchange carries
+    * queries×partitions×rerank heap entries, never the candidate set.
+    */
+  private def survivors(cand: DataFrame, score: Column, rerank: Int): DataFrame =
+    cand.filter(col("neighbor_id") =!= col("query_id"))
+      .withColumn("__score", score)
+      .groupBy("query_id")
+      .agg(TopKOps.topK(rerank, col("__score"), col("neighbor_id")).as("__top"))
+      .select(col("query_id"),
+        explode(transform(col("__top"), e => e.getField("id"))).as("neighbor_id"))
+
+  /** Stage 2's pairs: the stage-1 `survivors` (with any grouping keys
+    * they carry) joined to their rerank vectors `rerankVecs`
+    * `(neighbor_id, __cv, __cn)` and to the norm-positive query vectors,
+    * scored by the exact float `cos`. Both joins broadcast the bounded
+    * side: the ≤ queries·rerank survivor list onto the partitioned rerank
+    * vectors, the query vectors onto the survivors.
+    */
+  private def rerankPairs(survivors: DataFrame, rerankVecs: DataFrame,
+                          queries: DataFrame, idCol: String,
+                          vecCol: String): DataFrame =
+    rerankVecs
+      .join(broadcast(survivors), "neighbor_id")     // <= Q·rerank survivors
+      .join(broadcast(normed(queries, idCol, vecCol, "query_id", "__qv", "__qn")),
+        "query_id")
+      .withColumn("cos", dot(col("__cv"), col("__qv")) / (col("__cn") * col("__qn")))
+
+  /** The exact stage-2 tail of every two-stage verb: [[rerankPairs]]
+    * ranked (cos desc, id) into the final top-`k` per query
+    * ([[explodeRanks]]; `withScore` adds the 6-dp `cos`). One tail, so
+    * the rerank arithmetic cannot drift between the verbs.
+    */
+  private def exactRerank(survivors: DataFrame, rerankVecs: DataFrame,
+                          queries: DataFrame, idCol: String, vecCol: String,
+                          k: Int, withScore: Boolean = false): DataFrame =
+    explodeRanks(rerankPairs(survivors, rerankVecs, queries, idCol, vecCol), k,
+      col("cos"), col("neighbor_id"), withScore)
 
   /** Brute-force cosine top-k: for each query vector, the k nearest corpus
     * vectors (self-match excluded), rank-deterministic via (cos desc, id).
@@ -709,7 +761,7 @@ object Similarity {
       cosine = true)
 
   /** The ONE corpus-side pass every IVF-family operator starts from:
-    * `(neighbor_id, __cv, __n, cell)` — widened vector, norm, and the
+    * `(neighbor_id, __cv, __cn, cell)` — widened vector, norm, and the
     * literal-codebook cell assignment; zero-norm rows drop here (the
     * [[cosinePairs]] policy), so every downstream norm division is
     * structurally nonzero.
@@ -720,9 +772,9 @@ object Similarity {
     corpus.select(
         col(idCol).as("neighbor_id") +: asDouble(col(vecCol)).as("__cv") +:
           (if (keepRaw) Seq(col(vecCol).as("__raw")) else Nil): _*)
-      .withColumn("__n", norm(col("__cv")))
-      .filter(col("__n") > 0)
-      .withColumn("cell", nearestCell(codebook, col("__cv"), col("__n")))
+      .withColumn("__cn", norm(col("__cv")))
+      .filter(col("__cn") > 0)
+      .withColumn("cell", nearestCell(codebook, col("__cv"), col("__cn")))
 
   /** IVF-style ANN: a coarse quantizer assigns every vector to its nearest
     * centroid cell; queries probe only the `nProbe` nearest cells. Centroids
@@ -748,13 +800,11 @@ object Similarity {
     // join; zero-norm rows drop (the cosinePairs policy)
     val cells = ivfCells(corpus, idCol, vecCol, codebook)
     // each query probes its nProbe nearest cells — per-row slice + explode
-    val probes = queries.select(col(idCol).as("query_id"), asDouble(col(vecCol)).as("__qv"))
-      .withColumn("__qn", norm(col("__qv")))
-      .filter(col("__qn") > 0)
+    val probes = normed(queries, idCol, vecCol, "query_id", "__qv", "__qn")
       .withColumn("cell", explode(nearestCells(codebook, col("__qv"), nProbe)))
     val pairs = cells.join(broadcast(probes), "cell")
       .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("cos", dot(col("__cv"), col("__qv")) / (col("__n") * col("__qn")))
+      .withColumn("cos", dot(col("__cv"), col("__qv")) / (col("__cn") * col("__qn")))
     explodeRanks(pairs, k, col("cos"), col("neighbor_id"))
   }
 
@@ -914,23 +964,12 @@ object Similarity {
     def codes(df: DataFrame, id: String) =
       df.select(col(idCol).as(id),
         transform(quantizeInt8(col(vecCol)), x => x.cast("double")).as(s"__c$id"))
-    val survivors = codes(corpus, "neighbor_id")
+    val cand = codes(corpus, "neighbor_id")
       .crossJoin(broadcast(codes(queries, "query_id")))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("__approx", dot(col("__cneighbor_id"), col("__cquery_id")))
-      .groupBy("query_id")
-      .agg(TopKOps.topK(rerank, col("__approx"), col("neighbor_id")).as("__top"))
-      .select(col("query_id"),
-        explode(transform(col("__top"), e => e.getField("id"))).as("neighbor_id"))
-    def floats(df: DataFrame, id: String, v: String, n: String) =
-      df.select(col(idCol).as(id), asDouble(col(vecCol)).as(v))
-        .withColumn(n, norm(col(v)))
-        .filter(col(n) > 0)
-    val pairs = floats(corpus, "neighbor_id", "__cv", "__cn")
-      .join(broadcast(survivors), "neighbor_id")     // <= Q·rerank survivors
-      .join(broadcast(floats(queries, "query_id", "__qv", "__qn")), "query_id")
-      .withColumn("cos", dot(col("__cv"), col("__qv")) / (col("__cn") * col("__qn")))
-    explodeRanks(pairs, k, col("cos"), col("neighbor_id"))  // stage 2: exact
+    exactRerank(
+      survivors(cand, dot(col("__cneighbor_id"), col("__cquery_id")), rerank),
+      normed(corpus, idCol, vecCol, "neighbor_id", "__cv", "__cn"),
+      queries, idCol, vecCol, k)
   }
 
   /** Sign-bit (binary) quantization: pack each vector's signs into
@@ -982,58 +1021,32 @@ object Similarity {
       corpus, queries, idCol, vecCol, dim, k, rerank)
   }
 
-  /** The shared binary two-stage tail: `packedCorpus` is the stage-1
-    * side as `(neighbor_id, __cw)` sign words — packed inline by
+  /** Hamming distance of two [[signPack]] word arrays of `dim`-wide
+    * vectors: Σ `bit_count(xor)` per word. The binary stage-1 score is
+    * the sign agreement `dim − hamming`.
+    */
+  private def hamming(a: Column, b: Column, dim: Int): Column =
+    (0 until (dim + 31) / 32)
+      .map(i => bit_count(element_at(a, i + 1).bitwiseXOR(element_at(b, i + 1)))
+        .cast("long"))
+      .reduce(_ + _)
+
+  /** The binary two-stage body: `packedCorpus` is the stage-1 side as
+    * `(neighbor_id, __cw)` sign words — packed inline by
     * [[binaryRerankTopK]], read from a persisted [[BinaryIndex]] by
-    * [[binarySearch]]; one tail so the two paths cannot drift.
+    * [[binarySearch]].
     */
   private def binaryStages(packedCorpus: DataFrame, corpus: DataFrame,
                            queries: DataFrame, idCol: String, vecCol: String,
                            dim: Int, k: Int, rerank: Int): DataFrame = {
-    val nWords = (dim + 31) / 32
-    def hamming(a: Column, b: Column): Column =
-      (0 until nWords)
-        .map(i => bit_count(element_at(a, i + 1).bitwiseXOR(element_at(b, i + 1)))
-          .cast("long"))
-        .reduce(_ + _)
     val qWords = queries.filter(size(col(vecCol)) === dim)
       .select(col(idCol).as("query_id"), signPack(col(vecCol), dim).as("__qw"))
-    val survivors = packedCorpus
-      .crossJoin(broadcast(qWords))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("__agree",
-        (lit(dim.toLong) - hamming(col("__cw"), col("__qw"))).cast("double"))
-      .groupBy("query_id")
-      .agg(TopKOps.topK(rerank, col("__agree"), col("neighbor_id")).as("__top"))
-      .select(col("query_id"),
-        explode(transform(col("__top"), e => e.getField("id"))).as("neighbor_id"))
-    binaryExactRerank(survivors,
-      corpus.select(col(idCol).as("neighbor_id"), asDouble(col(vecCol)).as("__cv"))
-        .withColumn("__cn", norm(col("__cv"))).filter(col("__cn") > 0),
+    exactRerank(
+      survivors(packedCorpus.crossJoin(broadcast(qWords)),
+        (lit(dim.toLong) - hamming(col("__cw"), col("__qw"), dim)).cast("double"),
+        rerank),
+      normed(corpus, idCol, vecCol, "neighbor_id", "__cv", "__cn"),
       queries, idCol, vecCol, k)
-  }
-
-  /** The shared binary stage-2 tail: exact float cosine on the
-    * ≤ queries·rerank stage-1 survivors, norm-positive on both sides
-    * (the [[cosinePairs]] policy), (cos desc, id) rank. One tail for
-    * the full-scan ([[binaryStages]]) and cell-pruned
-    * ([[binarySearchCells]]) stage-1 forms, so the rerank arithmetic
-    * cannot drift between them; `rerankVecs` is `(neighbor_id, __cv,
-    * __cn)` — the float corpus, or a stored payload already carrying
-    * its norms.
-    */
-  private def binaryExactRerank(survivors: DataFrame, rerankVecs: DataFrame,
-                                queries: DataFrame, idCol: String,
-                                vecCol: String, k: Int): DataFrame = {
-    val qvs = queries.select(col(idCol).as("query_id"),
-        asDouble(col(vecCol)).as("__qv"))
-      .withColumn("__qn", norm(col("__qv")))
-      .filter(col("__qn") > 0)
-    val pairs = rerankVecs
-      .join(broadcast(survivors), "neighbor_id")     // <= Q·rerank survivors
-      .join(broadcast(qvs), "query_id")
-      .withColumn("cos", dot(col("__cv"), col("__qv")) / (col("__cn") * col("__qn")))
-    explodeRanks(pairs, k, col("cos"), col("neighbor_id"))  // stage 2: exact
   }
 
   /** A persisted binary (sign-bit) index: the packed words relation
@@ -1148,50 +1161,25 @@ object Similarity {
         "serve with binaryRerankTopK/binarySearch")
     val (codebook, _, _, _) = collectIndexCodebooks(index)
     val dim = codebook.head._2.length
-    val nWords = (dim + 31) / 32
-    val qs = queries.localCheckpoint(false)
-    val probed = qs
-      .select(explode(nearestCells(codebook, asDouble(col(vecCol)), nProbe))
-        .as("cell"))
-      .distinct().collect().map(_.getLong(0))
-    val codes =
-      if (probed.isEmpty) index.codes
-      else index.codes.filter(col("cell").isin(probed: _*))
+    val (qs, codes) = probedCells(index.codes, queries, vecCol, codebook, nProbe)
     // query side: packed words + the exploded probe cells, broadcast —
     // each (query, candidate) pair joins once because a row's cell is
     // unique and a query's probe set is distinct
-    val qWords = qs.select(col(idCol).as("query_id"),
-        asDouble(col(vecCol)).as("__qv"))
-      .withColumn("__qn", norm(col("__qv")))
-      .filter(col("__qn") > 0)
+    val qWords = normed(qs, idCol, vecCol, "query_id", "__qv", "__qn")
       .select(col("query_id"), signPack(col("__qv"), dim).as("__qw"),
         explode(nearestCells(codebook, col("__qv"), nProbe)).as("cell"))
-    def hamming(a: Column, b: Column): Column =
-      (0 until nWords)
-        .map(i => bit_count(element_at(a, i + 1).bitwiseXOR(element_at(b, i + 1)))
-          .cast("long"))
-        .reduce(_ + _)
-    val survivors = codes
+    val cand = codes
       .select(col("id").as("neighbor_id"), col("cell"), col("words").as("__cw"))
       .join(broadcast(qWords), "cell")
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("__agree",
-        (lit(dim.toLong) - hamming(col("__cw"), col("__qw"))).cast("double"))
-      .groupBy("query_id")
-      .agg(TopKOps.topK(rerank, col("__agree"), col("neighbor_id")).as("__top"))
-      .select(col("query_id"),
-        explode(transform(col("__top"), e => e.getField("id"))).as("neighbor_id"))
     // stage 2: a stored vec payload serves its own rerank (the pruned
-    // codes relation — corpus-free, both stages partition-pruned); the
-    // stored nrm is reused, rows norm-positive by the build's drop
-    val rerankVecs =
-      if (index.codes.columns.contains("vec"))
-        codes.select(col("id").as("neighbor_id"),
-          asDouble(col("vec")).as("__cv"), col("nrm").as("__cn"))
-      else
-        corpus.select(col(idCol).as("neighbor_id"), asDouble(col(vecCol)).as("__cv"))
-          .withColumn("__cn", norm(col("__cv"))).filter(col("__cn") > 0)
-    binaryExactRerank(survivors, rerankVecs, qs, idCol, vecCol, k)
+    // codes relation — corpus-free, both stages partition-pruned)
+    exactRerank(
+      survivors(cand,
+        (lit(dim.toLong) - hamming(col("__cw"), col("__qw"), dim)).cast("double"),
+        rerank),
+      rerankVectors(codes, Option.unless(codes.columns.contains("vec"))(corpus),
+        idCol, vecCol),
+      qs, idCol, vecCol, k)
   }
 
   /** Operating-point planner for [[binarySearchCells]] — the q242/q262
@@ -1243,25 +1231,16 @@ object Similarity {
     import spark.implicits._
     val (codebook, _, _, _) = collectIndexCodebooks(index)
     val dim = codebook.head._2.length
-    val nWords = (dim + 31) / 32
     val pMax = nProbes.max
     val qs = queries.localCheckpoint(false)
     val bf = bruteForceTopK(corpus, qs, idCol, vecCol, k)
       .select(col("query_id"), col("neighbor_id")).localCheckpoint()
-    val probes = qs.select(col(idCol).as("query_id"),
-        asDouble(col(vecCol)).as("__qv"))
-      .withColumn("__qn", norm(col("__qv")))
-      .filter(col("__qn") > 0)
+    val probes = normed(qs, idCol, vecCol, "query_id", "__qv", "__qn")
       .select(col("query_id"), signPack(col("__qv"), dim).as("__qw"),
         posexplode(nearestCells(codebook, col("__qv"), pMax))
           .as(Seq("__pos", "cell")))
       .select(col("query_id"), col("__qw"), col("cell"),
         (col("__pos") + 1).as("__prn"))
-    def hamming(a: Column, b: Column): Column =
-      (0 until nWords)
-        .map(i => bit_count(element_at(a, i + 1).bitwiseXOR(element_at(b, i + 1)))
-          .cast("long"))
-        .reduce(_ + _)
     // materialized ONCE: the (nProbes × reranks) grid unions one
     // aggregation per point over this relation, and a lazy `cand` would
     // re-run the stage-1 probe join + hamming pass per grid point
@@ -1272,38 +1251,14 @@ object Similarity {
     val cand = index.codes
       .select(col("id").as("neighbor_id"), col("cell"), col("words").as("__cw"))
       .join(broadcast(probes), "cell")
-      .filter(col("neighbor_id") =!= col("query_id"))
       .withColumn("__agree",
-        (lit(dim.toLong) - hamming(col("__cw"), col("__qw"))).cast("double"))
+        (lit(dim.toLong) - hamming(col("__cw"), col("__qw"), dim)).cast("double"))
       .localCheckpoint()
     val combos = for { p <- nProbes; r <- reranks } yield (p, r)
-    val anns = combos.map { case (p, r) =>
-      cand.filter(col("__prn") <= p)
-        .groupBy("query_id")
-        .agg(TopKOps.topK(r, col("__agree"), col("neighbor_id")).as("__top"))
-        .select(lit(p).as("n_probe"), lit(r).as("rerank"), col("query_id"),
-          explode(transform(col("__top"), e => e.getField("id"))).as("neighbor_id"))
-    }.reduce(_ unionByName _)
-    val rerankVecs =
-      if (index.codes.columns.contains("vec"))
-        index.codes.select(col("id").as("neighbor_id"),
-          asDouble(col("vec")).as("__cv"), col("nrm").as("__cn"))
-      else
-        corpus.select(col(idCol).as("neighbor_id"), asDouble(col(vecCol)).as("__cv"))
-          .withColumn("__cn", norm(col("__cv"))).filter(col("__cn") > 0)
-    val qvs = qs.select(col(idCol).as("query_id"), asDouble(col(vecCol)).as("__qv"))
-      .withColumn("__qn", norm(col("__qv")))
-      .filter(col("__qn") > 0)
-    val ranked = rerankVecs.join(broadcast(anns), "neighbor_id")
-      .join(broadcast(qvs), "query_id")
-      .withColumn("__cos",
-        dot(col("__cv"), col("__qv")) / (col("__cn") * col("__qn")))
-      .groupBy(col("n_probe"), col("rerank"), col("query_id"))
-      .agg(TopKOps.topK(k, col("__cos"), col("neighbor_id")).as("__top"))
-      .select(col("n_probe"), col("rerank"), col("query_id"),
-        explode(transform(col("__top"), e => e.getField("id"))).as("neighbor_id"))
-    val hits = ranked.join(bf, Seq("query_id", "neighbor_id"))
-      .groupBy(col("n_probe"), col("rerank")).agg(count(lit(1)).as("__hits"))
+    val hits = gridHits(combos, cand, col("__agree"),
+      rerankVectors(index.codes,
+        Option.unless(index.codes.columns.contains("vec"))(corpus), idCol, vecCol),
+      qs, bf, idCol, vecCol, k)
     // EXACT per-point stage-1 rows: probe ranks joined to cell
     // occupancy (empty cells contribute 0) — grid-sized one-row rollups
     val occ = index.codes.groupBy(col("cell")).agg(count(lit(1)).as("__occ"))
@@ -1338,6 +1293,34 @@ object Similarity {
       .select("n_probe", "rerank", "mean_recall", "est_rows", "chosen")
   }
 
+  /** The grid tail both operating-point planners share. Each
+    * `(n_probe, rerank)` point of `combos` keeps the [[survivors]] by
+    * `score` of the checkpointed stage-1 candidates `cand` within its
+    * probe rank (`__prn <= n_probe` — a tighter point's probe set is a
+    * prefix of the best-first ranking). ONE exact-cosine pass
+    * ([[rerankPairs]]) then reranks every point's survivors, the
+    * per-point top-`k` heap grouped by the grid keys — the
+    * [[explodeRanks]] score and (cos desc, id asc) tie rule, so the same
+    * top-k sets as a per-point search. Output: the hits against brute
+    * force `bf` per point, `(n_probe, rerank, __hits)`.
+    */
+  private def gridHits(combos: Seq[(Int, Int)], cand: DataFrame, score: Column,
+                       rerankVecs: DataFrame, qs: DataFrame, bf: DataFrame,
+                       idCol: String, vecCol: String, k: Int): DataFrame = {
+    val anns = combos.map { case (p, r) =>
+      survivors(cand.filter(col("__prn") <= p), score, r)
+        .select(lit(p).as("n_probe"), lit(r).as("rerank"), col("query_id"),
+          col("neighbor_id"))
+    }.reduce(_ unionByName _)
+    rerankPairs(anns, rerankVecs, qs, idCol, vecCol)
+      .groupBy(col("n_probe"), col("rerank"), col("query_id"))
+      .agg(TopKOps.topK(k, col("cos"), col("neighbor_id")).as("__top"))
+      .select(col("n_probe"), col("rerank"), col("query_id"),
+        explode(transform(col("__top"), e => e.getField("id"))).as("neighbor_id"))
+      .join(bf, Seq("query_id", "neighbor_id"))
+      .groupBy(col("n_probe"), col("rerank")).agg(count(lit(1)).as("__hits"))
+  }
+
   /** Matryoshka (prefix-dimension) two-stage retrieval — the MRL serving
     * pattern: rank every (query, candidate) pair by the cosine of the
     * FIRST `prefixDim` dims only (an MRL-trained embedding front-loads
@@ -1364,25 +1347,15 @@ object Similarity {
         slice(asDouble(col(vecCol)), 1, prefixDim).as(s"__p$id"))
         .withColumn(s"__pn$id", norm(col(s"__p$id")))
         .filter(col(s"__pn$id") > 0)
-    val survivors = pre(corpus, "neighbor_id")
+    val cand = pre(corpus, "neighbor_id")
       .crossJoin(broadcast(pre(queries, "query_id")))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("__approx",
+    exactRerank(
+      survivors(cand,
         dot(col("__pneighbor_id"), col("__pquery_id")) /
-          (col("__pnneighbor_id") * col("__pnquery_id")))
-      .groupBy("query_id")
-      .agg(TopKOps.topK(rerank, col("__approx"), col("neighbor_id")).as("__top"))
-      .select(col("query_id"),
-        explode(transform(col("__top"), e => e.getField("id"))).as("neighbor_id"))
-    def floats(df: DataFrame, id: String, v: String, n: String) =
-      df.select(col(idCol).as(id), asDouble(col(vecCol)).as(v))
-        .withColumn(n, norm(col(v)))
-        .filter(col(n) > 0)
-    val pairs = floats(corpus, "neighbor_id", "__cv", "__cn")
-      .join(broadcast(survivors), "neighbor_id")     // <= Q·rerank survivors
-      .join(broadcast(floats(queries, "query_id", "__qv", "__qn")), "query_id")
-      .withColumn("cos", dot(col("__cv"), col("__qv")) / (col("__cn") * col("__qn")))
-    explodeRanks(pairs, k, col("cos"), col("neighbor_id"))  // stage 2: exact
+          (col("__pnneighbor_id") * col("__pnquery_id")),
+        rerank),
+      normed(corpus, idCol, vecCol, "neighbor_id", "__cv", "__cn"),
+      queries, idCol, vecCol, k)
   }
 
   /** Bucketed ANN top-k: equi-join on LSH bucket instead of a cross join.
@@ -1693,10 +1666,7 @@ object Similarity {
     // query side ONCE at pMax: the ADC lookup table ([[adcTable]]) +
     // posexploded probe cells with their best-first rank — exactly
     // ivfPqRank's probe shape plus the rank column the prefix filters read
-    val probes0 = qs
-      .select(col(idCol).as("query_id"), asDouble(col(vecCol)).as("__qv"))
-      .withColumn("__qn", norm(col("__qv")))
-      .filter(col("__qn") > 0)
+    val probes0 = normed(qs, idCol, vecCol, "query_id", "__qv", "__qn")
       .withColumn("__adc", adcTable(col("__qv"), cents, index.subDim, pqK))
       .select(col("query_id"), col("__qv"), col("__adc"),
         posexplode(nearestCells(codebook, col("__qv"), pMax))
@@ -1708,49 +1678,16 @@ object Similarity {
         probes0.withColumn("__base",
           dot(col("__qv"), element_at(typedlit(codebook.toMap), col("cell"))))
       else probes0
-    val coded = index.codes.select(
-      col("id").as("neighbor_id") +: col("cell") +: col("nrm").as("__n") +:
-        (0 until subspaces).map(sp => col(s"code_$sp").as(s"__code_$sp")): _*)
-    val adcSum = (0 until subspaces).map(sp =>
-      element_at(element_at(col("__adc"), sp + 1), col(s"__code_$sp") + 1))
-      .reduce(_ + _)
-    val approx = round(
-      (if (index.residual) col("__base") + adcSum else adcSum) / col("__n"), 6)
+    val coded = codedSide(index.codes, subspaces)
     // materialized ONCE (the binary planner's rule): lazy, the probe
     // join + ADC pass would re-run per grid point
     val cand = coded.join(broadcast(probes), "cell")
-      .filter(col("neighbor_id") =!= col("query_id"))
       .select(col("query_id"), col("neighbor_id"), col("__prn"),
-        approx.as("__approx"))
+        adcScore(subspaces, index.residual).as("__approx"))
       .localCheckpoint()
-    val anns = combos.map { case (p, r) =>
-      cand.filter(col("__prn") <= p)
-        .groupBy("query_id")
-        .agg(TopKOps.topK(r, col("__approx"), col("neighbor_id")).as("__top"))
-        .select(lit(p).as("n_probe"), lit(r).as("rerank"), col("query_id"),
-          explode(transform(col("__top"), e => e.getField("id"))).as("neighbor_id"))
-    }.reduce(_ unionByName _)
-    // shared stage 2: one exact-cosine pass over every point's survivors,
-    // the per-point explodeRanks heap grouped by the grid keys — same
-    // score, same (cos desc, id asc) tie rule, same top-k sets
-    val rerankVecs = corpus
-      .select(col(idCol).as("neighbor_id"), asDouble(col(vecCol)).as("__cv"))
-      .withColumn("__cn", norm(col("__cv")))
-      .filter(col("__cn") > 0)
-    val qvs = qs.select(col(idCol).as("query_id"), asDouble(col(vecCol)).as("__qv"))
-      .withColumn("__qn", norm(col("__qv")))
-      .filter(col("__qn") > 0)
-    val ranked = rerankVecs.join(broadcast(anns), "neighbor_id")
-      .join(broadcast(qvs), "query_id")
-      .withColumn("__cos",
-        dot(col("__cv"), col("__qv")) / (col("__cn") * col("__qn")))
-      .groupBy(col("n_probe"), col("rerank"), col("query_id"))
-      .agg(TopKOps.topK(k, col("__cos"), col("neighbor_id")).as("__top"))
-      .select(col("n_probe"), col("rerank"), col("query_id"),
-        explode(transform(col("__top"), e => e.getField("id"))).as("neighbor_id"))
-    val hits = ranked.join(bf, Seq("query_id", "neighbor_id"))
-      .groupBy(col("n_probe"), col("rerank"))
-      .agg(count(lit(1)).as("__hits"))
+    val hits = gridHits(combos, cand, col("__approx"),
+      normed(corpus, idCol, vecCol, "neighbor_id", "__cv", "__cn"),
+      qs, bf, idCol, vecCol, k)
     // all one-row/bounded: |queries|, |codes|, nCentroids, subspaces
     val stats = bf.agg(countDistinct(col("query_id")).as("__nq"))
       .crossJoin(index.codes.agg(count(lit(1)).as("__ncodes")))
@@ -2302,9 +2239,9 @@ object Similarity {
     * index ([[ivfPqSearch]]) entries are thin wrappers that can never
     * drift apart (the round-11 duplication hazard).
     *
-    *   - `coded`: `(neighbor_id, cell, __n, __code_0…)` — the encoded
+    *   - `coded`: `(neighbor_id, cell, __cn, __code_0…)` — the encoded
     *     corpus (inline pass or persisted index relation);
-    *   - `rerankVecs`: `(neighbor_id, __cv, __n)` — raw vectors for the
+    *   - `rerankVecs`: `(neighbor_id, __cv, __cn)` — raw vectors for the
     *     exact stage-2 cosine, zero-norm rows already dropped;
     *   - `baseDot`: the per-probe `q · centroid(cell)` term residual
     *     encoding adds to the ADC sum (None ⇒ raw encoding — the sum is
@@ -2328,43 +2265,41 @@ object Similarity {
     // `__adc[sp][c] = q_sp(9 dp) · centroid(sp, c)` ([[adcTable]]: one
     // constant-size expression, evaluated once per QUERY and broadcast
     // with the probes)
-    val probes0 = queries.select(col(idCol).as("query_id"), asDouble(col(vecCol)).as("__qv"))
-      .withColumn("__qn", norm(col("__qv")))
-      .filter(col("__qn") > 0)
+    val probes0 = normed(queries, idCol, vecCol, "query_id", "__qv", "__qn")
       .withColumn("__adc", adcTable(col("__qv"), cents, subDim, pqK))
       .withColumn("cell", explode(nearestCells(codebook, col("__qv"), nProbe)))
     val probes = baseDot.fold(probes0)(b => probes0.withColumn("__base", b))
+    // stage 1: probed candidates ranked by the 6-dp ADC score
+    // ([[adcScore]]); stage 2: exact cosine rerank of the survivors
+    exactRerank(
+      survivors(coded.join(broadcast(probes), "cell"),
+        adcScore(subspaces, baseDot.isDefined), rerank),
+      rerankVecs, queries, idCol, vecCol, k, withScore)
+  }
 
-    // stage 1: probed candidates ranked by the 6-dp ADC score — the sum
-    // of subspaces table lookups approximates q·reconstruction(n) (plus
-    // the per-probe base dot under residual encoding), and dividing by
-    // the candidate's norm makes the ranking COSINE-consistent with
-    // stage 2 (the query norm is constant per query, so it cannot change
-    // any per-query ranking and stays out); 6-dp absorbs summation-order
-    // ulps, id breaks ties — the kmeans assignment determinism recipe
+  /** The 6-dp stage-1 ADC score of a probed `(query, candidate)` pair:
+    * the sum of `subspaces` lookups `__adc[sp][__code_sp]` approximates
+    * q·reconstruction(n) (plus the per-probe `__base` dot under
+    * `residual` encoding), and dividing by the candidate norm `__cn`
+    * makes the ranking COSINE-consistent with stage 2 (the query norm is
+    * constant per query, so it cannot change any per-query ranking and
+    * stays out); 6-dp absorbs summation-order ulps, id breaks ties — the
+    * kmeans assignment determinism recipe.
+    */
+  private def adcScore(subspaces: Int, residual: Boolean): Column = {
     val adcSum = (0 until subspaces).map(sp =>
       element_at(element_at(col("__adc"), sp + 1), col(s"__code_$sp") + 1))
       .reduce(_ + _)
-    val approx = round(
-      baseDot.map(_ => col("__base") + adcSum).getOrElse(adcSum) / col("__n"), 6)
-    val survivors = coded.join(broadcast(probes), "cell")
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .groupBy("query_id")
-      .agg(TopKOps.topK(rerank, approx, col("neighbor_id")).as("__top"))
-      .select(col("query_id"), explode(col("__top")).as("__e"))
-      .select(col("query_id"), col("__e.id").as("neighbor_id"))
-
-    // stage 2: exact cosine rerank of the <= queries×rerank survivors —
-    // survivor list broadcast onto the partitioned corpus, query vectors
-    // broadcast onto the survivors; both norms structurally positive
-    val qvs = queries.select(col(idCol).as("query_id"), asDouble(col(vecCol)).as("__qv"))
-      .withColumn("__qn", norm(col("__qv")))
-      .filter(col("__qn") > 0)
-    val pairs = rerankVecs.join(broadcast(survivors), "neighbor_id")
-      .join(broadcast(qvs), "query_id")
-      .withColumn("cos", dot(col("__cv"), col("__qv")) / (col("__n") * col("__qn")))
-    explodeRanks(pairs, k, col("cos"), col("neighbor_id"), withScore)
+    round((if (residual) col("__base") + adcSum else adcSum) / col("__cn"), 6)
   }
+
+  /** A persisted codes relation as [[ivfPqRank]]'s stage-1 side
+    * `(neighbor_id, cell, __cn, __code_0…)`.
+    */
+  private def codedSide(codes: DataFrame, subspaces: Int): DataFrame =
+    codes.select(
+      col("id").as("neighbor_id") +: col("cell") +: col("nrm").as("__cn") +:
+        (0 until subspaces).map(sp => col(s"code_$sp").as(s"__code_$sp")): _*)
 
   /** IVF-PQ ANN search — the production 100 TB retrieval pattern
     * composed from this file's parts: IVF coarse cells ([[ivfTopK]]'s
@@ -2728,23 +2663,7 @@ object Similarity {
                       storeSignWords: Boolean = false): IvfPqIndex = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    // RAW (non-residual) PQ training never reads the coarse quantizer, so
-    // the codebook TakeOrdered and the whole fused Lloyd loop (probe +
-    // seed + pqIters codebook collects) run as OVERLAPPED driver arms
-    // (guide §2.6) — the codebook job back-fills the Lloyd barriers'
-    // executor tail instead of serializing ahead of them. pqTrain pays
-    // its own bounded limit(1) width probe in this arm (the codebook is
-    // not in hand yet); residual training still sequences after the
-    // codebook, which the residual relation needs.
-    val (codebook, centsRaw) =
-      if (residual) (collectCodebook(corpus, idCol, vecCol, nCentroids), None)
-      else {
-        val (cb, cs) = Par.par2(
-          collectCodebook(corpus, idCol, vecCol, nCentroids),
-          pqTrain(corpus, idCol, vecCol, subspaces, subDim, pqK, pqIters,
-            knownDim = None))
-        (cb, Some(cs))
-      }
+    val codebook = collectCodebook(corpus, idCol, vecCol, nCentroids)
     require(codebook.nonEmpty, "codebook must be non-empty")
     val dim = codebook.head._2.length
     val cells = ivfCells(corpus, idCol, vecCol, codebook,
@@ -2759,11 +2678,13 @@ object Similarity {
             "neighbor_id", "__r", subspaces, subDim, pqK, pqIters,
             knownDim = Some(dim)))
       } else
-        (cells, col("__cv"), centsRaw.get)
+        (cells, col("__cv"),
+          pqTrain(corpus, idCol, vecCol, subspaces, subDim, pqK, pqIters,
+            knownDim = Some(dim)))
     val codes = codesShape(
       withPqCodeCols(codeSrc, codeVec, cents, subspaces, subDim), subspaces,
       storeVectors,
-      if (storeSignWords) Some(codebook.head._2.length) else None)
+      if (storeSignWords) Some(dim) else None)
     val coarse = codebook.toSeq.toDF("cell", "centroid")
     val pq = (for {
       sp <- cents.indices
@@ -2793,7 +2714,7 @@ object Similarity {
   def ivfPqSearch(index: IvfPqIndex, corpus: DataFrame, queries: DataFrame,
                   idCol: String, vecCol: String, k: Int, nProbe: Int = 4,
                   rerank: Int = 20, withScore: Boolean = false): DataFrame =
-    ivfPqSearchWith(index, collectIndexCodebooks(index), corpus, queries,
+    ivfPqSearchWith(index, collectIndexCodebooks(index), Some(corpus), queries,
       idCol, vecCol, k, nProbe, rerank, withScore)
 
   /** [[ivfPqSearch]] with the batch's probed-cell set pushed into the
@@ -2820,17 +2741,9 @@ object Similarity {
                         queries: DataFrame, idCol: String, vecCol: String,
                         k: Int, nProbe: Int = 4, rerank: Int = 20): DataFrame = {
     val cbs = collectIndexCodebooks(index)
-    val (codebook, _, _, _) = cbs
-    val qs = queries.localCheckpoint(false)
-    val probed = qs
-      .select(explode(nearestCells(codebook, asDouble(col(vecCol)), nProbe))
-        .as("cell"))
-      .distinct().collect().map(_.getLong(0))
-    val pruned =
-      if (probed.isEmpty) index
-      else index.copy(codes = index.codes.filter(col("cell").isin(probed: _*)))
-    ivfPqSearchWith(pruned, cbs, corpus, qs, idCol, vecCol, k, nProbe,
-      rerank)
+    val (qs, codes) = probedCells(index.codes, queries, vecCol, cbs._1, nProbe)
+    ivfPqSearchWith(index.copy(codes = codes), cbs, Some(corpus), qs, idCol,
+      vecCol, k, nProbe, rerank)
   }
 
   /** Serve ENTIRELY from a stored-vector index — no corpus argument:
@@ -2860,57 +2773,65 @@ object Similarity {
       "index carries no stored vectors — build with storeVectors=true, " +
         "or serve with ivfPqSearch(index, corpus, ...)")
     val cbs = collectIndexCodebooks(index)
+    val (qs, codes) = probedCells(index.codes, queries, vecCol, cbs._1, nProbe)
+    ivfPqSearchWith(index.copy(codes = codes), cbs, None, qs, idCol, vecCol,
+      k, nProbe, rerank, withScore)
+  }
+
+  /** [[ivfPqSearch]] over ALREADY-collected codebooks `cbs` (the pruned
+    * verbs collect them before pruning). Stage 2 reranks against
+    * [[rerankVectors]]: the `corpus` when given, else the index's own
+    * `vec` payload.
+    */
+  private def ivfPqSearchWith(index: IvfPqIndex,
+                              cbs: (Array[(Long, Seq[Double])],
+                                Array[Array[Array[Double]]], Int, Int),
+                              corpus: Option[DataFrame], queries: DataFrame,
+                              idCol: String, vecCol: String, k: Int,
+                              nProbe: Int, rerank: Int,
+                              withScore: Boolean = false): DataFrame = {
     val (codebook, cents, subspaces, pqK) = cbs
+    val baseDot =
+      if (index.residual)
+        Some(dot(col("__qv"), element_at(typedlit(codebook.toMap), col("cell"))))
+      else None
+    ivfPqRank(codedSide(index.codes, subspaces),
+      rerankVectors(index.codes, corpus, idCol, vecCol), queries, idCol,
+      vecCol, codebook, cents, baseDot, k, nProbe, subspaces, index.subDim,
+      pqK, rerank, withScore)
+  }
+
+  /** Stage-2 rerank vectors `(neighbor_id, __cv, __cn)`: the
+    * norm-positive float `corpus` when given, else the `vec` payload
+    * stored beside `codes` — rows norm-positive by the build's
+    * [[ivfCells]] drop, the stored `nrm` reused, and over a pruned
+    * `codes` every stage-1 survivor is from a probed cell by
+    * construction.
+    */
+  private def rerankVectors(codes: DataFrame, corpus: Option[DataFrame],
+                            idCol: String, vecCol: String): DataFrame =
+    corpus.fold(codes.select(col("id").as("neighbor_id"),
+        asDouble(col("vec")).as("__cv"), col("nrm").as("__cn")))(
+      normed(_, idCol, vecCol, "neighbor_id", "__cv", "__cn"))
+
+  /** The batch's probed-cell prune, shared by the cell-pruned verbs:
+    * `queries` is read twice (the collect here and the search), so it is
+    * snapshotted with a lazy `localCheckpoint` and both see the same
+    * rows; the DISTINCT cells its rows probe come back in one bounded
+    * collect (≤ queries × nProbe rows, a superset of the norm-positive
+    * queries' probes), and `codes` is filtered to them by a static
+    * `cell IN (…)` — a partition filter over a cell-clustered layout.
+    * Returns `(snapshot, prunedCodes)`.
+    */
+  private def probedCells(codes: DataFrame, queries: DataFrame, vecCol: String,
+                          codebook: Array[(Long, Seq[Double])],
+                          nProbe: Int): (DataFrame, DataFrame) = {
     val qs = queries.localCheckpoint(false)
     val probed = qs
       .select(explode(nearestCells(codebook, asDouble(col(vecCol)), nProbe))
         .as("cell"))
       .distinct().collect().map(_.getLong(0))
-    val codes =
-      if (probed.isEmpty) index.codes
-      else index.codes.filter(col("cell").isin(probed: _*))
-    val coded = codes.select(
-      col("id").as("neighbor_id") +: col("cell") +: col("nrm").as("__n") +:
-        (0 until subspaces).map(sp => col(s"code_$sp").as(s"__code_$sp")): _*)
-    // rerank vectors come from the SAME pruned codes relation — rows are
-    // norm-positive by the build's ivfCells drop, and every stage-1
-    // survivor is from a probed cell by construction
-    val rerankVecs = codes.select(col("id").as("neighbor_id"),
-      asDouble(col("vec")).as("__cv"), col("nrm").as("__n"))
-    val baseDot =
-      if (index.residual)
-        Some(dot(col("__qv"), element_at(typedlit(codebook.toMap), col("cell"))))
-      else None
-    ivfPqRank(coded, rerankVecs, qs, idCol, vecCol, codebook, cents,
-      baseDot, k, nProbe, subspaces, index.subDim, pqK, rerank, withScore)
-  }
-
-  /** [[ivfPqSearch]] over ALREADY-collected codebooks — so a caller
-    * searching the same index many times in one plan-build (the q242
-    * operating-point grid) pays the two bounded codebook collects ONCE,
-    * not once per search.
-    */
-  private def ivfPqSearchWith(index: IvfPqIndex,
-                              cbs: (Array[(Long, Seq[Double])],
-                                Array[Array[Array[Double]]], Int, Int),
-                              corpus: DataFrame, queries: DataFrame,
-                              idCol: String, vecCol: String, k: Int,
-                              nProbe: Int, rerank: Int,
-                              withScore: Boolean = false): DataFrame = {
-    val (codebook, cents, subspaces, pqK) = cbs
-    val coded = index.codes.select(
-      col("id").as("neighbor_id") +: col("cell") +: col("nrm").as("__n") +:
-        (0 until subspaces).map(sp => col(s"code_$sp").as(s"__code_$sp")): _*)
-    val rerankVecs = corpus
-      .select(col(idCol).as("neighbor_id"), asDouble(col(vecCol)).as("__cv"))
-      .withColumn("__n", norm(col("__cv")))
-      .filter(col("__n") > 0)
-    val baseDot =
-      if (index.residual)
-        Some(dot(col("__qv"), element_at(typedlit(codebook.toMap), col("cell"))))
-      else None
-    ivfPqRank(coded, rerankVecs, queries, idCol, vecCol, codebook, cents,
-      baseDot, k, nProbe, subspaces, index.subDim, pqK, rerank, withScore)
+    (qs, if (probed.isEmpty) codes else codes.filter(col("cell").isin(probed: _*)))
   }
 
   /** `index` carrying `cbs` as its codebook memo — only for a value just
@@ -3137,7 +3058,7 @@ object Similarity {
                          storeVectors: Boolean = false,
                          signWordsDim: Option[Int] = None): DataFrame =
     coded.select(
-      col("neighbor_id").as("id") +: col("cell") +: col("__n").as("nrm") +:
+      col("neighbor_id").as("id") +: col("cell") +: col("__cn").as("nrm") +:
         ((0 until subspaces).map(sp => col(s"__code_$sp").as(s"code_$sp")) ++
           (if (storeVectors) Seq(col("__raw").as("vec")) else Nil) ++
           // sign words pack the RAW vector (not the residual): binary

@@ -203,6 +203,21 @@ class EpssCliSpec extends SparkSpec {
     assert(sheet.contains("<v>1.5</v>")) // finite stays native numeric
   }
 
+  test("console sinks print every row up to the cap and fail loudly past it") {
+    val req = Seq("scores", "--store", store, "-a", "2024-01-01", "-b", "2024-01-02",
+      "--no-drop-unchanged")
+    for ((fmt, kind) <- Seq(Nil -> "table", Seq("--output-format", "json") -> "json",
+        Seq("--output-format", "jsonl") -> "jsonl")) {
+      val out = captureOut(EpssCli.run(spark, req ++ fmt, consoleCapRows = 3))
+      assert("CVE-".r.findAllMatchIn(out).size == 3, s"$kind prints all 3 rows: $out")
+      val e = intercept[IllegalArgumentException] {
+        EpssCli.run(spark, req ++ fmt, consoleCapRows = 2)
+      }
+      assert(e.getMessage == s"requirement failed: console $kind output is a " +
+        "driver-side sink for small results (> 2 rows); use --output for large outputs")
+    }
+  }
+
   test("excel to console fails loudly (workbook needs --output)") {
     val e = intercept[RuntimeException] {
       EpssCli.run(spark, Seq("scores", "--store", store,

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec}
 import org.apache.spark.sql.execution.window.WindowExec
 
@@ -23,6 +23,18 @@ class PlanSpec extends SparkSpec {
       case other => other
     }
     self.collect(pf) ++ self.subqueries.flatMap(collectAll(_)(pf))
+  }
+
+  /** `(BroadcastExchange, ShuffleExchange, aggregate)` node counts of a
+    * relation's physical plan, subqueries included.
+    */
+  private def census(df: org.apache.spark.sql.DataFrame): (Int, Int, Int) = {
+    val p = df.queryExecution.executedPlan
+    (collectAll(p) { case b: BroadcastExchangeExec => b }.size,
+      collectAll(p) { case e: ShuffleExchangeExec => e }.size,
+      collectAll(p) {
+        case a: org.apache.spark.sql.execution.aggregate.BaseAggregateExec => a
+      }.size)
   }
 
   private def scanMeta(name: String): Map[String, String] =
@@ -1607,5 +1619,53 @@ class PlanSpec extends SparkSpec {
     }
     assert(smj.size <= 1, s"only the eval-sized fusion full-join, got ${smj.size}")
     assert(smj.forall(_.joinType.sql == "FULL OUTER"))
+  }
+
+  test("two-stage ANN verbs: pinned broadcast, shuffle and aggregate census per verb") {
+    import graft.operators.{Retrieval, Similarity, TextAnalysis}
+    import org.apache.spark.sql.functions.col
+    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val qs = emb.filter(col("vec_id") % 50 === 0)
+    val dir = java.nio.file.Files.createTempDirectory("graft-census-").toString
+    Similarity.ivfPqIndexSave(Similarity.ivfPqIndexBuild(emb, "vec_id", "embedding",
+      nCentroids = 16, subspaces = 4, subDim = 16, pqK = 4, pqIters = 2,
+      storeVectors = true, storeSignWords = true), dir)
+    val loaded = Similarity.ivfPqIndexLoad(spark, dir)
+    val wordsOnly = Similarity.ivfPqIndexBuild(emb, "vec_id", "embedding",
+      nCentroids = 16, subspaces = 4, subDim = 16, pqK = 4, pqIters = 2,
+      storeSignWords = true)
+    val sparse = TextAnalysis.sparseIndexBuild(docs, "doc_id", "text",
+      weighting = "tfidf", minDf = 2, cap = Some(25))
+    val qp = sparse.postings
+      .join(docs.filter(col("doc_id") % 50 === 0).select("doc_id"), "doc_id")
+      .withColumnRenamed("doc_id", "query_id")
+    val got = Map(
+      "ivfPqSearch" -> census(Similarity.ivfPqSearch(loaded, emb, qs,
+        "vec_id", "embedding", k = 5)),
+      "ivfPqSearchStored" -> census(Similarity.ivfPqSearchStored(loaded, qs,
+        "vec_id", "embedding", k = 5)),
+      "hybridSearch" -> census(Retrieval.hybridSearch(loaded, emb, qs,
+        "vec_id", "embedding", sparse, qp, "query_id", "token", "weight", k = 5)),
+      "binarySearchCells/payload" -> census(Similarity.binarySearchCells(loaded,
+        emb, qs, "vec_id", "embedding", k = 5)),
+      "binarySearchCells/corpus" -> census(Similarity.binarySearchCells(wordsOnly,
+        emb, qs, "vec_id", "embedding", k = 5)),
+      "quantizedRerankTopK" -> census(Similarity.quantizedRerankTopK(emb, qs,
+        "vec_id", "embedding", k = 5)),
+      "matryoshkaTopK" -> census(Similarity.matryoshkaTopK(emb, qs,
+        "vec_id", "embedding", k = 5, prefixDim = 16)))
+    // stage 1 broadcasts the query side, stage 2 the survivors and the
+    // query vectors; each topK heap is partial + final around one
+    // shuffle. The hybrid adds the sparse arm and the fusion full-join
+    val twoStage = (3, 2, 4)
+    assert(got == Map(
+      "ivfPqSearch" -> twoStage,
+      "ivfPqSearchStored" -> twoStage,
+      "hybridSearch" -> (5, 6, 8),
+      "binarySearchCells/payload" -> twoStage,
+      "binarySearchCells/corpus" -> twoStage,
+      "quantizedRerankTopK" -> twoStage,
+      "matryoshkaTopK" -> twoStage))
   }
 }
