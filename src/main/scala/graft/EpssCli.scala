@@ -52,7 +52,7 @@ object EpssCli {
     "include-v1-scores", "include-v2-scores", "no-include-v3-scores")
 
   def parseArgs(argv: Seq[String]): (String, Args) = {
-    require(argv.nonEmpty, "usage: scores|urls|date-range [options]")
+    require(argv.nonEmpty, "usage: scores|urls|date-range|download [options]")
     val cmd = argv.head
     val m = scala.collection.mutable.Map.empty[String, List[String]]
     var i = 1

@@ -1791,9 +1791,7 @@ object SparkEntry {
         .orderBy("source")),
 
     // ── embedding covariance matrix: raw-moment single-pass d² table,
-    // decimal-exact sums (the PCA/whitening/drift input; the power-
-    // iteration top component rides it driver-side, spec-gated since an
-    // eigensolve has no SQL twin).
+    // decimal-exact sums (the PCA/whitening/drift input).
     "q162_embedding_cov" -> ((s, dir) =>
       graft.operators.Similarity.covarianceMatrix(
         t(s, dir, "embeddings"), "embedding")

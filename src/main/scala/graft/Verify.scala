@@ -1,7 +1,9 @@
 package graft
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. A query that
+  * throws is named with its cause; every other query and oracle_sql.json
+  * are still written, then the run exits 1 (the Bench contract). */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
@@ -17,11 +19,14 @@ object Verify {
       case Some(ps) => SparkEntry.queries.filter { case (n, _) => ps.exists(n.startsWith) }
       case None => SparkEntry.queries
     }
-    selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+    val failed = selected.count { case (name, fn) =>
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        false
+      } catch { case e: Throwable =>
+        System.err.println(s"[verify] $name failed: $e")
+        true
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -40,5 +45,9 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    if (failed > 0) {
+      System.err.println(s"[verify] $failed of ${selected.size} queries failed")
+      sys.exit(1)
+    }
   }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, expr, max, min}
 
 /** Co-located (bucketed) joins — the shuffle-elimination path for repeated
@@ -22,12 +22,6 @@ object Bucketing {
       .mode("overwrite")
       .format("parquet")
       .saveAsTable(table)
-
-  /** Join two bucketed tables on their bucket key — exchange-free when both
-    * sides were written with the same bucket count.
-    */
-  def bucketedJoin(spark: SparkSession, left: String, right: String, key: String): DataFrame =
-    spark.table(left).join(spark.table(right), key)
 
   /** Morton (Z-order) key: bit-interleave two pre-normalized non-negative
     * integer columns (`bits` low bits each, a ≤ 2·bits-bit key) — nearby

@@ -1177,31 +1177,6 @@ object Dedup {
         count(lit(1)).as("n_kept"))
   }
 
-  /** Exact n-gram Jaccard for a set of candidate pairs: one shingle-equality
-    * join for intersections + a broadcast-size join for set sizes. Runs only
-    * on candidates — never on the full pair space.
-    */
-  def jaccardForPairs(df: DataFrame, pairs: DataFrame, idCol: String,
-                      textCol: String, n: Int = 2): DataFrame =
-    jaccardForPairsOn(shingles(df, idCol, textCol, n), pairs, idCol)
-
-  /** Exact Jaccard over a PRE-BUILT shingle table (lets callers reuse one
-    * shingle pass across the signature and verification branches).
-    */
-  def jaccardForPairsOn(sh: DataFrame, pairs: DataFrame, idCol: String): DataFrame = {
-    val sizes = sh.groupBy(col(idCol)).agg(count(lit(1)).as("sz"))
-    val shA = sh.select(col(idCol).as("doc_a"), col("shingle"))
-    val shB = sh.select(col(idCol).as("doc_b"), col("shingle"))
-    val inter = pairs.join(shA, "doc_a").join(shB, Seq("doc_b", "shingle"))
-      .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("n_inter"))
-    inter
-      .join(sizes.withColumnRenamed(idCol, "doc_a").withColumnRenamed("sz", "sz_a"), "doc_a")
-      .join(sizes.withColumnRenamed(idCol, "doc_b").withColumnRenamed("sz", "sz_b"), "doc_b")
-      .withColumn("jaccard",
-        col("n_inter") / (col("sz_a") + col("sz_b") - col("n_inter")).cast("double"))
-      .select("doc_a", "doc_b", "n_inter", "sz_a", "sz_b", "jaccard")
-  }
-
   /** Full near-dup pipeline: MinHash → LSH candidates → exact Jaccard ≥ t.
     * Verification joins candidate ids against the per-doc shingle-set table
     * and computes `|A ∩ B|` with a per-pair `array_intersect` — the

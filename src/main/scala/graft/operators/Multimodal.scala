@@ -8,22 +8,20 @@ import javax.imageio.ImageIO
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
-/** Multimodal column plumbing: image/audio/video as opaque `binary` columns
-  * with typed metadata, plus a partition-batched feature-extraction pass.
+/** Multimodal column plumbing: image/audio payloads as opaque `binary`
+  * columns with typed metadata, decoded partition-locally.
   *
-  * IMAGE decode is REAL: `javax.imageio` ships in the JDK and parses
-  * PNG/BMP/GIF/JPEG with no external package, so image payloads yield
-  * true width/height/pixel statistics. AUDIO decode is REAL for WAV/PCM:
-  * `javax.sound.sampled.AudioSystem` (also pure JDK) parses WAV headers
-  * and 8/16-bit PCM frames, yielding true sample-rate/channel/duration/
-  * RMS statistics. The deterministic STUB kernel remains only for
-  * payloads neither parser accepts — compressed audio codecs and video,
-  * which genuinely are not in this container; on a real cluster the stub
-  * body is replaced by the codec call, nothing else changes.
+  * Every decode is REAL and pure JDK: `javax.imageio` parses
+  * PNG/BMP/GIF/JPEG (dimensions, pixels, animated-GIF frames) and
+  * `javax.sound.sampled.AudioSystem` parses WAV headers and 8/16-bit PCM
+  * frames (rate, channels, duration, RMS, samples). A payload neither
+  * parser accepts (compressed audio, video) yields no row. On top sit the
+  * perceptual hashes (aHash/dHash, the audio fingerprint), their
+  * pigeonhole Hamming near-dup join and image dedup.
   *
   * Scale: `mapPartitions` keeps decode per-executor and batch-shaped (no
   * per-row task overhead, no driver involvement); binary payloads never
-  * shuffle — features (small) do.
+  * shuffle — only metadata and hashes (small) do.
   */
 object Multimodal {
 
@@ -33,11 +31,6 @@ object Multimodal {
 
   /** A media row: opaque payload + typed metadata. */
   final case class MediaRow(doc_id: Long, media_type: String, blob: Array[Byte])
-
-  /** Extracted features: fixed-width vector + frame metadata. */
-  final case class MediaFeature(doc_id: Long, media_type: String,
-                                n_bytes: Long, n_frames: Int,
-                                feature: Array[Float])
 
   /** Build a media table from the documents fixture: text bytes stand in
     * for the opaque payload; media_type cycles deterministically.
@@ -55,96 +48,47 @@ object Multimodal {
   }
 
   /** REAL image decode (JDK ImageIO: PNG/BMP/GIF/JPEG). None when the
-    * payload is not a decodable image — callers fall back to the stub.
+    * payload is not a decodable image.
     */
   private[operators] def decodeImage(blob: Array[Byte]): Option[BufferedImage] =
     try Option(ImageIO.read(new ByteArrayInputStream(blob)))
     catch { case scala.util.control.NonFatal(_) => None }
 
-  /** 8-dim feature from REAL pixels: per-channel mean and stddev of
-    * R/G/B in [0,1], plus log-scaled width/height. One deterministic
-    * row-major pixel scan per image.
+  /** One row-major pixel scan: per-channel sums of R/G/B in [0,1] (the
+    * per-frame luma of [[gifFrameMeta]]).
     */
-  /** One row-major pixel scan: per-channel sums and sums of squares of
-    * R/G/B in [0,1] — the shared kernel behind [[imageFeature]] and
-    * [[imageMeta]], so the two can never drift (e.g. a future alpha or
-    * color-space fix lands in both).
-    */
-  private def channelSums(img: BufferedImage): (Double, Double, Double, Double, Double, Double) = {
+  private def channelSums(img: BufferedImage): (Double, Double, Double) = {
     val w = img.getWidth
     val h = img.getHeight
-    var sr, sg, sb, sr2, sg2, sb2 = 0.0
+    var sr, sg, sb = 0.0
     var y = 0
     while (y < h) {
       var x = 0
       while (x < w) {
         val p = img.getRGB(x, y)
-        val r = ((p >> 16) & 0xff) / 255.0
-        val g = ((p >> 8) & 0xff) / 255.0
-        val b = (p & 0xff) / 255.0
-        sr += r; sg += g; sb += b
-        sr2 += r * r; sg2 += g * g; sb2 += b * b
+        sr += ((p >> 16) & 0xff) / 255.0
+        sg += ((p >> 8) & 0xff) / 255.0
+        sb += (p & 0xff) / 255.0
         x += 1
       }
       y += 1
     }
-    (sr, sg, sb, sr2, sg2, sb2)
-  }
-
-  private[operators] def imageFeature(img: BufferedImage): Array[Float] = {
-    val w = img.getWidth
-    val h = img.getHeight
-    val (sr, sg, sb, sr2, sg2, sb2) = channelSums(img)
-    val n = w.toDouble * h
-    def mean(s: Double) = s / n
-    def std(s: Double, s2: Double) = math.sqrt(math.max(0.0, s2 / n - (s / n) * (s / n)))
-    Array(mean(sr).toFloat, mean(sg).toFloat, mean(sb).toFloat,
-      std(sr, sr2).toFloat, std(sg, sg2).toFloat, std(sb, sb2).toFloat,
-      math.log1p(w.toDouble).toFloat, math.log1p(h.toDouble).toFloat)
-  }
-
-  /** Decoded image metadata: true dimensions + channel means. */
-  final case class ImageMeta(doc_id: Long, width: Int, height: Int,
-                             n_pixels: Long, mean_r: Double, mean_g: Double,
-                             mean_b: Double)
-
-  /** Real image metadata extraction: image-typed rows whose payload
-    * ImageIO parses yield true dimensions and channel means; audio/video
-    * rows never pay a decode attempt (same media_type gate as
-    * [[extractFeatures]]) and undecodable image rows are dropped.
-    * Batch-shaped — payload bytes never leave the partition that read
-    * them.
-    */
-  def imageMeta(media: Dataset[MediaRow]): Dataset[ImageMeta] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val decoded = if (r.media_type == "image") decodeImage(r.blob) else None
-        decoded.map { img =>
-          val w = img.getWidth; val h = img.getHeight
-          val (sr, sg, sb, _, _, _) = channelSums(img)
-          val n = w.toDouble * h
-          ImageMeta(r.doc_id, w, h, w.toLong * h, sr / n, sg / n, sb / n)
-        }
-      }
-    }
+    (sr, sg, sb)
   }
 
   /** Decoded WAV statistics from one sample scan: format facts plus
     * mean/RMS/peak/zero-crossing-rate of normalized samples in [-1,1] —
-    * the shared kernel behind [[audioMeta]] and the audio branch of
-    * [[extractFeatures]] (the [[channelSums]] precedent: one kernel, two
-    * surfaces, no drift). ZCR is over the interleaved stream (a cheap
-    * spectral proxy; per-channel separation isn't worth a second scan).
+    * the kernel behind [[audioMeta]]. ZCR is over the interleaved stream
+    * (a cheap spectral proxy; per-channel separation isn't worth a second
+    * scan).
     */
   final case class WavStats(sampleRate: Double, channels: Int, bits: Int,
                             nFrames: Long, durationSec: Double,
                             mean: Double, rms: Double, peak: Double, zcr: Double)
 
   /** REAL audio decode (JDK javax.sound.sampled): WAV headers + 8/16-bit
-    * PCM frames. None when the payload is not an uncompressed WAV —
-    * callers fall back to the stub (compressed codecs aren't in the JDK).
+    * PCM frames. None when the payload is not an uncompressed WAV
+    * (compressed codecs aren't in the JDK).
     */
   private[operators] def decodeWavStats(blob: Array[Byte]): Option[WavStats] = {
     import javax.sound.sampled.{AudioFormat, AudioSystem}
@@ -232,11 +176,11 @@ object Multimodal {
   final case class AudioMeta(doc_id: Long, sample_rate: Double, channels: Int,
                              n_frames: Long, duration_sec: Double, rms: Double)
 
-  /** Real audio metadata extraction — the [[imageMeta]] twin: audio-typed
-    * rows whose payload parses as WAV/PCM yield true sample-rate/
-    * channels/frames/duration/RMS; non-audio rows never pay a decode
-    * attempt and undecodable audio rows are dropped. Batch-shaped —
-    * payload bytes never leave the partition that read them.
+  /** Real audio metadata extraction: audio-typed rows whose payload
+    * parses as WAV/PCM yield true sample-rate/channels/frames/duration/
+    * RMS; non-audio rows never pay a decode attempt and undecodable audio
+    * rows are dropped. Batch-shaped — payload bytes never leave the
+    * partition that read them.
     */
   def audioMeta(media: Dataset[MediaRow]): Dataset[AudioMeta] = {
     val spark = media.sparkSession
@@ -348,14 +292,6 @@ object Multimodal {
     }
   }
 
-  /** 8-dim feature from REAL samples: [mean, rms, peak, zcr,
-    * log1p(frames), log1p(rate), channels, bits].
-    */
-  private[operators] def audioFeature(w: WavStats): Array[Float] =
-    Array(w.mean.toFloat, w.rms.toFloat, w.peak.toFloat, w.zcr.toFloat,
-      math.log1p(w.nFrames.toDouble).toFloat, math.log1p(w.sampleRate).toFloat,
-      w.channels.toFloat, w.bits.toFloat)
-
   /** 64-bit perceptual AUDIO fingerprint — the [[aHash64]] twin for
     * waveforms: the decoded samples split into 64 equal time segments,
     * bit s = 1 iff segment s's energy (Σ sample², channel 0) exceeds the
@@ -465,57 +401,6 @@ object Multimodal {
     baos.toByteArray
   }
 
-  // ── STUB decode kernel (compressed audio / video ONLY) ────────────────
-  // Real implementation would call a codec here (not available in this
-  // container). This deterministic fake preserves the exact batch shape,
-  // signature and output schema of the real kernel. Image payloads never
-  // reach it (ImageIO above); WAV/PCM audio payloads never reach it
-  // (javax.sound.sampled above).
-  private def stubDecode(blob: Array[Byte]): Array[Float] = {
-    val feat = new Array[Float](8)
-    var i = 0
-    while (i < blob.length) {
-      feat(i % 8) += (blob(i) & 0xff) / 255.0f
-      i += 1
-    }
-    feat
-  }
-
-  /** Feature extraction over partition-sized batches: image payloads that
-    * ImageIO parses get REAL pixel-statistic features (one frame — a
-    * still); audio payloads that parse as WAV/PCM get REAL sample-
-    * statistic features (true frame count); everything else takes the
-    * documented compressed-audio/video stub.
-    */
-  def extractFeatures(media: Dataset[MediaRow]): Dataset[MediaFeature] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.mapPartitions { rows =>
-      rows.map { r =>
-        def stub = {
-          val frames = (r.blob.length / 256) + 1
-          MediaFeature(r.doc_id, r.media_type, r.blob.length.toLong, frames,
-            stubDecode(r.blob))
-        }
-        r.media_type match {
-          case "image" => decodeImage(r.blob) match {
-            case Some(img) =>
-              MediaFeature(r.doc_id, r.media_type, r.blob.length.toLong, 1,
-                imageFeature(img))
-            case None => stub
-          }
-          case "audio" => decodeWavStats(r.blob) match {
-            case Some(w) =>
-              MediaFeature(r.doc_id, r.media_type, r.blob.length.toLong,
-                math.min(w.nFrames, Int.MaxValue.toLong).toInt, audioFeature(w))
-            case None => stub
-          }
-          case _ => stub
-        }
-      }
-    }
-  }
-
   /** Decoded GIF frame sequence — REAL multi-frame decode, pure JDK: the
     * ImageIO GIF reader enumerates and rasterizes every frame of an
     * animated GIF (`getNumImages(true)` + per-index `read`). Frames are
@@ -548,8 +433,7 @@ object Multimodal {
     * frame, `mean_lum` the frame's mean of (r+g+b)/3 rounded 6 dp — the
     * video-keyframe statistics pass, realized on the one multi-frame
     * container the JDK decodes codec-free. Non-GIF payloads emit
-    * nothing (callers route compressed video to the documented stub
-    * path). Partition-batched; payload bytes never leave their executor.
+    * nothing. Partition-batched; payload bytes never leave their executor.
     */
   final case class GifFrameMeta(doc_id: Long, frame_idx: Int, width: Int,
                                 height: Int, mean_lum: Double)
@@ -562,7 +446,7 @@ object Multimodal {
         decodeGifFrames(r.blob).toSeq.flatMap { frames =>
           (0 until frames.size by stride).map { i =>
             val img = frames(i)
-            val (sr, sg, sb, _, _, _) = channelSums(img)
+            val (sr, sg, sb) = channelSums(img)
             val n = img.getWidth.toDouble * img.getHeight
             val mean = BigDecimal((sr + sg + sb) / (3.0 * n))
               .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
@@ -683,7 +567,7 @@ object Multimodal {
   }
 
   /** Perceptual hashes of every decodable image row: `(doc_id, ahash,
-    * dhash)`. Same decode gate as [[imageMeta]] (non-image rows never
+    * dhash)`. Same decode gate as [[audioMeta]] (non-image rows never
     * pay a decode attempt, undecodable images drop); partition-batched,
     * payload bytes never leave the executor that read them — only two
     * longs per image flow downstream, which is the whole point at
@@ -838,55 +722,5 @@ object Multimodal {
     val out = new java.io.ByteArrayOutputStream()
     ImageIO.write(img, "png", out)
     out.toByteArray
-  }
-
-  /** One sampled frame: parent id + frame index + the frame's bytes. */
-  final case class MediaFrame(doc_id: Long, frame_idx: Int, frame: Array[Byte])
-
-  /** Frame sampling: treat the payload as fixed-width frames and keep every
-    * `stride`-th one — the video-keyframe pattern. One row in, few rows out
-    * (a flatMap over partition batches); payload bytes stay on the executor
-    * that read them, only sampled frames flow downstream.
-    */
-  def sampleFrames(media: Dataset[MediaRow], frameBytes: Int = 256,
-                   stride: Int = 4): Dataset[MediaFrame] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val nFrames = (r.blob.length + frameBytes - 1) / frameBytes
-        (0 until nFrames by stride).iterator.map { f =>
-          val from = f * frameBytes
-          val until = math.min(from + frameBytes, r.blob.length)
-          MediaFrame(r.doc_id, f, java.util.Arrays.copyOfRange(r.blob, from, until))
-        }
-      }
-    }
-  }
-
-  // ── STUB resize kernel ────────────────────────────────────────────────
-  // Real implementation would decode + bilinear-resample (codec not in this
-  // container). The deterministic fake: stride-sample the payload down to
-  // `targetBytes`, preserving the real kernel's contract (same row count,
-  // bounded payload, metadata updated).
-  private def stubResize(blob: Array[Byte], targetBytes: Int): Array[Byte] =
-    if (blob.length <= targetBytes) blob
-    else {
-      val out = new Array[Byte](targetBytes)
-      var i = 0
-      while (i < targetBytes) {
-        out(i) = blob((i.toLong * blob.length / targetBytes).toInt)
-        i += 1
-      }
-      out
-    }
-
-  /** Payload resize/downsample pass — row-preserving, batch-shaped. */
-  def resize(media: Dataset[MediaRow], targetBytes: Int = 1024): Dataset[MediaRow] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.mapPartitions { rows =>
-      rows.map(r => r.copy(blob = stubResize(r.blob, targetBytes)))
-    }
   }
 }

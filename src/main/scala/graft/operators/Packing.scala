@@ -35,20 +35,6 @@ object Packing {
       .select(col(idCol), col("shard"), col("n_tokens"), col("bin_id"))
   }
 
-  /** Materialized bins: the packed text per (shard, bin) plus its token
-    * count — what a tokenizer-side loader would consume. Bins overflow
-    * by at most one document's tail (the concat-then-chunk contract).
-    */
-  def packedBins(df: DataFrame, idCol: String, textCol: String,
-                 capacity: Int, shards: Int = 64, salt: String = ""): DataFrame = {
-    val assigned = packSequences(df, idCol, textCol, capacity, shards, salt)
-      .join(df.select(col(idCol), col(textCol)), idCol)
-    assigned.groupBy(col("shard"), col("bin_id"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("n_tokens"),
-        concat_ws(" ", array_sort(collect_list(struct(col(idCol), col(textCol))))
-          .getField(textCol)).as("packed_text"))
-  }
-
   /** Padding-waste accounting for LENGTH-BATCHED training (the pad-to-
     * max-in-batch model, the alternative to concat-packing above): per
     * group, consecutive batches of `batchSize` rows pay `n_b · max_b`

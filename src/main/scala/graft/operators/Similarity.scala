@@ -27,13 +27,13 @@ import graft.functions.Rounding.zround
   *     generators share one exact verification tail: [[nearDupPairs]]
   *     (single table + 1-bit multi-probe, explicit-knob; its planes cap
   *     binds past ~5M vectors) and [[nearDupPairsBanded]] (multiple
-  *     independent tables, OR-amplified recall — the production path
-  *     [[nearDupPairsAuto]] uses, whose planes knob tracks any corpus
-  *     size). These are the operators here whose corpus side does
-  *     shuffle: compact (id, bucket) keys ride the candidate self-joins,
-  *     and the vector payload shuffles exactly twice for candidate
-  *     verification. The O(n²) [[nearDupPairsExhaustive]] survives solely
-  *     as the SimilaritySpec recall cross-check.
+  *     independent tables, OR-amplified recall, whose planes knob
+  *     ([[bandedPlanesFor]]) tracks any corpus size). These are the
+  *     operators here whose corpus side does shuffle: compact (id,
+  *     bucket) keys ride the candidate self-joins, and the vector payload
+  *     shuffles exactly twice for candidate verification. The O(n²)
+  *     [[nearDupPairsExhaustive]] survives solely as the SimilaritySpec
+  *     recall cross-check.
   *
   * All float math is widened to double FIRST and folded sequentially
   * (native codegen'd [[VectorOps.dotProduct]]) so results are
@@ -467,19 +467,6 @@ object Similarity {
       .select("planes", "tables", "fp", "fn", "score", "chosen")
   }
 
-  /** Near-dup pairs with `planes` sized from the counted corpus — the
-    * production entry point (costs one count() job up front). Delegates to
-    * [[nearDupPairsBanded]]: banding is the generator whose planes knob
-    * tracks ANY corpus size (the single-table probing generator
-    * [[nearDupPairs]] remains for explicit-knob callers and is still the
-    * right shape when a probe-radius recall contract is wanted).
-    */
-  def nearDupPairsAuto(df: DataFrame, idCol: String, vecCol: String,
-                       threshold: Double, tables: Int = 3,
-                       pairBudgetPerVec: Long = 3L): DataFrame =
-    nearDupPairsBanded(df, idCol, vecCol, threshold,
-      bandedPlanesFor(df.count(), pairBudgetPerVec, tables), tables)
-
   /** `planes` sizing for [[nearDupPairs]]: smallest plane count keeping
     * the EXPECTED verification load under `pairBudgetPerVec` candidate
     * pairs per vector. Under uniform occupancy, same-bucket candidates
@@ -629,15 +616,6 @@ object Similarity {
       .select(col(labelCol), col("medoid_id"), col("sim"))
   }
 
-  /** L2-normalize to a unit vector (zero vectors pass through unchanged) —
-    * the usual prep before cosine ANN so dot product IS cosine.
-    */
-  def normalize(vec: Column): Column = {
-    val v = asDouble(vec)
-    val n = norm(v)
-    when(n > 0, transform(v, x => x / n)).otherwise(v)
-  }
-
   /** Symmetric int8 quantization: scale each vector by 127/max|x| and
     * round half-up via an explicit floor(x·s + 0.5) — floor is defined
     * identically in every engine, unlike round()'s half-up/half-even split.
@@ -779,19 +757,19 @@ object Similarity {
   /** IVF-style ANN: a coarse quantizer assigns every vector to its nearest
     * centroid cell; queries probe only the `nProbe` nearest cells. Centroids
     * here are a deterministic sample (first `nCentroids` corpus vectors by
-    * id) — a trained codebook ([[kmeansCodebook]]) is plug-compatible via
-    * the overload below, the Spark plan is identical. At 100 TB the corpus
-    * NEVER shuffles: cell assignment is a per-row argmin over the literal
-    * codebook, the probe join broadcasts the (tiny) exploded query side,
-    * and the final ranking is a bounded-heap partial top-k.
+    * id) — any other codebook is plug-compatible via the overload below,
+    * the Spark plan is identical. At 100 TB the corpus NEVER shuffles:
+    * cell assignment is a per-row argmin over the literal codebook, the
+    * probe join broadcasts the (tiny) exploded query side, and the final
+    * ranking is a bounded-heap partial top-k.
     */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
               k: Int, nCentroids: Int = 16, nProbe: Int = 4): DataFrame =
     ivfTopK(corpus, queries, idCol, vecCol, k,
       collectCodebook(corpus, idCol, vecCol, nCentroids), nProbe)
 
-  /** [[ivfTopK]] over an explicit codebook — e.g. one trained with
-    * [[kmeansCodebook]], or loaded from a previous run.
+  /** [[ivfTopK]] over an explicit codebook — e.g. one loaded from a
+    * previous run.
     */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
               k: Int, codebook: Array[(Long, Seq[Double])], nProbe: Int): DataFrame = {
@@ -808,80 +786,13 @@ object Similarity {
     explodeRanks(pairs, k, col("cos"), col("neighbor_id"))
   }
 
-  /** Spherical k-means codebook trainer (Lloyd iterations under cosine
-    * geometry — the distance [[ivfTopK]]'s assignment uses): runs on a
-    * DETERMINISTIC bounded sample (content-hash order, like Sampling's
-    * row-fate contract) collected to the driver, so training is identical
-    * across partitionings and retries and costs one bounded collect — the
-    * classic IVF recipe (train on a sample, assign the corpus with the
-    * frozen codebook). Points are L2-normalized before averaging; empty
-    * cells keep their previous centroid. Returns (cell id, centroid)
-    * pairs plug-compatible with the [[ivfTopK]] codebook overload.
-    */
-  def kmeansCodebook(corpus: DataFrame, idCol: String, vecCol: String,
-                     nCentroids: Int = 16, sampleSize: Int = 10000,
-                     iterations: Int = 10): Array[(Long, Seq[Double])] = {
-    require(nCentroids >= 1 && sampleSize >= nCentroids,
-      s"need sampleSize >= nCentroids >= 1, got $nCentroids/$sampleSize")
-    // null vectors are excluded like everywhere else in this file; the
-    // widen runs AFTER the limit, so only the sample pays the transform,
-    // not the full corpus under the TakeOrdered
-    val sample0 = corpus
-      .filter(col(vecCol).isNotNull && forall(col(vecCol), x => x.isNotNull))
-      .select(col(vecCol).as("__v"), col(idCol).as("__id"))
-      .orderBy(xxhash64(col("__id")), col("__id"))
-      .limit(sampleSize)
-      .select(asDouble(col("__v"))).collect()
-      .map { r =>
-        val v = r.getSeq[Double](0).toArray
-        val n = math.sqrt(v.map(x => x * x).sum)
-        if (n > 0) v.map(_ / n) else v
-      }
-    require(sample0.nonEmpty, "cannot train a codebook on an empty corpus")
-    // ragged or null-slot vectors would index out of bounds in the Lloyd
-    // loop — train on the majority width, like the dot kernel's
-    // ragged-pair NULL
-    val dims = sample0.head.length
-    val sample = sample0.filter(v => v.length == dims && !v.exists(_.isNaN))
-    val k = math.min(nCentroids, sample.length)
-    var centroids = Array.tabulate(k)(i => sample(i).clone())
-    for (_ <- 0 until iterations) {
-      val sums = Array.fill(k)(new Array[Double](dims))
-      val counts = new Array[Long](k)
-      sample.foreach { p =>
-        var best = 0
-        var bestDot = Double.NegativeInfinity
-        var c = 0
-        while (c < k) {
-          var d = 0.0
-          var i = 0
-          while (i < dims) { d += p(i) * centroids(c)(i); i += 1 }
-          if (d > bestDot) { bestDot = d; best = c }
-          c += 1
-        }
-        var i = 0
-        while (i < dims) { sums(best)(i) += p(i); i += 1 }
-        counts(best) += 1
-      }
-      centroids = Array.tabulate(k) { c =>
-        if (counts(c) == 0) centroids(c)
-        else {
-          val m = sums(c).map(_ / counts(c))
-          val n = math.sqrt(m.map(x => x * x).sum)
-          if (n > 0) m.map(_ / n) else centroids(c)
-        }
-      }
-    }
-    centroids.zipWithIndex.map { case (cv, i) => (i.toLong, cv.toSeq) }
-  }
-
   /** Distributed Lloyd k-means over the FULL corpus (fixed-iteration,
-    * engine-reproducible) — unlike [[kmeansCodebook]] (which trains on
-    * a bounded driver sample for IVF), every row participates in every
-    * update, so the final `(id, cluster)` assignment is the clustering
-    * a mixture-profiling / stratification pipeline reports. Init is
-    * deterministic (the k smallest ids' vectors); output is the
-    * assignment after `iters` full assign→update steps.
+    * engine-reproducible) — unlike the IVF codebooks (a bounded driver
+    * sample), every row participates in every update, so the final
+    * `(id, cluster)` assignment is the clustering a mixture-profiling /
+    * stratification pipeline reports. Init is deterministic (the k
+    * smallest ids' vectors); output is the assignment after `iters` full
+    * assign→update steps.
     *
     * Cross-engine exactness (the Graph.scala decimal recipe): vector
     * components enter as round(double, 9); per-(cluster, dim) sums are
@@ -910,8 +821,8 @@ object Similarity {
       .map(_.getSeq[Double](0).toArray)
     require(init.nonEmpty, "cannot cluster an empty corpus")
     val dims = init.head.length
-    // ragged vectors would null out the distance fold — drop them, like
-    // kmeansCodebook's majority-width rule. Persisted for the loop's
+    // ragged vectors would null out the distance fold — drop them (the
+    // first init vector's width wins). Persisted for the loop's
     // 2·iters passes (assign + update per iteration); unpersisted before
     // returning, so the final frame recomputes from source lazily — the
     // Graph.hits cache-lifetime contract
@@ -1387,7 +1298,7 @@ object Similarity {
   }
 
   /** [[lshTopK]] with `planes` DERIVED from the corpus size — the
-    * query-vs-corpus twin of [[nearDupPairsAuto]]'s sizing rule: under
+    * query-vs-corpus twin of the near-dup planes sizing: under
     * uniform occupancy a query meets `maskCount(planes) · n / 2^planes`
     * candidates, so [[planesFor]] picks the smallest planes holding
     * that at `candidateBudgetPerQuery` — a FIXED planes knob makes
@@ -1913,64 +1824,6 @@ object Similarity {
         struct(col("i"), col("j")),
         struct(col("j").as("i"), col("i").as("j"))))).as("__c"))
       .select(col("__c.i").as("i"), col("__c.j").as("j"), col("cov"))
-  }
-
-  /** Top principal component of the embedding cloud: `iters` fixed
-    * power-iteration steps on the 6-dp covariance matrix, each step
-    * L2-normalized and re-quantized to 12 dp, sign fixed so the
-    * largest-|weight| coordinate is positive (eigenvectors are defined
-    * up to sign). Returns `(dim, weight)` — d rows.
-    *
-    * The iteration runs DRIVER-SIDE on the collected d² matrix: d is an
-    * embedding dimension, so the matrix is fixed-size by meaning (64×64
-    * here — the IVF-codebook precedent: bounded by construction, not by
-    * data volume); everything n-sized stayed in [[covarianceMatrix]]'s
-    * distributed pass. A fixed iteration count (not an ε-test) keeps the
-    * operator a pure function of its input — the [[
-    * graft.operators.Graph.pageRank]] contract.
-    */
-  def principalComponent(df: DataFrame, vecCol: String,
-                         iters: Int = 20): DataFrame = {
-    require(iters >= 1 && iters <= 200, s"iters out of [1,200]: $iters")
-    val spark = df.sparkSession
-    val cov = covarianceMatrix(df, vecCol)
-      .collect().map(r => ((r.getLong(0).toInt, r.getLong(1).toInt), r.getDouble(2)))
-      .toMap
-    val d = cov.keys.map(_._1).max + 1
-    val m = Array.tabulate(d, d)((i, j) => cov.getOrElse((i, j), 0.0))
-    def quant(x: Double): Double =
-      BigDecimal(x).setScale(12, BigDecimal.RoundingMode.HALF_UP).toDouble
-    var v = Array.fill(d)(quant(1.0 / math.sqrt(d.toDouble)))
-    for (_ <- 1 to iters) {
-      val w = Array.tabulate(d) { i =>
-        var s = 0.0; var j = 0
-        while (j < d) { s += m(i)(j) * v(j); j += 1 }
-        s
-      }
-      val nrm = math.sqrt(w.map(x => x * x).sum)
-      require(nrm > 0, "power iteration degenerated to the zero vector")
-      v = w.map(x => quant(x / nrm))
-    }
-    val flip = if (v(v.indices.maxBy(i => (math.abs(v(i)), -i))) < 0) -1.0 else 1.0
-    import spark.implicits._
-    v.zipWithIndex.map { case (x, i) => (i.toLong, quant(flip * x)) }
-      .toSeq.toDF("dim", "weight")
-  }
-
-  /** Projection of every vector onto the corpus's top principal
-    * component: `(idCol, score)`, the 1-D "where does this embedding sit
-    * along the dominant axis" coordinate (outlier triage, diversity
-    * binning). The component is computed once ([[principalComponent]])
-    * and folded back as a LITERAL array — the per-row dot is the
-    * codegen'd sequential kernel, one narrow corpus pass, no join.
-    */
-  def pcaProject(df: DataFrame, idCol: String, vecCol: String,
-                 iters: Int = 20): DataFrame = {
-    val pc = principalComponent(df, vecCol, iters)
-      .orderBy("dim").collect().map(_.getDouble(1))
-    df.select(col(idCol),
-      zround(dot(kernelVec(df, vecCol), array(pc.map(lit).toSeq: _*)), 6)
-        .as("score"))
   }
 
   /** Johnson–Lindenstrauss random projection: `outDims` deterministic
@@ -2964,32 +2817,6 @@ object Similarity {
     index.copy(codes =
       index.codes.unionByName(ivfPqEncode(index, batch, idCol, vecCol)))
 
-  /** Merge two indexes that share IDENTICAL codebooks — FAISS's
-    * `merge_from`, the distributed-build verb: encode shards
-    * independently ([[ivfPqEncode]] against one frozen codebook set,
-    * each shard its own job/cluster), then union the codes relations.
-    * REFUSES the merge unless both sides' coarse and PQ codebook
-    * relations are bit-identical and the scalar fields agree (four
-    * bounded collects) — codes quantized against different codebooks
-    * rank on incomparable ADC scores, the silent-poison class again.
-    */
-  def ivfPqIndexMerge(a: IvfPqIndex, b: IvfPqIndex): IvfPqIndex = {
-    require(a.residual == b.residual && a.subDim == b.subDim,
-      s"index scalars differ: residual ${a.residual}/${b.residual}, " +
-        s"subDim ${a.subDim}/${b.subDim}")
-    val (cbA, centsA, _, _) = collectIndexCodebooks(a)
-    val (cbB, centsB, _, _) = collectIndexCodebooks(b)
-    require(cbA.map { case (i, v) => (i, v.toList) }.toList ==
-      cbB.map { case (i, v) => (i, v.toList) }.toList,
-      "coarse codebooks differ — merged codes would rank on incomparable " +
-        "cells; re-encode one side against the other's codebooks instead")
-    require(centsA.map(_.map(_.toList).toList).toList ==
-      centsB.map(_.map(_.toList).toList).toList,
-      "pq codebooks differ — merged codes would rank on incomparable ADC " +
-        "scores; re-encode one side against the other's codebooks instead")
-    a.copy(codes = a.codes.unionByName(b.codes))
-  }
-
   /** PQ RECONSTRUCTION-ERROR report — the quantizer-quality diagnostic
     * beside [[ivfCellOccupancy]]'s balance one: per subspace, the mean
     * squared error between each coded row's 9-dp slice and the PQ
@@ -3356,11 +3183,11 @@ object Similarity {
   }
 
   /** [[semanticDedupBanded]] with `planes` SIZED FROM THE DATA — the
-    * no-hand-tuning entry point (costs one count() job up front, the
-    * [[nearDupPairsAuto]] pattern): the bounded path stays bounded at
-    * any corpus size because [[semanticBandedPlanes]] re-derives the
-    * plane count from the measured n, instead of a fixed default that
-    * is right at one scale and super-linear at another.
+    * no-hand-tuning entry point (costs one count() job up front): the
+    * bounded path stays bounded at any corpus size because
+    * [[semanticBandedPlanes]] re-derives the plane count from the
+    * measured n, instead of a fixed default that is right at one scale
+    * and super-linear at another.
     */
   def semanticDedupBandedAuto(df: DataFrame, idCol: String, vecCol: String,
                               threshold: Double, k: Int = 4, iters: Int = 2,

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Skew-resistant aggregation via salting: two-phase aggregate where phase 1
@@ -31,23 +31,4 @@ object Skew {
       .agg(sum(col(valueCol)).as("__psum"), count(lit(1)).as("__pcnt"))
       .groupBy(col(key))
       .agg(sum("__psum").as("sum_value"), sum("__pcnt").as("n_rows"))
-
-  /** Generic salted aggregation: caller supplies partial and merge
-    * expressions keyed by output name, e.g.
-    * partial = Map("s" -> sum(col("v")), "c" -> count(lit(1)));
-    * merge   = Map("sum_v" -> sum(col("s")), "n" -> sum(col("c"))).
-    */
-  def saltedAgg(df: DataFrame, key: String, salts: Int,
-                partial: Seq[(String, Column)], merge: Seq[(String, Column)]): DataFrame = {
-    val p = partial.map { case (n, c) => c.as(n) }
-    val m = merge.map { case (n, c) => c.as(n) }
-    // content + partition-id salt: deterministic under task retry, and
-    // fully-duplicate rows still spread (see saltedSumCount)
-    df.withColumn("__salt", pmod(xxhash64(
-      (df.columns.map(col).toIndexedSeq :+ spark_partition_id()): _*), lit(salts)))
-      .groupBy(col(key), col("__salt"))
-      .agg(p.head, p.tail: _*)
-      .groupBy(col(key))
-      .agg(m.head, m.tail: _*)
-  }
 }

@@ -127,21 +127,6 @@ object TextAnalysis {
         (expr(s"size(filter(__toks, t -> t IN ${inList(stopwords)}))") /
           size(col("__toks")).cast("double")).as("stopword_ratio"))
 
-  /** Quality-score projection (length / punctuation / stopword signals
-    * folded into one double in [0,1]-ish range) — composable with
-    * `textStats`; thresholds are caller policy, not engine policy.
-    */
-  def qualityScore(df: DataFrame, idCol: String, textCol: String,
-                   stopwords: Seq[String] = Stopwords): DataFrame =
-    df.withColumn("__toks", tokens(textCol))
-      .select(
-        col(idCol),
-        (least(size(col("__toks")).cast("double") / lit(100.0), lit(1.0)) *
-          when(size(col("__toks")) > 0,
-            lit(1.0) - expr(s"size(filter(__toks, t -> t IN ${inList(stopwords)}))") /
-              size(col("__toks")).cast("double") / lit(2.0))
-            .otherwise(lit(0.0))).as("quality"))
-
   /** Language-ID heuristic: count marker-word hits per language, pick the
     * max with a fixed priority order for ties (deterministic CASE chain).
     * Falls back to "und" when no marker hits at all. The marker sets are the

@@ -59,50 +59,6 @@ object IO {
     }
   }
 
-  /** Lenient line-format ingest with corrupt-record ACCOUNTING: parse
-    * `path` as jsonl/csv in PERMISSIVE mode with an explicit schema,
-    * routing unparsable lines into `_corrupt_record` instead of failing
-    * the job (a 100 TB feed always contains garbage rows; FAILFAST turns
-    * one of them into a dead pipeline, silent DROPMALFORMED turns them
-    * into unexplained row-count drift). Returns `(good, bad)` — the
-    * clean typed rows, and the corrupt raw lines for quarantine — split
-    * from ONE read.
-    *
-    * The caller must pass the schema: PERMISSIVE corrupt-record routing
-    * is only defined against a declared shape (with inference there is
-    * nothing to be corrupt AGAINST), and schema-on-read is the scalable
-    * contract anyway (inference is an extra full pass over the feed).
-    */
-  def readLenient(spark: SparkSession, path: String, schema: StructType,
-                  format: String = "jsonl"): (DataFrame, DataFrame) = {
-    import org.apache.spark.sql.functions.{col, from_csv, from_json, lit}
-    require(format == "jsonl" || format == "csv",
-      s"lenient mode covers line formats (jsonl/csv — headerless), got: $format")
-    // read as TEXT and parse per line with from_json/from_csv: the raw
-    // file reader forbids corrupt-column-only queries (SPARK-21610 —
-    // the pruned scan would have nothing to be corrupt against), while
-    // the per-line parser is an ordinary codegen'd expression with the
-    // same PERMISSIVE routing and no such restriction
-    val withCorrupt = schema.add("_corrupt_record", "string")
-    val opts = Map("mode" -> "PERMISSIVE",
-      "columnNameOfCorruptRecord" -> "_corrupt_record")
-    val parsedCol =
-      if (format == "csv") from_csv(col("value"), withCorrupt, opts)
-      else from_json(col("value"), withCorrupt,
-        new java.util.HashMap[String, String](scala.jdk.CollectionConverters
-          .MapHasAsJava(opts).asJava))
-    val parsed = spark.read.text(path)
-      .filter(org.apache.spark.sql.functions.length(col("value")) > 0)
-      .select(col("value"), parsedCol.as("__p"))
-    val good = parsed
-      .filter(col("__p._corrupt_record").isNull && col("__p").isNotNull)
-      .select(schema.fieldNames.map(f => col(s"__p.$f").as(f)).toSeq: _*)
-    val bad = parsed
-      .filter(col("__p._corrupt_record").isNotNull || col("__p").isNull)
-      .select(col("value").as("raw_line"))
-    (good, bad)
-  }
-
   /** S9: directory-level re-encode (util.py:69-119) — one declarative
     * read→write; Spark parallelizes per file split, replacing the
     * reference's thread pool.

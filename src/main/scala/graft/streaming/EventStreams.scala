@@ -1,18 +1,16 @@
 package graft.streaming
 
-import java.sql.Timestamp
-
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, StreamingQuery}
-import org.apache.spark.sql.types.StructType
 
-/** Structured Streaming surface: the snapshot-append pattern of the EPSS
-  * feed (daily batch files landing in a directory) and the events stream
-  * both map to `readStream` over a file source + watermarked windowed
-  * aggregation. The batch twin (`windowedAgg`) is the oracle-checked query
-  * (SparkEntry q29); the streaming twin produces the same frame via the
-  * memory sink in tests.
+/** Event-time windowing over the events table. The batch aggregates
+  * back oracle-checked queries: `windowedAgg` q29, `slidingAgg` q68 and
+  * `sessionizeGapsAndIslands` q36, whose `session_window` reference is
+  * `sessionWindows`. The two sketch aggregates (`heavyHittersPerWindow`
+  * q198, `cardinalityPerWindow` q216) are single expressions that run
+  * unchanged over a static frame or a watermarked stream, where their
+  * state stays capacity-bounded per window (EventStreamsSpec runs both
+  * through the memory sink).
   */
 object EventStreams {
 
@@ -36,19 +34,6 @@ object EventStreams {
       .agg(count(lit(1)).as("n"),
         sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_value"))
       .select(col("w.start").as("ws"), col("event_type"), col("n"), col("sum_value"))
-
-  /** Streaming twin: file-source stream with a watermark. */
-  def streamingWindowedAgg(spark: SparkSession, srcDir: String, schema: StructType,
-                           duration: String = "1 hour"): DataFrame =
-    windowedAggOn(
-      spark.readStream.schema(schema).parquet(srcDir), duration)
-
-  private def windowedAggOn(events: DataFrame, duration: String): DataFrame =
-    events
-      .withWatermark("ts", "2 hours")
-      .groupBy(window(col("ts"), duration).as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("w.start").as("ws"), col("event_type"), col("n"))
 
   /** Sessionization via the built-in `session_window` (works in batch AND
     * streaming with a watermark): sessions close after `gap` of inactivity.
@@ -82,294 +67,6 @@ object EventStreams {
         count(lit(1)).as("n_events"),
         sum(col("value").cast("decimal(18,2)")).cast("double").as("total_value"))
       .select("user_id", "session_start", "n_events", "total_value")
-  }
-
-  final case class UserEvent(user_id: Long, value: Double)
-  final case class UserRunningTotal(user_id: Long, n_events: Long, total_value: Double)
-
-  /** Custom streaming state: per-user running totals via
-    * `mapGroupsWithState` — the KeyValueGroupedDataset state surface for
-    * semantics windows can't express (counters, custom session objects,
-    * online dedup sets). State lives in the state store per key; each
-    * micro-batch folds its new events into the carried state.
-    */
-  def runningUserTotals(events: Dataset[UserEvent]): Dataset[UserRunningTotal] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    events.groupByKey(_.user_id)
-      .mapGroupsWithState[(Long, Double), UserRunningTotal](GroupStateTimeout.NoTimeout) {
-        (uid, it, state) =>
-          var (n, v) = state.getOption.getOrElse((0L, 0.0))
-          it.foreach { e => n += 1; v += e.value }
-          state.update((n, v))
-          UserRunningTotal(uid, n, v)
-      }
-  }
-
-  final case class SessionEvent(user_id: Long, ts: Timestamp, value: Double)
-  final case class ClosedSession(user_id: Long, session_start: Timestamp,
-                                 n_events: Long, total_value: Double)
-  /** Open-session state: epoch-millis bounds plus running totals. Public
-    * because the state-store encoder's generated code constructs it (a
-    * private constructor fails Janino compilation at runtime).
-    */
-  final case class OpenSession(start: Long, last: Long, n: Long, total: Double)
-
-  /** Closed-session emission via `flatMapGroupsWithState` + event-time
-    * timeout — the custom-state surface for semantics `session_window`
-    * cannot express: a session row is emitted ONCE, exactly when the
-    * session closes (either a later in-batch event overshoots the gap, or
-    * the watermark passes `last + gap` with no new event and the timeout
-    * fires). `session_window` instead re-emits a session's aggregate on
-    * every update; `mapGroupsWithState` must return exactly one row per
-    * key per batch. State per key is one open session — bounded — and the
-    * timeout clears it, so the state store never grows past the live-user
-    * count. Gap boundary matches `session_window`: an event EXACTLY `gap`
-    * after the previous one extends the session (merge-touching,
-    * EventStreamsSpec pins the boundary).
-    */
-  def closedSessions(events: Dataset[SessionEvent], gapSeconds: Long = 1800L,
-                     watermarkDelay: String = "10 minutes"): Dataset[ClosedSession] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    val gapMs = gapSeconds * 1000L
-    events
-      .withWatermark("ts", watermarkDelay)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[OpenSession, ClosedSession](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) { (uid, it, state) =>
-        if (!it.hasNext) {
-          // watermark passed last + gap with no event: the open session is
-          // definitively closed (no on-time event can extend it anymore)
-          val out = state.getOption.map(s =>
-            ClosedSession(uid, new Timestamp(s.start), s.n, s.total)).iterator
-          state.remove()
-          out
-        } else {
-          // fold this batch's events (sorted — micro-batches are unordered)
-          // into the carried open session, closing on each gap overshoot
-          val closed = scala.collection.mutable.ListBuffer.empty[ClosedSession]
-          var open = state.getOption
-          it.toSeq.sortBy(_.ts.getTime).foreach { e =>
-            val t = e.ts.getTime
-            open = open match {
-              case Some(s) if t - s.last <= gapMs =>
-                Some(OpenSession(s.start, math.max(s.last, t), s.n + 1, s.total + e.value))
-              case Some(s) =>
-                closed += ClosedSession(uid, new Timestamp(s.start), s.n, s.total)
-                Some(OpenSession(t, t, 1L, e.value))
-              case None =>
-                Some(OpenSession(t, t, 1L, e.value))
-            }
-          }
-          val s = open.get
-          state.update(s)
-          state.setTimeoutTimestamp(s.last + gapMs)
-          closed.iterator
-        }
-      }
-  }
-
-  final case class TypedEvent(user_id: Long, ts: Timestamp, event_id: Long,
-                              event_type: String)
-  final case class Transition(user_id: Long, prev_type: String, next_type: String)
-  /** Last-seen event per key: order position, type, event-time millis.
-    * Public for the state-store encoder's generated code (the OpenSession
-    * precedent).
-    */
-  final case class LastEvent(order: Long, tpe: String, lastMs: Long)
-
-  /** Streaming twin of [[graft.engine.Summaries.transitionMatrix]]'s pair
-    * extraction: emits one `(prev_type → next_type)` row per adjacent
-    * event pair within each key, as the events ARRIVE. State per key is
-    * exactly one `(order, type, ts)` — bounded by live-key count, cleared
-    * by an EVENT-TIME idle timeout (watermark passes `last + idleGap`;
-    * a key reappearing after expiry restarts its chain, trading one lost
-    * transition for a state store that cannot grow unboundedly — the
-    * house rule). Event-time, not processing-time: expiry is then
-    * restart-safe and replay-deterministic, and the engine never spins
-    * no-data micro-batches waiting on a wall clock.
-    *
-    * Ordering contract: micro-batches are sorted internally (batches are
-    * unordered), and cross-batch order is the arrival order — the
-    * standard at-ingest contract. A late event belonging BEFORE the
-    * carried state's position cannot be retro-spliced (guarded: pairs
-    * are only emitted forward). Downstream, a streaming `groupBy(prev,
-    * next).count` yields the live transition matrix.
-    */
-  def transitionStream(events: Dataset[TypedEvent], idleGapSeconds: Long = 7200L,
-                       watermarkDelay: String = "10 minutes"): Dataset[Transition] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    events
-      .withWatermark("ts", watermarkDelay)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[LastEvent, Transition](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) { (uid, it, state) =>
-        if (!it.hasNext) { // idle timeout fired: clear the carried state
-          state.remove()
-          Iterator.empty
-        } else {
-          val out = scala.collection.mutable.ListBuffer.empty[Transition]
-          var last = state.getOption
-          it.toSeq.sortBy(_.event_id).foreach { e =>
-            // forward-only: an out-of-order cross-batch straggler (order
-            // at/behind the carried position) is dropped, never spliced
-            if (last.forall(_.order < e.event_id)) {
-              last.foreach(l => out += Transition(uid, l.tpe, e.event_type))
-              last = Some(LastEvent(e.event_id, e.event_type,
-                math.max(last.map(_.lastMs).getOrElse(0L), e.ts.getTime)))
-            }
-          }
-          last.foreach { l =>
-            state.update(l)
-            state.setTimeoutTimestamp(l.lastMs + idleGapSeconds * 1000L)
-          }
-          out.iterator
-        }
-      }
-  }
-
-  final case class SpikeRow(event_type: String, day: java.sql.Date, n: Long,
-                            zscore: Option[Double], is_spike: Int)
-  /** Per-type spike state: the last `lookback` CLOSED (day, count) pairs
-    * plus the one open day. Public for the state-store encoder. */
-  final case class SpikeState(ring: List[(Long, Long)], openDay: Long,
-                              openN: Long, lastMs: Long)
-
-  /** Streaming twin of [[graft.engine.Summaries.dailySpikes]]: live
-    * per-type daily-volume z-score alerting. State per event type is the
-    * last `lookback` CLOSED observed-day counts (a fixed-size ring) plus
-    * ONE open day's running count — bounded by live-type count, nothing
-    * event-sized.
-    *
-    * Day-close contract (the [[transitionStream]] forward-only house
-    * rule): micro-batches sort internally on (ts, event_id); a day closes
-    * when the first event of a LATER day arrives for that type (arrival
-    * order is the cross-batch order), and a straggler for an
-    * already-closed day is dropped, never retro-spliced into a published
-    * statistic. The event-time idle timeout closes the final open day
-    * when a type goes quiet — restart-safe, no wall-clock spinning.
-    *
-    * Emitted rows state the EXACT batch arithmetic — same rolling
-    * mean/variance shapes, 6-dp z, variance clamp, zero-variance NULL-z
-    * spike rule, rows only once the ring is full — so stream == batch on
-    * the closed prefix is spec-pinned (EventStreamsSpec).
-    */
-  def spikeStream(events: Dataset[TypedEvent], lookback: Int = 7,
-                  z: Double = 3.0, idleGapSeconds: Long = 7200L,
-                  watermarkDelay: String = "10 minutes"): Dataset[SpikeRow] = {
-    require(lookback >= 2, s"lookback must be >= 2: $lookback")
-    require(z > 0, s"z must be positive: $z")
-    val spark = events.sparkSession
-    import spark.implicits._
-
-    def close(ring: List[(Long, Long)], day: Long, n: Long, tpe: String,
-              out: scala.collection.mutable.ListBuffer[SpikeRow]): List[(Long, Long)] = {
-      if (ring.size == lookback) {
-        val s = ring.map(_._2).sum
-        val ss = ring.map(c => c._2 * c._2).sum
-        val mean = s.toDouble / lookback
-        val variance = math.max(
-          (ss.toDouble - s.toDouble * s.toDouble / lookback) / (lookback - 1), 0.0)
-        val std = math.sqrt(variance)
-        val zs =
-          if (std > 0)
-            Some(BigDecimal((n.toDouble - mean) / std)
-              .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
-          else None
-        val spike =
-          if ((std > 0 && zs.exists(_ > z)) || (std == 0 && n.toDouble > mean)) 1 else 0
-        out += SpikeRow(tpe, new java.sql.Date(day * 86400000L), n, zs, spike)
-      }
-      (ring :+ (day -> n)).takeRight(lookback)
-    }
-
-    events
-      .withWatermark("ts", watermarkDelay)
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState[SpikeState, SpikeRow](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) { (tpe, it, state) =>
-        val out = scala.collection.mutable.ListBuffer.empty[SpikeRow]
-        if (!it.hasNext) { // idle timeout: close the open day, clear state
-          state.getOption.foreach { st =>
-            if (st.openDay >= 0) close(st.ring, st.openDay, st.openN, tpe, out)
-          }
-          state.remove()
-          out.iterator
-        } else {
-          val st = state.getOption.getOrElse(SpikeState(Nil, -1L, 0L, 0L))
-          var (ring, openDay, openN, lastMs) = (st.ring, st.openDay, st.openN, st.lastMs)
-          it.toSeq.sortBy(e => (e.ts.getTime, e.event_id)).foreach { e =>
-            val d = e.ts.getTime / 86400000L
-            lastMs = math.max(lastMs, e.ts.getTime)
-            if (openDay < 0) { openDay = d; openN = 1L }
-            else if (d == openDay) openN += 1L
-            else if (d > openDay) {
-              ring = close(ring, openDay, openN, tpe, out)
-              openDay = d; openN = 1L
-            } // else: straggler for a closed day — dropped (forward-only)
-          }
-          state.update(SpikeState(ring, openDay, openN, lastMs))
-          state.setTimeoutTimestamp(lastMs + idleGapSeconds * 1000L)
-          out.iterator
-        }
-      }
-  }
-
-  /** Streaming deduplication: drop repeated event ids inside the watermark
-    * horizon (`dropDuplicatesWithinWatermark` keys the state store by
-    * event_id and expires entries once the watermark passes them — bounded
-    * state, unlike a global dropDuplicates). The at-least-once file/kafka
-    * delivery twin of batch exact dedup.
-    */
-  def streamingDedup(spark: SparkSession, srcDir: String, schema: StructType,
-                     horizon: String = "2 hours"): DataFrame =
-    spark.readStream.schema(schema).parquet(srcDir)
-      .withWatermark("ts", horizon)
-      .dropDuplicatesWithinWatermark("event_id")
-
-  /** Stream-stream interval join: each purchase joins the same user's
-    * clicks from the preceding hour. Both sides are watermarked AND the
-    * join condition bounds event time on both sides, so Spark can expire
-    * join state — the state store never grows beyond watermark + interval.
-    * The same expression runs on batch frames (tested against the
-    * streaming memory sink in EventStreamsSpec).
-    */
-  def clickPurchaseJoin(clicks: DataFrame, purchases: DataFrame,
-                        horizon: String = "2 hours"): DataFrame = {
-    val c = clicks.withWatermark("ts", horizon).alias("c")
-    val p = purchases.withWatermark("ts", horizon).alias("p")
-    c.join(p, expr(
-      "c.user_id = p.user_id AND p.ts >= c.ts AND p.ts <= c.ts + INTERVAL 1 HOUR"))
-      .select(col("c.user_id").as("user_id"), col("c.ts").as("click_ts"),
-        col("p.ts").as("purchase_ts"), col("p.value").as("purchase_value"))
-  }
-
-  /** Stream-STATIC enrichment: join live events against a slowly-changing
-    * dimension table (user → segment, doc → source reputation). LEFT
-    * join — an enrichment must never drop facts, so keys missing from
-    * the dim flow through with NULL attributes. No watermark needed:
-    * stream-static joins are stateless by contract (each micro-batch
-    * joins against the CURRENT static relation, so a dim table backed by
-    * a mutable store picks up updates between batches without a restart);
-    * the dim side broadcasts when small — at dimension-table meaning it
-    * always is.
-    */
-  def enrichStream(events: DataFrame, dim: DataFrame, key: String): DataFrame =
-    events.join(broadcast(dim), Seq(key), "left")
-
-  /** Run a streaming frame to completion against the memory sink (local
-    * smoke path: a directory of parquet drives the stream synchronously).
-    */
-  def runToMemory(df: DataFrame, name: String): StreamingQuery = {
-    val q = df.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .start()
-    q.processAllAvailable()
-    q
   }
 
   /** Streaming heavy hitters: per tumbling window, the Misra–Gries

@@ -81,6 +81,8 @@ class EpssCliSpec extends SparkSpec {
       EpssCli.parseArgs(Seq("scores", "--store", "S", "--min-epss"))
     }
     assert(e.getMessage.contains("requires a value"))
+    val usage = intercept[IllegalArgumentException](EpssCli.parseArgs(Nil))
+    assert(usage.getMessage.contains("usage: scores|urls|date-range|download [options]"))
   }
 
   test("single-dash flags parse like the reference CLI (-a/-b)") {

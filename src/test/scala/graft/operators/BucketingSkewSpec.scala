@@ -19,7 +19,7 @@ class BucketingSkewSpec extends SparkSpec {
     spark.sql("DROP TABLE IF EXISTS o_b")
     Bucketing.writeBucketed(li, "li_b", "l_orderkey", 4)
     Bucketing.writeBucketed(o, "o_b", "l_orderkey", 4)
-    val joined = Bucketing.bucketedJoin(spark, "li_b", "o_b", "l_orderkey")
+    val joined = spark.table("li_b").join(spark.table("o_b"), "l_orderkey")
     val plan = joined.queryExecution.executedPlan match {
       case a: AdaptiveSparkPlanExec => a.executedPlan
       case p => p
@@ -38,15 +38,6 @@ class BucketingSkewSpec extends SparkSpec {
     val salted = Skew.saltedSumCount(ev, "k", "v", salts = 8)
       .orderBy("k").as[(Int, Long, Long)].collect().toSeq
     assert(salted == plain)
-  }
-
-  test("generic saltedAgg merges partials correctly") {
-    val ev = Seq.tabulate(100)(i => (i % 2, i.toDouble)).toDF("k", "v")
-    val out = Skew.saltedAgg(ev, "k", 4,
-      partial = Seq("pmin" -> min(col("v")), "pmax" -> max(col("v"))),
-      merge = Seq("min_v" -> min(col("pmin")), "max_v" -> max(col("pmax"))))
-      .orderBy("k").as[(Int, Double, Double)].collect().toSeq
-    assert(out == Seq((0, 0.0, 98.0), (1, 1.0, 99.0)))
   }
 
   test("zorderKey interleaves bits; nearby points get nearby keys") {

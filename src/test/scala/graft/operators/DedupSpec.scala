@@ -251,13 +251,6 @@ class DedupSpec extends SparkSpec {
       (0L, "suiteA", 2L), (1L, "suiteA", 2L), (2L, "suiteA", 2L)))
   }
 
-  test("jaccard values are exact set ratios") {
-    val pairs = Seq((0L, 2L)).toDF("doc_a", "doc_b")
-    val j = Dedup.jaccardForPairs(docs, pairs, "doc_id", "text")
-      .select("jaccard").as[Double].head()
-    assert(j == 1.0)
-  }
-
   test("raw lshCandidates fails fast on a mega-cluster bucket; dedupCorpus sails through") {
     // 120 byte-identical docs + 2 distinct ones: every copy lands every
     // band in one bucket, so the raw path's pair expansion is O(120²)

@@ -15,29 +15,6 @@ class MultimodalSpec extends SparkSpec {
     assert(m(0).blob.toSeq == "aaaa".getBytes("UTF-8").toSeq)
   }
 
-  test("sampleFrames keeps every stride-th fixed-width frame") {
-    val blob = Array.tabulate(10)(_.toByte) // 10 bytes, frameBytes=3 → frames 0..3
-    val media = Seq(Multimodal.MediaRow(7L, "video", blob)).toDS()
-    val frames = Multimodal.sampleFrames(media, frameBytes = 3, stride = 2)
-      .collect().sortBy(_.frame_idx)
-    assert(frames.map(_.frame_idx).toSeq == Seq(0, 2)) // frames 0 and 2 of 4
-    assert(frames(0).frame.toSeq == Seq[Byte](0, 1, 2))
-    assert(frames(1).frame.toSeq == Seq[Byte](6, 7, 8))
-  }
-
-  test("resize bounds payload size, preserves rows, and passes small blobs through") {
-    val big = Multimodal.MediaRow(1L, "image", Array.tabulate(5000)(_.toByte))
-    val small = Multimodal.MediaRow(2L, "image", Array[Byte](1, 2, 3))
-    val out = Multimodal.resize(Seq(big, small).toDS(), targetBytes = 1024)
-      .collect().sortBy(_.doc_id)
-    assert(out.length == 2)
-    assert(out(0).blob.length == 1024)
-    assert(out(1).blob.toSeq == Seq[Byte](1, 2, 3))
-    // deterministic
-    val again = Multimodal.resize(Seq(big).toDS(), targetBytes = 1024).collect().head
-    assert(out(0).blob.sameElements(again.blob))
-  }
-
   // a real PNG: 4×2, left half pure red, right half pure blue
   private def pngFixture(): Array[Byte] = {
     val img = new java.awt.image.BufferedImage(4, 2, java.awt.image.BufferedImage.TYPE_INT_RGB)
@@ -56,33 +33,6 @@ class MultimodalSpec extends SparkSpec {
     assert((img.get.getRGB(3, 1) & 0xffffff) == 0x0000ff)
     // non-image bytes are None, not an exception — the stub-path signal
     assert(Multimodal.decodeImage("not an image".getBytes("UTF-8")).isEmpty)
-  }
-
-  test("imageMeta yields real dimensions + channel means; drops undecodable rows") {
-    val media = Seq(
-      Multimodal.MediaRow(1L, "image", pngFixture()),
-      Multimodal.MediaRow(2L, "audio", Array[Byte](1, 2, 3))).toDS()
-    val metas = Multimodal.imageMeta(media).collect()
-    assert(metas.map(_.doc_id).toSeq == Seq(1L))
-    val m = metas.head
-    assert(m.width == 4 && m.height == 2 && m.n_pixels == 8L)
-    // half red half blue: mean_r = mean_b = 0.5, mean_g = 0
-    assert(math.abs(m.mean_r - 0.5) < 1e-9)
-    assert(m.mean_g == 0.0)
-    assert(math.abs(m.mean_b - 0.5) < 1e-9)
-  }
-
-  test("extractFeatures uses REAL pixel statistics for decodable images") {
-    val media = Seq(Multimodal.MediaRow(1L, "image", pngFixture())).toDS()
-    val f = Multimodal.extractFeatures(media).collect().head
-    assert(f.n_frames == 1)
-    // feature = [mean_r, mean_g, mean_b, std_r, std_g, std_b, log1p(w), log1p(h)]
-    assert(math.abs(f.feature(0) - 0.5f) < 1e-6f)
-    assert(f.feature(1) == 0.0f)
-    assert(math.abs(f.feature(2) - 0.5f) < 1e-6f)
-    assert(math.abs(f.feature(3) - 0.5f) < 1e-6f) // red is 0/1 half-half → std 0.5
-    assert(math.abs(f.feature(6) - math.log1p(4.0).toFloat) < 1e-6f)
-    assert(math.abs(f.feature(7) - math.log1p(2.0).toFloat) < 1e-6f)
   }
 
   // a real WAV: 16-bit signed little-endian mono PCM at 8 kHz, one second,
@@ -131,23 +81,6 @@ class MultimodalSpec extends SparkSpec {
     assert(math.abs(m.rms - 0.25) < 1e-9)
   }
 
-  test("extractFeatures uses REAL sample statistics for decodable WAV audio") {
-    val media = Seq(Multimodal.MediaRow(1L, "audio", wavFixture())).toDS()
-    val f = Multimodal.extractFeatures(media).collect().head
-    assert(f.n_frames == 8000)
-    // feature = [mean, rms, peak, zcr, log1p(frames), log1p(rate), channels, bits]
-    assert(math.abs(f.feature(0)) < 1e-6f)
-    assert(math.abs(f.feature(1) - 0.25f) < 1e-6f)
-    assert(math.abs(f.feature(2) - 0.25f) < 1e-6f)
-    assert(math.abs(f.feature(4) - math.log1p(8000.0).toFloat) < 1e-6f)
-    assert(math.abs(f.feature(5) - math.log1p(8000.0).toFloat) < 1e-6f)
-    assert(f.feature(6) == 1.0f && f.feature(7) == 16.0f)
-    // a non-WAV audio payload still takes the documented stub, not a crash
-    val stub = Multimodal.extractFeatures(
-      Seq(Multimodal.MediaRow(2L, "audio", "bb".getBytes("UTF-8"))).toDS()).collect().head
-    assert(stub.n_frames == 1 && stub.feature.length == 8)
-  }
-
   test("syntheticWav round-trips through the real decoder with IEEE-exact closed forms") {
     // the q105 contract: for a ±a square wave with equal halves, the
     // decoded values are EXACTLY the synthesis parameters — no tolerance
@@ -187,18 +120,6 @@ class MultimodalSpec extends SparkSpec {
     assert(out.head.dominant_hz == 500.0 && out.head.n_frames == 5040L)
     intercept[IllegalArgumentException](
       Multimodal.audioDominantFrequency(media, Nil))
-  }
-
-  test("extractFeatures preserves partitioning shape and is deterministic") {
-    val feats = Multimodal.extractFeatures(Multimodal.fakeMediaTable(docs))
-      .collect().sortBy(_.doc_id)
-    assert(feats.map(_.n_bytes).toSeq == Seq(4L, 2L, 6L))
-    assert(feats.forall(_.n_frames == 1))
-    assert(feats.forall(_.feature.length == 8))
-    // deterministic: run twice, same features
-    val again = Multimodal.extractFeatures(Multimodal.fakeMediaTable(docs))
-      .collect().sortBy(_.doc_id)
-    assert(feats.zip(again).forall { case (a, b) => a.feature.sameElements(b.feature) })
   }
 
   test("gifFrameMeta decodes REAL animated-GIF frames with exact closed-form stats") {

@@ -25,16 +25,6 @@ class PackingSpec extends SparkSpec {
     assert(shards > 1 && shards <= 8)
   }
 
-  test("packedBins: token totals and doc counts reconcile; text concatenated in id order") {
-    val docs = Seq((1L, "a b c"), (2L, "d e f g"), (3L, "h i"))
-      .toDF("doc_id", "text")
-    val bins = Packing.packedBins(docs, "doc_id", "text", capacity = 5, shards = 1)
-      .as[(Long, Long, Long, Long, String)].collect().sortBy(_._2)
-    assert(bins.map(_._3).sum == 3)       // n_docs total
-    assert(bins.map(_._4).sum == 9)       // n_tokens total
-    assert(bins.head._5 == "a b c d e f g") // bin 0 = docs 1,2 in id order
-  }
-
   test("paddingWasteByGroup: hand batches, sorted-batching savings, presorted zero") {
     // group g: lengths 1,1,1,9 in arrival order 9 first — batchSize 2:
     // arrival batches {9,1},{1,1}: padded 18+2=20; sorted {1,1},{1,9}:

@@ -846,36 +846,6 @@ class SimilarityIndexSpec extends SparkSpec {
         k = 5, nProbe = 4, rerank = 20)))
   }
 
-  test("ivfPqIndexMerge: shard-encoded halves merge to the one-batch index; foreign codebooks refuse") {
-    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-    val qs = emb.filter(Sampling.hashBucket($"vec_id") < 100)
-    val base = emb.filter(Sampling.hashBucket($"vec_id") < 500)
-    val s1 = emb.filter(Sampling.hashBucket($"vec_id") >= 500 &&
-      Sampling.hashBucket($"vec_id") < 750)
-    val s2 = emb.filter(Sampling.hashBucket($"vec_id") >= 750)
-    val idx = Similarity.ivfPqIndexBuild(base, "vec_id", "embedding",
-      nCentroids = 16, subspaces = 4, subDim = 16, pqK = 4, pqIters = 1)
-    // the distributed build: each shard encodes independently against
-    // the SAME frozen codebooks, shards merge
-    val shardA = Similarity.ivfPqIndexAdd(idx, s1, "vec_id", "embedding")
-    val shardB = idx.copy(codes = Similarity.ivfPqEncode(idx, s2, "vec_id", "embedding"))
-    val merged = Similarity.ivfPqIndexMerge(shardA, shardB)
-    val oneBatch = Similarity.ivfPqIndexAdd(idx,
-      s1.unionByName(s2), "vec_id", "embedding")
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.as[(Long, Long, Long)].collect().toSet
-    assert(rows(Similarity.ivfPqSearch(merged, emb, qs, "vec_id", "embedding",
-      k = 5, nProbe = 4, rerank = 20)) ==
-      rows(Similarity.ivfPqSearch(oneBatch, emb, qs, "vec_id", "embedding",
-        k = 5, nProbe = 4, rerank = 20)))
-    // an index trained on different data has different codebooks: refuse
-    val foreign = Similarity.ivfPqIndexBuild(s2, "vec_id", "embedding",
-      nCentroids = 16, subspaces = 4, subDim = 16, pqK = 4, pqIters = 1)
-    val e = intercept[IllegalArgumentException](
-      Similarity.ivfPqIndexMerge(idx, foreign))
-    assert(e.getMessage.contains("codebooks differ"))
-  }
-
   test("ivfPqReconError: zero on a self-codebook fixture; coded-row counts and report shape") {
     // 8 rows, pqK = 8, iters = 0: every slice IS a centroid, so the
     // reconstruction is exact and every subspace's MSE is 0

@@ -73,22 +73,6 @@ class SimilaritySpec extends SparkSpec {
     assert(narrow.subsetOf(all))
   }
 
-  test("nearDupPairsAuto sizes planes from the corpus and delegates to the banded generator") {
-    val df = Seq(
-      (0L, Array.fill(64)(0.25f)),
-      (1L, Array.fill(64)(0.25f)),
-      (2L, Array.tabulate(64)(i => if (i % 2 == 0) 1.0f else -1.0f))
-    ).toDF("vec_id", "embedding")
-    // 3 vectors -> bandedPlanesFor floor of 4 planes: identical result to
-    // the explicit banded call
-    val auto = Similarity.nearDupPairsAuto(df, "vec_id", "embedding", 0.9)
-      .as[(Long, Long)].collect().toSet
-    val explicit = Similarity.nearDupPairsBanded(df, "vec_id", "embedding", 0.9,
-      planes = 4, tables = 3)
-      .as[(Long, Long)].collect().toSet
-    assert(auto == explicit && auto == Set((0L, 1L)))
-  }
-
   test("banded nearDupPairs is a subset of exhaustive and exact within the table union") {
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
     val banded = Similarity.nearDupPairsBanded(emb, "vec_id", "embedding", 0.4,
@@ -236,47 +220,6 @@ class SimilaritySpec extends SparkSpec {
       "embedding", k = 1, probeBits = 1).count() >= 1)
   }
 
-  test("kmeansCodebook ignores null vectors in the sample") {
-    val vecs = Seq(
-      (0L, Some(Array.fill(8)(0.5f))), (1L, Some(Array.fill(8)(0.5f))),
-      (2L, None)
-    ).toDF("vec_id", "embedding")
-    val cb = Similarity.kmeansCodebook(vecs, "vec_id", "embedding",
-      nCentroids = 1, sampleSize = 10, iterations = 2)
-    assert(cb.length == 1 && cb.head._2.forall(!_.isNaN))
-  }
-
-  test("kmeansCodebook trains deterministic spherical centroids; trained IVF matches brute force") {
-    // two tight clusters around orthogonal directions
-    val vecs = (0L until 40L).map { i =>
-      val base = if (i % 2 == 0) Array.fill(8)(1.0f) else
-        Array.tabulate(8)(j => if (j % 2 == 0) 1.0f else -1.0f)
-      (i, base.updated(0, base(0) + (i % 5) * 0.01f))
-    }.toDF("vec_id", "embedding")
-    val cb = Similarity.kmeansCodebook(vecs, "vec_id", "embedding",
-      nCentroids = 2, sampleSize = 40, iterations = 5)
-    assert(cb.length == 2 && cb.map(_._1).toSeq == Seq(0L, 1L))
-    // deterministic: same call, same centroids
-    assert(cb.map(_._2).toSeq == Similarity.kmeansCodebook(vecs, "vec_id", "embedding",
-      nCentroids = 2, sampleSize = 40, iterations = 5).map(_._2).toSeq)
-    // each trained centroid aligns with one cluster (cosine > 0.99)
-    val clusterDirs = Seq(Array.fill(8)(1.0), Array.tabulate(8)(j => if (j % 2 == 0) 1.0 else -1.0))
-    cb.foreach { case (_, c) =>
-      val best = clusterDirs.map(d =>
-        d.zip(c).map { case (a, b) => a * b }.sum /
-          (math.sqrt(d.map(x => x * x).sum) * math.sqrt(c.map(x => x * x).sum))).max
-      assert(best > 0.99, s"centroid $c aligns with no cluster")
-    }
-    // trained-codebook IVF at nProbe=1 finds the same neighbors as brute
-    // force: clusters are well-separated, so probing one cell is lossless
-    val queries = vecs.filter($"vec_id" < 4)
-    val ivf = Similarity.ivfTopK(vecs, queries, "vec_id", "embedding", k = 3,
-      codebook = cb, nProbe = 1).as[(Long, Long, Long)].collect().toSet
-    val brute = Similarity.bruteForceTopK(vecs, queries, "vec_id", "embedding", k = 3)
-      .as[(Long, Long, Long)].collect().toSet
-    assert(ivf == brute)
-  }
-
   test("planesFor keeps the probe-multiplied per-vector load under budget") {
     assert(Similarity.planesFor(0) == 4)       // floor: the fixture default
     // smallest p with (p+1)·n/2^p <= 8 (probeBits=1 => p+1 probe masks)
@@ -380,14 +323,6 @@ class SimilaritySpec extends SparkSpec {
       .map(_._2).toSeq
     val got = out.sortBy(_._3).map(_._2).toSeq
     assert(got == brute.filter(got.contains(_)).take(got.length))
-  }
-
-  test("normalize yields unit vectors; zero vector passes through") {
-    val df = Seq((1L, Seq(3.0, 4.0)), (2L, Seq(0.0, 0.0))).toDF("id", "v")
-    val out = df.select($"id", Similarity.normalize($"v").as("nv"))
-      .as[(Long, Seq[Double])].collect().toMap
-    assert(out(1L) == Seq(0.6, 0.8))
-    assert(out(2L) == Seq(0.0, 0.0))
   }
 
   test("quantizeInt8 maps max-abs component to +/-127 and stays in range") {
@@ -625,35 +560,6 @@ class SimilaritySpec extends SparkSpec {
     assert(got == Seq(
       (0L, 0L, r6(2.0 / 3)), (0L, 1L, r6(5.0 / 3)),
       (1L, 0L, r6(5.0 / 3)), (1L, 1L, r6(38.0 / 9))))
-  }
-
-  test("principalComponent recovers a planted dominant axis; pcaProject orders along it") {
-    // points ±k · (0.6, 0.8) plus small orthogonal jitter: the top
-    // eigenvector of the covariance is (0.6, 0.8) up to sign, and the
-    // sign contract (largest-|w| coordinate positive) pins it exactly
-    val pts = (1 to 50).flatMap { k =>
-      val t = k.toDouble
-      Seq((2L * k, Array((0.6 * t).toFloat, (0.8 * t).toFloat)),
-        (2L * k + 1, Array((-0.6 * t + 0.008).toFloat, (-0.8 * t - 0.006).toFloat)))
-    }
-    val df = pts.toDF("vec_id", "embedding")
-    val pc = Similarity.principalComponent(df, "embedding")
-      .orderBy("dim").as[(Long, Double)].collect().toSeq
-    assert(pc.map(_._1) == Seq(0L, 1L))
-    assert(math.abs(pc(0)._2 - 0.6) < 1e-3, s"pc0 = ${pc(0)._2}")
-    assert(math.abs(pc(1)._2 - 0.8) < 1e-3, s"pc1 = ${pc(1)._2}")
-    // projections sort the points along the planted axis: the largest
-    // positive-k point scores highest, its mirror scores lowest
-    val proj = Similarity.pcaProject(df, "vec_id", "embedding")
-      .orderBy(desc("score")).as[(Long, Double)].collect().toSeq
-    assert(proj.head._1 == 100L && proj.last._1 == 101L)
-    // determinism: a second run is bit-identical (fixed iterations,
-    // quantized steps)
-    val again = Similarity.principalComponent(df, "embedding")
-      .orderBy("dim").as[(Long, Double)].collect().toSeq
-    assert(again == pc)
-    intercept[IllegalArgumentException](
-      Similarity.principalComponent(df, "embedding", iters = 0))
   }
 
   test("kmeansLloyd recovers planted clusters and matches a driver-side Lloyd") {

@@ -40,12 +40,6 @@ class TextAnalysisSpec extends SparkSpec {
     assert(fps(0L) != fps(2L))
   }
 
-  test("qualityScore lands in [0,1]") {
-    val q = TextAnalysis.qualityScore(docs, "doc_id", "text")
-      .select("quality").as[Double].collect()
-    assert(q.forall(v => v >= 0.0 && v <= 1.0))
-  }
-
   test("scrub redacts emails, urls and phone numbers; counts removed chars") {
     val d = Seq(
       (1L, "mail me at bob@example.com or visit https://x.io/page now"),

@@ -49,35 +49,4 @@ class IOSpec extends SparkSpec {
       .collect().sortBy(_._1).toSeq == Seq(("CVE-A", 0.1, 0.5), ("CVE-B", 0.2, 0.6),
       ("CVE-C", 0.3, 0.7), ("CVE-D", 0.4, 0.8), ("CVE-E", 0.5, 0.9)))
   }
-
-  test("readLenient splits clean rows from corrupt lines in one jsonl read") {
-    import org.apache.spark.sql.types._
-    val path = s"$tmp/feed.jsonl"
-    java.nio.file.Files.write(java.nio.file.Paths.get(path), java.util.Arrays.asList(
-      """{"id": 1, "name": "ok"}""",
-      """{"id": 2 "name": "missing comma"}""",
-      """not json at all""",
-      """{"id": 3, "name": "fine"}"""))
-    val schema = StructType(Seq(
-      StructField("id", LongType), StructField("name", StringType)))
-    val (good, bad) = IO.readLenient(spark, path, schema)
-    import spark.implicits._
-    assert(good.as[(Long, String)].collect().toSet ==
-      Set((1L, "ok"), (3L, "fine")))
-    val badLines = bad.as[String].collect().toSet
-    assert(badLines.size == 2)
-    assert(badLines.exists(_.contains("missing comma")))
-    assert(badLines.contains("not json at all"))
-    intercept[IllegalArgumentException](
-      IO.readLenient(spark, path, schema, format = "parquet"))
-
-    // csv arm (headerless contract): a non-numeric id quarantines the line
-    val cpath = s"$tmp/feed.csv"
-    java.nio.file.Files.write(java.nio.file.Paths.get(cpath), java.util.Arrays.asList(
-      "1,ok", "oops,bad id", "3,fine"))
-    val (cgood, cbad) = IO.readLenient(spark, cpath, schema, format = "csv")
-    assert(cgood.as[(Long, String)].collect().toSet ==
-      Set((1L, "ok"), (3L, "fine")))
-    assert(cbad.as[String].collect().toSeq == Seq("oops,bad id"))
-  }
 }

@@ -13,10 +13,6 @@ class EventStreamsSpec extends SparkSpec {
 
   private lazy val tmp = Files.createTempDirectory("graft-stream-").toString
 
-  private val schema = StructType(Seq(
-    StructField("ts", TimestampType), StructField("event_type", StringType),
-    StructField("value", DoubleType)))
-
   private lazy val batch = Seq(
     (Timestamp.valueOf("2024-01-01 00:10:00"), "click", 1.0),
     (Timestamp.valueOf("2024-01-01 00:50:00"), "click", 2.0),
@@ -77,268 +73,6 @@ class EventStreamsSpec extends SparkSpec {
       .select($"user_id", $"n_events")
       .as[(Long, Long)].collect().toSeq
     assert(c == a.map(r => (r._1, r._3)))
-  }
-
-  test("mapGroupsWithState carries per-user running totals across micro-batches") {
-    import EventStreams.{UserEvent, UserRunningTotal}
-    val dir = s"$tmp/state-src"
-    // two files → two micro-batches with maxFilesPerTrigger=1
-    Seq(UserEvent(1L, 1.0), UserEvent(2L, 5.0)).toDS()
-      .coalesce(1).write.parquet(s"$dir/b1")
-    Seq(UserEvent(1L, 2.0)).toDS()
-      .coalesce(1).write.parquet(s"$dir/b2")
-    val src = spark.readStream
-      .schema(org.apache.spark.sql.Encoders.product[UserEvent].schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$dir/*")
-      .as[UserEvent]
-    val q = EventStreams.runningUserTotals(src).writeStream
-      .outputMode("update").format("memory").queryName("running").start()
-    try {
-      q.processAllAvailable()
-      val last = spark.table("running")
-        .groupBy("user_id")
-        .agg(max("n_events").as("n"), max("total_value").as("v"))
-        .orderBy("user_id")
-        .as[(Long, Long, Double)].collect().toSeq
-      assert(last == Seq((1L, 2L, 3.0), (2L, 1L, 5.0)))
-    } finally q.stop()
-  }
-
-  test("transitionStream emits batch-identical pairs across micro-batches; stragglers drop") {
-    import EventStreams.{Transition, TypedEvent}
-    val dir = s"$tmp/trans-src"
-    def at(m: Int) = Timestamp.valueOf(f"2024-01-01 00:$m%02d:00")
-    // batch 1: user 1 a(1) b(2); user 2 a(1) — batch 2: user 1 a(5);
-    // user 2 c(3); plus a STRAGGLER for user 1 (order 0, behind the
-    // carried state) that must be dropped, not retro-spliced
-    Seq(TypedEvent(1L, at(1), 1L, "a"), TypedEvent(1L, at(2), 2L, "b"),
-      TypedEvent(2L, at(1), 1L, "a"))
-      .toDS().coalesce(1).write.parquet(s"$dir/b1")
-    Seq(TypedEvent(1L, at(5), 5L, "a"), TypedEvent(2L, at(3), 3L, "c"),
-      TypedEvent(1L, at(0), 0L, "zzz"))
-      .toDS().coalesce(1).write.parquet(s"$dir/b2")
-    val src = spark.readStream
-      .schema(org.apache.spark.sql.Encoders.product[TypedEvent].schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$dir/*")
-      .as[TypedEvent]
-    val q = EventStreams.transitionStream(src).writeStream
-      .outputMode("append").format("memory").queryName("transitions").start()
-    try {
-      q.processAllAvailable()
-      val got = spark.table("transitions")
-        .as[Transition].collect().toSet
-      // the same pairs the batch lag-window extracts from the full log
-      // (minus the dropped straggler)
-      assert(got == Set(
-        Transition(1L, "a", "b"), Transition(1L, "b", "a"),
-        Transition(2L, "a", "c")))
-      // and the streaming matrix agg over the pair stream matches the
-      // batch transitionMatrix over the in-order event log
-      val batchLog = Seq(
-        (1L, 1L, "a"), (1L, 2L, "b"), (1L, 5L, "a"),
-        (2L, 1L, "a"), (2L, 3L, "c")
-      ).toDF("user_id", "event_id", "event_type")
-      val batchPairs = graft.engine.Summaries
-        .transitionMatrix(batchLog, "user_id", "event_type", Seq("event_id"))
-        .select("prev_type", "next_type", "n")
-        .as[(String, String, Long)].collect().toSet
-      val streamPairs = spark.table("transitions")
-        .groupBy("prev_type", "next_type").agg(count(lit(1)).as("n"))
-        .as[(String, String, Long)].collect().toSet
-      assert(streamPairs == batchPairs)
-    } finally q.stop()
-  }
-
-  test("spikeStream: closed-day rows equal batch dailySpikes; stragglers drop") {
-    import EventStreams.{SpikeRow, TypedEvent}
-    val dir = s"$tmp/spike-src"
-    def at(day: Int, h: Int) = Timestamp.valueOf(f"2024-01-$day%02d $h%02d:00:00")
-    // type "a": day1×2, day2×2, day3×6 (spike), day4 sentinel (closes day3,
-    // stays open itself). lookback=2 → first scoreable day is day 3.
-    // batch 2 carries a STRAGGLER for closed day 1 — dropped, not spliced.
-    val b1 = Seq(
-      TypedEvent(1L, at(1, 1), 1L, "a"), TypedEvent(1L, at(1, 2), 2L, "a"),
-      TypedEvent(1L, at(2, 1), 3L, "a"), TypedEvent(1L, at(2, 2), 4L, "a"))
-    val b2 = (5L to 10L).map(i => TypedEvent(1L, at(3, i.toInt), i, "a")) ++
-      Seq(TypedEvent(1L, at(4, 1), 11L, "a"),
-        TypedEvent(1L, at(1, 9), 99L, "a")) // straggler
-    b1.toDS().coalesce(1).write.parquet(s"$dir/b1")
-    b2.toDS().coalesce(1).write.parquet(s"$dir/b2")
-    val src = spark.readStream
-      .schema(org.apache.spark.sql.Encoders.product[TypedEvent].schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$dir/*")
-      .as[TypedEvent]
-    val q = EventStreams.spikeStream(src, lookback = 2, z = 1.0).writeStream
-      .outputMode("append").format("memory").queryName("spikes").start()
-    try {
-      q.processAllAvailable()
-      val got = spark.table("spikes").as[SpikeRow].collect()
-        .map(r => (r.event_type, r.day.toString, r.n, r.zscore, r.is_spike)).toSet
-      // batch twin over the SAME in-order log minus the straggler and the
-      // never-closed trailing day 4
-      val batchLog = (b1 ++ b2.dropRight(1))
-        .map(e => (e.user_id, e.ts, e.event_id, e.event_type))
-        .toDF("user_id", "ts", "event_id", "event_type")
-      val batch = graft.engine.Summaries
-        .dailySpikes(batchLog, "event_type", "ts", lookback = 2, z = 1.0)
-        .collect()
-        .map(r => (r.getString(0), r.getDate(1).toString, r.getLong(2),
-          Option(r.get(3)).map(_.asInstanceOf[Double]), r.getInt(4)))
-        .filter(_._2 != "2024-01-04") // day 4 never closes in the stream
-        .toSet
-      assert(got == batch)
-      // the spike day itself: 6 events vs mean 2 of {2,2}, std 0 → NULL z,
-      // zero-variance deviation rule flags it
-      assert(got.contains(("a", "2024-01-03", 6L, None, 1)))
-    } finally q.stop()
-  }
-
-  test("flatMapGroupsWithState emits a session once — in-batch gap overshoot closes it") {
-    import EventStreams.{SessionEvent, ClosedSession}
-    val dir = s"$tmp/fmgws-inbatch"
-    // one batch: u1 has a >30min gap inside it → first session closes inline;
-    // the second stays open (no emission — nothing has closed it yet)
-    Seq(
-      SessionEvent(1L, Timestamp.valueOf("2024-01-01 00:00:00"), 1.0),
-      SessionEvent(1L, Timestamp.valueOf("2024-01-01 00:10:00"), 2.0),
-      SessionEvent(1L, Timestamp.valueOf("2024-01-01 01:00:00"), 4.0)
-    ).toDS().coalesce(1).write.parquet(dir)
-    val src = spark.readStream
-      .schema(org.apache.spark.sql.Encoders.product[SessionEvent].schema)
-      .parquet(dir).as[SessionEvent]
-    val q = EventStreams.closedSessions(src).writeStream
-      .outputMode("append").format("memory").queryName("fmgws_inbatch").start()
-    try {
-      q.processAllAvailable()
-      val got = spark.table("fmgws_inbatch")
-        .select($"user_id", $"session_start".cast("string"), $"n_events", $"total_value")
-        .as[(Long, String, Long, Double)].collect().toSeq
-      assert(got == Seq((1L, "2024-01-01 00:00:00", 2L, 3.0)))
-    } finally q.stop()
-  }
-
-  test("flatMapGroupsWithState event-time timeout flushes the open session") {
-    import EventStreams.SessionEvent
-    val dir = s"$tmp/fmgws-timeout"
-    // three files → three micro-batches. b1 opens u1's session; b2's later
-    // event advances the watermark past u1's last + gap; b3 (any further
-    // batch) lets the timeout fire and emit the closed session. The
-    // exact-gap event in b1 must still merge (session_window boundary).
-    Seq(
-      SessionEvent(1L, Timestamp.valueOf("2024-01-01 00:00:00"), 1.0),
-      SessionEvent(1L, Timestamp.valueOf("2024-01-01 00:30:00"), 2.0)  // exactly gap → merged
-    ).toDS().coalesce(1).write.parquet(s"$dir/b1")
-    Seq(SessionEvent(99L, Timestamp.valueOf("2024-01-01 06:00:00"), 0.0))
-      .toDS().coalesce(1).write.parquet(s"$dir/b2")
-    Seq(SessionEvent(98L, Timestamp.valueOf("2024-01-01 12:00:00"), 0.0))
-      .toDS().coalesce(1).write.parquet(s"$dir/b3")
-    val src = spark.readStream
-      .schema(org.apache.spark.sql.Encoders.product[SessionEvent].schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$dir/*").as[SessionEvent]
-    val q = EventStreams.closedSessions(src).writeStream
-      .outputMode("append").format("memory").queryName("fmgws_timeout").start()
-    try {
-      q.processAllAvailable()
-      val got = spark.table("fmgws_timeout")
-        .filter($"user_id" === 1L)
-        .select($"user_id", $"session_start".cast("string"), $"n_events", $"total_value")
-        .as[(Long, String, Long, Double)].collect().toSeq
-      assert(got == Seq((1L, "2024-01-01 00:00:00", 2L, 3.0)))
-    } finally q.stop()
-  }
-
-  test("streamingDedup drops repeated event ids within the watermark horizon") {
-    val dedupSchema = StructType(Seq(
-      StructField("event_id", LongType), StructField("ts", TimestampType),
-      StructField("value", DoubleType)))
-    val src = s"$tmp/dedup-src"
-    Seq(
-      (1L, Timestamp.valueOf("2024-01-01 00:00:00"), 1.0),
-      (2L, Timestamp.valueOf("2024-01-01 00:05:00"), 2.0),
-      (1L, Timestamp.valueOf("2024-01-01 00:07:00"), 9.0), // duplicate id
-      (3L, Timestamp.valueOf("2024-01-01 00:10:00"), 3.0)
-    ).toDF("event_id", "ts", "value").coalesce(1).write.mode("overwrite").parquet(src)
-    val q = EventStreams.streamingDedup(spark, src, dedupSchema).writeStream
-      .outputMode("append").format("memory").queryName("dedup_out").start()
-    try {
-      q.processAllAvailable()
-      val ids = spark.table("dedup_out").select("event_id")
-        .as[Long].collect().sorted.toSeq
-      assert(ids == Seq(1L, 2L, 3L))
-    } finally q.stop()
-  }
-
-  test("stream-stream interval join matches its batch twin") {
-    val ssSchema = StructType(Seq(
-      StructField("user_id", LongType), StructField("ts", TimestampType),
-      StructField("value", DoubleType)))
-    val clicks = Seq(
-      (1L, Timestamp.valueOf("2024-01-01 00:00:00"), 0.0),
-      (1L, Timestamp.valueOf("2024-01-01 02:00:00"), 0.0), // > 1h before purchase → excluded
-      (2L, Timestamp.valueOf("2024-01-01 00:00:00"), 0.0)
-    ).toDF("user_id", "ts", "value")
-    val purchases = Seq(
-      (1L, Timestamp.valueOf("2024-01-01 00:30:00"), 10.0),
-      (2L, Timestamp.valueOf("2024-01-01 05:00:00"), 20.0)  // no click within 1h
-    ).toDF("user_id", "ts", "value")
-    val batchOut = EventStreams.clickPurchaseJoin(clicks, purchases)
-      .select($"user_id", $"click_ts".cast("string"), $"purchase_value")
-      .as[(Long, String, Double)].collect().toSet
-    assert(batchOut == Set((1L, "2024-01-01 00:00:00", 10.0)))
-
-    val (cDir, pDir) = (s"$tmp/ss-clicks", s"$tmp/ss-purchases")
-    clicks.coalesce(1).write.mode("overwrite").parquet(cDir)
-    purchases.coalesce(1).write.mode("overwrite").parquet(pDir)
-    val q = EventStreams.clickPurchaseJoin(
-      spark.readStream.schema(ssSchema).parquet(cDir),
-      spark.readStream.schema(ssSchema).parquet(pDir)).writeStream
-      .outputMode("append").format("memory").queryName("ss_join").start()
-    try {
-      q.processAllAvailable()
-      val streamOut = spark.table("ss_join")
-        .select($"user_id", $"click_ts".cast("string"), $"purchase_value")
-        .as[(Long, String, Double)].collect().toSet
-      assert(streamOut == batchOut)
-    } finally q.stop()
-  }
-
-  test("stream-static enrichment left-joins the dim per micro-batch, keeps dimless facts") {
-    val evSchema = StructType(Seq(
-      StructField("user_id", LongType), StructField("value", DoubleType)))
-    val dim = Seq((1L, "gold"), (2L, "basic")).toDF("user_id", "segment")
-    val evDir = s"$tmp/enrich-events"
-    Seq((1L, 10.0), (3L, 30.0)).toDF("user_id", "value")
-      .coalesce(1).write.mode("overwrite").parquet(evDir)
-    val q = EventStreams.enrichStream(
-      spark.readStream.schema(evSchema).parquet(evDir), dim, "user_id")
-      .writeStream.outputMode("append").format("memory")
-      .queryName("enriched").start()
-    try {
-      q.processAllAvailable()
-      val got = spark.table("enriched")
-        .as[(Long, Double, Option[String])].collect().toSet
-      // user 3 has no dim row and still flows, attribute NULL
-      assert(got == Set((1L, 10.0, Some("gold")), (3L, 30.0, None)))
-    } finally q.stop()
-  }
-
-  test("streaming twin over a file source produces the same frame via memory sink") {
-    val src = s"$tmp/events"
-    batch.coalesce(1).write.mode("overwrite").parquet(src)
-    val q = EventStreams.runToMemory(
-      EventStreams.streamingWindowedAgg(spark, src, schema), "stream_out")
-    try {
-      val got = spark.table("stream_out").orderBy("ws", "event_type")
-        .select($"ws".cast("string"), $"event_type", $"n")
-        .as[(String, String, Long)].collect()
-      assert(got.toSeq == Seq(
-        ("2024-01-01 00:00:00", "click", 2L),
-        ("2024-01-01 01:00:00", "view", 1L)))
-    } finally q.stop()
   }
 
   test("heavyHittersPerWindow: MG buffers merge across micro-batch cuts, batch parity") {
