@@ -12,10 +12,8 @@ object Bench {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = Session(cpus.toInt, Session.tuned)
     // dev loop: SPARK_GRAFT_BENCH_ONLY=q23,q58 times just those queries
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.exists(n.startsWith)) }
+    val onlyVar = "SPARK_GRAFT_BENCH_ONLY"
+    val ordered = SparkEntry.selected(onlyVar)
     val results = ordered.map { case (name, fn) =>
       try {
         fn(spark, sfDir).count() // warmup: codegen + JIT + IO caches
@@ -63,7 +61,7 @@ object Bench {
     // depend on stdout-tail parsing (BENCH_r01/r02 were lost that way).
     // Filtered dev-loop runs must never clobber the canonical artifact
     // (round 7's bench_result.json was overwritten by a one-query repro run).
-    val defaultOut = if (only.isDefined) "bench_result.dev.json" else "bench_result.json"
+    val defaultOut = if (sys.env.contains(onlyVar)) "bench_result.dev.json" else "bench_result.json"
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", defaultOut)
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(outFile), line + "\n")
     catch { case e: Throwable => System.err.println(s"[bench] file write failed: $e") }

@@ -13,12 +13,7 @@ object Verify {
     new java.io.File(outDir).mkdirs()
     // dev loop: SPARK_GRAFT_VERIFY_ONLY=q123,q124 dumps just those
     // queries (prefix match); the driver never sets it → full dump.
-    val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-    val selected = only match {
-      case Some(ps) => SparkEntry.queries.filter { case (n, _) => ps.exists(n.startsWith) }
-      case None => SparkEntry.queries
-    }
+    val selected = SparkEntry.selected("SPARK_GRAFT_VERIFY_ONLY")
     val failed = selected.count { case (name, fn) =>
       try {
         fn(spark, sfDir).coalesce(1).write.mode("overwrite")

@@ -44,20 +44,18 @@ object Graph {
     *
     * 100 TB shape: the weighted edge list (src, dst, 1/outdeg) is built
     * once — one src-keyed co-shuffled join against the outdegree
-    * aggregate — and persisted, so each iteration costs exactly two
-    * exchanges: ranks join edges on src, contributions aggregate on dst
-    * (map-side combinable). Ranks are node-sized, edges edge-sized;
-    * nothing is ever collected or broadcast (node counts at web scale
-    * dwarf broadcast limits). `N` is one driver-side scalar count.
+    * aggregate — and eagerly `localCheckpoint`ed, so each iteration
+    * costs exactly two exchanges: ranks join edges on src, contributions
+    * aggregate on dst (map-side combinable). Ranks are node-sized, edges
+    * edge-sized; nothing is ever collected or broadcast (node counts at
+    * web scale dwarf broadcast limits). `N` is one driver-side scalar
+    * count.
     *
-    * Cache lifetime: the returned ranks frame reads the persisted
-    * weighted-edge table LAZILY (iters references in the unrolled plan,
-    * PlanSpec q127 pins the cache scan), so the operator cannot release
-    * it before the caller's action — the cache is caller-owned; a
-    * long-lived session that calls pageRank repeatedly should
-    * `spark.catalog.clearCache()` or re-plan off a materialized copy
-    * between calls ([[hits]] eagerly self-releases instead, which it can
-    * only because its contract materializes per-round).
+    * Cache lifetime: the returned ranks frame reads the weighted-edge
+    * table LAZILY (iters references in the unrolled plan, PlanSpec q127
+    * pins the checkpoint scan). A checkpoint adds no CacheManager entry,
+    * so nothing outlives the returned frame and there is nothing for the
+    * caller to release.
     */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
                damping: Double = 0.85, iters: Int = 5): DataFrame = {
@@ -72,7 +70,7 @@ object Graph {
     val weighted = e.join(outDeg, Seq("__src"))
       .select(col("__src"), col("__dst"),
         (lit(1.0) / col("__deg").cast("double")).as("__w"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint()
     val teleport = (1.0 - damping) / n.toDouble
     var ranks = nodes.withColumn("rank", lit(1.0 / n.toDouble))
     for (_ <- 1 to iters) {
@@ -96,11 +94,11 @@ object Graph {
     * `r_0 = e`. Same fixed-iteration contract, per-iteration 12-dp
     * re-quantization, and dangling-mass treatment as [[pageRank]].
     *
-    * 100 TB shape: identical to [[pageRank]] (persisted weighted edges,
-    * two exchanges per iteration) plus one node-sized seed membership
-    * joined into the teleport term — seeds broadcast (seed sets are
-    * small by meaning: trusted-domain lists, topic exemplars). Cache
-    * lifetime of `weighted`/`base` is caller-owned, as in [[pageRank]].
+    * 100 TB shape: identical to [[pageRank]] (checkpointed weighted
+    * edges, two exchanges per iteration) plus one node-sized seed
+    * membership joined into the teleport term — seeds broadcast (seed
+    * sets are small by meaning: trusted-domain lists, topic exemplars).
+    * `weighted` and `base` are checkpoints, as in [[pageRank]].
     */
   def personalizedPageRank(edges: DataFrame, srcCol: String, dstCol: String,
                            seeds: DataFrame, seedCol: String,
@@ -119,12 +117,12 @@ object Graph {
     val weighted = e.join(outDeg, Seq("__src"))
       .select(col("__src"), col("__dst"),
         (lit(1.0) / col("__deg").cast("double")).as("__w"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint()
     val base = nodes.join(broadcast(seedSet), Seq("node"), "left")
       .select(col("node"),
         when(col("__seed").isNotNull, lit(1.0 / nSeeds.toDouble))
           .otherwise(lit(0.0)).as("__e"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint()
     var ranks = base.select(col("node"), round(col("__e"), 12).as("rank"))
     for (_ <- 1 to iters) {
       val contribs = ranks.join(weighted, ranks("node") === weighted("__src"))
@@ -379,8 +377,8 @@ object Graph {
     * `max(struct(cnt, -label))`, a plain partial-aggregatable `max`, NOT
     * a per-node window (no second shuffle, no rank materialization).
     * Labels are node-sized; nothing is collected or broadcast. The
-    * result materializes once and the internal edge cache self-releases
-    * (the [[hits]] pattern); the returned cache is caller-owned.
+    * result materializes once as a checkpoint and the internal edge cache
+    * self-releases (the [[hits]] pattern), so no cache outlives the call.
     */
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
                        iters: Int = 5): DataFrame = {
@@ -405,8 +403,7 @@ object Graph {
     }
     // materialize once, self-release the edge cache (the hits pattern —
     // the caller has no handle on nbrs, so caller-owned would leak)
-    val out = labels.persist(StorageLevel.MEMORY_AND_DISK)
-    out.count()
+    val out = labels.localCheckpoint()
     nbrs.unpersist(blocking = false)
     out
   }
@@ -456,8 +453,7 @@ object Graph {
             coalesce(col("__h"), lit(Int.MaxValue))).as("hops"))
     }
     // materialize once, self-release the edge cache (see labelPropagation)
-    val out = dist.persist(StorageLevel.MEMORY_AND_DISK)
-    out.count()
+    val out = dist.localCheckpoint()
     nbrs.unpersist(blocking = false)
     out
   }

@@ -1425,17 +1425,16 @@ object TextAnalysis {
     var nv = -1L
     // the capped relation's footer count used to run SEQUENTIALLY after
     // the meta parse (its presence is meta-gated) — probe the directory
-    // up front instead and count it INSIDE the concurrent batch (a
-    // filterless count reads no column); the meta cross-checks below
-    // fire in the original order, and the capped schema is checked only
-    // once meta says the index is capped, so a stray capped/ under an
-    // uncapped meta fails as the mixed directory it is
+    // up front instead and read and count it INSIDE the concurrent batch
+    // (a filterless count reads no column); the meta cross-checks below
+    // fire in the original order, and the capped read's outcome (even a
+    // non-parquet file's footer error) is looked at only once meta says
+    // the index is capped, so a stray capped/ under an uncapped meta
+    // fails as the mixed directory it is
     val cappedPath = new org.apache.hadoop.fs.Path(s"$dir/capped")
-    val fs = cappedPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val cappedExisting =
-      if (fs.exists(cappedPath)) Some(spark.read.parquet(s"$dir/capped"))
-      else None
-    var nc = -1L
+    val cappedExists = cappedPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .exists(cappedPath)
+    var capped: scala.util.Try[(DataFrame, Long)] = null
     graft.operators.Par.run(Seq(
       () => metaRows = spark.read.parquet(s"$dir/meta")
         .select(col("weighting").cast("string"), col("min_df").cast("int"),
@@ -1446,7 +1445,10 @@ object TextAnalysis {
         .collect(),
       () => n = postings.count(),
       () => nv = vocab.count()) ++
-      cappedExisting.map(cp => () => { nc = cp.count(); () }))
+      Option.when(cappedExists)(() => capped = scala.util.Try {
+        val cp = spark.read.parquet(s"$dir/capped")
+        (cp, cp.count())
+      }))
     require(metaRows.length == 1,
       s"$dir/meta must hold exactly one row, got ${metaRows.length}")
     val m = metaRows.head
@@ -1485,16 +1487,16 @@ object TextAnalysis {
     val cappedRel = capO match {
       case Some(c) =>
         require(c >= 1, s"$dir/meta: cap must be >= 1, got $c")
-        require(cappedExisting.isDefined,
+        require(cappedExists,
           s"$dir/meta says cap=$c but $dir/capped is missing — a mixed directory")
-        val cpCols = cappedExisting.get.columns
-        require(Set("doc_id", "token", "weight").subsetOf(cpCols.toSet),
-          s"$dir/capped must hold (doc_id, token, weight), got ${cpCols.mkString(", ")}")
+        val (cp, nc) = capped.get
+        require(Set("doc_id", "token", "weight").subsetOf(cp.columns.toSet),
+          s"$dir/capped must hold (doc_id, token, weight), got ${cp.columns.mkString(", ")}")
         require(nc == nCapO.get,
           s"meta says ${nCapO.get} capped postings but $dir/capped holds $nc")
-        cappedExisting
+        Some(cp)
       case None =>
-        require(cappedExisting.isEmpty,
+        require(!cappedExists,
           s"$dir/meta says uncapped but $dir/capped exists — a mixed directory")
         None
     }

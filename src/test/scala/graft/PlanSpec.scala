@@ -578,16 +578,16 @@ class PlanSpec extends SparkSpec {
     assert(collectAll(p) { case j: BroadcastNestedLoopJoinExec => j }.isEmpty)
   }
 
-  test("q127 pagerank: co-keyed equi-joins per iteration; weighted edges are cached") {
+  test("q127 pagerank: co-keyed equi-joins per iteration; weighted edges are checkpointed") {
     val p = plan("q127_pagerank")
     assert(collectAll(p) { case c: org.apache.spark.sql.execution.joins.CartesianProductExec => c }.isEmpty)
     assert(collectAll(p) { case w: WindowExec => w }.isEmpty)
-    // the persisted weighted-edge table must be read from cache, not
-    // recomputed per iteration
-    val cached = collectAll(p) {
-      case c: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec => c
+    // the checkpointed weighted-edge table must be read from its
+    // checkpoint, not recomputed per iteration
+    val checkpointed = collectAll(p) {
+      case c: org.apache.spark.sql.execution.RDDScanExec => c
     }
-    assert(cached.nonEmpty, "weighted edges must come from the persisted table")
+    assert(checkpointed.nonEmpty, "weighted edges must come from the checkpointed table")
   }
 
   test("q128 class terms: rank window consumes the aggregated vocab matrix") {

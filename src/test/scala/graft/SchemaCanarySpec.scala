@@ -13,8 +13,9 @@ import org.apache.spark.sql.types._
   *
   * Timestamp columns accept the three encodings the harness has actually
   * shipped (LongType via nanosAsLong, TimestampType, TimestampNTZType);
-  * `SparkEntry.events()` dispatches on whichever arrives. Anything else —
-  * renamed column, dropped column, new type family — fails by name here.
+  * `graft.queries.Shared.events()` dispatches on whichever arrives.
+  * Anything else — renamed column, dropped column, new type family —
+  * fails by name here.
   */
 class SchemaCanarySpec extends SparkSpec {
 
@@ -69,7 +70,7 @@ class SchemaCanarySpec extends SparkSpec {
           s"$table.$name decoded as ${actual.simpleString}; accepted: " +
             ok.map(_.simpleString).mkString("{", ", ", "}") +
             " — harness testdata regenerated with a new encoding? " +
-            "(see SparkEntry.events() dispatch before widening this set)")
+            "(see graft.queries.Shared.events() dispatch before widening this set)")
       }
     }
   }

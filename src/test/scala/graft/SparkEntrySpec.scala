@@ -1,7 +1,9 @@
 package graft
 
+import graft.queries.{Oracle, Query}
+
 /** Driver-contract smoke: every query runs at sf0.001 and returns rows;
-  * every oracle key has a matching query.
+  * the registry names each query once and gives it exactly one oracle.
   */
 class SparkEntrySpec extends SparkSpec {
 
@@ -9,9 +11,16 @@ class SparkEntrySpec extends SparkSpec {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
-  test("all oracleSql keys exist in queries") {
-    val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(missing.isEmpty, s"oracle without query: $missing")
+  test("registry: names unique, oracleSql = the SQL oracles, goldens hashed per sf") {
+    val names = SparkEntry.registry.map(_.name)
+    assert(names.distinct.size == names.size)
+    val sqlNames = SparkEntry.registry.collect { case Query(n, _, Oracle.Sql(_)) => n }
+    assert(SparkEntry.oracleSql.keySet == sqlNames.toSet)
+    val golden = SparkEntry.registry.collect { case Query(n, _, Oracle.Golden) => n }
+    for (sf <- Seq("sf0.001", "sf0.01", "sf0.1"); n <- golden) {
+      val hash = java.nio.file.Paths.get("tools/goldens", sf, s"$n.sha256")
+      assert(java.nio.file.Files.isRegularFile(hash), s"golden query $n has no $hash")
+    }
   }
 
   for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)) {

@@ -228,6 +228,21 @@ class GraphSpec extends SparkSpec {
       Graph.bfsHops(edges, "a", "b", seeds, "id", maxHops = 0))
   }
 
+  test("pageRank/PPR/labelPropagation/bfsHops leave no CacheManager entry") {
+    val edges = Seq((0L, 1L), (0L, 2L), (1L, 2L), (2L, 0L), (3L, 2L)).toDF("src", "dst")
+    val seeds = Seq(0L).toDF("id")
+    val verbs = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "pageRank" -> (() => Graph.pageRank(edges, "src", "dst")),
+      "personalizedPageRank" -> (() => Graph.personalizedPageRank(edges, "src", "dst", seeds, "id")),
+      "labelPropagation" -> (() => Graph.labelPropagation(edges, "src", "dst")),
+      "bfsHops" -> (() => Graph.bfsHops(edges, "src", "dst", seeds, "id")))
+    for ((name, verb) <- verbs) {
+      spark.catalog.clearCache()
+      assert(verb().count() > 0)
+      assert(spark.sharedState.cacheManager.isEmpty, s"$name left a cached frame behind")
+    }
+  }
+
   test("degreeAssortativity: star = -1, cycle degenerates NULL, mixed matches Pearson") {
     // star K1,4: every edge joins deg-4 hub to deg-1 leaf → r = -1
     val star = Seq((0L, 1L), (0L, 2L), (0L, 3L), (0L, 4L)).toDF("a", "b")

@@ -1024,6 +1024,19 @@ class TextAnalysisSpec extends SparkSpec {
     assert(e.getMessage.contains(
       s"$dir/meta says uncapped but $dir/capped exists — a mixed directory"),
       e.getMessage)
+    // a capped/ holding a non-parquet file is the same mixed directory,
+    // not a parquet footer error
+    val garbage = java.nio.file.Files.createTempDirectory("sparsegarbage").toString
+    TextAnalysis.sparseIndexSave(
+      TextAnalysis.sparseIndexBuild(corpus, "doc_id", "text", minDf = 2), garbage)
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$garbage/capped"))
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(s"$garbage/capped/part-0.parquet"), "not parquet")
+    val eg = intercept[IllegalArgumentException](
+      TextAnalysis.sparseIndexLoad(spark, garbage))
+    assert(eg.getMessage.contains(
+      s"$garbage/meta says uncapped but $garbage/capped exists — a mixed directory"),
+      eg.getMessage)
     // under a capped meta the same foreign relation is refused on its schema
     val capped = java.nio.file.Files.createTempDirectory("sparseforeign").toString
     TextAnalysis.sparseIndexSave(TextAnalysis.sparseIndexBuild(corpus, "doc_id",

@@ -121,8 +121,10 @@ def main():
                 print(f"FAIL {name}: golden hash mismatch ({digest} != {exp_digest})")
                 n_fail += 1
         else:
+            # a query with neither oracle SQL nor a golden is unchecked: fail it
             print(f"NOGOLD {name}: rows={len(got)} sha256={digest} "
                   f"(write it to {gpath} to gate this query)")
+            n_fail += 1
     print(f"== {n_pass} pass, {n_fail} fail ==")
     sys.exit(1 if n_fail else 0)
 
