@@ -2,7 +2,8 @@ package graft
 
 import java.time.LocalDate
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.functions.col
 
 import graft.engine._
 import graft.sources.ScoreStore
@@ -24,6 +25,14 @@ import graft.sources.ScoreStore
   * inferred from the path extension when not given.
   */
 object EpssCli {
+
+  /** O2 display order of `scores` output (cli.py:111-113 intent): date
+    * asc, epss desc, cve desc. The file sinks write it as one sorted part
+    * file ([[Outputs.write]]); the console, json and xlsx sinks fetch a
+    * bounded `orderBy` of it, which Spark plans as one TakeOrdered job.
+    */
+  private[graft] val DisplayOrder: Seq[Column] =
+    Seq(col("date").asc, col("epss").desc, col("cve").desc)
 
   final case class Args(m: Map[String, List[String]]) {
     def one(k: String): Option[String] = m.get(k).flatMap(_.headOption)
@@ -171,7 +180,9 @@ object EpssCli {
       minPercentile = a.one("min-percentile").map(_.toDouble),
       maxPercentile = a.one("max-percentile").map(_.toDouble))
     // quantization is the DEFAULT, like the reference
-    // (cli.py: --drop-unchanged/--no-drop-unchanged, default=True)
+    // (cli.py: --drop-unchanged/--no-drop-unchanged, default=True);
+    // changedScores' own O1 sort is dropped by the optimizer under either
+    // sink's sort, so every sink sorts once, in DisplayOrder
     val unordered =
       if (a.flag("no-drop-unchanged"))
         ScoreStore.read(spark, store, min, max).transform(q.filter)
@@ -179,22 +190,18 @@ object EpssCli {
         Changes.changedScores(
           ScoreStore.readWithBaseline(spark, store, min, max).transform(q.filter),
           minDate = Some(min))
-    // O2 display order (cli.py:111-113 intent): date asc, epss desc, cve desc
-    val base = unordered.orderBy(
-      org.apache.spark.sql.functions.col("date").asc,
-      org.apache.spark.sql.functions.col("epss").desc,
-      org.apache.spark.sql.functions.col("cve").desc)
+    def ordered = unordered.orderBy(DisplayOrder: _*)
     val fmt = a.one("output").map(p => graft.sources.IO.formatOf(p, a.one("output-format")))
       .orElse(a.one("output-format"))
     (a.one("output"), fmt) match {
       // reference json = ONE array file (util.py:44 row_oriented)
-      case (Some(path), Some("json")) => Outputs.writeJsonArray(base, path)
+      case (Some(path), Some("json")) => Outputs.writeJsonArray(ordered, path)
       // S8: real xlsx workbook (driver-side, like the reference's write_excel)
-      case (Some(path), Some("excel" | "xlsx")) => Outputs.writeExcel(base, path)
+      case (Some(path), Some("excel" | "xlsx")) => Outputs.writeExcel(ordered, path)
       case (None, Some("excel" | "xlsx")) =>
         sys.error("excel output requires --output PATH (a workbook cannot go to the console)")
-      case (Some(path), f) => Outputs.write(base, path, f.getOrElse("parquet"), singleFile = true)
-      case (None, f) => Outputs.printConsole(base, f, consoleCapRows)
+      case (Some(path), f) => Outputs.write(unordered, path, f.getOrElse("parquet"), DisplayOrder)
+      case (None, f) => Outputs.printConsole(ordered, f, consoleCapRows)
     }
   }
 

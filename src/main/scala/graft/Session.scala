@@ -42,8 +42,10 @@ object Session {
     "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "64k")
 
   /** The session on `local[cores]` with `cores` shuffle partitions, UTC
-    * session time zone, no UI and WARN logging, plus `conf` (which may
-    * override any of those, e.g. `spark.master`).
+    * session time zone, TIMESTAMP(NANOS) parquet columns read as longs
+    * (`nanosAsLong`, which `graft.queries.Shared.events` requires along
+    * with UTC), no UI and WARN logging, plus `conf` (which may override
+    * any of those, e.g. `spark.master`).
     */
   def apply(cores: Int, conf: Map[String, String] = Map.empty): SparkSession = {
     val launch = new SparkConf()
@@ -52,6 +54,7 @@ object Session {
       "spark.master" -> s"local[$cores]",
       "spark.sql.shuffle.partitions" -> cores.toString,
       "spark.sql.session.timeZone" -> "UTC",
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true",
       "spark.ui.enabled" -> "false") ++ conf).foreach { case (k, v) =>
       if (!launch.contains(k)) b.config(k, v)
     }

@@ -1,6 +1,6 @@
 package graft.engine
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 
 import graft.sources.IO
 
@@ -50,9 +50,15 @@ object Outputs {
     }
   }
 
-  /** File sinks: csv / json(l) / parquet via the shared IO layer. */
-  def write(df: DataFrame, path: String, format: String, singleFile: Boolean = false): Unit =
-    IO.write(df, path, Some(format), singleFile)
+  /** File sinks: csv / json(l) / parquet / orc via the shared IO layer, as
+    * ONE part file whose rows are in `order`. One single-partition
+    * exchange carries `df`'s rows, and the task that writes them sorts
+    * them. A global `orderBy` would range-partition instead: sampling its
+    * bounds runs the plan upstream of that exchange a second time, and a
+    * `coalesce(1)` after it sorts every range in one task anyway.
+    */
+  def write(df: DataFrame, path: String, format: String, order: Seq[Column]): Unit =
+    IO.write(df.repartition(1).sortWithinPartitions(order: _*), path, Some(format))
 
   /** S4 row-oriented JSON: the reference's `json` format writes one JSON
     * ARRAY (util.py:41-44), not JSONL. Spark writes JSONL per partition, so

@@ -1331,22 +1331,24 @@ object TextAnalysis {
     // the corpus count (nDocs, a one-task metadata-ish scan) is
     // independent of the posting materializations — overlap it with the
     // checkpoint chain (guide §2.6) instead of paying a sequential job
-    // after them; the chain itself is ordered (capped prunes the full
-    // checkpoint)
+    // after them; the chain itself is ordered (vocab and capped read the
+    // full checkpoint)
     var n = -1L
     val (_, mats) = Par.par2(
       { n = df.count() },
       {
         val full = post.withColumnRenamed(idCol, "doc_id").localCheckpoint()
-        (full, cap.map(c =>
+        // vocab (token, df) is vocabulary-sized and derivable from the kept
+        // postings (df = the posting-list length — pruning already
+        // applied); it is materialized here and persists with the index,
+        // so [[queryPostings]] reads it instead of re-aggregating the
+        // postings on every batch
+        val vocab = full.groupBy(col("token")).agg(count(lit(1)).as("df"))
+          .localCheckpoint()
+        (full, vocab, cap.map(c =>
           cappedPostings(full, "doc_id", "token", "weight", c).localCheckpoint()))
       })
-    val (full, cappedRel) = mats
-    // vocab (token, df) is vocabulary-sized and derivable from the kept
-    // postings (df = the posting-list length — pruning already applied);
-    // it persists with the index so [[queryPostings]] never scans the
-    // posting relation to reconstruct a query's weight profile
-    val vocab = full.groupBy(col("token")).agg(count(lit(1)).as("df"))
+    val (full, vocab, cappedRel) = mats
     SparseIndex(full, weighting, minDf, maxDfFrac, k1o, bo, n, vocab,
       cap, cappedRel)
   }

@@ -106,17 +106,21 @@ private[graft] object Shared {
     * TIMESTAMP_NTZ(MICROS), depending on harness generation. Dispatch on the
     * actual decoded type and normalize everything to TimestampType: a long
     * means nanos → floor-convert to microsecond timestamp (matching DuckDB's
-    * ns→us handling); TIMESTAMP_NTZ casts to TIMESTAMP, which under the
-    * session's pinned UTC timezone preserves wall-clock and epoch values
-    * bit-for-bit vs DuckDB's naive read of the same file.
+    * ns→us handling); TIMESTAMP_NTZ casts to TIMESTAMP, which under a UTC
+    * session time zone preserves wall-clock and epoch values bit-for-bit
+    * vs DuckDB's naive read of the same file.
+    *
+    * Both settings are the caller's: this reads the session conf and never
+    * writes it (a session from [[graft.Session]] carries both), and fails
+    * naming the key when one is missing or different.
     */
   def events(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // The NTZ→TIMESTAMP cast below is wall-clock-preserving only under
-    // UTC; pin it here so a caller session that didn't set it (all OUR
-    // mains do, an external harness session might not) can't shift every
-    // epoch by its local offset.
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    for ((key, want) <- Seq("spark.sql.legacy.parquet.nanosAsLong" -> "true",
+                            "spark.sql.session.timeZone" -> "UTC")) {
+      val v = spark.conf.getOption(key)
+      require(v.exists(_.equalsIgnoreCase(want)),
+        s"events(): needs $key=$want in the session conf, found ${v.getOrElse("<unset>")}")
+    }
     val raw = t(spark, dir, "events")
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>

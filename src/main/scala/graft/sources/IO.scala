@@ -44,7 +44,11 @@ object IO {
   /** S4: write in the requested format. Distributed multi-part output by
     * default; `singleFile` coalesces to one part for small results (the
     * reference always writes one file — a driver-side pattern that does not
-    * scale; keep it opt-in).
+    * scale; keep it opt-in). `coalesce(1)` runs the whole last stage in
+    * one task; a single file in a given order is
+    * `df.repartition(1).sortWithinPartitions(order)` written without
+    * `singleFile` ([[graft.engine.Outputs.write]]), not a global `orderBy`
+    * here, whose range sampling runs the plan upstream of it twice.
     */
   def write(df: DataFrame, path: String, format: Option[String] = None,
             singleFile: Boolean = false): Unit = {

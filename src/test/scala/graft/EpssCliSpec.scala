@@ -59,6 +59,47 @@ class EpssCliSpec extends SparkSpec {
     assert(rows.map(_.cve).distinct.toSeq == Seq("CVE-B"))
   }
 
+  test("scores file sinks: one part file in O2 order, sorted in one partition, no range sort") {
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    // 12 CVEs over 3 days; the odd ones move between three values every
+    // day, so each (date, epss) holds two CVEs and only `cve desc` orders them
+    val days = Seq("2024-03-01", "2024-03-02", "2024-03-03").map(d)
+    val dense = for ((day, k) <- days.zipWithIndex; i <- 0 until 12) yield {
+      val e = ((i + k * (i % 2)) % 3) * 0.25
+      Score(day, f"CVE-2024-$i%02d", e, e)
+    }
+    val root = s"${Files.createTempDirectory("graft-cli-o2-")}/store"
+    ScoreStore.write(dense.toDF(), root)
+    def o2(rows: Seq[Score]): Seq[Score] = rows.sortWith { (x, y) =>
+      if (x.date != y.date) x.date.before(y.date)
+      else if (x.epss != y.epss) x.epss > y.epss
+      else x.cve > y.cve
+    }
+    val changes = dense.groupBy(_.cve).values.flatMap { rows =>
+      rows.sortBy(_.date.getTime).sliding(2).collect { case Seq(p, c) if c.epss != p.epss => c }
+    }.toSeq
+    assert(changes.groupBy(r => (r.date, r.epss)).values.exists(_.size > 1), "no epss ties")
+    for ((flags, expected) <- Seq(Nil -> o2(changes),
+           Seq("--no-drop-unchanged") -> o2(dense.filter(_.date != days.head)));
+         fmt <- Seq("csv", "parquet")) {
+      val out = s"${Files.createTempDirectory("graft-cli-o2-out-")}/scores.$fmt"
+      val nodes = plansRunBy {
+        EpssCli.run(spark, Seq("scores", "--store", root, "-a", "2024-03-02",
+          "-b", "2024-03-03", "--output", out) ++ flags)
+      }.flatMap(planNodes)
+      val parts = new java.io.File(out).listFiles().map(_.getName).filter(_.startsWith("part-"))
+      assert(parts.length == 1, s"$fmt $flags: one part file, got ${parts.toSeq}")
+      val back = IO.read(spark, s"$out/${parts.head}", Some(fmt),
+        Some(graft.engine.Schemas.scoreSchema)).as[Score].collect().toSeq
+      assert(back == expected, s"$fmt $flags: rows not in O2 order")
+      val exchanges = nodes.collect { case e: ShuffleExchangeExec => e.outputPartitioning }
+      assert(!exchanges.exists(_.isInstanceOf[RangePartitioning]),
+        s"$fmt $flags: the written plan range-partitions: $exchanges")
+      assert(exchanges.exists(_.numPartitions == 1), s"$fmt $flags: no single-partition exchange")
+    }
+  }
+
   test("model-epoch flags clamp the requested range (include_v1/2/3 twins)") {
     // store dates are 2024 (v3 era); with v3 excluded and v2 included, the
     // window clamps to the v2 epoch and the 2024 request collapses onto

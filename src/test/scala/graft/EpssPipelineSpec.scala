@@ -80,8 +80,8 @@ class EpssPipelineSpec extends SparkSpec {
   test("sinks: csv and jsonl round-trip the change log (S4/S7)") {
     val changed = Changes.changedScores(
       ScoreStore.read(spark, storeRoot, LocalDate.parse("2024-01-01"), LocalDate.parse("2024-01-04")))
-    Outputs.write(changed, s"$tmp/out.csv", "csv", singleFile = true)
-    Outputs.write(changed, s"$tmp/out.jsonl", "jsonl", singleFile = true)
+    Outputs.write(changed, s"$tmp/out.csv", "csv", EpssCli.DisplayOrder)
+    Outputs.write(changed, s"$tmp/out.jsonl", "jsonl", EpssCli.DisplayOrder)
     val back = IO.read(spark, s"$tmp/out.csv", Some("csv"),
       Some(graft.engine.Schemas.scoreSchema))
     assert(back.count() == changed.count())

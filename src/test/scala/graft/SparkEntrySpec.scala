@@ -23,6 +23,20 @@ class SparkEntrySpec extends SparkSpec {
     }
   }
 
+  test("events() reads the session conf, never writes it, and names a key it lacks") {
+    val before = spark.conf.getAll
+    assert(graft.queries.Shared.events(spark, sfDir).columns.contains("ts"))
+    assert(spark.conf.getAll == before)
+    for ((key, bad) <- Seq("spark.sql.legacy.parquet.nanosAsLong" -> "false",
+                           "spark.sql.session.timeZone" -> "America/New_York")) {
+      val other = spark.newSession()
+      other.conf.set(key, bad)
+      val e = intercept[IllegalArgumentException](graft.queries.Shared.events(other, sfDir))
+      assert(e.getMessage.contains(key) && e.getMessage.contains(bad), e.getMessage)
+      assert(other.conf.get(key) == bad)
+    }
+  }
+
   for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)) {
     test(s"$name runs at sf0.001 and is non-empty") {
       val df = fn(spark, sfDir)
