@@ -13,8 +13,10 @@ import graft.sources.ScoreStore
   * reference times at ~10 s on an M1 Pro (incl. load). The
   * `scale_quantize_served` leg times what `EpssCli scores` hands back for
   * the full window: the change log written as one sorted parquet file
-  * through the CLI's file sink. The two `count()` legs stay for
-  * continuity with earlier runs.
+  * through the CLI's file sink. `scale_quantize_store` serves the same
+  * change log from the `ScoreStore` layout (one `date=` dir per day) read
+  * through `ScoreStore.readWithBaseline`, as `scores` does. The two
+  * `count()` legs stay for continuity with earlier runs.
   *
   * Usage: runMain graft.ScaleBench [nCves] [nDays] [workDir]
   */
@@ -60,6 +62,20 @@ object ScaleBench {
     val changedS = spark.read.parquet(served).count()
     require(changedS == changed, s"served change log disagrees: $changedS vs $changed")
     println(f"""{"metric":"scale_quantize_served","dense_rows":$rows,"changed_rows":$changedS,"value":$secsS%.2f,"unit":"sec","rows_per_sec":${(rows / secsS).toLong}}""")
+
+    // ── the store layout `EpssCli scores` reads: one date= dir per day (one
+    // file each, like a daily ingest), scanned over the full window
+    val store = s"$work/store"
+    ScoreStore.write(spark.read.parquet(path).repartition(col("date")), store)
+    val served2 = s"$work/changes_store.parquet"
+    val tQ = System.nanoTime()
+    Outputs.write(Changes.changedScores(
+      ScoreStore.readWithBaseline(spark, store, first, first.plusDays(nDays - 1))),
+      served2, "parquet", EpssCli.DisplayOrder)
+    val secsQ = (System.nanoTime() - tQ) / 1e9
+    val changedQ = spark.read.parquet(served2).count()
+    require(changedQ == changed, s"store change log disagrees: $changedQ vs $changed")
+    println(f"""{"metric":"scale_quantize_store","dense_rows":$rows,"changed_rows":$changedQ,"value":$secsQ%.2f,"unit":"sec","rows_per_sec":${(rows / secsQ).toLong}}""")
 
     // ── bucketed layout: the window's hash distribution on `cve` is
     // satisfied by the bucketing, so quantization runs with NO exchange —

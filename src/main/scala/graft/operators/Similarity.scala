@@ -129,12 +129,20 @@ object Similarity {
     * queries×partitions×rerank heap entries, never the candidate set.
     */
   private def survivors(cand: DataFrame, score: Column, rerank: Int): DataFrame =
-    cand.filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("__score", score)
-      .groupBy("query_id")
-      .agg(TopKOps.topK(rerank, col("__score"), col("neighbor_id")).as("__top"))
+    survivorHeaps(cand, score, rerank)
       .select(col("query_id"),
         explode(transform(col("__top"), e => e.getField("id"))).as("neighbor_id"))
+
+  /** [[survivors]] before the explode: `(by…, query_id, __top)`, each
+    * group's best-first top-`rerank` heap. Best-first under one total
+    * order, so a prefix of `__top` is the group's top of a tighter rerank.
+    */
+  private def survivorHeaps(cand: DataFrame, score: Column, rerank: Int,
+                            by: Seq[String] = Nil): DataFrame =
+    cand.filter(col("neighbor_id") =!= col("query_id"))
+      .withColumn("__score", score)
+      .groupBy((by :+ "query_id").map(col): _*)
+      .agg(TopKOps.topK(rerank, col("__score"), col("neighbor_id")).as("__top"))
 
   /** Stage 2's pairs: the stage-1 `survivors` (with any grouping keys
     * they carry) joined to their rerank vectors `rerankVecs`
@@ -1109,10 +1117,11 @@ object Similarity {
     *
     * One shared chain, NO per-point search: probes rank once at the
     * WIDEST grid point (a tighter point is a prefix of the best-first
-    * probe list), each grid point filters by probe rank — so the grid
-    * costs one stage-1 pass plus grid-sized rollups, not |grid|
-    * searches. The recall arm measures the REAL end-to-end relation
-    * (hamming top-rerank, exact rerank top-`k`), the q271 convention —
+    * probe list), each candidate joins the grid points its probe rank
+    * reaches — so the grid costs one stage-1 pass and one heap per
+    * (n_probe, query) ([[gridHits]]), not |grid| searches. The recall
+    * arm measures the REAL end-to-end relation (hamming top-rerank,
+    * exact rerank top-`k`), the q271 convention —
     * which is exactly what exposes the rerank axis: a wider probe set
     * can LOWER recall at a tight rerank (heap displacement), and the
     * grid prices the fix.
@@ -1152,21 +1161,15 @@ object Similarity {
           .as(Seq("__pos", "cell")))
       .select(col("query_id"), col("__qw"), col("cell"),
         (col("__pos") + 1).as("__prn"))
-    // materialized ONCE: the (nProbes × reranks) grid unions one
-    // aggregation per point over this relation, and a lazy `cand` would
-    // re-run the stage-1 probe join + hamming pass per grid point
-    // (8 recomputes on the graded grid). The relation is stage-1-sized —
-    // bounded by the query batch's probed-cell occupancy — so the
-    // checkpoint is the "one stage-1 pass plus grid-sized rollups"
-    // contract made physical
+    // read once, by the grid's one stage-1 aggregation ([[gridHits]]):
+    // the "one stage-1 pass plus grid-sized rollups" contract
     val cand = index.codes
       .select(col("id").as("neighbor_id"), col("cell"), col("words").as("__cw"))
       .join(broadcast(probes), "cell")
       .withColumn("__agree",
         (lit(dim.toLong) - hamming(col("__cw"), col("__qw"), dim)).cast("double"))
-      .localCheckpoint()
     val combos = for { p <- nProbes; r <- reranks } yield (p, r)
-    val hits = gridHits(combos, cand, col("__agree"),
+    val hits = gridHits(nProbes, reranks, cand, col("__agree"),
       rerankVectors(index.codes,
         Option.unless(index.codes.columns.contains("vec"))(corpus), idCol, vecCol),
       qs, bf, idCol, vecCol, k)
@@ -1176,11 +1179,8 @@ object Similarity {
     val probeOcc = probes.select(col("cell"), col("__prn"))
       .join(occ, Seq("cell"), "left")
       .select(col("__prn"), coalesce(col("__occ"), lit(0L)).as("__occ"))
-    val est = nProbes.map(p =>
-      probeOcc.filter(col("__prn") <= p)
-        .agg(coalesce(sum(col("__occ")), lit(0L)).as("est_rows"))
-        .select(lit(p).as("n_probe"), col("est_rows")))
-      .reduce(_ unionByName _)
+    val est = probeOcc.withColumn("n_probe", probePoints(nProbes))
+      .groupBy(col("n_probe")).agg(sum(col("__occ")).as("est_rows"))
     val nq = bf.agg(countDistinct(col("query_id")).as("__nq"))
     // chosen: among meeting points the fewest stage-1 rows then the
     // smallest rerank (the two cost axes, un-mixed — hamming rows and
@@ -1196,6 +1196,7 @@ object Similarity {
     combos.toDF("n_probe", "rerank")
       .join(hits, Seq("n_probe", "rerank"), "left")
       .join(est, Seq("n_probe"), "left")
+      .withColumn("est_rows", coalesce(col("est_rows"), lit(0L)))
       .crossJoin(broadcast(nq))
       .withColumn("mean_recall",
         round(coalesce(col("__hits"), lit(0L)).cast("double") /
@@ -1204,25 +1205,30 @@ object Similarity {
       .select("n_probe", "rerank", "mean_recall", "est_rows", "chosen")
   }
 
-  /** The grid tail both operating-point planners share. Each
-    * `(n_probe, rerank)` point of `combos` keeps the [[survivors]] by
-    * `score` of the checkpointed stage-1 candidates `cand` within its
-    * probe rank (`__prn <= n_probe` — a tighter point's probe set is a
-    * prefix of the best-first ranking). ONE exact-cosine pass
-    * ([[rerankPairs]]) then reranks every point's survivors, the
-    * per-point top-`k` heap grouped by the grid keys — the
+  /** The grid tail both operating-point planners share, one aggregation
+    * per stage whatever the grid's size (a union of one heap per point
+    * would grow the serialized plan, and so every job's task binary, by
+    * ~1 MiB per point). Each stage-1 candidate of `cand` is exploded to the
+    * `n_probe` points whose probe set holds it ([[probePoints]]), and ONE
+    * [[survivorHeaps]] heap of the widest rerank runs per
+    * `(n_probe, query_id)`; each rerank point keeps a prefix of it, the
+    * same set as its own heap by `score`. ONE
+    * exact-cosine pass ([[rerankPairs]]) then reranks every point's
+    * survivors, the per-point top-`k` heap grouped by the grid keys — the
     * [[explodeRanks]] score and (cos desc, id asc) tie rule, so the same
     * top-k sets as a per-point search. Output: the hits against brute
     * force `bf` per point, `(n_probe, rerank, __hits)`.
     */
-  private def gridHits(combos: Seq[(Int, Int)], cand: DataFrame, score: Column,
-                       rerankVecs: DataFrame, qs: DataFrame, bf: DataFrame,
-                       idCol: String, vecCol: String, k: Int): DataFrame = {
-    val anns = combos.map { case (p, r) =>
-      survivors(cand.filter(col("__prn") <= p), score, r)
-        .select(lit(p).as("n_probe"), lit(r).as("rerank"), col("query_id"),
-          col("neighbor_id"))
-    }.reduce(_ unionByName _)
+  private def gridHits(nProbes: Seq[Int], reranks: Seq[Int], cand: DataFrame,
+                       score: Column, rerankVecs: DataFrame, qs: DataFrame,
+                       bf: DataFrame, idCol: String, vecCol: String,
+                       k: Int): DataFrame = {
+    val anns = survivorHeaps(cand.withColumn("n_probe", probePoints(nProbes)),
+        score, reranks.max, Seq("n_probe"))
+      .withColumn("rerank", explode(typedLit(reranks)))
+      .select(col("n_probe"), col("rerank"), col("query_id"),
+        explode(transform(slice(col("__top"), lit(1), col("rerank")),
+          e => e.getField("id"))).as("neighbor_id"))
     rerankPairs(anns, rerankVecs, qs, idCol, vecCol)
       .groupBy(col("n_probe"), col("rerank"), col("query_id"))
       .agg(TopKOps.topK(k, col("cos"), col("neighbor_id")).as("__top"))
@@ -1231,6 +1237,12 @@ object Similarity {
       .join(bf, Seq("query_id", "neighbor_id"))
       .groupBy(col("n_probe"), col("rerank")).agg(count(lit(1)).as("__hits"))
   }
+
+  /** A row's grid points: the `n_probe` values of `nProbes` whose
+    * best-first probe set reaches its probe rank `__prn`, exploded.
+    */
+  private def probePoints(nProbes: Seq[Int]): Column =
+    explode(filter(typedLit(nProbes), p => p >= col("__prn")))
 
   /** Matryoshka (prefix-dimension) two-stage retrieval — the MRL serving
     * pattern: rank every (query, candidate) pair by the cosine of the
@@ -1534,10 +1546,10 @@ object Similarity {
     * probes rank once at the WIDEST grid point (a tighter point's probe
     * set is a PREFIX of the best-first cell ranking, and the 6-dp ADC
     * score depends only on the (query, candidate) pair — never on
-    * nProbe or rerank), the stage-1 candidate relation materializes
-    * once, each grid point is a probe-rank filter + its own bounded
-    * heap, and ONE exact-cosine pass reranks every point's survivors
-    * grouped by the grid keys. Results are identical to running
+    * nProbe or rerank), the stage-1 candidates are read once, one
+    * bounded heap per (n_probe, query) serves every rerank as a prefix
+    * ([[gridHits]]), and ONE exact-cosine pass reranks every point's
+    * survivors grouped by the grid keys. Results are identical to running
     * [[ivfPqSearch]] per point (same candidate sets, same heaps, same
     * tie rules — spec-pinned against the per-point recall report).
     *
@@ -1548,9 +1560,9 @@ object Similarity {
     * materialization, not by hoping AQE dedups the subtree); the
     * codebook relations collect once; the whole grid costs ONE pass
     * over the persisted codes (it previously cost |grid| passes), one
-    * stage-1-sized checkpoint (bounded by the batch's probed-cell
-    * occupancy at pMax), and everything after the heaps is
-    * (grid × queries × k)-sized.
+    * stage-1 aggregation (its input bounded by the batch's probed-cell
+    * occupancy at pMax times |nProbes|), and everything after the heaps
+    * is (grid × queries × k)-sized.
     */
   def ivfPqOperatingPointPlan(index: IvfPqIndex, corpus: DataFrame,
                               queries: DataFrame, idCol: String, vecCol: String,
@@ -1590,13 +1602,11 @@ object Similarity {
           dot(col("__qv"), element_at(typedlit(codebook.toMap), col("cell"))))
       else probes0
     val coded = codedSide(index.codes, subspaces)
-    // materialized ONCE (the binary planner's rule): lazy, the probe
-    // join + ADC pass would re-run per grid point
+    // read once, by the grid's one stage-1 aggregation ([[gridHits]])
     val cand = coded.join(broadcast(probes), "cell")
       .select(col("query_id"), col("neighbor_id"), col("__prn"),
         adcScore(subspaces, index.residual).as("__approx"))
-      .localCheckpoint()
-    val hits = gridHits(combos, cand, col("__approx"),
+    val hits = gridHits(nProbes, reranks, cand, col("__approx"),
       normed(corpus, idCol, vecCol, "neighbor_id", "__cv", "__cn"),
       qs, bf, idCol, vecCol, k)
     // all one-row/bounded: |queries|, |codes|, nCentroids, subspaces

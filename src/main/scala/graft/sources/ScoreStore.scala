@@ -4,9 +4,10 @@ import java.time.LocalDate
 
 import scala.util.Try
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ListedParquet
 import org.apache.spark.sql.types.DateType
 
 import graft.engine.Schemas
@@ -24,7 +25,9 @@ import graft.engine.Schemas
   * listing alone answers [[maxDate]], picks the directories [[read]] scans
   * and is [[ingestMany]]'s skip-if-present set, so the three cannot
   * disagree. A missing root holds no days; a `date=` name that is not an
-  * ISO date fails naming the directory and the store.
+  * ISO date fails naming the directory and the store. [[read]] then lists
+  * each in-window directory for its data files, also on the driver, and
+  * hands Spark that file list, so Spark itself lists nothing.
   */
 object ScoreStore {
 
@@ -50,26 +53,48 @@ object ScoreStore {
       .sortBy(_._1.toEpochDay)
   }
 
-  /** Read the store over [min, max]. Only the in-window `date=` directories
-    * from [[days]] are handed to the reader, with the fixed
-    * [[Schemas.storeSchema]] and `basePath` = root, so building the frame
-    * infers no schema and, for up to 32 directories (Spark's stock
-    * `parallelPartitionDiscovery.threshold`), lists files on the driver
-    * with no Spark job. A longer window (e.g. full-window quantize) pays one
-    * parallel listing job. A window with no partitions yields an empty frame
-    * with the canonical columns and types.
+  /** Read the store over [min, max]. The scan is built from the driver's
+    * listing alone: [[days]] picks the in-window `date=` directories, each
+    * is listed once more on the driver for its data files, and the frame is
+    * a parquet scan over exactly those files with the fixed
+    * [[Schemas.storeSchema]], so building it infers no schema and runs no
+    * Spark job, however long the window. A file or directory whose name
+    * starts with `_` or `.` is not data (Spark's hidden-file rule: it keeps
+    * out the `.crc` side files, `_SUCCESS` and a failed write's
+    * `_temporary`); any other subdirectory of a `date=` directory fails
+    * naming it. The directories are listed one after another: on a local
+    * or HDFS store that is a few ms for a year of days, but on an object
+    * store each listing is a round trip (tens of ms), so a full-window read
+    * of a long history pays them in series, where Spark's own reader would
+    * list more than 32 directories in a parallel job. A window with no
+    * partitions yields an empty frame with the canonical columns and types.
     */
   def read(spark: SparkSession, root: String, min: LocalDate, max: LocalDate): DataFrame = {
     val dirs = days(spark, root).collect {
-      case (d, p) if !d.isBefore(min) && !d.isAfter(max) => p.toString
+      case (d, p) if !d.isBefore(min) && !d.isAfter(max) => p
     }
     val scan =
       if (dirs.isEmpty) spark.createDataFrame(java.util.List.of[Row](), Schemas.storeSchema)
-      else spark.read.schema(Schemas.storeSchema).option("basePath", root).parquet(dirs: _*)
+      else {
+        val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+        ListedParquet(spark, new Path(root), dirs.map(dir => dir -> dataFiles(fs, root, dir)),
+          Schemas.storeSchema)
+      }
     scan
       .filter(col(Schemas.Date).between(
         lit(java.sql.Date.valueOf(min)), lit(java.sql.Date.valueOf(max))))
       .select(Schemas.scoreColumns.map(col): _*)
+  }
+
+  /** The data files of one `date=` directory; see [[read]] for the rule. */
+  private def dataFiles(fs: FileSystem, root: String, dir: Path): Seq[FileStatus] = {
+    val (subdirs, files) = fs.listStatus(dir).toSeq
+      .filterNot(s => s.getPath.getName.startsWith("_") || s.getPath.getName.startsWith("."))
+      .partition(_.isDirectory)
+    require(subdirs.isEmpty,
+      s"store $root: ${dir.getName} holds directory ${subdirs.head.getPath.getName}; " +
+        "a date= dir holds only data files")
+    files
   }
 
   /** Read with the quantization baseline: one extra day before `min` so the

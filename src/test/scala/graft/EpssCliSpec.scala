@@ -100,6 +100,40 @@ class EpssCliSpec extends SparkSpec {
     }
   }
 
+  test("scores over a 40-day full window: one scan of the listed files, 2 exchanges, 2 sorts") {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SortExec}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    // more date= dirs than the 32 Spark's own reader lists without a job
+    val dense = for (k <- 0 until 40; i <- 0 until 6) yield {
+      val e = ((i + k * (i % 2)) % 3) * 0.25
+      Score(Date.valueOf(java.time.LocalDate.parse("2024-01-01").plusDays(k)), s"CVE-$i", e, e)
+    }
+    val root = s"${Files.createTempDirectory("graft-cli-full-")}/store"
+    ScoreStore.write(dense.toDF(), root)
+    val dataFiles = new java.io.File(root).listFiles().filter(_.getName.startsWith("date="))
+      .flatMap(_.listFiles()).count(f => f.isFile && !f.getName.startsWith(".") && !f.getName.startsWith("_"))
+    val out = s"${Files.createTempDirectory("graft-cli-full-out-")}/scores.parquet"
+    val nodes = plansRunBy {
+      EpssCli.run(spark, Seq("scores", "--store", root, "-a", "2024-01-02", "-b", "2024-02-09",
+        "--output", out))
+    }.flatMap(planNodes)
+    val scans = nodes.collect { case s: FileSourceScanExec => s }
+    assert(scans.size == 1, s"one parquet scan, got ${scans.size}")
+    assert(scans.head.relation.fileFormat.toString == "Parquet")
+    assert(scans.head.metrics("numFiles").value == dataFiles,
+      s"scanned ${scans.head.metrics("numFiles").value} of $dataFiles listed files")
+    val exchanges = nodes.collect { case e: ShuffleExchangeExec => e.outputPartitioning }
+    assert(exchanges.size == 2, s"exchanges: $exchanges")
+    assert(exchanges.exists {
+      case h: HashPartitioning => h.expressions.map(_.toString).exists(_.startsWith("cve#"))
+      case _ => false
+    }, s"no hashpartitioning(cve) exchange: $exchanges")
+    assert(exchanges.exists(_.numPartitions == 1), s"no single-partition exchange: $exchanges")
+    assert(nodes.count(_.isInstanceOf[SortExec]) == 2, "sorts: " + nodes.collect { case s: SortExec => s.sortOrder })
+    assert(spark.read.parquet(out).count() > 0)
+  }
+
   test("model-epoch flags clamp the requested range (include_v1/2/3 twins)") {
     // store dates are 2024 (v3 era); with v3 excluded and v2 included, the
     // window clamps to the v2 epoch and the 2024 request collapses onto

@@ -114,17 +114,21 @@ class ScoreStoreSpec extends SparkSpec {
 
   test("maxDate plus building a 31-day read run no Spark job, before any action") {
     val root = fortyDays
-    var df: DataFrame = null
-    val jobs = jobsRunBy {
-      assert(ScoreStore.maxDate(spark, root).contains(LocalDate.parse("2024-02-09")))
-      // 31 requested days + the baseline day = 32 dirs, the most Spark
-      // lists on the driver
-      df = ScoreStore.readWithBaseline(spark, root,
-        LocalDate.parse("2024-01-02"), LocalDate.parse("2024-02-01"))
-      df.queryExecution.optimizedPlan
+    // 31 requested days + the baseline day = 32 dirs, the most Spark's own
+    // reader lists on the driver; the full window's 40 dirs it would list
+    // in a parallel job
+    val windows = Seq("2024-02-01" -> 32L, "2024-02-09" -> 40L)
+    for ((max, rows) <- windows) {
+      var df: DataFrame = null
+      val jobs = jobsRunBy {
+        assert(ScoreStore.maxDate(spark, root).contains(LocalDate.parse("2024-02-09")))
+        df = ScoreStore.readWithBaseline(spark, root,
+          LocalDate.parse("2024-01-02"), LocalDate.parse(max))
+        df.queryExecution.optimizedPlan
+      }
+      assert(jobs.isEmpty, s"up to $max: expected no Spark job, got: ${jobs.mkString("; ")}")
+      assert(df.count() == rows)
     }
-    assert(jobs.isEmpty, s"expected no Spark job, got: ${jobs.mkString("; ")}")
-    assert(df.count() == 32)
   }
 
   test("the scan's root paths are exactly the in-window date= dirs") {
@@ -147,6 +151,32 @@ class ScoreStoreSpec extends SparkSpec {
       assert(rootPaths(df).isEmpty)
       assert(df.count() == 0)
     }
+  }
+
+  test("hidden files in a date= dir are not read: .crc side files and a leftover _temporary part") {
+    val root = s"$tmp/hidden"
+    ScoreStore.write(threeDays, root)
+    val day = new java.io.File(s"$root/date=2024-01-02")
+    val names = day.listFiles().map(_.getName)
+    assert(names.exists(n => n.startsWith(".") && n.endsWith(".crc")), s"no .crc side file: ${names.toSeq}")
+    // a failed task's output, and a hidden copy, of a valid parquet part
+    val part = day.listFiles().find(f => f.getName.startsWith("part-")).get.toPath
+    val tmpDir = java.nio.file.Paths.get(day.getPath, "_temporary", "0")
+    Files.createDirectories(tmpDir)
+    Files.copy(part, tmpDir.resolve(part.getFileName))
+    Files.copy(part, day.toPath.resolve(s".${part.getFileName}"))
+    val df = ScoreStore.read(spark, root, LocalDate.parse("2024-01-01"), LocalDate.parse("2024-01-03"))
+    assert(df.as[Score].collect().sortBy(_.date.getTime).toSeq == threeDays.as[Score].collect().toSeq)
+  }
+
+  test("a visible subdirectory of a date= dir fails naming it and the store") {
+    val root = s"$tmp/nested"
+    ScoreStore.write(threeDays, root)
+    Files.createDirectories(java.nio.file.Paths.get(s"$root/date=2024-01-02/extra"))
+    val e = intercept[IllegalArgumentException](ScoreStore.read(spark, root,
+      LocalDate.parse("2024-01-01"), LocalDate.parse("2024-01-03")))
+    assert(e.getMessage.contains("date=2024-01-02") && e.getMessage.contains("extra") &&
+      e.getMessage.contains(root), e.getMessage)
   }
 
   test("a date= dir that is not an ISO date fails naming the dir and the store") {
