@@ -14,8 +14,8 @@ object Retrieval {
   /** HYBRID dense+sparse top-`k` retrieval from two PERSISTED indexes —
     * the serving verb the inline q252 composition amortizes into: the
     * dense arm is [[Similarity.ivfPqSearch]] over an IVF-PQ index
-    * (retrain-free by construction — the only driver work is two
-    * bounded codebook collects), the sparse arm is
+    * (retrain-free by construction — the codebooks are the index's
+    * own fields, so no codebook job runs), the sparse arm is
     * [[TextAnalysis.sparseIndexSearch]] over a [[TextAnalysis
     * .SparseIndex]]'s SERVING relation (the build-time capped prune
     * when the index carries one), and the two rank lists fuse with

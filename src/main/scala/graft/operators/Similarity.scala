@@ -1,8 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Row, SaveMode}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, ByteType, DoubleType, FloatType, IntegerType, LongType, ShortType}
+import org.apache.spark.sql.types.{ArrayType, BooleanType, ByteType, DoubleType, FloatType, IntegerType, LongType, ShortType, StructField, StructType}
 
 import graft.functions.{TopKOps, VectorOps}
 import graft.functions.Rounding.zround
@@ -1002,10 +1002,24 @@ object Similarity {
   /** Persist words + meta under one directory (plain parquet — any
     * engine reads the packed words).
     */
-  def binaryIndexSave(index: BinaryIndex, dir: String): Unit = {
-    val mode = org.apache.spark.sql.SaveMode.Overwrite
-    index.words.write.mode(mode).parquet(s"$dir/words")
-    index.meta.write.mode(mode).parquet(s"$dir/meta")
+  def binaryIndexSave(index: BinaryIndex, dir: String): Unit =
+    saveIndexDir(dir, index.meta,
+      Seq(() => index.words.write.mode(SaveMode.Overwrite).parquet(s"$dir/words")))
+
+  /** The one save path of every index directory (IVF-PQ, binary, sparse):
+    * an old `meta/` is deleted first, the `data` writes run as concurrent
+    * jobs ([[Par.run]]), and `meta` is written only after all of them
+    * succeeded. So `<dir>/meta` marks a complete save: a data write that
+    * throws leaves no `meta/` behind, over a fresh directory or an older
+    * index alike.
+    */
+  private[operators] def saveIndexDir(dir: String, meta: DataFrame,
+                                      data: Seq[() => Unit]): Unit = {
+    val p = new org.apache.hadoop.fs.Path(s"$dir/meta")
+    p.getFileSystem(meta.sparkSession.sparkContext.hadoopConfiguration)
+      .delete(p, true)
+    Par.run(data)
+    meta.write.mode(SaveMode.Overwrite).parquet(s"$dir/meta")
   }
 
   /** Reopen a persisted binary index flag-free: `dim` comes from meta,
@@ -1078,8 +1092,7 @@ object Similarity {
     require(index.codes.columns.contains("words"),
       "index carries no sign words — build with storeSignWords=true, or " +
         "serve with binaryRerankTopK/binarySearch")
-    val (codebook, _, _, _) = collectIndexCodebooks(index)
-    val dim = codebook.head._2.length
+    val (codebook, dim) = (index.coarse, index.dim)
     val (qs, codes) = probedCells(index.codes, queries, vecCol, codebook, nProbe)
     // query side: packed words + the exploded probe cells, broadcast —
     // each (query, candidate) pair joins once because a row's cell is
@@ -1149,8 +1162,7 @@ object Similarity {
       s"targetRecall out of [0,1]: $targetRecall")
     val spark = corpus.sparkSession
     import spark.implicits._
-    val (codebook, _, _, _) = collectIndexCodebooks(index)
-    val dim = codebook.head._2.length
+    val (codebook, dim) = (index.coarse, index.dim)
     val pMax = nProbes.max
     val qs = queries.localCheckpoint(false)
     val bf = bruteForceTopK(corpus, qs, idCol, vecCol, k)
@@ -1558,7 +1570,8 @@ object Similarity {
     * brute-force arm COMPUTES once (localCheckpointed before the
     * hit-join and the query count both read it — reuse by
     * materialization, not by hoping AQE dedups the subtree); the
-    * codebook relations collect once; the whole grid costs ONE pass
+    * codebooks and their sizes are the index's fields, never a job; the
+    * whole grid costs ONE pass
     * over the persisted codes (it previously cost |grid| passes), one
     * stage-1 aggregation (its input bounded by the batch's probed-cell
     * occupancy at pMax times |nProbes|), and everything after the heaps
@@ -1584,13 +1597,13 @@ object Similarity {
     val bf = bruteForceTopK(corpus, qs, idCol, vecCol, k)
       .select(col("query_id"), col("neighbor_id"))
       .localCheckpoint()
-    val (codebook, cents, subspaces, pqK) = collectIndexCodebooks(index)
+    val (codebook, cents, subspaces) = (index.coarse, index.pq, index.pq.length)
     val pMax = nProbes.max
     // query side ONCE at pMax: the ADC lookup table ([[adcTable]]) +
     // posexploded probe cells with their best-first rank — exactly
     // ivfPqRank's probe shape plus the rank column the prefix filters read
     val probes0 = normed(qs, idCol, vecCol, "query_id", "__qv", "__qn")
-      .withColumn("__adc", adcTable(col("__qv"), cents, index.subDim, pqK))
+      .withColumn("__adc", adcTable(col("__qv"), cents, index.subDim, index.pqK))
       .select(col("query_id"), col("__qv"), col("__adc"),
         posexplode(nearestCells(codebook, col("__qv"), pMax))
           .as(Seq("__pos", "cell")))
@@ -1609,11 +1622,9 @@ object Similarity {
     val hits = gridHits(nProbes, reranks, cand, col("__approx"),
       normed(corpus, idCol, vecCol, "neighbor_id", "__cv", "__cn"),
       qs, bf, idCol, vecCol, k)
-    // all one-row/bounded: |queries|, |codes|, nCentroids, subspaces
+    // one-row: |queries|, |codes|
     val stats = bf.agg(countDistinct(col("query_id")).as("__nq"))
       .crossJoin(index.codes.agg(count(lit(1)).as("__ncodes")))
-      .crossJoin(index.coarse.agg(count(lit(1)).as("__ncent")))
-      .crossJoin(index.pq.agg((max(col("subspace")) + 1).cast("int").as("__sp")))
     val meets = col("mean_recall") >= targetRecall
     val w = org.apache.spark.sql.expressions.Window.orderBy(
       meets.desc, when(meets, col("est_cost")).asc_nulls_last,
@@ -1626,9 +1637,9 @@ object Similarity {
         round(coalesce(col("__hits"), lit(0L)).cast("double") /
           (lit(k.toLong) * col("__nq")).cast("double"), 6))
       .withColumn("est_cost", round(
-        col("n_probe").cast("double") * col("__sp").cast("double") *
-          col("__ncodes").cast("double") / col("__ncent").cast("double") +
-          col("rerank").cast("double") * col("__sp").cast("double") *
+        col("n_probe").cast("double") * lit(subspaces.toDouble) *
+          col("__ncodes").cast("double") / lit(codebook.length.toDouble) +
+          col("rerank").cast("double") * lit(subspaces.toDouble) *
             lit(index.subDim.toDouble), 6))
       .withColumn("chosen", row_number().over(w) === 1)
       .select("n_probe", "rerank", "mean_recall", "est_cost", "chosen")
@@ -2253,90 +2264,80 @@ object Similarity {
 
   /** A persisted-form IVF-PQ index — the build/search split every
     * production ANN deployment runs (FAISS's train → add → search):
-    * three plain RELATIONS a caller writes once (parquet) and searches
-    * many times, so the `pqIters` training barriers amortize to ZERO
-    * per query batch instead of recurring on every call.
+    * trained once, written once (parquet) and searched many times, so the
+    * `pqIters` training barriers amortize to ZERO per query batch instead
+    * of recurring on every call.
     *
     *   - `codes`: one row per corpus vector —
     *     `(id, cell, nrm, code_0 … code_{s−1})` (zero-norm rows already
     *     dropped under the [[cosinePairs]] policy);
-    *   - `coarse`: `(cell, centroid)` — the IVF quantizer, nCentroids
-    *     rows;
-    *   - `pq`: `(subspace, code, centroid)` — the PQ codebooks
-    *     (residual-space when `residual`), subspaces·pqK rows.
+    *   - `coarse`: the IVF quantizer, nCentroids `(cell, centroid)` pairs
+    *     in cell order;
+    *   - `pq`: the PQ codebooks, `pq(subspace)(code)` a centroid
+    *     (residual-space when `residual`).
     *
-    * `residual` and `subDim` are carried as constructor fields AND in
-    * the one-row [[IvfPqIndex.meta]] relation — persist all FOUR
-    * relations with [[ivfPqIndexSave]] and reopen with
-    * [[ivfPqIndexLoad]], which takes NO flags: `residual` at load time
-    * is read from meta (a mis-stated residual flag is a silent
-    * mis-search, not an error — so there is no flag to mis-state), and
-    * every meta field that is ALSO derivable from the relations is
-    * re-derived and cross-checked, failing fast on a mixed or tampered
-    * directory.
+    * The codebooks are driver-side values, never relations: a build hands
+    * over the arrays it trained and a load the arrays its validation
+    * collect parsed, and every search, encode and report reads them as
+    * plan literals, so no verb over any index value runs a codebook job.
+    * `residual` and `subDim` are fields too, and [[ivfPqIndexSave]]
+    * writes all of it as four relations (`codes/`, `coarse/`, `pq/` and
+    * the one-row [[IvfPqIndex.meta]]). [[ivfPqIndexLoad]] reopens them and
+    * takes NO flags: `residual` at load time is read from meta (a
+    * mis-stated residual flag is a silent mis-search, not an error — so
+    * there is no flag to mis-state), and every meta field that is ALSO
+    * derivable from the relations is re-derived and cross-checked,
+    * failing fast on a mixed or tampered directory.
     */
-  final case class IvfPqIndex(codes: DataFrame, coarse: DataFrame,
-                              pq: DataFrame, residual: Boolean, subDim: Int) {
+  final case class IvfPqIndex(codes: DataFrame,
+                              coarse: Array[(Long, Seq[Double])],
+                              pq: Array[Array[Array[Double]]],
+                              residual: Boolean, subDim: Int) {
+    require(coarse.nonEmpty, "the coarse codebook is empty")
+    require(coarse.indices.drop(1).forall(i => coarse(i - 1)._1 <= coarse(i)._1),
+      "the coarse codebook is not in cell order")
+    require(pq.nonEmpty && pq.forall(_.nonEmpty), "the pq codebook has an empty subspace")
 
-    // the codebooks as DRIVER-SIDE literals when the value was made with
-    // them in hand (a build holds the trained arrays; a load collects the
-    // relations to validate them anyway) — [[collectIndexCodebooks]] then
-    // skips its per-search collect job. Scoped to one index VALUE (never
-    // persisted, never keyed on inputs across runs), and NOT a
-    // constructor parameter, so no caller can hand in a stale one:
-    // [[copy]] carries it only while `coarse` and `pq` are the very
-    // relations it was read from (the `copy(codes = …)` sites — pruned
-    // scan, add, merge, remove, cell filter); replacing either drops it.
-    private[Similarity] var codebooksMemo: Option[(Array[(Long, Seq[Double])],
-      Array[Array[Array[Double]]], Int, Int)] = None
+    /** The vector width: the coarse centroids'. */
+    def dim: Int = coarse.head._2.length
 
-    /** The case-class copy; it keeps the codebook memo only while `coarse`
-      * and `pq` are unchanged.
-      */
-    def copy(codes: DataFrame = codes, coarse: DataFrame = coarse,
-             pq: DataFrame = pq, residual: Boolean = residual,
-             subDim: Int = subDim): IvfPqIndex = {
-      val c = IvfPqIndex(codes, coarse, pq, residual, subDim)
-      if ((coarse eq this.coarse) && (pq eq this.pq))
-        c.codebooksMemo = codebooksMemo
-      c
-    }
+    /** Codes per subspace (a subspace trained on fewer rows holds fewer). */
+    def pqK: Int = pq.map(_.length).max
 
     /** The index's one-row self-description
       * `(residual, sub_dim, dim, subspaces, pq_k, n_centroids)` — scalar
       * lifecycle metadata AS A RELATION, so persisting the index loses
-      * nothing that reopening needs. `dim` is the coarse centroid width
-      * (the full vector dimensionality); it and
-      * `subspaces`/`pq_k`/`n_centroids` are stated redundantly with the
-      * codebook relations on purpose: [[ivfPqIndexLoad]] re-derives them
-      * and fails fast on mismatch.
+      * nothing that reopening needs. `dim`, `subspaces`, `pq_k` and
+      * `n_centroids` are stated redundantly with the codebook relations
+      * on purpose: [[ivfPqIndexLoad]] re-derives them and fails fast on
+      * mismatch.
       */
     def meta: DataFrame =
-      pq.agg((max(col("subspace")).cast("int") + 1).as("subspaces"),
-          (max(col("code")).cast("int") + 1).as("pq_k"))
-        .crossJoin(coarse.agg(count(lit(1)).cast("int").as("n_centroids"),
-          min(size(col("centroid"))).as("dim")))
-        .select(lit(residual).as("residual"), lit(subDim).as("sub_dim"),
-          col("dim"), col("subspaces"), col("pq_k"), col("n_centroids"))
+      codes.sparkSession.createDataFrame(
+        java.util.List.of(Row(residual, subDim, dim, pq.length, pqK, coarse.length)),
+        IvfPqMetaSchema)
   }
 
-  /** Persist all four index relations (codes/coarse/pq/meta) under one
-    * directory — the durable half of the build/search lifecycle. Plain
-    * parquet: any engine can read the codes, and [[ivfPqIndexLoad]]
-    * reopens flag-free.
+  /** [[IvfPqIndex.meta]]'s schema. Nullability is included because the
+    * parquet footer records it: it is part of the on-disk format.
     */
-  def ivfPqIndexSave(index: IvfPqIndex, dir: String): Unit = {
-    val mode = org.apache.spark.sql.SaveMode.Overwrite
-    // the four relations are independent and land in separate subdirs —
-    // write them as concurrent jobs (guide §2.6) so the three bounded
-    // codebook/meta writes overlap the corpus-sized codes write instead
-    // of serializing behind it
-    Par.run(Seq(
-      () => index.codes.write.mode(mode).parquet(s"$dir/codes"),
-      () => index.coarse.write.mode(mode).parquet(s"$dir/coarse"),
-      () => index.pq.write.mode(mode).parquet(s"$dir/pq"),
-      () => index.meta.write.mode(mode).parquet(s"$dir/meta")))
-  }
+  private val IvfPqMetaSchema = StructType(Seq(
+    StructField("residual", BooleanType, nullable = false),
+    StructField("sub_dim", IntegerType, nullable = false),
+    StructField("dim", IntegerType),
+    StructField("subspaces", IntegerType),
+    StructField("pq_k", IntegerType),
+    StructField("n_centroids", IntegerType, nullable = false)))
+
+  /** Persist the index under one directory as four plain parquet
+    * relations: `codes/`, the codebooks as `coarse/` `(cell, centroid)`
+    * and `pq/` `(subspace, code, centroid)`, and `meta/` — the durable
+    * half of the build/search lifecycle. Any engine can read the codes,
+    * [[ivfPqIndexLoad]] reopens flag-free, and `meta/` is written last
+    * ([[saveIndexDir]]), so it marks a complete save.
+    */
+  def ivfPqIndexSave(index: IvfPqIndex, dir: String): Unit =
+    saveIvfPq(index, dir, _.write)
 
   /** Persist an index with the codes relation CLUSTERED BY CELL —
     * `partitionBy("cell")`, so the on-disk layout is one directory per
@@ -2354,17 +2355,27 @@ object Similarity {
     * files; with it, ~one file per cell), like [[graft.operators
     * .Bucketing]]'s writeBucketed trade.
     */
-  def ivfPqIndexSaveClustered(index: IvfPqIndex, dir: String): Unit = {
-    val mode = org.apache.spark.sql.SaveMode.Overwrite
-    // independent subdirectory writes run as concurrent jobs (guide
-    // §2.6) — same as [[ivfPqIndexSave]]; the clustered codes exchange
-    // dominates, the three bounded writes ride its tail
-    Par.run(Seq(
-      () => index.codes.repartition(col("cell"))
-        .write.mode(mode).partitionBy("cell").parquet(s"$dir/codes"),
-      () => index.coarse.write.mode(mode).parquet(s"$dir/coarse"),
-      () => index.pq.write.mode(mode).parquet(s"$dir/pq"),
-      () => index.meta.write.mode(mode).parquet(s"$dir/meta")))
+  def ivfPqIndexSaveClustered(index: IvfPqIndex, dir: String): Unit =
+    saveIvfPq(index, dir, _.repartition(col("cell")).write.partitionBy("cell"))
+
+  /** The two IVF-PQ saves, which differ only in how `codes` is written.
+    * The codebook relations are made from the index's fields as
+    * `(cell long, centroid array<double>)` and
+    * `(subspace int, code int, centroid array<double>)`.
+    */
+  private def saveIvfPq(index: IvfPqIndex, dir: String,
+                        codesWriter: DataFrame => DataFrameWriter[Row]): Unit = {
+    val spark = index.codes.sparkSession
+    import spark.implicits._
+    val coarse = index.coarse.toSeq.toDF("cell", "centroid")
+    val pq = (for {
+      sp <- index.pq.indices
+      c <- index.pq(sp).indices
+    } yield (sp, c, index.pq(sp)(c).toSeq)).toDF("subspace", "code", "centroid")
+    saveIndexDir(dir, index.meta, Seq(
+      () => codesWriter(index.codes).mode(SaveMode.Overwrite).parquet(s"$dir/codes"),
+      () => coarse.write.mode(SaveMode.Overwrite).parquet(s"$dir/coarse"),
+      () => pq.write.mode(SaveMode.Overwrite).parquet(s"$dir/pq")))
   }
 
   /** Reopen a persisted index — NO caller-supplied parameters, by
@@ -2375,10 +2386,12 @@ object Similarity {
     * pq centroid widths vs `sub_dim` and the codes relation's code
     * columns) is re-derived and REQUIRED to match — a stale meta, a
     * mixed directory, or a truncated codebook fails here, not as
-    * plausible-looking wrong neighbors. Cost: two bounded aggregates
-    * over the codebook relations plus the one-row meta read. A `coarse`
-    * or `pq` relation over [[IvfPqCodebookCapBytes]] on disk is refused
-    * before anything is collected.
+    * plausible-looking wrong neighbors. A missing relation, or a codes
+    * relation with no parquet file where one is read, fails as
+    * `<dir>/<relation> … a torn directory`. Cost: one bounded collect of
+    * the codebook relations and the one-row meta. A `coarse` or `pq`
+    * relation over [[IvfPqCodebookCapBytes]] on disk is refused before
+    * anything is collected.
     */
   def ivfPqIndexLoad(spark: org.apache.spark.sql.SparkSession,
                      dir: String): IvfPqIndex =
@@ -2395,6 +2408,11 @@ object Similarity {
   private[operators] def ivfPqIndexLoad(spark: org.apache.spark.sql.SparkSession,
                                         dir: String,
                                         codebookCapBytes: Long): IvfPqIndex = {
+    import org.apache.hadoop.fs.Path
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Seq("codes", "coarse", "pq", "meta").foreach { rel =>
+      require(fs.exists(new Path(s"$dir/$rel")), s"$dir/$rel is missing — a torn directory")
+    }
     // a cell-clustered layout ([[ivfPqIndexSaveClustered]]) reads `cell`
     // back as the partition directory's INFERRED type (int); read with
     // the cell field REQUESTED as long so both layouts expose ONE codes
@@ -2409,47 +2427,43 @@ object Similarity {
     // listing measured as the DOMINANT cost of opening a large
     // clustered index (7 s of a 9 s open at 1118 cells).
     val codes = {
-      val p = new org.apache.hadoop.fs.Path(s"$dir/codes")
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val entries = fs.listStatus(p)
+      val entries = fs.listStatus(new Path(s"$dir/codes"))
       val cellDirs = entries.filter(s =>
         s.isDirectory && s.getPath.getName.startsWith("cell="))
-      if (cellDirs.isEmpty) spark.read.parquet(s"$dir/codes")
-      else {
-        val leaf = fs.listStatus(cellDirs.head.getPath).map(_.getPath)
-          .filter(_.getName.endsWith(".parquet")).head
-        val fileSchema = spark.read.parquet(leaf.toString).schema
+      if (cellDirs.isEmpty) {
+        require(entries.exists(_.getPath.getName.endsWith(".parquet")),
+          s"$dir/codes holds no parquet file — a torn directory")
+        spark.read.parquet(s"$dir/codes")
+      } else {
+        val first = cellDirs.map(_.getPath).minBy(_.getName)
+        val leaf = fs.listStatus(first).map(_.getPath)
+          .find(_.getName.endsWith(".parquet"))
+        require(leaf.isDefined,
+          s"$dir/codes/${first.getName} holds no parquet file — a torn directory")
+        val fileSchema = spark.read.parquet(leaf.get.toString).schema
         require(!fileSchema.fieldNames.contains("cell"),
           s"$dir/codes mixes a cell= directory layout with in-file cell " +
             "columns — a torn or foreign directory")
-        val full = org.apache.spark.sql.types.StructType(
-          fileSchema.fields :+
-            org.apache.spark.sql.types.StructField("cell", LongType))
+        val full = StructType(fileSchema.fields :+ StructField("cell", LongType))
         spark.read.schema(full).parquet(s"$dir/codes")
       }
     }
-    val coarse = spark.read.parquet(s"$dir/coarse")
-    val pq = spark.read.parquet(s"$dir/pq")
     // size-bound the codebook collect below BEFORE it runs: the files'
     // on-disk length comes from one driver-side FS summary per relation
     // (no Spark job)
     Seq("coarse", "pq").foreach { rel =>
-      val p = new org.apache.hadoop.fs.Path(s"$dir/$rel")
-      val bytes = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .getContentSummary(p).getLength
+      val bytes = fs.getContentSummary(new Path(s"$dir/$rel")).getLength
       require(bytes <= codebookCapBytes,
         s"$dir/$rel holds $bytes bytes, over the $codebookCapBytes-byte cap " +
           "on codebooks collected onto the driver")
     }
     // ONE bounded collect both VALIDATES and KEEPS the codebooks: the
     // one-row meta unions with the FULL coarse and pq relations
-    // (nCentroids + subspaces·pqK rows — the same rows every search
-    // would collect again), every derivable meta field is re-checked
-    // driver-side from the full rows with the same messages (order may
-    // differ: an analysis/read error in pq/coarse, e.g. a missing
-    // 'centroid' column, surfaces at the collect, before the meta
-    // row-count require), and the parsed codebooks ride the returned
-    // index as its memo — searches over a loaded index collect nothing.
+    // (nCentroids + subspaces·pqK rows), every derivable meta field is
+    // re-checked driver-side from the full rows (an analysis/read error
+    // in pq/coarse, e.g. a missing 'centroid' column, surfaces at the
+    // collect, before the meta row-count require), and the parsed
+    // codebooks become the returned index's fields.
     val rows = spark.read.parquet(s"$dir/meta")
       .select(col("residual").cast("boolean"), col("sub_dim").cast("int"),
         col("dim").cast("int"), col("subspaces").cast("int"),
@@ -2459,10 +2473,10 @@ object Similarity {
           col("sub_dim").cast("double"), col("dim").cast("double"),
           col("subspaces").cast("double"), col("pq_k").cast("double"),
           col("n_centroids").cast("double")).as("__c"))
-      .unionByName(coarse.select(lit(0).as("__kind"),
+      .unionByName(spark.read.parquet(s"$dir/coarse").select(lit(0).as("__kind"),
         col("cell").cast("long").as("__a"), lit(0L).as("__b"),
         col("centroid").cast("array<double>").as("__c")))
-      .unionByName(pq.select(lit(1).as("__kind"),
+      .unionByName(spark.read.parquet(s"$dir/pq").select(lit(1).as("__kind"),
         col("subspace").cast("long").as("__a"),
         col("code").cast("long").as("__b"),
         col("centroid").cast("array<double>").as("__c")))
@@ -2501,16 +2515,20 @@ object Similarity {
         s"[$cLo, $cHi] dims — a mixed directory")
     (0 until pqS).foreach(sp => require(codes.columns.contains(s"code_$sp"),
       s"$dir/codes is missing column code_$sp for the $pqS-subspace codebook"))
-    withCodebooks(IvfPqIndex(codes, coarse, pq, residual, subDim),
-      assembleCodebooks(coarsePairs, pqTriples))
+    val cents = Array.tabulate(pqS) { sp =>
+      pqTriples.filter(_._1 == sp).sortBy(_._2).map(_._3.toArray)
+    }
+    require(cents.forall(_.nonEmpty), s"$dir/pq has an empty subspace — a torn directory")
+    IvfPqIndex(codes, coarsePairs.sortBy(_._1), cents, residual, subDim)
   }
 
   /** Train and encode ONCE — the index half of the IVF-PQ split. One
     * corpus pass encodes every vector (cell + PQ codes + norm, all
     * per-row expressions over literal codebooks, nothing shuffles);
     * training is [[pqTrain]]'s fused loop (`pqIters` bounded codebook
-    * collects, the LAST time they run for this corpus). Write the three
-    * relations and search with [[ivfPqSearch]] — results are
+    * collects, the LAST time they run for this corpus). The index holds
+    * the trained codebooks as they are; save it with [[ivfPqIndexSave]]
+    * and search with [[ivfPqSearch]] — results are
     * bit-identical to the inline [[ivfPqTopK]]/[[ivfPqResidualTopK]]
     * at the same parameters (spec-pinned, and q232's oracle IS q219's).
     * `storeVectors` keeps the raw vector as a `vec` payload column (the
@@ -2524,8 +2542,6 @@ object Similarity {
                       residual: Boolean = false,
                       storeVectors: Boolean = false,
                       storeSignWords: Boolean = false): IvfPqIndex = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
     val codebook = collectCodebook(corpus, idCol, vecCol, nCentroids)
     require(codebook.nonEmpty, "codebook must be non-empty")
     val dim = codebook.head._2.length
@@ -2548,27 +2564,17 @@ object Similarity {
       withPqCodeCols(codeSrc, codeVec, cents, subspaces, subDim), subspaces,
       storeVectors,
       if (storeSignWords) Some(dim) else None)
-    val coarse = codebook.toSeq.toDF("cell", "centroid")
-    val pq = (for {
-      sp <- cents.indices
-      c <- cents(sp).indices
-    } yield (sp, c, cents(sp)(c).toSeq)).toDF("subspace", "code", "centroid")
-    // the constructor holds the codebooks it just trained — searches over
-    // this index skip their codebook collect ([[collectIndexCodebooks]]'s
-    // memo; the tuple matches the collect's reconstruction exactly:
-    // cell-ascending codebook, (subspace, code)-indexed cents)
-    withCodebooks(IvfPqIndex(codes, coarse, pq, residual, subDim),
-      (codebook.sortBy(_._1), cents, cents.length, cents.map(_.length).max))
+    IvfPqIndex(codes, codebook.sortBy(_._1), cents, residual, subDim)
   }
 
   /** Search a PERSISTED IVF-PQ index — retrain-free by construction:
-    * the only driver-side work is two bounded collects of the codebook
-    * RELATIONS (nCentroids + subspaces·pqK rows — reading an index is
-    * not training; no Lloyd barrier can occur because no training code
-    * is reachable from here), folded back into the same literal-codebook
-    * expressions the inline operators use. The corpus appears only for
-    * the stage-2 exact rerank vectors; stage 1 runs entirely on the
-    * index's `codes` relation. Same output and determinism contract as
+    * the index's codebooks go into the same literal-codebook expressions
+    * the inline operators use, and no Spark job runs before the search's
+    * own (reading an index is not training; no Lloyd barrier can occur
+    * because no training code is reachable from here). The corpus
+    * appears only for the stage-2 exact rerank vectors; stage 1 runs
+    * entirely on the index's `codes` relation. Same output and
+    * determinism contract as
     * [[ivfPqTopK]] — same parameters, bit-identical results;
     * `withScore = true` appends the exact rerank cosine as a 6-dp `cos`
     * column (the [[graft.operators.Selection.fuseScoresMinMax]] input
@@ -2577,8 +2583,8 @@ object Similarity {
   def ivfPqSearch(index: IvfPqIndex, corpus: DataFrame, queries: DataFrame,
                   idCol: String, vecCol: String, k: Int, nProbe: Int = 4,
                   rerank: Int = 20, withScore: Boolean = false): DataFrame =
-    ivfPqSearchWith(index, collectIndexCodebooks(index), Some(corpus), queries,
-      idCol, vecCol, k, nProbe, rerank, withScore)
+    ivfPqSearchWith(index, Some(corpus), queries, idCol, vecCol, k, nProbe,
+      rerank, withScore)
 
   /** [[ivfPqSearch]] with the batch's probed-cell set pushed into the
     * codes SCAN as a static `cell IN (…)` predicate — result-identical
@@ -2603,9 +2609,8 @@ object Similarity {
   def ivfPqSearchPruned(index: IvfPqIndex, corpus: DataFrame,
                         queries: DataFrame, idCol: String, vecCol: String,
                         k: Int, nProbe: Int = 4, rerank: Int = 20): DataFrame = {
-    val cbs = collectIndexCodebooks(index)
-    val (qs, codes) = probedCells(index.codes, queries, vecCol, cbs._1, nProbe)
-    ivfPqSearchWith(index.copy(codes = codes), cbs, Some(corpus), qs, idCol,
+    val (qs, codes) = probedCells(index.codes, queries, vecCol, index.coarse, nProbe)
+    ivfPqSearchWith(index.copy(codes = codes), Some(corpus), qs, idCol,
       vecCol, k, nProbe, rerank)
   }
 
@@ -2635,33 +2640,28 @@ object Similarity {
     require(index.codes.columns.contains("vec"),
       "index carries no stored vectors — build with storeVectors=true, " +
         "or serve with ivfPqSearch(index, corpus, ...)")
-    val cbs = collectIndexCodebooks(index)
-    val (qs, codes) = probedCells(index.codes, queries, vecCol, cbs._1, nProbe)
-    ivfPqSearchWith(index.copy(codes = codes), cbs, None, qs, idCol, vecCol,
+    val (qs, codes) = probedCells(index.codes, queries, vecCol, index.coarse, nProbe)
+    ivfPqSearchWith(index.copy(codes = codes), None, qs, idCol, vecCol,
       k, nProbe, rerank, withScore)
   }
 
-  /** [[ivfPqSearch]] over ALREADY-collected codebooks `cbs` (the pruned
-    * verbs collect them before pruning). Stage 2 reranks against
-    * [[rerankVectors]]: the `corpus` when given, else the index's own
-    * `vec` payload.
+  /** The search all three IVF-PQ serving verbs share. Stage 2 reranks
+    * against [[rerankVectors]]: the `corpus` when given, else the index's
+    * own `vec` payload.
     */
-  private def ivfPqSearchWith(index: IvfPqIndex,
-                              cbs: (Array[(Long, Seq[Double])],
-                                Array[Array[Array[Double]]], Int, Int),
-                              corpus: Option[DataFrame], queries: DataFrame,
-                              idCol: String, vecCol: String, k: Int,
-                              nProbe: Int, rerank: Int,
+  private def ivfPqSearchWith(index: IvfPqIndex, corpus: Option[DataFrame],
+                              queries: DataFrame, idCol: String, vecCol: String,
+                              k: Int, nProbe: Int, rerank: Int,
                               withScore: Boolean = false): DataFrame = {
-    val (codebook, cents, subspaces, pqK) = cbs
+    val subspaces = index.pq.length
     val baseDot =
       if (index.residual)
-        Some(dot(col("__qv"), element_at(typedlit(codebook.toMap), col("cell"))))
+        Some(dot(col("__qv"), element_at(typedlit(index.coarse.toMap), col("cell"))))
       else None
     ivfPqRank(codedSide(index.codes, subspaces),
       rerankVectors(index.codes, corpus, idCol, vecCol), queries, idCol,
-      vecCol, codebook, cents, baseDot, k, nProbe, subspaces, index.subDim,
-      pqK, rerank, withScore)
+      vecCol, index.coarse, index.pq, baseDot, k, nProbe, subspaces,
+      index.subDim, index.pqK, rerank, withScore)
   }
 
   /** Stage-2 rerank vectors `(neighbor_id, __cv, __cn)`: the
@@ -2697,72 +2697,10 @@ object Similarity {
     (qs, if (probed.isEmpty) codes else codes.filter(col("cell").isin(probed: _*)))
   }
 
-  /** `index` carrying `cbs` as its codebook memo — only for a value just
-    * constructed from the relations `cbs` was read from (build, load).
-    */
-  private def withCodebooks(index: IvfPqIndex,
-                            cbs: (Array[(Long, Seq[Double])],
-                              Array[Array[Array[Double]]], Int, Int)): IvfPqIndex = {
-    index.codebooksMemo = Some(cbs)
-    index
-  }
-
-  /** The two bounded codebook-relation collects every retrain-free verb
-    * shares (search, encode, add): coarse → `(cell, centroid)` literals,
-    * pq → ragged `centroids(subspace)(code)(dim)` — nCentroids +
-    * subspaces·pqK rows total, folded back into the same literal
-    * expressions the inline operators use. Reading an index is not
-    * training: no Lloyd barrier is reachable from here.
-    */
-  private def collectIndexCodebooks(index: IvfPqIndex)
-      : (Array[(Long, Seq[Double])], Array[Array[Array[Double]]], Int, Int) = {
-    // an index made with the codebooks already driver-side (build: the
-    // trained arrays; load: the validation collect) answers
-    // without a job — the memoized tuple is byte-identical to what the
-    // collect below reconstructs (same rows, same sort keys)
-    index.codebooksMemo.foreach(cb => return cb)
-    // both codebook relations come back in ONE bounded collect (they are
-    // nCentroids + subspaces·pqK rows total) — one driver round-trip per
-    // search/encode instead of two; rows are split and ordered on the
-    // driver, so the result is byte-identical to the two-collect form
-    val rows = index.coarse
-      .select(lit(0).as("__kind"), col("cell").cast("long").as("__a"),
-        lit(0L).as("__b"), col("centroid").as("__c"))
-      .unionByName(index.pq.select(lit(1).as("__kind"),
-        col("subspace").cast("long").as("__a"), col("code").cast("long").as("__b"),
-        col("centroid").as("__c")))
-      .collect()
-    assembleCodebooks(
-      rows.filter(_.getInt(0) == 0)
-        .map(r => (r.getLong(1), r.getSeq[Double](3))),
-      rows.filter(_.getInt(0) == 1)
-        .map(r => (r.getLong(1), r.getLong(2), r.getSeq[Double](3))))
-  }
-
-  /** Driver-side reconstruction of the literal codebooks from collected
-    * coarse pairs and pq triples — the ONE parsing shared by the
-    * per-search collect above and the load-time validation collect (so
-    * the load's memo can never drift from what a search would have
-    * collected): cell-ascending codebook, (subspace, code)-sorted cents.
-    */
-  private def assembleCodebooks(coarsePairs: Array[(Long, Seq[Double])],
-                                pqTriples: Array[(Long, Long, Seq[Double])])
-      : (Array[(Long, Seq[Double])], Array[Array[Array[Double]]], Int, Int) = {
-    val codebook = coarsePairs.sortBy(_._1)
-    require(codebook.nonEmpty, "coarse codebook relation is empty")
-    require(pqTriples.nonEmpty, "pq codebook relation is empty")
-    val subspaces = pqTriples.map(_._1).max.toInt + 1
-    val cents: Array[Array[Array[Double]]] = Array.tabulate(subspaces) { sp =>
-      pqTriples.filter(_._1 == sp).sortBy(_._2).map(_._3.toArray)
-    }
-    require(cents.forall(_.nonEmpty), "pq codebook has an empty subspace")
-    (codebook, cents, subspaces, cents.map(_.length).max)
-  }
-
   /** Encode a batch against an index's FROZEN codebooks — FAISS's `add`
     * step as a relation: one narrow per-row pass (coarse cell, norm,
     * `subspaces` PQ codes — residual-space when the index is residual)
-    * over literal codebooks collected from the index, emitting rows in
+    * over the index's literal codebooks, emitting rows in
     * the codes-relation shape `(id, cell, nrm, code_0 …)`. NO training
     * is reachable from here (the [[ivfPqSearch]] retrain-free
     * guarantee): encoding row-for-row matches what [[ivfPqIndexBuild]]
@@ -2773,7 +2711,7 @@ object Similarity {
     */
   def ivfPqEncode(index: IvfPqIndex, batch: DataFrame, idCol: String,
                   vecCol: String): DataFrame = {
-    val (codebook, cents, subspaces, _) = collectIndexCodebooks(index)
+    val (codebook, cents, subspaces) = (index.coarse, index.pq, index.pq.length)
     // fail fast on a geometry mismatch — the silent-poison class the
     // flag-free loader exists to kill: a batch narrower than the
     // index's vectors (embeddings from a different model) would slice
@@ -2781,7 +2719,7 @@ object Similarity {
     // against mismatched coarse centroids — plausible-looking wrong
     // neighbors forever after. One bounded limit(1) probe, the
     // pqGeometryCheck convention.
-    val dim = codebook.head._2.length
+    val dim = index.dim
     batch.select(size(col(vecCol)).as("__d")).limit(1).collect().headOption
       .foreach { r =>
         require(r.getInt(0) == dim,
@@ -2846,7 +2784,7 @@ object Similarity {
     */
   def ivfPqReconError(index: IvfPqIndex, corpus: DataFrame, idCol: String,
                       vecCol: String): DataFrame = {
-    val (codebook, cents, subspaces, _) = collectIndexCodebooks(index)
+    val (codebook, cents, subspaces) = (index.coarse, index.pq, index.pq.length)
     val cells = ivfCells(corpus, idCol, vecCol, codebook)
     val vec =
       if (index.residual)
@@ -2919,8 +2857,7 @@ object Similarity {
   def ivfCellOccupancy(index: IvfPqIndex): DataFrame = {
     val occ = index.codes.groupBy(col("cell")).agg(count(lit(1)).as("__n"))
     val tot = index.codes.agg(count(lit(1)).as("__t"))
-      .crossJoin(index.coarse.agg(count(lit(1)).as("__k")))
-    index.coarse.select(col("cell"))
+    cellsOf(index)
       .join(occ, Seq("cell"), "left")
       .crossJoin(broadcast(tot))
       .select(col("cell"),
@@ -2928,8 +2865,15 @@ object Similarity {
         round(coalesce(col("__n"), lit(0L)).cast("double") /
           col("__t").cast("double"), 6).as("frac"),
         round(coalesce(col("__n"), lit(0L)).cast("double") *
-          col("__k").cast("double") / col("__t").cast("double"), 6)
+          lit(index.coarse.length.toDouble) / col("__t").cast("double"), 6)
           .as("load_factor"))
+  }
+
+  /** The index's coarse cells as a one-column `cell` relation. */
+  private def cellsOf(index: IvfPqIndex): DataFrame = {
+    val spark = index.codes.sparkSession
+    import spark.implicits._
+    index.coarse.map(_._1).toSeq.toDF("cell")
   }
 
   /** QUANTIZATION-DRIFT gate — [[ivfCellOccupancy]]'s two-sample twin and
@@ -2960,7 +2904,7 @@ object Similarity {
     val baseOcc = index.codes.groupBy(col("cell")).agg(count(lit(1)).as("__nb"))
     val deltaOcc = ivfPqEncode(index, batch, idCol, vecCol)
       .groupBy(col("cell")).agg(count(lit(1)).as("__nd"))
-    val per = index.coarse.select(col("cell"))
+    val per = cellsOf(index)
       .join(baseOcc, Seq("cell"), "left")
       .join(deltaOcc, Seq("cell"), "left")
       .select(col("cell"),

@@ -1364,6 +1364,11 @@ object TextAnalysis {
     sparseTopK(index.serving, "doc_id", queries, queryIdCol,
       termCol, weightCol, k, excludeSelf)
 
+  /** Persist the postings, vocab and (when capped) capped relations
+    * and `meta/` under one directory, meta last
+    * ([[graft.operators.Similarity.saveIndexDir]]), so `meta/` marks a
+    * complete save.
+    */
   def sparseIndexSave(index: SparseIndex, dir: String): Unit = {
     val mode = org.apache.spark.sql.SaveMode.Overwrite
     val cappedTask: () => Unit = index.capped match {
@@ -1381,15 +1386,12 @@ object TextAnalysis {
         if (fs.exists(p)) fs.delete(p, true)
       }
     }
-    // independent subdirectory writes run as concurrent jobs (guide
-    // §2.6 — the Par.run convention shared with ivfPqIndexSave); the
-    // posting relations are localCheckpoint-materialized at build, so
-    // concurrent readers share the same cached blocks
-    Par.run(Seq(
+    // the posting relations are localCheckpoint-materialized at build,
+    // so the concurrent writes share the same cached blocks
+    Similarity.saveIndexDir(dir, index.meta, Seq(
       () => index.postings.write.mode(mode).parquet(s"$dir/postings"),
       () => index.vocab.write.mode(mode).parquet(s"$dir/vocab"),
-      cappedTask,
-      () => index.meta.write.mode(mode).parquet(s"$dir/meta")))
+      cappedTask))
   }
 
   /** Reopen a persisted index — NO caller-supplied parameters (the

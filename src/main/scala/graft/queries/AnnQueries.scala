@@ -227,12 +227,12 @@ private[graft] object AnnQueries {
       // dot added before the norm division. Every CTE MATERIALIZED.
       ivfPqResidualOracleSql)),
 
-    // ── IVF-PQ index LIFECYCLE: build once (codes + codebooks as
-    // persistable relations — the FAISS train→add→search split), then
-    // search retrain-free: the search's only driver work is two bounded
-    // collects of the codebook relations, amortizing the pqIters
-    // training barriers across every query batch. Same parameters as
-    // q219 ⇒ bit-identical results, graded against the same oracle.
+    // ── IVF-PQ index LIFECYCLE: build once (codes + codebooks, written
+    // as relations on save — the FAISS train→add→search split), then
+    // search retrain-free over the index's codebooks, amortizing the
+    // pqIters training barriers across every query batch. Same
+    // parameters as q219 ⇒ bit-identical results, graded against the
+    // same oracle.
     Query("q232_ivf_pq_index", (s, dir) => {
       val emb = t(s, dir, "embeddings")
       val idx = Similarity.ivfPqIndexBuild(emb, "vec_id", "embedding",

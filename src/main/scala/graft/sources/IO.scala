@@ -41,19 +41,15 @@ object IO {
     }
   }
 
-  /** S4: write in the requested format. Distributed multi-part output by
-    * default; `singleFile` coalesces to one part for small results (the
-    * reference always writes one file — a driver-side pattern that does not
-    * scale; keep it opt-in). `coalesce(1)` runs the whole last stage in
-    * one task; a single file in a given order is
-    * `df.repartition(1).sortWithinPartitions(order)` written without
-    * `singleFile` ([[graft.engine.Outputs.write]]), not a global `orderBy`
-    * here, whose range sampling runs the plan upstream of it twice.
+  /** S4: write in the requested format, one part file per partition of
+    * `df`. A caller that wants one file makes `df` one partition first
+    * ([[mergeCsvDir]]'s `coalesce(1)`); one file in a given order is
+    * `df.repartition(1).sortWithinPartitions(order)`
+    * ([[graft.engine.Outputs.write]]), not a global `orderBy`, whose
+    * range sampling runs the plan upstream of it twice.
     */
-  def write(df: DataFrame, path: String, format: Option[String] = None,
-            singleFile: Boolean = false): Unit = {
-    val out = if (singleFile) df.coalesce(1) else df
-    val w = out.write.mode(SaveMode.Overwrite)
+  def write(df: DataFrame, path: String, format: Option[String] = None): Unit = {
+    val w = df.write.mode(SaveMode.Overwrite)
     formatOf(path, format) match {
       case "csv" => w.option("header", "true").csv(path)
       case "json" | "jsonl" | "ndjson" => w.json(path)
@@ -73,7 +69,7 @@ object IO {
 
   /** S10: merge many csv(.gz) shards into one (scripts/merge-dir.sh). */
   def mergeCsvDir(spark: SparkSession, inGlob: String, outPath: String): Unit =
-    write(read(spark, inGlob, Some("csv")), outPath, Some("csv"), singleFile = true)
+    write(read(spark, inGlob, Some("csv")).coalesce(1), outPath, Some("csv"))
 
   /** F7: non-blank lines of a driver-side text file (util.py:377-382 —
     * CVE-id list files for the `--cve-file` style inputs).

@@ -674,10 +674,10 @@ class SimilarityIndexSpec extends SparkSpec {
     // subDim=16 meta — refused on the derived centroid width
     val mixed = Files.createTempDirectory("graft-ivfpq-mixed-").toString
     Similarity.ivfPqIndexSave(res, mixed)
-    Similarity.ivfPqIndexBuild(emb, "vec_id", "embedding", nCentroids = 16,
-      subspaces = 4, subDim = 8, pqK = 4, pqIters = 1)
-      .pq.write.mode("overwrite").parquet(s"$mixed/pq2")
-    spark.read.parquet(s"$mixed/pq2").write.mode("overwrite").parquet(s"$mixed/pq")
+    val sub8 = Files.createTempDirectory("graft-ivfpq-sub8-").toString
+    Similarity.ivfPqIndexSave(Similarity.ivfPqIndexBuild(emb, "vec_id", "embedding",
+      nCentroids = 16, subspaces = 4, subDim = 8, pqK = 4, pqIters = 1), sub8)
+    spark.read.parquet(s"$sub8/pq").write.mode("overwrite").parquet(s"$mixed/pq")
     val e2 = intercept[IllegalArgumentException](Similarity.ivfPqIndexLoad(spark, mixed))
     assert(e2.getMessage.contains("sub_dim"))
     // mixed coarse: centroids of a different dimensionality under this
@@ -878,9 +878,8 @@ class SimilarityIndexSpec extends SparkSpec {
     val codes = Seq((10L, 0L, 1.0), (11L, 0L, 1.0), (12L, 0L, 1.0),
       (13L, 1L, 1.0), (14L, 1L, 1.0), (15L, 3L, 1.0))
       .toDF("id", "cell", "nrm")
-    val coarse = Seq((0L, Seq(1.0)), (1L, Seq(2.0)), (2L, Seq(3.0)), (3L, Seq(4.0)))
-      .toDF("cell", "centroid")
-    val pq = Seq((0, 0, Seq(0.0))).toDF("subspace", "code", "centroid")
+    val coarse = Array((0L, Seq(1.0)), (1L, Seq(2.0)), (2L, Seq(3.0)), (3L, Seq(4.0)))
+    val pq = Array(Array(Array(0.0)))
     val idx = Similarity.IvfPqIndex(codes, coarse, pq, residual = false, subDim = 1)
     val got = Similarity.ivfCellOccupancy(idx)
       .as[(Long, Long, Double, Double)].collect().sortBy(_._1)
@@ -1067,8 +1066,7 @@ class SimilarityIndexSpec extends SparkSpec {
     def search(pqK: Int) = {
       val idx = Similarity.ivfPqIndexBuild(emb, "vec_id", "embedding",
         nCentroids = 8, subspaces = 4, subDim = 16, pqK = pqK, pqIters = 0)
-      val codes = idx.pq.agg(max(col("code"))).head().getInt(0) + 1
-      (codes, Similarity.ivfPqSearch(idx, emb, qs, "vec_id", "embedding",
+      (idx.pqK, Similarity.ivfPqSearch(idx, emb, qs, "vec_id", "embedding",
         k = 5, nProbe = 4, rerank = 20))
     }
     val (k4, s4) = search(4)
@@ -1079,7 +1077,7 @@ class SimilarityIndexSpec extends SparkSpec {
     assert(dotsIn(s4) < 4 * 4, "the ADC table is not spelled out per code")
   }
 
-  test("IvfPqIndex.copy drops the codebook memo when pq changes, keeps it when only codes do") {
+  test("IvfPqIndex holds its codebooks: a copy ranks with the codebooks it carries, no search collects") {
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
     val qs = emb.filter($"vec_id" % 20 === 0)
     def rows(df: org.apache.spark.sql.DataFrame) =
@@ -1096,14 +1094,18 @@ class SimilarityIndexSpec extends SparkSpec {
       "the fixture's two codebooks rank differently")
     assert(search(a.copy(codes = b.codes, pq = b.pq)) == search(b),
       "a copy carrying b's pq ranks with b's codebooks")
-    // a codes-only copy (the pruned scan, add, merge, remove) keeps the
-    // memo: building its search runs no codebook collect
-    val pruned = a.copy(codes = a.codes.filter(col("cell") < 4))
-    assert(jobsRunBy(Similarity.ivfPqSearch(pruned, emb, qs, "vec_id",
-      "embedding", k = 5)).isEmpty)
-    assert(jobsRunBy(Similarity.ivfPqSearch(a.copy(pq = b.pq), emb, qs,
-      "vec_id", "embedding", k = 5)).nonEmpty,
-      "a copy with a replaced pq collects its codebooks")
+    val dir = Files.createTempDirectory("graft-ivfpq-fields-").toString
+    Similarity.ivfPqIndexSave(b, dir)
+    val loaded = Similarity.ivfPqIndexLoad(spark, dir)
+    val direct = Similarity.IvfPqIndex(b.codes, b.coarse, b.pq, residual = false,
+      subDim = 16)
+    assert(search(loaded) == search(b) && search(direct) == search(b))
+    // building a search over any index value runs no codebook job
+    for ((name, idx) <- Seq("built" -> a, "loaded" -> loaded,
+        "codes copy" -> a.copy(codes = a.codes.filter(col("cell") < 4)),
+        "codebook swap" -> a.copy(pq = b.pq), "directly constructed" -> direct))
+      assert(jobsRunBy(Similarity.ivfPqSearch(idx, emb, qs, "vec_id",
+        "embedding", k = 5)).isEmpty, name)
   }
 
   test("ivfPqIndexLoad: an empty coarse relation fails as a torn directory") {
@@ -1112,7 +1114,9 @@ class SimilarityIndexSpec extends SparkSpec {
       nCentroids = 4, subspaces = 4, subDim = 16, pqK = 4, pqIters = 0)
     val dir = Files.createTempDirectory("graft-ivfpq-torn-").toString
     Similarity.ivfPqIndexSave(idx, dir)
-    idx.coarse.limit(0).write.mode("overwrite").parquet(s"$dir/coarse")
+    spark.read.parquet(s"$dir/coarse").limit(0).write.mode("overwrite")
+      .parquet(s"$dir/coarse2")
+    spark.read.parquet(s"$dir/coarse2").write.mode("overwrite").parquet(s"$dir/coarse")
     val e = intercept[IllegalArgumentException](Similarity.ivfPqIndexLoad(spark, dir))
     assert(e.getMessage.contains(s"$dir/coarse holds no centroids"), e.getMessage)
   }
@@ -1134,5 +1138,72 @@ class SimilarityIndexSpec extends SparkSpec {
       s"refused before the codebook collect, ran: ${jobs.mkString("; ")}")
     // the default cap admits it
     assert(Similarity.ivfPqIndexLoad(spark, dir).subDim == 16)
+  }
+
+  test("a save whose data write throws leaves no meta/ behind (IVF-PQ flat and clustered, sparse)") {
+    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val idx = Similarity.ivfPqIndexBuild(emb, "vec_id", "embedding",
+      nCentroids = 4, subspaces = 4, subDim = 16, pqK = 4, pqIters = 0)
+    val sparse = TextAnalysis.sparseIndexBuild(docs, "doc_id", "text")
+    // the injected failure sits in one data column, so only the data
+    // write evaluates it
+    def poisoned(df: org.apache.spark.sql.DataFrame, c: String) =
+      df.withColumn(c, when(col(c).isNotNull, raise_error(lit("injected write failure")))
+        .otherwise(col(c)))
+    val badIdx = idx.copy(codes = poisoned(idx.codes, "nrm"))
+    val badSparse = sparse.copy(postings = poisoned(sparse.postings, "weight"))
+    val saves: Seq[(String, String => Unit, String => Unit)] = Seq(
+      ("ivfPqIndexSave", Similarity.ivfPqIndexSave(idx, _),
+        Similarity.ivfPqIndexSave(badIdx, _)),
+      ("ivfPqIndexSaveClustered", Similarity.ivfPqIndexSaveClustered(idx, _),
+        Similarity.ivfPqIndexSaveClustered(badIdx, _)),
+      ("sparseIndexSave", TextAnalysis.sparseIndexSave(sparse, _),
+        TextAnalysis.sparseIndexSave(badSparse, _)))
+    def hasMeta(dir: String) = new java.io.File(s"$dir/meta").exists
+    for ((name, good, failing) <- saves) {
+      val fresh = Files.createTempDirectory("graft-save-fresh-").toString
+      intercept[Exception](failing(fresh))
+      assert(!hasMeta(fresh), s"$name into a fresh directory left a meta/")
+      val over = Files.createTempDirectory("graft-save-over-").toString
+      good(over)
+      assert(hasMeta(over), s"$name: a complete save writes meta/")
+      intercept[Exception](failing(over))
+      assert(!hasMeta(over), s"$name over a complete save left its old meta/")
+    }
+  }
+
+  test("ivfPqIndexLoad names the torn relation of a partial directory") {
+    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    val idx = Similarity.ivfPqIndexBuild(emb, "vec_id", "embedding",
+      nCentroids = 4, subspaces = 4, subDim = 16, pqK = 4, pqIters = 0)
+    def rm(f: java.io.File): Unit = {
+      Option(f.listFiles).foreach(_.foreach(rm))
+      f.delete()
+    }
+    def files(dir: String) =
+      Option(new java.io.File(dir).listFiles).toSeq.flatten.filter(_.isFile)
+    def cellDirs(dir: String) =
+      new java.io.File(s"$dir/codes").listFiles.filter(_.getName.startsWith("cell=")).toSeq
+    // (case, clustered save, how the directory is torn, the relation named)
+    val cases: Seq[(String, Boolean, String => Unit, String => String)] = Seq(
+      ("no codes/", false, d => rm(new java.io.File(s"$d/codes")), d => s"$d/codes is missing"),
+      ("no coarse/", false, d => rm(new java.io.File(s"$d/coarse")), d => s"$d/coarse is missing"),
+      ("no pq/", false, d => rm(new java.io.File(s"$d/pq")), d => s"$d/pq is missing"),
+      ("no meta/", false, d => rm(new java.io.File(s"$d/meta")), d => s"$d/meta is missing"),
+      ("flat codes/ without a parquet file", false, d => files(s"$d/codes").foreach(rm),
+        d => s"$d/codes holds no parquet file"),
+      ("cell= directories without a parquet file", true,
+        d => cellDirs(d).foreach(c => files(c.getPath).foreach(rm)),
+        d => s"$d/codes/cell="))
+    for ((name, clustered, tear, relation) <- cases) {
+      val dir = Files.createTempDirectory("graft-ivfpq-torn-").toString
+      if (clustered) Similarity.ivfPqIndexSaveClustered(idx, dir)
+      else Similarity.ivfPqIndexSave(idx, dir)
+      tear(dir)
+      val e = intercept[IllegalArgumentException](Similarity.ivfPqIndexLoad(spark, dir))
+      assert(e.getMessage.contains(relation(dir)) &&
+        e.getMessage.endsWith("a torn directory"), s"$name: ${e.getMessage}")
+    }
   }
 }
