@@ -23,6 +23,11 @@ import graft.functions.Rounding.zround
   *     `rerank` heap per query), and [[exactRerank]] is the one exact
   *     cosine tail. The cell-pruned serves share [[probedCells]] and
   *     [[rerankVectors]] (a stored `vec` payload or the corpus);
+  *   - IVF-PQ and binary search each have ONE path: the inline verbs
+  *     ([[ivfPqTopK]], [[ivfPqResidualTopK]], [[binaryRerankTopK]])
+  *     build an index and search it. Every IVF-PQ search and the
+  *     operating-point planner share one query side ([[ivfPqProbes]]),
+  *     and a build and an add share one encode pass ([[encodeCodes]]);
   *   - all-pairs near-dup is LSH-bucketed, not a cross join. Two
   *     generators share one exact verification tail: [[nearDupPairs]]
   *     (single table + 1-bit multi-probe, explicit-knob; its planes cap
@@ -928,17 +933,16 @@ object Similarity {
     * break by neighbor_id ascending in the bounded heap — rank-
     * deterministic cross-engine. Stage 2 owns the zero-norm policy
     * exactly as [[quantizedRerankTopK]] (both sides norm-positive).
+    *
+    * The one-shot form of the pack-once/serve-many split: it is
+    * [[binarySearch]] over a fresh [[binaryIndexBuild]], so the inline
+    * and persisted paths are one code path.
     */
   def binaryRerankTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
                        vecCol: String, dim: Int, k: Int,
-                       rerank: Int = 20): DataFrame = {
-    require(k >= 1 && rerank >= k, s"need rerank >= k >= 1, got k=$k rerank=$rerank")
-    binaryStages(
-      corpus.filter(size(col(vecCol)) === dim)
-        .select(col(idCol).as("neighbor_id"),
-          signPack(col(vecCol), dim).as("__cw")),
-      corpus, queries, idCol, vecCol, dim, k, rerank)
-  }
+                       rerank: Int = 20): DataFrame =
+    binarySearch(binaryIndexBuild(corpus, idCol, vecCol, dim), corpus, queries,
+      idCol, vecCol, k, rerank)
 
   /** Hamming distance of two [[signPack]] word arrays of `dim`-wide
     * vectors: Σ `bit_count(xor)` per word. The binary stage-1 score is
@@ -949,24 +953,6 @@ object Similarity {
       .map(i => bit_count(element_at(a, i + 1).bitwiseXOR(element_at(b, i + 1)))
         .cast("long"))
       .reduce(_ + _)
-
-  /** The binary two-stage body: `packedCorpus` is the stage-1 side as
-    * `(neighbor_id, __cw)` sign words — packed inline by
-    * [[binaryRerankTopK]], read from a persisted [[BinaryIndex]] by
-    * [[binarySearch]].
-    */
-  private def binaryStages(packedCorpus: DataFrame, corpus: DataFrame,
-                           queries: DataFrame, idCol: String, vecCol: String,
-                           dim: Int, k: Int, rerank: Int): DataFrame = {
-    val qWords = queries.filter(size(col(vecCol)) === dim)
-      .select(col(idCol).as("query_id"), signPack(col(vecCol), dim).as("__qw"))
-    exactRerank(
-      survivors(packedCorpus.crossJoin(broadcast(qWords)),
-        (lit(dim.toLong) - hamming(col("__cw"), col("__qw"), dim)).cast("double"),
-        rerank),
-      normed(corpus, idCol, vecCol, "neighbor_id", "__cv", "__cn"),
-      queries, idCol, vecCol, k)
-  }
 
   /** A persisted binary (sign-bit) index: the packed words relation
     * `(id, words)` — 8 bytes per 64 dims — plus the one scalar a loader
@@ -1047,18 +1033,27 @@ object Similarity {
   }
 
   /** Serve binary two-stage retrieval from a PERSISTED index — stage 1
-    * reads the packed words relation (1/32 of the float bytes), stage 2
-    * exact-reranks against the float corpus. Same parameters → results
-    * bit-identical to the inline [[binaryRerankTopK]] (one shared tail,
-    * spec-pinned, and the graded query reuses q270's oracle verbatim).
+    * reads the packed words relation (1/32 of the float bytes) and ranks
+    * every (query, candidate) pair by sign agreement against the
+    * `dim`-wide queries' words; stage 2 exact-reranks against the float
+    * corpus. The inline [[binaryRerankTopK]] is this verb over a fresh
+    * build, so the graded query reuses q270's oracle verbatim.
     */
   def binarySearch(index: BinaryIndex, corpus: DataFrame, queries: DataFrame,
                    idCol: String, vecCol: String, k: Int,
                    rerank: Int = 20): DataFrame = {
     require(k >= 1 && rerank >= k, s"need rerank >= k >= 1, got k=$k rerank=$rerank")
-    binaryStages(
-      index.words.select(col("id").as("neighbor_id"), col("words").as("__cw")),
-      corpus, queries, idCol, vecCol, index.dim, k, rerank)
+    val dim = index.dim
+    val qWords = queries.filter(size(col(vecCol)) === dim)
+      .select(col(idCol).as("query_id"), signPack(col(vecCol), dim).as("__qw"))
+    exactRerank(
+      survivors(
+        index.words.select(col("id").as("neighbor_id"), col("words").as("__cw"))
+          .crossJoin(broadcast(qWords)),
+        (lit(dim.toLong) - hamming(col("__cw"), col("__qw"), dim)).cast("double"),
+        rerank),
+      normed(corpus, idCol, vecCol, "neighbor_id", "__cv", "__cn"),
+      queries, idCol, vecCol, k)
   }
 
   /** CELL-PRUNED binary serving — FAISS's IVF-with-binary-refinement
@@ -1597,23 +1592,10 @@ object Similarity {
     val bf = bruteForceTopK(corpus, qs, idCol, vecCol, k)
       .select(col("query_id"), col("neighbor_id"))
       .localCheckpoint()
-    val (codebook, cents, subspaces) = (index.coarse, index.pq, index.pq.length)
-    val pMax = nProbes.max
-    // query side ONCE at pMax: the ADC lookup table ([[adcTable]]) +
-    // posexploded probe cells with their best-first rank — exactly
-    // ivfPqRank's probe shape plus the rank column the prefix filters read
-    val probes0 = normed(qs, idCol, vecCol, "query_id", "__qv", "__qn")
-      .withColumn("__adc", adcTable(col("__qv"), cents, index.subDim, index.pqK))
-      .select(col("query_id"), col("__qv"), col("__adc"),
-        posexplode(nearestCells(codebook, col("__qv"), pMax))
-          .as(Seq("__pos", "cell")))
-      .select(col("query_id"), col("__qv"), col("__adc"), col("cell"),
-        (col("__pos") + 1).as("__prn"))
-    val probes =
-      if (index.residual)
-        probes0.withColumn("__base",
-          dot(col("__qv"), element_at(typedlit(codebook.toMap), col("cell"))))
-      else probes0
+    val subspaces = index.pq.length
+    // query side ONCE at the widest probe count: the search's
+    // [[ivfPqProbes]], whose `__prn` rank the prefix filters read
+    val probes = ivfPqProbes(index, qs, idCol, vecCol, nProbes.max)
     val coded = codedSide(index.codes, subspaces)
     // read once, by the grid's one stage-1 aggregation ([[gridHits]])
     val cand = coded.join(broadcast(probes), "cell")
@@ -1638,7 +1620,7 @@ object Similarity {
           (lit(k.toLong) * col("__nq")).cast("double"), 6))
       .withColumn("est_cost", round(
         col("n_probe").cast("double") * lit(subspaces.toDouble) *
-          col("__ncodes").cast("double") / lit(codebook.length.toDouble) +
+          col("__ncodes").cast("double") / lit(index.coarse.length.toDouble) +
           col("rerank").cast("double") * lit(subspaces.toDouble) *
             lit(index.subDim.toDouble), 6))
       .withColumn("chosen", row_number().over(w) === 1)
@@ -1907,7 +1889,8 @@ object Similarity {
     */
   def pqCodes(df: DataFrame, idCol: String, vecCol: String,
               subspaces: Int, subDim: Int, k: Int = 4, iters: Int = 2): DataFrame = {
-    pqGeometryCheck(df, vecCol, subspaces, subDim, k, iters)
+    pqArgsCheck(subspaces, subDim, k, iters)
+    probeWidth(df, vecCol).foreach(pqWidthCheck(subspaces, subDim, _))
     val slices = pqSlices(df, idCol, vecCol, subspaces, subDim)
     if (iters > 0) slices.persist()
     val centroids = pqTrainOn(slices, subspaces, k, iters)
@@ -1925,23 +1908,13 @@ object Similarity {
   }
 
   /** The PQ codebooks alone — `centroids(subspace)(cluster)(dim)`, the
-    * [[pqCodes]] training loop without the code pivot; [[ivfPqTopK]]
-    * folds these back as LITERAL lookup tables.
-    */
-  def pqTrain(df: DataFrame, idCol: String, vecCol: String,
-              subspaces: Int, subDim: Int, k: Int = 4,
-              iters: Int = 2): Array[Array[Array[Double]]] =
-    pqTrain(df, idCol, vecCol, subspaces, subDim, k, iters, knownDim = None)
-
-  /** [[pqTrain]] with the vector width already known to the caller (e.g.
-    * from a collected coarse codebook) — the geometry check then runs on
-    * the driver instead of spending a limit(1) probe job on the corpus.
+    * [[pqCodes]] training loop without the code pivot; [[ivfPqIndexBuild]]
+    * folds these back as LITERAL lookup tables and has checked the
+    * geometry against the coarse codebook's width, on the driver.
     */
   private def pqTrain(df: DataFrame, idCol: String, vecCol: String,
                       subspaces: Int, subDim: Int, k: Int,
-                      iters: Int,
-                      knownDim: Option[Int]): Array[Array[Array[Double]]] = {
-    pqGeometryCheck(df, vecCol, subspaces, subDim, k, iters, knownDim)
+                      iters: Int): Array[Array[Array[Double]]] = {
     val slices = pqSlices(df, idCol, vecCol, subspaces, subDim)
     if (iters > 0) slices.persist()
     val centroids = pqTrainOn(slices, subspaces, k, iters)
@@ -1949,29 +1922,30 @@ object Similarity {
     centroids
   }
 
-  private def pqGeometryCheck(df: DataFrame, vecCol: String, subspaces: Int,
-                              subDim: Int, k: Int, iters: Int,
-                              knownDim: Option[Int] = None): Unit = {
+  /** PQ arguments out of range fail here, before any job runs. */
+  private def pqArgsCheck(subspaces: Int, subDim: Int, k: Int, iters: Int): Unit = {
     require(subspaces >= 1 && subspaces <= 64,
       s"subspaces out of [1,64]: $subspaces")
     require(subDim >= 1, s"subDim must be positive: $subDim")
     require(k >= 1 && iters >= 0, s"need k >= 1, iters >= 0, got k=$k iters=$iters")
-    // fail fast on a geometry mismatch: an out-of-range slice returns
-    // EMPTY arrays and every code silently collapses to cluster 0. When
-    // the caller already knows the width (a collected codebook), the
-    // check is free; otherwise one bounded limit(1) probe
-    knownDim match {
-      case Some(d) =>
-        require(subspaces * subDim <= d,
-          s"subspaces*subDim = ${subspaces * subDim} exceeds vector length $d")
-      case None =>
-        df.select(size(col(vecCol)).as("__d")).limit(1).collect().headOption
-          .foreach { r =>
-            require(subspaces * subDim <= r.getInt(0),
-              s"subspaces*subDim = ${subspaces * subDim} exceeds vector length ${r.getInt(0)}")
-          }
-    }
   }
+
+  /** Fail fast on a geometry mismatch: an out-of-range slice returns
+    * EMPTY arrays and every code silently collapses to cluster 0. `dim`
+    * is a collected codebook's width (free) or a [[probeWidth]] (one job).
+    */
+  private def pqWidthCheck(subspaces: Int, subDim: Int, dim: Int): Unit =
+    require(subspaces * subDim <= dim,
+      s"subspaces*subDim = ${subspaces * subDim} exceeds vector length $dim")
+
+  /** The width of one non-null vector of `df` — one bounded limit(1)
+    * probe job; None when `df` holds no non-null vector. Null vectors are
+    * skipped: `size(null)` is NULL under ANSI, and every encode and
+    * training pass drops them anyway.
+    */
+  private def probeWidth(df: DataFrame, vecCol: String): Option[Int] =
+    df.filter(col(vecCol).isNotNull).select(size(col(vecCol))).limit(1)
+      .collect().headOption.map(_.getInt(0))
 
   /** One (id, subspace, 9-dp slice) relation — kmeansLloyd's entry
     * rounding and validity rules applied PER SLICE, so a vector invalid
@@ -2094,61 +2068,28 @@ object Similarity {
     centroids
   }
 
-  /** `__code_0 … __code_{s−1}` PQ-code columns appended to `src` by
-    * coding the 9-dp slices of `vec` against literal codebooks — the
-    * per-row corpus encoding shared by the inline searches and the
-    * index build.
+  /** The IVF-PQ query side, shared by the search and the operating-point
+    * planner: per norm-positive query (the [[cosinePairs]] policy) the
+    * ADC lookup table `__adc[sp][c] = q_sp(9 dp) · centroid(sp, c)`
+    * ([[adcTable]]: one constant-size expression, evaluated once per
+    * QUERY and broadcast with the probes), then one row per probe cell
+    * `cell` of its `nProbe` best-first cells with their 1-based rank
+    * `__prn` (the planner's prefix filters read it; the search ignores
+    * it), and for a residual index the per-probe base term
+    * `__base = q · centroid(cell)`.
     */
-  private def withPqCodeCols(src: DataFrame, vec: Column,
-                             cents: Array[Array[Array[Double]]],
-                             subspaces: Int, subDim: Int): DataFrame =
-    (0 until subspaces).foldLeft(src) { (acc, sp) =>
-      acc.withColumn(s"__code_$sp",
-        pqCodeExpr(pqSliceExpr(vec, lit(sp), subDim), cents(sp)))
-    }
-
-  /** The shared IVF-PQ probe → ADC → survivor → rerank composition —
-    * ONE builder parameterized by the stage-1 base term, so the raw
-    * ([[ivfPqTopK]]), residual ([[ivfPqResidualTopK]]), and persisted-
-    * index ([[ivfPqSearch]]) entries are thin wrappers that can never
-    * drift apart (the round-11 duplication hazard).
-    *
-    *   - `coded`: `(neighbor_id, cell, __cn, __code_0…)` — the encoded
-    *     corpus (inline pass or persisted index relation);
-    *   - `rerankVecs`: `(neighbor_id, __cv, __cn)` — raw vectors for the
-    *     exact stage-2 cosine, zero-norm rows already dropped;
-    *   - `baseDot`: the per-probe `q · centroid(cell)` term residual
-    *     encoding adds to the ADC sum (None ⇒ raw encoding — the sum is
-    *     used as-is, bit-identical to the pre-split formulation).
-    *
-    * Stage 1 ranks by the 6-dp ADC score over the candidate norm (id
-    * ties), stage 2 exact-cosine-reranks the ≤ queries×rerank
-    * survivors; both rankings are bounded-heap partial top-k
-    * aggregates, every join broadcasts its bounded side, and zero-norm
-    * queries drop under the [[cosinePairs]] policy.
-    */
-  private def ivfPqRank(coded: DataFrame, rerankVecs: DataFrame,
-                        queries: DataFrame, idCol: String, vecCol: String,
-                        codebook: Array[(Long, Seq[Double])],
-                        cents: Array[Array[Array[Double]]],
-                        baseDot: Option[Column], k: Int, nProbe: Int,
-                        subspaces: Int, subDim: Int, pqK: Int,
-                        rerank: Int, withScore: Boolean = false): DataFrame = {
-    require(k >= 1 && rerank >= k, s"need rerank >= k >= 1, got k=$k rerank=$rerank")
-    // query side: nProbe probe cells + the ADC lookup table
-    // `__adc[sp][c] = q_sp(9 dp) · centroid(sp, c)` ([[adcTable]]: one
-    // constant-size expression, evaluated once per QUERY and broadcast
-    // with the probes)
-    val probes0 = normed(queries, idCol, vecCol, "query_id", "__qv", "__qn")
-      .withColumn("__adc", adcTable(col("__qv"), cents, subDim, pqK))
-      .withColumn("cell", explode(nearestCells(codebook, col("__qv"), nProbe)))
-    val probes = baseDot.fold(probes0)(b => probes0.withColumn("__base", b))
-    // stage 1: probed candidates ranked by the 6-dp ADC score
-    // ([[adcScore]]); stage 2: exact cosine rerank of the survivors
-    exactRerank(
-      survivors(coded.join(broadcast(probes), "cell"),
-        adcScore(subspaces, baseDot.isDefined), rerank),
-      rerankVecs, queries, idCol, vecCol, k, withScore)
+  private def ivfPqProbes(index: IvfPqIndex, queries: DataFrame, idCol: String,
+                          vecCol: String, nProbe: Int): DataFrame = {
+    val probes = normed(queries, idCol, vecCol, "query_id", "__qv", "__qn")
+      .withColumn("__adc", adcTable(col("__qv"), index.pq, index.subDim, index.pqK))
+      .select(col("query_id"), col("__qv"), col("__adc"),
+        posexplode(nearestCells(index.coarse, col("__qv"), nProbe))
+          .as(Seq("__pos", "cell")))
+      .withColumn("__prn", col("__pos") + 1)
+    if (index.residual)
+      probes.withColumn("__base",
+        dot(col("__qv"), element_at(typedlit(index.coarse.toMap), col("cell"))))
+    else probes
   }
 
   /** The 6-dp stage-1 ADC score of a probed `(query, candidate)` pair:
@@ -2167,8 +2108,8 @@ object Similarity {
     round((if (residual) col("__base") + adcSum else adcSum) / col("__cn"), 6)
   }
 
-  /** A persisted codes relation as [[ivfPqRank]]'s stage-1 side
-    * `(neighbor_id, cell, __cn, __code_0…)`.
+  /** An index's codes relation as the stage-1 side
+    * `(neighbor_id, cell, __cn, __code_0…)` of the search and the planner.
     */
   private def codedSide(codes: DataFrame, subspaces: Int): DataFrame =
     codes.select(
@@ -2177,29 +2118,20 @@ object Similarity {
 
   /** IVF-PQ ANN search — the production 100 TB retrieval pattern
     * composed from this file's parts: IVF coarse cells ([[ivfTopK]]'s
-    * quantizer) prune the corpus, PQ codes ([[pqTrain]]) rank the
-    * surviving candidates by ASYMMETRIC DISTANCE (a per-query lookup
-    * table of query-slice × PQ-centroid dots — the candidate's
+    * quantizer) prune the corpus, PQ codes ([[pqCodes]]' training loop)
+    * rank the surviving candidates by ASYMMETRIC DISTANCE (a per-query
+    * lookup table of query-slice × PQ-centroid dots — the candidate's
     * contribution is `subspaces` table lookups, never a `d`-wide dot),
     * and only the top `rerank` per query pay the exact float cosine.
     * Output `(query_id, neighbor_id, rn)` — rn 1-based best-first,
     * rank-deterministic at both stages (6-dp approx score + id, then
     * raw cosine + id, the [[quantizedRerankTopK]] contract).
     *
-    * 100 TB shape: the corpus NEVER shuffles — cell assignment and the
-    * `subspaces` PQ codes are per-row expressions over LITERAL codebooks
-    * (cells: nCentroids dots; codes: subspaces·pqK dots of subDim — the
-    * same FLOPs as one full-width dot per pqK); the probe join
-    * broadcasts the exploded query side; both rankings are bounded-heap
-    * partial top-k aggregates (stage 1's exchange carries
-    * queries×partitions×rerank heap entries, never the candidate set);
-    * the rerank joins broadcast the queries×rerank survivor list
-    * against the partitioned corpus. Training is [[pqTrain]]'s fused
-    * loop — `iters` bounded codebook collects total, paid on EVERY call
-    * here: this inline entry is the one-shot/exploratory form. The
-    * production lifecycle is the [[ivfPqIndexBuild]]/[[ivfPqSearch]]
-    * split, which persists the codes + codebooks as relations and
-    * searches them retrain-free (bit-identical results).
+    * The one-shot form of the build/search split: it is [[ivfPqSearch]]
+    * over a fresh [[ivfPqIndexBuild]], so it pays the build's `pqIters`
+    * bounded codebook collects on EVERY call. The production lifecycle
+    * builds once, saves, and searches the index retrain-free. 100 TB
+    * shape: the build's and the search's.
     */
   def ivfPqTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
                 vecCol: String, k: Int, nCentroids: Int = 16, nProbe: Int = 4,
@@ -2207,15 +2139,8 @@ object Similarity {
                 pqIters: Int = 2, rerank: Int = 20): DataFrame = {
     // fail argument errors BEFORE the pqIters training barriers run
     require(k >= 1 && rerank >= k, s"need rerank >= k >= 1, got k=$k rerank=$rerank")
-    val cents = pqTrain(corpus, idCol, vecCol, subspaces, subDim, pqK, pqIters)
-    val codebook = collectCodebook(corpus, idCol, vecCol, nCentroids)
-    require(codebook.nonEmpty, "codebook must be non-empty")
-    // corpus side: ONE narrow pass computes the coarse cell and the
-    // subspaces PQ codes per row — nothing precomputed, nothing joined
-    val cells = ivfCells(corpus, idCol, vecCol, codebook)
-    val coded = withPqCodeCols(cells, col("__cv"), cents, subspaces, subDim)
-    ivfPqRank(coded, cells, queries, idCol, vecCol, codebook, cents,
-      baseDot = None, k, nProbe, subspaces, subDim, pqK, rerank)
+    ivfPqSearch(ivfPqIndexBuild(corpus, idCol, vecCol, nCentroids, subspaces,
+      subDim, pqK, pqIters), corpus, queries, idCol, vecCol, k, nProbe, rerank)
   }
 
   /** IVF-PQ with RESIDUAL encoding — the full FAISS-style recipe:
@@ -2226,14 +2151,9 @@ object Similarity {
     * BASE dot plus the same `subspaces` ADC lookups, still divided by
     * the candidate norm for cosine consistency with the exact rerank.
     * Same output and determinism contract as [[ivfPqTopK]] (6-dp
-    * stage-1 score + id ties, raw cosine + id at stage 2).
-    *
-    * 100 TB shape identical to [[ivfPqTopK]] plus one narrow zip_with
-    * per corpus row (the residual) and one map-literal lookup per
-    * probed (query, cell) pair for the base term; PQ training is the
-    * same fused loop, over the residual relation. The probe/ADC/
-    * survivor/rerank stages ARE [[ivfPqRank]] — shared with the raw
-    * and persisted-index entries, parameterized only by the base term.
+    * stage-1 score + id ties, raw cosine + id at stage 2), and the same
+    * one-shot form: [[ivfPqSearch]] over a fresh residual
+    * [[ivfPqIndexBuild]].
     */
   def ivfPqResidualTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
                         vecCol: String, k: Int, nCentroids: Int = 16,
@@ -2242,24 +2162,9 @@ object Similarity {
                         rerank: Int = 20): DataFrame = {
     // fail argument errors BEFORE the pqIters training barriers run
     require(k >= 1 && rerank >= k, s"need rerank >= k >= 1, got k=$k rerank=$rerank")
-    val codebook = collectCodebook(corpus, idCol, vecCol, nCentroids)
-    require(codebook.nonEmpty, "codebook must be non-empty")
-    val centMap = typedlit(codebook.toMap)
-    // corpus: ONE narrow pass — cell, residual, norm; PQ trains on the
-    // residual relation (same fused loop)
-    val cells = ivfCells(corpus, idCol, vecCol, codebook)
-    val withRes = cells.withColumn("__r",
-      zip_with(col("__cv"), element_at(centMap, col("cell")), (x, c) => x - c))
-    val cents = pqTrain(withRes.select(col("neighbor_id"), col("__r")),
-      "neighbor_id", "__r", subspaces, subDim, pqK, pqIters,
-      knownDim = Some(codebook.head._2.length))
-    val coded = withPqCodeCols(withRes, col("__r"), cents, subspaces, subDim)
-    // the residual stage-1 base: q · centroid(cell), one map-literal
-    // lookup per probed (query, cell) pair; the ADC table is the RAW-
-    // query 9-dp slices against the residual centroids
-    ivfPqRank(coded, cells, queries, idCol, vecCol, codebook, cents,
-      baseDot = Some(dot(col("__qv"), element_at(centMap, col("cell")))),
-      k, nProbe, subspaces, subDim, pqK, rerank)
+    ivfPqSearch(ivfPqIndexBuild(corpus, idCol, vecCol, nCentroids, subspaces,
+      subDim, pqK, pqIters, residual = true), corpus, queries, idCol, vecCol,
+      k, nProbe, rerank)
   }
 
   /** A persisted-form IVF-PQ index — the build/search split every
@@ -2523,14 +2428,15 @@ object Similarity {
   }
 
   /** Train and encode ONCE — the index half of the IVF-PQ split. One
-    * corpus pass encodes every vector (cell + PQ codes + norm, all
-    * per-row expressions over literal codebooks, nothing shuffles);
-    * training is [[pqTrain]]'s fused loop (`pqIters` bounded codebook
-    * collects, the LAST time they run for this corpus). The index holds
-    * the trained codebooks as they are; save it with [[ivfPqIndexSave]]
-    * and search with [[ivfPqSearch]] — results are
-    * bit-identical to the inline [[ivfPqTopK]]/[[ivfPqResidualTopK]]
-    * at the same parameters (spec-pinned, and q232's oracle IS q219's).
+    * corpus pass encodes every vector ([[encodeCodes]]: cell + PQ codes +
+    * norm, all per-row expressions over literal codebooks, nothing
+    * shuffles); training is [[pqTrain]]'s fused loop (`pqIters` bounded
+    * codebook collects, the LAST time they run for this corpus), over
+    * the [[residualVec]] relation when `residual`. The index holds the
+    * trained codebooks as they are; save it with [[ivfPqIndexSave]] and
+    * search with [[ivfPqSearch]] — the inline
+    * [[ivfPqTopK]]/[[ivfPqResidualTopK]] are exactly that composition
+    * (and q232's oracle IS q219's).
     * `storeVectors` keeps the raw vector as a `vec` payload column (the
     * [[ivfPqSearchStored]] corpus-free serve); `storeSignWords` packs
     * each row's sign bits as a `words` payload (8 B per 64 dims — the
@@ -2542,43 +2448,39 @@ object Similarity {
                       residual: Boolean = false,
                       storeVectors: Boolean = false,
                       storeSignWords: Boolean = false): IvfPqIndex = {
+    // fail argument errors BEFORE the codebook and training jobs run
+    pqArgsCheck(subspaces, subDim, pqK, pqIters)
     val codebook = collectCodebook(corpus, idCol, vecCol, nCentroids)
     require(codebook.nonEmpty, "codebook must be non-empty")
-    val dim = codebook.head._2.length
-    val cells = ivfCells(corpus, idCol, vecCol, codebook,
-      keepRaw = storeVectors)
-    val (codeSrc, codeVec, cents) =
-      if (residual) {
-        val centMap = typedlit(codebook.toMap)
-        val withRes = cells.withColumn("__r",
-          zip_with(col("__cv"), element_at(centMap, col("cell")), (x, c) => x - c))
-        (withRes, col("__r"),
-          pqTrain(withRes.select(col("neighbor_id"), col("__r")),
-            "neighbor_id", "__r", subspaces, subDim, pqK, pqIters,
-            knownDim = Some(dim)))
-      } else
-        (cells, col("__cv"),
-          pqTrain(corpus, idCol, vecCol, subspaces, subDim, pqK, pqIters,
-            knownDim = Some(dim)))
-    val codes = codesShape(
-      withPqCodeCols(codeSrc, codeVec, cents, subspaces, subDim), subspaces,
-      storeVectors,
-      if (storeSignWords) Some(dim) else None)
-    IvfPqIndex(codes, codebook.sortBy(_._1), cents, residual, subDim)
+    pqWidthCheck(subspaces, subDim, codebook.head._2.length)
+    val cents =
+      if (residual)
+        pqTrain(ivfCells(corpus, idCol, vecCol, codebook)
+          .select(col("neighbor_id"), residualVec(codebook).as("__r")),
+          "neighbor_id", "__r", subspaces, subDim, pqK, pqIters)
+      else pqTrain(corpus, idCol, vecCol, subspaces, subDim, pqK, pqIters)
+    IvfPqIndex(encodeCodes(corpus, idCol, vecCol, codebook, cents, residual,
+      subDim, storeVectors, storeSignWords), codebook.sortBy(_._1), cents,
+      residual, subDim)
   }
 
   /** Search a PERSISTED IVF-PQ index — retrain-free by construction:
-    * the index's codebooks go into the same literal-codebook expressions
-    * the inline operators use, and no Spark job runs before the search's
-    * own (reading an index is not training; no Lloyd barrier can occur
-    * because no training code is reachable from here). The corpus
-    * appears only for the stage-2 exact rerank vectors; stage 1 runs
-    * entirely on the index's `codes` relation. Same output and
-    * determinism contract as
-    * [[ivfPqTopK]] — same parameters, bit-identical results;
-    * `withScore = true` appends the exact rerank cosine as a 6-dp `cos`
-    * column (the [[graft.operators.Selection.fuseScoresMinMax]] input
-    * shape).
+    * the index's codebooks go into literal-codebook expressions, and no
+    * Spark job runs before the search's own (reading an index is not
+    * training; no Lloyd barrier can occur because no training code is
+    * reachable from here). The corpus appears only for the stage-2 exact
+    * rerank vectors; stage 1 runs entirely on the index's `codes`
+    * relation. Output and determinism contract as [[ivfPqTopK]], which
+    * is this verb over a fresh build; `withScore = true` appends the
+    * exact rerank cosine as a 6-dp `cos` column (the
+    * [[graft.operators.Selection.fuseScoresMinMax]] input shape).
+    *
+    * 100 TB shape: the corpus NEVER shuffles — the probe join
+    * broadcasts the exploded query side ([[ivfPqProbes]]); both rankings
+    * are bounded-heap partial top-k aggregates (stage 1's exchange
+    * carries queries×partitions×rerank heap entries, never the candidate
+    * set); the rerank joins broadcast the queries×rerank survivor list
+    * against the partitioned corpus.
     */
   def ivfPqSearch(index: IvfPqIndex, corpus: DataFrame, queries: DataFrame,
                   idCol: String, vecCol: String, k: Int, nProbe: Int = 4,
@@ -2645,23 +2547,24 @@ object Similarity {
       k, nProbe, rerank, withScore)
   }
 
-  /** The search all three IVF-PQ serving verbs share. Stage 2 reranks
-    * against [[rerankVectors]]: the `corpus` when given, else the index's
-    * own `vec` payload.
+  /** The search all three IVF-PQ serving verbs share: the
+    * [[ivfPqProbes]] query side joined to the index's codes on `cell`,
+    * stage 1 the 6-dp ADC score ([[adcScore]]) into [[survivors]], and
+    * stage 2 the exact cosine rerank against [[rerankVectors]] — the
+    * `corpus` when given, else the index's own `vec` payload.
     */
   private def ivfPqSearchWith(index: IvfPqIndex, corpus: Option[DataFrame],
                               queries: DataFrame, idCol: String, vecCol: String,
                               k: Int, nProbe: Int, rerank: Int,
                               withScore: Boolean = false): DataFrame = {
+    require(k >= 1 && rerank >= k, s"need rerank >= k >= 1, got k=$k rerank=$rerank")
     val subspaces = index.pq.length
-    val baseDot =
-      if (index.residual)
-        Some(dot(col("__qv"), element_at(typedlit(index.coarse.toMap), col("cell"))))
-      else None
-    ivfPqRank(codedSide(index.codes, subspaces),
+    exactRerank(
+      survivors(codedSide(index.codes, subspaces)
+          .join(broadcast(ivfPqProbes(index, queries, idCol, vecCol, nProbe)), "cell"),
+        adcScore(subspaces, index.residual), rerank),
       rerankVectors(index.codes, corpus, idCol, vecCol), queries, idCol,
-      vecCol, index.coarse, index.pq, baseDot, k, nProbe, subspaces,
-      index.subDim, index.pqK, rerank, withScore)
+      vecCol, k, withScore)
   }
 
   /** Stage-2 rerank vectors `(neighbor_id, __cv, __cn)`: the
@@ -2711,39 +2614,65 @@ object Similarity {
     */
   def ivfPqEncode(index: IvfPqIndex, batch: DataFrame, idCol: String,
                   vecCol: String): DataFrame = {
-    val (codebook, cents, subspaces) = (index.coarse, index.pq, index.pq.length)
     // fail fast on a geometry mismatch — the silent-poison class the
     // flag-free loader exists to kill: a batch narrower than the
     // index's vectors (embeddings from a different model) would slice
     // EMPTY PQ subspaces, collapsing every code to cluster 0, and dot
     // against mismatched coarse centroids — plausible-looking wrong
-    // neighbors forever after. One bounded limit(1) probe, the
-    // pqGeometryCheck convention.
+    // neighbors forever after. One bounded [[probeWidth]] job, the
+    // [[pqCodes]] convention.
     val dim = index.dim
-    batch.select(size(col(vecCol)).as("__d")).limit(1).collect().headOption
-      .foreach { r =>
-        require(r.getInt(0) == dim,
-          s"batch vectors are ${r.getInt(0)}-dim but the index holds $dim-dim " +
-            "vectors — refusing to encode a batch that would poison the codes")
-      }
+    probeWidth(batch, vecCol).foreach { d =>
+      require(d == dim,
+        s"batch vectors are $d-dim but the index holds $dim-dim " +
+          "vectors — refusing to encode a batch that would poison the codes")
+    }
     // a stored-vector index ([[ivfPqIndexBuild]] storeVectors=true)
     // encodes its deltas WITH the vector payload, so add/union keeps one
     // codes schema (a vec-less delta would refuse loudly at union) —
     // and a sign-words index ([[ivfPqIndexBuild]] storeSignWords=true)
     // likewise packs its deltas' words
-    val stored = index.codes.columns.contains("vec")
-    val words = index.codes.columns.contains("words")
-    val cells = ivfCells(batch, idCol, vecCol, codebook, keepRaw = stored)
-    val (codeSrc, codeVec) =
-      if (index.residual) {
-        val centMap = typedlit(codebook.toMap)
-        (cells.withColumn("__r",
-          zip_with(col("__cv"), element_at(centMap, col("cell")), (x, c) => x - c)),
-          col("__r"))
-      } else (cells, col("__cv"))
-    codesShape(withPqCodeCols(codeSrc, codeVec, cents, subspaces, index.subDim),
-      subspaces, stored, if (words) Some(dim) else None)
+    encodeCodes(batch, idCol, vecCol, index.coarse, index.pq, index.residual,
+      index.subDim, storeVectors = index.codes.columns.contains("vec"),
+      storeSignWords = index.codes.columns.contains("words"))
   }
+
+  /** The one IVF-PQ encode pass, shared by [[ivfPqIndexBuild]] and
+    * [[ivfPqEncode]]: per norm-positive row of `df` ([[ivfCells]]) its
+    * coarse cell, its norm and `pq.length` PQ codes of its 9-dp slices —
+    * of the raw vector, or of its [[residualVec]] when `residual` — all
+    * per-row expressions over literal codebooks (cells: nCentroids dots;
+    * codes: subspaces·pqK dots of subDim), as the codes relation
+    * `(id, cell, nrm, code_0 …)` plus the optional `vec` payload and the
+    * `words` sign words. Sign words pack the RAW vector (not the
+    * residual): binary refinement ranks raw sign agreement
+    * ([[binarySearchCells]]).
+    */
+  private def encodeCodes(df: DataFrame, idCol: String, vecCol: String,
+                          coarse: Array[(Long, Seq[Double])],
+                          pq: Array[Array[Array[Double]]], residual: Boolean,
+                          subDim: Int, storeVectors: Boolean,
+                          storeSignWords: Boolean): DataFrame = {
+    val cells = ivfCells(df, idCol, vecCol, coarse, keepRaw = storeVectors)
+    val src = if (residual) cells.withColumn("__r", residualVec(coarse)) else cells
+    val vec = col(if (residual) "__r" else "__cv")
+    src.select(
+      col("neighbor_id").as("id") +: col("cell") +: col("__cn").as("nrm") +:
+        (pq.indices.map(sp =>
+          pqCodeExpr(pqSliceExpr(vec, lit(sp), subDim), pq(sp)).as(s"code_$sp")) ++
+          (if (storeVectors) Seq(col("__raw").as("vec")) else Nil) ++
+          (if (storeSignWords)
+            Seq(signPack(col("__cv"), coarse.head._2.length).as("words"))
+          else Nil)): _*)
+  }
+
+  /** A row's residual `__cv − centroid(cell)` against its coarse cell
+    * (over an [[ivfCells]] relation) — the space a residual index's PQ
+    * codebooks train, code and report in.
+    */
+  private def residualVec(coarse: Array[(Long, Seq[Double])]): Column =
+    zip_with(col("__cv"), element_at(typedlit(coarse.toMap), col("cell")),
+      (x, c) => x - c)
 
   /** Grow a persisted index WITHOUT retraining: [[ivfPqEncode]] the new
     * batch against the frozen codebooks and union it into the codes
@@ -2786,11 +2715,7 @@ object Similarity {
                       vecCol: String): DataFrame = {
     val (codebook, cents, subspaces) = (index.coarse, index.pq, index.pq.length)
     val cells = ivfCells(corpus, idCol, vecCol, codebook)
-    val vec =
-      if (index.residual)
-        zip_with(col("__cv"),
-          element_at(typedlit(codebook.toMap), col("cell")), (x, c) => x - c)
-      else col("__cv")
+    val vec = if (index.residual) residualVec(codebook) else col("__cv")
     val errCols = (0 until subspaces).map { sp =>
       val slice9 = pqSliceExpr(vec, lit(sp), index.subDim)
       val code = pqCodeExpr(slice9, cents(sp))
@@ -2825,20 +2750,6 @@ object Similarity {
     index.copy(codes = index.codes.join(
       ids.select(col(idCol).cast("long").as("id")).distinct(),
       Seq("id"), "left_anti"))
-
-  /** The codes-relation projection `(id, cell, nrm, code_0 …)` shared by
-    * the build and encode passes.
-    */
-  private def codesShape(coded: DataFrame, subspaces: Int,
-                         storeVectors: Boolean = false,
-                         signWordsDim: Option[Int] = None): DataFrame =
-    coded.select(
-      col("neighbor_id").as("id") +: col("cell") +: col("__cn").as("nrm") +:
-        ((0 until subspaces).map(sp => col(s"__code_$sp").as(s"code_$sp")) ++
-          (if (storeVectors) Seq(col("__raw").as("vec")) else Nil) ++
-          // sign words pack the RAW vector (not the residual): binary
-          // refinement ranks raw sign agreement ([[binarySearchCells]])
-          signWordsDim.map(d => signPack(col("__cv"), d).as("words")).toSeq): _*)
 
   /** IVF cell-occupancy HEALTH report — "is the coarse quantizer still
     * balanced on what the index now holds": one row per coarse cell,

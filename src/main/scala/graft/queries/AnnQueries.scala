@@ -242,9 +242,9 @@ private[graft] object AnnQueries {
         .orderBy("query_id", "rn")
     }, Oracle.Sql(
       // Persisted-index IVF-PQ search: ivfPqSearch over ivfPqIndexBuild is
-      // bit-identical to the inline ivfPqTopK at the same parameters (the
-      // shared ivfPqRank composition; spec-pinned), so the lifecycle query
-      // grades against the SAME SQL.
+      // what the inline ivfPqTopK runs at the same parameters (one search
+      // path; spec-pinned), so the lifecycle query grades against the
+      // SAME SQL.
       ivfPqRawOracleSql)),
 
     // ── recall of the composed IVF-PQ stack vs exact brute force — the
@@ -264,8 +264,9 @@ private[graft] object AnnQueries {
       ivfPqRecallOracleSql)),
 
     // ── the residual stack's index lifecycle: build with residual
-    // encoding, search retrain-free — bit-identical to q231 (the shared
-    // ivfPqRank composition), graded against the same oracle.
+    // encoding, search retrain-free — bit-identical to q231 (the inline
+    // residual verb is this build-then-search), graded against the same
+    // oracle.
     Query("q236_ivf_pq_residual_index", (s, dir) => {
       val emb = t(s, dir, "embeddings")
       val idx = Similarity.ivfPqIndexBuild(emb, "vec_id", "embedding",
@@ -276,8 +277,9 @@ private[graft] object AnnQueries {
         .orderBy("query_id", "rn")
     }, Oracle.Sql(
       // Persisted-index residual search: bit-identical to the inline q231
-      // (the shared ivfPqRank composition), so it grades against the same
-      // SQL — the q232/q219 relationship for the residual stack.
+      // (ivfPqResidualTopK is this build-then-search), so it grades
+      // against the same SQL — the q232/q219 relationship for the
+      // residual stack.
       ivfPqResidualOracleSql)),
 
     // ── the residual stack's recall twin: q231's ANN relation through
@@ -655,7 +657,7 @@ private[graft] object AnnQueries {
       ivfPqRawOracleSql)),
 
     // ── binary index lifecycle: pack once (binaryIndexBuild), serve via
-    // binarySearch — one shared two-stage tail with q270, so the
+    // binarySearch — the very path q270's binaryRerankTopK runs, so the
     // lifecycle query grades against the SAME SQL (the q232/q272 parity
     // convention). The persisted words relation is the 1/32-bytes
     // stage-1 scan; the float corpus appears only for the exact rerank.
@@ -667,8 +669,8 @@ private[graft] object AnnQueries {
         "vec_id", "embedding", k = 5, rerank = 20)
         .orderBy("query_id", "rn")
     }, Oracle.Sql(
-      // Binary index lifecycle: one shared two-stage tail with the inline
-      // q270 (spec-pinned), so it grades against the same SQL.
+      // Binary index lifecycle: the inline q270 is this build-then-search
+      // (spec-pinned), so it grades against the same SQL.
       "WITH " + binaryRerankCtes(rerank = 20) +
         "\nSELECT query_id, neighbor_id, rn FROM r WHERE rn <= 5" +
         "\nORDER BY query_id, rn")),

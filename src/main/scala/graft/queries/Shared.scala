@@ -370,8 +370,8 @@ private[graft] object Shared {
     * q207 composition) + per-query ADC tables, stage-1 rank on the 6-dp
     * ADC sum over the candidate norm (id ties), exact-cosine rerank of
     * the top 20. SHARED verbatim by q219 (top-k rows), q232 (the
-    * persisted-index search — [[graft.operators.Similarity.ivfPqSearch]]
-    * is bit-identical to the inline operator BY CONSTRUCTION, so the
+    * persisted-index search — the inline operator IS
+    * [[graft.operators.Similarity.ivfPqSearch]] over a fresh build, so the
     * lifecycle query grades against the same SQL), and q234 (recall
     * join against a brute-force CTE). Every CTE is MATERIALIZED: the
     * chains are referenced by training, ADC, AND the code pivot, and

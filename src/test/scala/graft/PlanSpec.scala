@@ -1657,7 +1657,16 @@ class PlanSpec extends SparkSpec {
       "quantizedRerankTopK" -> census(Similarity.quantizedRerankTopK(emb, qs,
         "vec_id", "embedding", k = 5)),
       "matryoshkaTopK" -> census(Similarity.matryoshkaTopK(emb, qs,
-        "vec_id", "embedding", k = 5, prefixDim = 16)))
+        "vec_id", "embedding", k = 5, prefixDim = 16)),
+      "ivfPqTopK" -> census(Similarity.ivfPqTopK(emb, qs, "vec_id", "embedding",
+        k = 5)),
+      "ivfPqResidualTopK" -> census(Similarity.ivfPqResidualTopK(emb, qs,
+        "vec_id", "embedding", k = 5)),
+      "binaryRerankTopK" -> census(Similarity.binaryRerankTopK(emb, qs,
+        "vec_id", "embedding", dim = 64, k = 5)),
+      "binarySearch" -> census(Similarity.binarySearch(
+        Similarity.binaryIndexBuild(emb, "vec_id", "embedding", dim = 64), emb, qs,
+        "vec_id", "embedding", k = 5)))
     // stage 1 broadcasts the query side, stage 2 the survivors and the
     // query vectors; each topK heap is partial + final around one
     // shuffle. The hybrid adds the sparse arm and the fusion full-join
@@ -1669,6 +1678,10 @@ class PlanSpec extends SparkSpec {
       "binarySearchCells/payload" -> twoStage,
       "binarySearchCells/corpus" -> twoStage,
       "quantizedRerankTopK" -> twoStage,
-      "matryoshkaTopK" -> twoStage))
+      "matryoshkaTopK" -> twoStage,
+      "ivfPqTopK" -> twoStage,
+      "ivfPqResidualTopK" -> twoStage,
+      "binaryRerankTopK" -> twoStage,
+      "binarySearch" -> twoStage))
   }
 }

@@ -1077,6 +1077,24 @@ class SimilarityIndexSpec extends SparkSpec {
     assert(dotsIn(s4) < 4 * 4, "the ADC table is not spelled out per code")
   }
 
+  test("a batch that leads with a null vector encodes exactly the batch without it") {
+    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+      .select($"vec_id", $"embedding")
+    val batch = emb.filter($"vec_id" % 10 === 0)
+    // one partition with the null row first: the row a width probe reads
+    val led = Seq((-1L, null: Array[Float])).toDF("vec_id", "embedding")
+      .union(batch).coalesce(1)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
+    val idx = Similarity.ivfPqIndexBuild(emb, "vec_id", "embedding",
+      nCentroids = 8, subspaces = 4, subDim = 16, pqK = 4, pqIters = 1)
+    assert(rows(Similarity.ivfPqIndexAdd(idx, led, "vec_id", "embedding").codes) ==
+      rows(Similarity.ivfPqIndexAdd(idx, batch, "vec_id", "embedding").codes))
+    assert(rows(Similarity.pqCodes(led, "vec_id", "embedding", subspaces = 4,
+      subDim = 16, k = 4, iters = 1)) ==
+      rows(Similarity.pqCodes(batch, "vec_id", "embedding", subspaces = 4,
+        subDim = 16, k = 4, iters = 1)))
+  }
+
   test("IvfPqIndex holds its codebooks: a copy ranks with the codebooks it carries, no search collects") {
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
     val qs = emb.filter($"vec_id" % 20 === 0)

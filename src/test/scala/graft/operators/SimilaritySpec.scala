@@ -879,6 +879,27 @@ class SimilaritySpec extends SparkSpec {
     assert(out.forall(_._2 != 0L))
   }
 
+  test("bad ANN arguments fail before any Spark job runs") {
+    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    val calls = Seq[(String, String, () => Any)](
+      ("ivfPqTopK", "rerank >= k", () => Similarity.ivfPqTopK(emb, emb,
+        "vec_id", "embedding", k = 5, rerank = 4)),
+      ("ivfPqResidualTopK", "rerank >= k", () => Similarity.ivfPqResidualTopK(
+        emb, emb, "vec_id", "embedding", k = 5, rerank = 4)),
+      ("binaryRerankTopK", "rerank >= k", () => Similarity.binaryRerankTopK(emb,
+        emb, "vec_id", "embedding", dim = 64, k = 5, rerank = 4)),
+      ("ivfPqIndexBuild", "subspaces out of", () => Similarity.ivfPqIndexBuild(
+        emb, "vec_id", "embedding", subspaces = 0)))
+    for ((name, want, call) <- calls) {
+      var msg = ""
+      val jobs = jobsRunBy {
+        msg = intercept[IllegalArgumentException](call()).getMessage
+      }
+      assert(msg.contains(want), s"$name: $msg")
+      assert(jobs.isEmpty, s"$name ran ${jobs.mkString("; ")}")
+    }
+  }
+
   test("lshTopKAuto equals explicit lshTopK at the planesFor-derived sizing") {
     val df = Seq.tabulate(40)(i =>
       (i.toLong, Array(math.cos(i * 0.17).toFloat, math.sin(i * 0.17).toFloat,
