@@ -143,6 +143,8 @@ object Dedup {
 
   /** Banded signature rows: (id, band_id, band_key). k signature columns are
     * split into k/rowsPerBand bands; docs agreeing on ANY full band collide.
+    * `rowsPerBand` must divide `k` (every split [[bandingPlan]] offers
+    * does): a remainder would leave trailing signature columns unbanded.
     * One explode — the signature columns are computed once, not once per
     * band branch.
     *
@@ -156,6 +158,8 @@ object Dedup {
     * exists to absorb.
     */
   def lshBands(sigs: DataFrame, idCol: String, k: Int = 8, rowsPerBand: Int = 2): DataFrame = {
+    require(rowsPerBand >= 1 && k % rowsPerBand == 0,
+      s"rowsPerBand must divide k (rowsPerBand >= 1), got k=$k rowsPerBand=$rowsPerBand")
     val bandStructs = (0 until k / rowsPerBand).map { b =>
       val cols = (b * rowsPerBand until (b + 1) * rowsPerBand).map(i => col(s"mh_$i"))
       struct(lit(b).as("band_id"), xxhash64(cols: _*).as("band_key"))
@@ -164,20 +168,6 @@ object Dedup {
       .select(col(idCol), col("__band.band_id").as("band_id"), col("__band.band_key").as("band_key"))
   }
 
-  /** Distinct colliding pairs (docA < docB) from a band table: group docs
-    * by bucket and expand each bucket's sorted id list into its pairs —
-    * ONE pass over the band table and one exchange, where a self-equi-join
-    * would compute the upstream signature pipeline twice (once per join
-    * side). Pair expansion is O(bucket²), inherent to LSH verification
-    * regardless of formulation. The one bucket shape that would overwhelm
-    * the per-bucket aggregation buffer — a byte-identical mega-cluster
-    * (millions of docs, one content) — is structurally excluded on the
-    * corpus-dedup paths: [[dedupCorpusKeeping]] and
-    * [[dropDuplicatesAgainst]] anti-join exact duplicates out BEFORE
-    * banding, so at most one representative per distinct content reaches
-    * a bucket and bucket size is bounded by genuinely-distinct near-dup
-    * variants (the PipelineScaleBench mega-cluster case pins this).
-    */
   /** Per-bucket expansion cap for the RAW candidate paths
     * ([[lshCandidates]], [[nearDups]]): pair expansion is O(bucket²), so
     * a byte-identical mega-cluster reaching a band bucket turns a silent
@@ -190,9 +180,27 @@ object Dedup {
     */
   val DefaultMaxBucketDocs: Int = 10000
 
-  private def candidatesFromBands(bands: DataFrame, idCol: String,
-                                  maxBucketDocs: Int = DefaultMaxBucketDocs): DataFrame =
-    bands.groupBy("band_id", "band_key")
+  /** Distinct colliding pairs `(doc_a, doc_b)`, doc_a < doc_b, of a
+    * shingle-set table `(idCol, __set)`: MinHash signatures, then
+    * [[lshBands]], then the band table grouped by bucket and each
+    * bucket's sorted id list expanded into its pairs. The one candidate
+    * step of [[lshCandidates]], [[nearDupsOn]] and [[containmentPairs]].
+    * Grouping is ONE pass over the band table and one exchange, where a
+    * self-equi-join would compute the upstream signature pipeline twice
+    * (once per join side). Pair expansion is O(bucket²), inherent to LSH verification
+    * regardless of formulation. The one bucket shape that would overwhelm
+    * the per-bucket aggregation buffer — a byte-identical mega-cluster
+    * (millions of docs, one content) — is structurally excluded on the
+    * corpus-dedup paths: [[dedupCorpusKeeping]] and
+    * [[dropDuplicatesAgainst]] anti-join exact duplicates out BEFORE
+    * banding, so at most one representative per distinct content reaches
+    * a bucket and bucket size is bounded by genuinely-distinct near-dup
+    * variants (the PipelineScaleBench mega-cluster case pins this).
+    */
+  private def bandCandidates(sets: DataFrame, idCol: String, k: Int,
+                             rowsPerBand: Int, maxBucketDocs: Int): DataFrame =
+    lshBands(sigsFromSets(sets, idCol, k), idCol, k, rowsPerBand)
+      .groupBy("band_id", "band_key")
       .agg(sort_array(collect_set(col(idCol))).as("__ids"))
       .filter(size(col("__ids")) > 1)
       // fail FAST and LOUD on a bucket that would expand O(bucket²):
@@ -221,9 +229,7 @@ object Dedup {
   def lshCandidates(df: DataFrame, idCol: String, textCol: String,
                     n: Int = 2, k: Int = 8, rowsPerBand: Int = 2,
                     maxBucketDocs: Int = DefaultMaxBucketDocs): DataFrame =
-    candidatesFromBands(
-      lshBands(minhashSignatures(df, idCol, textCol, n, k), idCol, k, rowsPerBand),
-      idCol, maxBucketDocs)
+    bandCandidates(shingleSets(df, idCol, textCol, n), idCol, k, rowsPerBand, maxBucketDocs)
 
   /** The end-to-end corpus dedup: drop every document that is an exact OR
     * verified near-duplicate of a lower-id document. Edges = exact-dup
@@ -390,24 +396,14 @@ object Dedup {
       .join(exHashes, Seq("__h"), "left_anti").drop("__h")
     val setsIn = shingleSets(notExact, idCol, textCol, n)
     val setsEx = shingleSets(existing, idCol, textCol, n)
-    val bandsIn = lshBands(sigsFromSets(setsIn, idCol, k), idCol, k, rowsPerBand)
-      .select(col(idCol).as("doc_in"), col("band_id"), col("band_key"))
-    val bandsEx = lshBands(sigsFromSets(setsEx, idCol, k), idCol, k, rowsPerBand)
-      .select(col(idCol).as("doc_ex"), col("band_id"), col("band_key"))
-    val cands = bandsIn.join(bandsEx, Seq("band_id", "band_key"))
-      .select("doc_in", "doc_ex").distinct()
-    val a = setsIn.select(col(idCol).as("doc_in"), col("__set").as("__sa"),
-      size(col("__set")).cast("long").as("sz_a"))
-    val b = setsEx.select(col(idCol).as("doc_ex"), col("__set").as("__sb"),
-      size(col("__set")).cast("long").as("sz_b"))
-    val losers = cands.join(a, "doc_in").join(b, "doc_ex")
-      .withColumn("n_inter",
-        graft.functions.MinHashKernel.sortedIntersectCount(col("__sa"), col("__sb")))
-      .filter(col("n_inter") > 0)
-      .withColumn("jaccard",
-        col("n_inter") / (col("sz_a") + col("sz_b") - col("n_inter")).cast("double"))
-      .filter(col("jaccard") >= minJaccard)
-      .select(col("doc_in").as(idCol)).distinct()
+    def bands(sets: DataFrame, doc: String): DataFrame =
+      lshBands(sigsFromSets(sets, idCol, k), idCol, k, rowsPerBand)
+        .select(col(idCol).as(doc), col("band_id"), col("band_key"))
+    val cands = bands(setsIn, "doc_a").join(bands(setsEx, "doc_b"), Seq("band_id", "band_key"))
+      .select("doc_a", "doc_b").distinct()
+    val losers = setPairs(cands, setsIn, setsEx, idCol)
+      .filter(jaccard >= minJaccard)
+      .select(col("doc_a").as(idCol)).distinct()
     notExact.join(losers, Seq(idCol), "left_anti")
   }
 
@@ -698,29 +694,71 @@ object Dedup {
     */
   def simhashNearDups(df: DataFrame, idCol: String, textCol: String,
                       maxHamming: Int = 3): DataFrame = {
-    require(60 % (maxHamming + 1) == 0 || maxHamming < 60,
-      s"maxHamming must be < 60, got $maxHamming")
+    require(maxHamming >= 0 && maxHamming <= 59,
+      s"maxHamming out of [0,59]: $maxHamming")
+    pigeonholePairs(df.select(col(idCol),
+        graft.functions.MinHashKernel.md5SimHash60Col(split(col(textCol), " ")).as("__sh")),
+      idCol, "__sh", 60, maxHamming)
+  }
+
+  /** The pigeonhole Hamming join over a `bits`-wide hash column, shared
+    * by [[simhashNearDups]] (60 bits) and
+    * [[graft.operators.Multimodal.hammingNearDups]] (64): the hash splits
+    * into `maxHamming + 1` disjoint chunks (the last absorbs the
+    * remainder), two hashes within `maxHamming` MUST agree on at least
+    * one whole chunk, so the (chunk index, chunk value) equi-join has
+    * perfect recall and `bit_count(xor)` verifies candidates exactly.
+    * Emits `(doc_a, doc_b, hamming)`, `doc_a < doc_b`. `hashes` feeds
+    * both join sides: a caller whose hash table is costly to recompute
+    * materializes it first.
+    */
+  private[operators] def pigeonholePairs(hashes: DataFrame, idCol: String,
+                                         hashCol: String, bits: Int,
+                                         maxHamming: Int): DataFrame = {
     val chunks = maxHamming + 1
-    val bits = 60 / chunks // last chunk absorbs any remainder via the mask below
-    val sh = df.select(col(idCol),
-      graft.functions.MinHashKernel.md5SimHash60Col(split(col(textCol), " ")).as("__sh"))
+    val width = bits / chunks
     val chunkStructs = (0 until chunks).map { c =>
-      val width = if (c == chunks - 1) 60 - c * bits else bits
+      val w = if (c == chunks - 1) bits - c * width else width
       struct(lit(c).as("ck"),
-        shiftright(col("__sh"), c * bits).bitwiseAND(lit((1L << width) - 1)).as("cv"))
+        shiftright(col("__h"), c * width).bitwiseAND(lit((1L << w) - 1)).as("cv"))
     }
-    val banded = sh.select(col(idCol), col("__sh"),
-      explode(array(chunkStructs: _*)).as("__c"))
-      .select(col(idCol), col("__sh"), col("__c.ck").as("ck"), col("__c.cv").as("cv"))
-    val a = banded.select(col(idCol).as("doc_a"), col("__sh").as("__sa"), col("ck"), col("cv"))
-    val b = banded.select(col(idCol).as("doc_b"), col("__sh").as("__sb"), col("ck"), col("cv"))
+    val banded = hashes.select(col(idCol).as("__id"), col(hashCol).as("__h"))
+      .select(col("__id"), col("__h"), explode(array(chunkStructs: _*)).as("__c"))
+      .select(col("__id"), col("__h"), col("__c.ck").as("ck"), col("__c.cv").as("cv"))
+    val a = banded.select(col("__id").as("doc_a"), col("__h").as("__ha"), col("ck"), col("cv"))
+    val b = banded.select(col("__id").as("doc_b"), col("__h").as("__hb"), col("ck"), col("cv"))
     a.join(b, Seq("ck", "cv"))
       .filter(col("doc_a") < col("doc_b"))
-      .withColumn("hamming", bit_count(col("__sa").bitwiseXOR(col("__sb"))).cast("long"))
+      .withColumn("hamming", bit_count(col("__ha").bitwiseXOR(col("__hb"))).cast("long"))
       .filter(col("hamming") <= maxHamming)
       .select("doc_a", "doc_b", "hamming")
       .distinct()
   }
+
+  /** The cluster-audit tail of the embedding and image dedups: weld
+    * `edges` `(doc_a, doc_b)` into components ([[connectedComponents]]:
+    * driver union-find under [[DriverCcMaxEdges]], RDD hash-min beyond),
+    * keep each component's smallest id, and left-join every row of
+    * `df`'s `idCol` back to the [[dedupAudit]] shape
+    * `(idCol, status ∈ kept|dropped, winner_id)`.
+    */
+  private[operators] def clusterAudit(df: DataFrame, idCol: String, edges: DataFrame,
+                                      dropped: String): DataFrame = {
+    val comp = connectedComponents(edges)
+    df.select(col(idCol))
+      .join(comp.select(col("node").as(idCol), col("component")), Seq(idCol), "left")
+      .select(col(idCol),
+        when(col("component").isNotNull && col("component") =!= col(idCol),
+          lit(dropped)).otherwise(lit("kept")).as("status"),
+        coalesce(col("component"), col(idCol)).as("winner_id"))
+  }
+
+  /** Edge-count ceiling for the driver union-find fast path of
+    * [[connectedComponents]]: 4M edges ≈ 64 MB of long pairs — the same
+    * order as a broadcast-join small side. Above it, the distributed
+    * RDD loop runs.
+    */
+  val DriverCcMaxEdges: Long = 4L * 1000 * 1000
 
   /** Connected components over a near-dup pair graph — the cluster-
     * canonicalization step of corpus dedup (keep `min(id)` per component,
@@ -763,13 +801,6 @@ object Dedup {
     * array union-find instead (same min representative, microseconds);
     * the iterative machinery is reserved for graphs that earn it.
     */
-  /** Edge-count ceiling for the driver union-find fast path of
-    * [[connectedComponents]]: 4M edges ≈ 64 MB of long pairs — the same
-    * order as a broadcast-join small side. Above it, the distributed
-    * RDD loop runs.
-    */
-  val DriverCcMaxEdges: Long = 4L * 1000 * 1000
-
   def connectedComponents(edges: DataFrame, srcCol: String = "doc_a",
                           dstCol: String = "doc_b", maxIter: Int = 50,
                           driverMaxEdges: Long = DriverCcMaxEdges): DataFrame = {
@@ -1223,16 +1254,7 @@ object Dedup {
     // round (serializing the set arrays costs what the kernel replay
     // costs) — only jaccardPrefixParts' FIVE-consumer fanout paid off
     val sets = shingleSets(df, idCol, textCol, n)
-    val cands = candidatesFromBands(
-      lshBands(sigsFromSets(sets, idCol, k), idCol, k, rowsPerBand), idCol, maxBucketDocs)
-    val a = sets.select(col(idCol).as("doc_a"), col("__set").as("__sa"),
-      size(col("__set")).cast("long").as("sz_a"))
-    val b = sets.select(col(idCol).as("doc_b"), col("__set").as("__sb"),
-      size(col("__set")).cast("long").as("sz_b"))
-    cands.join(a, "doc_a").join(b, "doc_b")
-      .withColumn("n_inter",
-        graft.functions.MinHashKernel.sortedIntersectCount(col("__sa"), col("__sb")))
-      .filter(col("n_inter") > 0)
+    setPairs(bandCandidates(sets, idCol, k, rowsPerBand, maxBucketDocs), sets, sets, idCol)
       // BIGINT / BIGINT: exact IEEE division, engine-identical
       .withColumn("containment",
         col("n_inter") / least(col("sz_a"), col("sz_b")).cast("double"))
@@ -1359,7 +1381,7 @@ object Dedup {
     val (sets, cands) = jaccardPrefixParts(df, idCol, textCol, p, n,
       materializeSets = true)
     // verification = two doc-keyed joins + the codegen'd two-pointer
-    // merge on the pre-sorted sets (the [[nearDupsOn]] kernel) — NOT a
+    // merge on the pre-sorted sets (the shared [[setPairs]] join) — NOT a
     // token-level re-join: the earlier cands⋈toks⋈toks + count-groupBy
     // formulation re-evaluated the exploded token table twice and paid a
     // token-keyed shuffle per side. Measured end-to-end (this rewrite +
@@ -1367,16 +1389,9 @@ object Dedup {
     // sf0.1 q133 5.96 s → 5.26 s (the small corpus sits near the
     // scheduling floor). shingleSets itself is a zero-exchange per-row
     // kernel, so each set-side reference is one narrow corpus scan.
-    val a = sets.select(col(idCol).as("doc_a"), col("__set").as("__sa"),
-      size(col("__set")).cast("long").as("sz_a"))
-    val b = sets.select(col(idCol).as("doc_b"), col("__set").as("__sb"),
-      size(col("__set")).cast("long").as("sz_b"))
-    cands.join(a, "doc_a").join(b, "doc_b")
-      .withColumn("n_inter",
-        graft.functions.MinHashKernel.sortedIntersectCount(col("__sa"), col("__sb")))
+    setPairs(cands, sets, sets, idCol)
       .filter(col("n_inter") * 1000 >= lit(p.toLong) * (col("sz_a") + col("sz_b") - col("n_inter")))
-      .withColumn("jaccard",
-        col("n_inter") / (col("sz_a") + col("sz_b") - col("n_inter")).cast("double"))
+      .withColumn("jaccard", jaccard)
       .select("doc_a", "doc_b", "n_inter", "sz_a", "sz_b", "jaccard")
   }
 
@@ -1427,24 +1442,38 @@ object Dedup {
   def nearDupsOn(sets: DataFrame, idCol: String, minJaccard: Double,
                  k: Int = 8, rowsPerBand: Int = 2,
                  maxBucketDocs: Int = DefaultMaxBucketDocs): DataFrame = {
-    val cands = candidatesFromBands(
-      lshBands(sigsFromSets(sets, idCol, k), idCol, k, rowsPerBand), idCol, maxBucketDocs)
-    // shingle sets come out of the kernel already sorted; every candidate
-    // pair verifies in O(|A|+|B|) via a codegen'd two-pointer merge (no
-    // per-pair hash set)
-    val a = sets.select(col(idCol).as("doc_a"), col("__set").as("__sa"),
-      size(col("__set")).cast("long").as("sz_a"))
-    val b = sets.select(col(idCol).as("doc_b"), col("__set").as("__sb"),
-      size(col("__set")).cast("long").as("sz_b"))
-    cands.join(a, "doc_a").join(b, "doc_b")
-      .withColumn("n_inter",
-        graft.functions.MinHashKernel.sortedIntersectCount(col("__sa"), col("__sb")))
-      .filter(col("n_inter") > 0)
-      .withColumn("jaccard",
-        col("n_inter") / (col("sz_a") + col("sz_b") - col("n_inter")).cast("double"))
+    setPairs(bandCandidates(sets, idCol, k, rowsPerBand, maxBucketDocs), sets, sets, idCol)
+      .withColumn("jaccard", jaccard)
       .filter(col("jaccard") >= minJaccard)
       .select("doc_a", "doc_b", "n_inter", "sz_a", "sz_b", "jaccard")
   }
+
+  /** Exact verification's join, shared by every shingle-set verb: the
+    * candidate pairs `(doc_a, doc_b)` joined to `a`'s and `b`'s sorted
+    * shingle sets (`(idCol, __set)`, as [[shingleSets]] emits them), the
+    * intersection counted by a codegen'd two-pointer merge in
+    * O(|A|+|B|) (no per-pair hash set, and the (doc, shingle) pair space
+    * never shuffles). Emits `(doc_a, doc_b, n_inter, sz_a, sz_b)` for the
+    * pairs sharing at least one shingle — a pair sharing none is a
+    * near-dup under no verb's predicate; each verb states its own.
+    */
+  private def setPairs(cands: DataFrame, a: DataFrame, b: DataFrame,
+                       idCol: String): DataFrame = {
+    def side(sets: DataFrame, s: String): DataFrame =
+      sets.select(col(idCol).as(s"doc_$s"), col("__set").as(s"__s$s"),
+        size(col("__set")).cast("long").as(s"sz_$s"))
+    cands.join(side(a, "a"), "doc_a").join(side(b, "b"), "doc_b")
+      .withColumn("n_inter",
+        graft.functions.MinHashKernel.sortedIntersectCount(col("__sa"), col("__sb")))
+      .filter(col("n_inter") > 0)
+      .select("doc_a", "doc_b", "n_inter", "sz_a", "sz_b")
+  }
+
+  /** `|A ∩ B| / |A ∪ B|` of a [[setPairs]] row: BIGINT / BIGINT, exact
+    * IEEE division, engine-identical.
+    */
+  private def jaccard: Column =
+    col("n_inter") / (col("sz_a") + col("sz_b") - col("n_inter")).cast("double")
 
   /** Duplicate-cluster size histogram — `(sz, n_clusters)`: how many
     * verified duplicate clusters (exact ∪ near, [[dedupCorpus]]'s graph)

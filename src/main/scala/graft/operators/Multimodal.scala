@@ -365,7 +365,7 @@ object Multimodal {
     * `(doc_a, doc_b, hamming)`, `doc_a < doc_b`.
     */
   def audioNearDups(media: Dataset[MediaRow], maxHamming: Int = 3): DataFrame =
-    hammingNearDups(audioFingerprints(media).toDF(), "doc_id", "afp", maxHamming)
+    decodedNearDups(audioFingerprints(media).toDF(), "afp", maxHamming)
 
   /** Deterministic tone-burst WAV: 64 segments of `segFrames` frames;
     * segment s carries a ±`amplitude` square wave (period 4) when bit s
@@ -586,12 +586,15 @@ object Multimodal {
   }
 
   /** Hamming near-dup join over a 64-bit hash column — the pigeonhole
-    * band trick ([[graft.operators.Dedup.simhashNearDups]] on 60 bits):
-    * split the hash into `maxHamming + 1` disjoint chunks; two hashes
-    * within `maxHamming` MUST agree on at least one whole chunk, so the
+    * band trick ([[graft.operators.Dedup.pigeonholePairs]], which
+    * [[graft.operators.Dedup.simhashNearDups]] runs on 60 bits): split
+    * the hash into `maxHamming + 1` disjoint chunks; two hashes within
+    * `maxHamming` MUST agree on at least one whole chunk, so the
     * chunk-value equi-join has perfect recall and `bit_count(xor)`
     * verifies candidates exactly. Emits `(doc_a, doc_b, hamming)` with
-    * `doc_a < doc_b`.
+    * `doc_a < doc_b`. `hashes` feeds both join sides, so a costly hash
+    * table (a decode) is materialized by the caller
+    * ([[imageNearDups]], [[audioNearDups]], [[imageDedup]]).
     *
     * 100 TB shape: hash-table-sized self-join on integer chunk keys —
     * never all-pairs, no cartesian; candidates per image are bounded by
@@ -602,38 +605,27 @@ object Multimodal {
     */
   def hammingNearDups(hashes: DataFrame, idCol: String, hashCol: String,
                       maxHamming: Int = 3): DataFrame = {
+    hammingCheck(maxHamming)
+    graft.operators.Dedup.pigeonholePairs(hashes, idCol, hashCol, 64, maxHamming)
+  }
+
+  /** A `maxHamming` out of range fails here, before any decode. */
+  private def hammingCheck(maxHamming: Int): Unit =
     require(maxHamming >= 1 && maxHamming <= 15,
       s"maxHamming out of [1,15]: $maxHamming")
-    val chunks = maxHamming + 1
-    val bits = 64 / chunks
-    val chunkStructs = (0 until chunks).map { c =>
-      val width = if (c == chunks - 1) 64 - c * bits else bits
-      struct(lit(c).as("ck"),
-        shiftright(col("__h"), c * bits).bitwiseAND(lit((1L << width) - 1)).as("cv"))
-    }
-    // the hash table feeds BOTH sides of the self-join; materialize it
-    // once (localCheckpoint — the connectedComponents precedent) so the
-    // upstream pipeline does not run twice. When that pipeline is a real
-    // image decode the duplicate evaluation IS the query cost (q157
-    // measured 2.8 s → 1.6 s); the checkpointed table is (id, hash)
-    // rows — executor-storage-cheap at any scale — and its blocks free
-    // when the result frame is garbage-collected.
-    val h = hashes
-      .select(col(idCol).as("__id"), col(hashCol).as("__h"))
-      .localCheckpoint()
-    val banded = h
-      .select(col("__id"), col("__h"), explode(array(chunkStructs: _*)).as("__c"))
-      .select(col("__id"), col("__h"), col("__c.ck").as("ck"), col("__c.cv").as("cv"))
-    val a = banded.select(col("__id").as("doc_a"), col("__h").as("__ha"),
-      col("ck"), col("cv"))
-    val b = banded.select(col("__id").as("doc_b"), col("__h").as("__hb"),
-      col("ck"), col("cv"))
-    a.join(b, Seq("ck", "cv"))
-      .filter(col("doc_a") < col("doc_b"))
-      .withColumn("hamming", bit_count(col("__ha").bitwiseXOR(col("__hb"))).cast("long"))
-      .filter(col("hamming") <= maxHamming)
-      .select("doc_a", "doc_b", "hamming")
-      .distinct()
+
+  /** [[hammingNearDups]] over a decoder's `(doc_id, hashCol)` table,
+    * materialized once (localCheckpoint — the connectedComponents
+    * precedent) after the argument check: the table feeds BOTH sides of
+    * the self-join, and a second decode IS the query cost (q157 measured
+    * 2.8 s → 1.6 s). The checkpointed table is a few longs per row —
+    * executor-storage-cheap at any scale — and its blocks free when the
+    * result frame is garbage-collected.
+    */
+  private def decodedNearDups(hashes: => DataFrame, hashCol: String,
+                              maxHamming: Int): DataFrame = {
+    hammingCheck(maxHamming)
+    hammingNearDups(hashes.localCheckpoint(), "doc_id", hashCol, maxHamming)
   }
 
   /** Image perceptual near-dup: decode → aHash → pigeonhole Hamming
@@ -643,7 +635,7 @@ object Multimodal {
     * only the hash table shuffles.
     */
   def imageNearDups(media: Dataset[MediaRow], maxHamming: Int = 3): DataFrame =
-    hammingNearDups(imageHashes(media).toDF(), "doc_id", "ahash", maxHamming)
+    decodedNearDups(imageHashes(media).toDF(), "ahash", maxHamming)
 
   /** End-to-end image dedup: decode → aHash → Hamming pairs → connected
     * components → keep the min-id survivor per perceptual cluster. One
@@ -655,23 +647,16 @@ object Multimodal {
     * 100 TB shape: pixels collapse to hashes on the scan executors; the
     * pair graph is the pigeonhole equi-join; components ride the
     * size-adaptive CC (driver union-find under 4M edges, RDD fixpoint
-    * above); the final attribution is one node-sized left join.
+    * above); the final attribution is one node-sized left join
+    * ([[graft.operators.Dedup.clusterAudit]]).
     */
   def imageDedup(media: Dataset[MediaRow], maxHamming: Int = 3): DataFrame = {
-    // decode ONCE: the hash table feeds pair generation AND the final
-    // attribution join (hammingNearDups re-checkpoints its projection,
-    // which then reads this materialized table, not the decoder)
+    // decode ONCE: the checkpointed hash table feeds pair generation AND
+    // the final attribution join
     val hashes = imageHashes(media).toDF().localCheckpoint()
-    val comp = graft.operators.Dedup.connectedComponents(
-      hammingNearDups(hashes, "doc_id", "ahash", maxHamming)
-        .select("doc_a", "doc_b"))
-    hashes.select(col("doc_id"))
-      .join(comp.select(col("node").as("doc_id"), col("component")),
-        Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        when(col("component").isNotNull && col("component") =!= col("doc_id"),
-          lit("dropped_near")).otherwise(lit("kept")).as("status"),
-        coalesce(col("component"), col("doc_id")).as("winner_id"))
+    graft.operators.Dedup.clusterAudit(hashes, "doc_id",
+      hammingNearDups(hashes, "doc_id", "ahash", maxHamming).select("doc_a", "doc_b"),
+      "dropped_near")
   }
 
   /** SplitMix64 finalizer — a BIJECTION on Long (distinct ids can never

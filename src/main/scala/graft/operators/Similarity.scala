@@ -28,15 +28,19 @@ import graft.functions.Rounding.zround
   *     build an index and search it. Every IVF-PQ search and the
   *     operating-point planner share one query side ([[ivfPqProbes]]),
   *     and a build and an add share one encode pass ([[encodeCodes]]);
-  *   - all-pairs near-dup is LSH-bucketed, not a cross join. Two
-  *     generators share one exact verification tail: [[nearDupPairs]]
-  *     (single table + 1-bit multi-probe, explicit-knob; its planes cap
-  *     binds past ~5M vectors) and [[nearDupPairsBanded]] (multiple
-  *     independent tables, OR-amplified recall, whose planes knob
-  *     ([[bandedPlanesFor]]) tracks any corpus size). These are the
-  *     operators here whose corpus side does shuffle: compact (id,
-  *     bucket) keys ride the candidate self-joins, and the vector payload
-  *     shuffles exactly twice for candidate verification. The O(n²)
+  *   - all-pairs near-dup is LSH-bucketed, not a cross join: one
+  *     candidate step ([[bucketPairs]] over the compact
+  *     [[bandedBuckets]] table) and one verification join
+  *     ([[vectorPairs]]) serve [[nearDupPairs]] (single table + 1-bit
+  *     multi-probe, explicit-knob; its planes cap binds past ~5M
+  *     vectors), [[nearDupPairsBanded]] (multiple independent tables,
+  *     OR-amplified recall, whose planes knob ([[bandedPlanesFor]])
+  *     tracks any corpus size), [[dropNearDupsAgainst]],
+  *     [[contrastiveTriples]] and [[semanticDedupBanded]]; each verb
+  *     keeps its own threshold predicate. These are the operators here
+  *     whose corpus side does shuffle: compact (id, bucket) keys ride the
+  *     candidate self-joins, and the vector payload shuffles exactly
+  *     twice for candidate verification. The O(n²)
   *     [[nearDupPairsExhaustive]] survives solely as the SimilaritySpec
   *     recall cross-check.
   *
@@ -276,42 +280,68 @@ object Similarity {
     // probeBits = 1), so carrying the payload through it would shuffle
     // the corpus (planes + 1)× by value; this shape shuffles compact keys
     // (planes + 1)× and the payload exactly twice (the verification
-    // joins below), which is what survives 100 TB. Measured at 500k×64d:
+    // joins), which is what survives 100 TB. Measured at 500k×64d:
     // 106 s → 15.3 s together with the probe-aware [[planesFor]] and the
-    // decorrelated plane weights (SCALE.md §Embedding near-dup).
-    val ids = df.select(col(idCol).as("__id"), lshBucket(kernelVec(df, vecCol), planes).as("__b"))
-    val a = ids.select(col("__id").as("id_a"), col("__b").as("bucket"))
-    // side B probes every bucket within Hamming distance probeBits of its
-    // own (masks of popcount <= probeBits, including the identity mask 0)
+    // decorrelated plane weights (SCALE.md §Embedding near-dup). The
+    // masks come first: a bad probe radius fails before the bucket pass.
     val masks = probeMasks(planes, probeBits)
-    val b = ids.select(col("__id").as("id_b"), col("__b").as("__bb"))
-      .withColumn("bucket",
-        explode(array(masks.map(m => col("__bb").bitwiseXOR(lit(m))): _*)))
-    val cands = a.join(b, "bucket")
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b")
-    verifyCosine(df, idCol, vecCol, cands, threshold)
+    strictCosine(vectorPairs(bucketPairs(bandedBuckets(df, idCol, vecCol, planes, 1),
+      tables = 1, masks), df, df, idCol, vecCol), threshold)
   }
 
-  /** Exact cosine verification for a candidate pair table `(id_a, id_b)`:
-    * joins the candidate ids back against the vector table —
-    * candidates-only, like the Jaccard verify in Dedup. Vectors ride the
-    * joins in their SOURCE element type: the dot kernel takes float arrays
-    * natively (widening is exact, results bit-identical), so float32
-    * embeddings shuffle at half the bytes a cast-to-double projection
-    * would cost.
+  /** Candidate pairs `(id_a, id_b)` of every hyperplane-LSH generator:
+    * [[bandedBuckets]] rows of `a` and `b` that agree on every `keys`
+    * column and share a bucket in at least one of `tables` tables, side
+    * b probing each `masks` XOR of its bucket (popcount ≤ probeBits — the
+    * identity mask alone is no probing). `b = None` self-joins `a` and
+    * keeps `id_a < id_b`; `Some(b)` pairs the two sides only. Within one
+    * table a pair joins on exactly ONE probed bucket (the mask is forced
+    * to `bucket_a XOR bucket_b`), so only a union of several tables needs
+    * the `distinct`.
     */
-  private def verifyCosine(df: DataFrame, idCol: String, vecCol: String,
-                           cands: DataFrame, threshold: Double): DataFrame = {
-    val vecs = df.select(col(idCol).as("__vid"), kernelVec(df, vecCol).as("__v"))
-      .withColumn("__n", norm(col("__v")))
-    cands
-      .join(vecs.select(col("__vid").as("id_a"), col("__v").as("__va"), col("__n").as("__na")), "id_a")
-      .join(vecs.select(col("__vid").as("id_b"), col("__v").as("__vb"), col("__n").as("__nb")), "id_b")
-      // dot > t·‖a‖·‖b‖ avoids a per-pair division; same predicate
-      .filter(dot(col("__va"), col("__vb")) > lit(threshold) * col("__na") * col("__nb"))
-      .select("id_a", "id_b")
+  private def bucketPairs(a: DataFrame, tables: Int, masks: Seq[Long] = Seq(0L),
+                          keys: Seq[String] = Nil,
+                          b: Option[DataFrame] = None): DataFrame = {
+    val perTable = (0 until tables).map { t =>
+      val probed =
+        if (masks == Seq(0L)) col(s"__b$t")
+        else explode(array(masks.map(m => col(s"__b$t").bitwiseXOR(lit(m))): _*))
+      val pairs = a.select(col("__id").as("id_a") +: keys.map(col) :+
+          col(s"__b$t").as("bucket"): _*)
+        .join(b.getOrElse(a).select(col("__id").as("id_b") +: keys.map(col) :+
+          probed.as("bucket"): _*), keys :+ "bucket")
+      (if (b.isEmpty) pairs.filter(col("id_a") < col("id_b")) else pairs)
+        .select("id_a", "id_b")
+    }
+    if (tables == 1) perTable.head else perTable.reduce(_ unionByName _).distinct()
   }
+
+  /** Exact cosine verification's join, shared by every LSH generator:
+    * the candidate pairs `(id_a, id_b)` joined back to `a`'s and `b`'s
+    * vectors (`__va`, `__vb`) and norms (`__na`, `__nb`) — candidates
+    * only, like the shingle-set verify in Dedup. Vectors ride the joins
+    * in their SOURCE element type ([[kernelVec]]: the dot kernel takes
+    * float arrays natively, widening is exact and results bit-identical),
+    * so float32 embeddings shuffle at half the bytes a cast-to-double
+    * projection would cost. Zero-norm rows drop first ([[cosinePairs]]
+    * policy); each verb states its own threshold predicate on the result.
+    */
+  private def vectorPairs(cands: DataFrame, a: DataFrame, b: DataFrame,
+                          idCol: String, vecCol: String): DataFrame = {
+    def side(df: DataFrame, s: String): DataFrame =
+      df.select(col(idCol).as(s"id_$s"), kernelVec(df, vecCol).as(s"__v$s"))
+        .withColumn(s"__n$s", norm(col(s"__v$s")))
+        .filter(col(s"__n$s") > 0)
+    cands.join(side(a, "a"), "id_a").join(side(b, "b"), "id_b")
+  }
+
+  /** The near-dup generators' strict predicate on [[vectorPairs]]:
+    * `dot > t·‖a‖·‖b‖`, cosine above `threshold` with no per-pair
+    * division. Emits `(id_a, id_b)`.
+    */
+  private def strictCosine(pairs: DataFrame, threshold: Double): DataFrame =
+    pairs.filter(dot(col("__va"), col("__vb")) > lit(threshold) * col("__na") * col("__nb"))
+      .select("id_a", "id_b")
 
   /** All pairs with cosine above a threshold via `tables` INDEPENDENT
     * hyperplane-LSH tables (OR-amplification / banding — the MinHash-LSH
@@ -337,7 +367,7 @@ object Similarity {
     *     `8·(tables+1)`-byte rows, never the vectors;
     *   - candidates found by several tables collapse through one
     *     `distinct` on the compact id pair before the exact verification
-    *     joins ([[verifyCosine]] — same exact-threshold contract as
+    *     joins ([[vectorPairs]] — same exact-threshold contract as
     *     [[nearDupPairs]], so precision is exact; only candidate recall is
     *     probabilistic).
     *
@@ -346,15 +376,9 @@ object Similarity {
     * Measured 500k/5M growth: SCALE.md §"Embedding near-dup pair growth".
     */
   def nearDupPairsBanded(df: DataFrame, idCol: String, vecCol: String,
-                         threshold: Double, planes: Int, tables: Int = 3): DataFrame = {
-    val ids = bandedBuckets(df, idCol, vecCol, planes, tables)
-    val cands = (0 until tables).map { t =>
-      val a = ids.select(col("__id").as("id_a"), col(s"__b$t").as("bucket"))
-      val b = ids.select(col("__id").as("id_b"), col(s"__b$t").as("bucket"))
-      a.join(b, "bucket").filter(col("id_a") < col("id_b")).select("id_a", "id_b")
-    }.reduce(_ unionByName _).distinct()
-    verifyCosine(df, idCol, vecCol, cands, threshold)
-  }
+                         threshold: Double, planes: Int, tables: Int = 3): DataFrame =
+    strictCosine(vectorPairs(bucketPairs(bandedBuckets(df, idCol, vecCol, planes, tables),
+      tables), df, df, idCol, vecCol), threshold)
 
   /** The localCheckpointed compact `(id, bucket₀..bucketₜ)` table of the
     * banded generator: one pass over the corpus vectors, `8·(tables+1)`
@@ -384,19 +408,9 @@ object Similarity {
   def dropNearDupsAgainst(incoming: DataFrame, existing: DataFrame,
                           idCol: String, vecCol: String, threshold: Double,
                           planes: Int, tables: Int = 3): DataFrame = {
-    val inB = bandedBuckets(incoming, idCol, vecCol, planes, tables)
-    val exB = bandedBuckets(existing, idCol, vecCol, planes, tables)
-    val cands = (0 until tables).map { t =>
-      inB.select(col("__id").as("id_a"), col(s"__b$t").as("bucket"))
-        .join(exB.select(col("__id").as("id_b"), col(s"__b$t").as("bucket")), "bucket")
-        .select("id_a", "id_b")
-    }.reduce(_ unionByName _).distinct()
-    val vIn = incoming.select(col(idCol).as("id_a"), kernelVec(incoming, vecCol).as("__va"))
-      .withColumn("__na", norm(col("__va")))
-    val vEx = existing.select(col(idCol).as("id_b"), kernelVec(existing, vecCol).as("__vb"))
-      .withColumn("__nb", norm(col("__vb")))
-    val losers = cands.join(vIn, "id_a").join(vEx, "id_b")
-      .filter(dot(col("__va"), col("__vb")) > lit(threshold) * col("__na") * col("__nb"))
+    val cands = bucketPairs(bandedBuckets(incoming, idCol, vecCol, planes, tables), tables,
+      b = Some(bandedBuckets(existing, idCol, vecCol, planes, tables)))
+    val losers = strictCosine(vectorPairs(cands, incoming, existing, idCol, vecCol), threshold)
       .select(col("id_a").as(idCol)).distinct()
     incoming.join(losers, Seq(idCol), "left_anti")
   }
@@ -1042,7 +1056,7 @@ object Similarity {
   def binarySearch(index: BinaryIndex, corpus: DataFrame, queries: DataFrame,
                    idCol: String, vecCol: String, k: Int,
                    rerank: Int = 20): DataFrame = {
-    require(k >= 1 && rerank >= k, s"need rerank >= k >= 1, got k=$k rerank=$rerank")
+    rerankCheck(k, rerank)
     val dim = index.dim
     val qWords = queries.filter(size(col(vecCol)) === dim)
       .select(col(idCol).as("query_id"), signPack(col(vecCol), dim).as("__qw"))
@@ -1083,7 +1097,7 @@ object Similarity {
   def binarySearchCells(index: IvfPqIndex, corpus: DataFrame,
                         queries: DataFrame, idCol: String, vecCol: String,
                         k: Int, nProbe: Int = 4, rerank: Int = 20): DataFrame = {
-    require(k >= 1 && rerank >= k, s"need rerank >= k >= 1, got k=$k rerank=$rerank")
+    rerankCheck(k, rerank)
     require(index.codes.columns.contains("words"),
       "index carries no sign words — build with storeSignWords=true, or " +
         "serve with binaryRerankTopK/binarySearch")
@@ -2138,7 +2152,7 @@ object Similarity {
                 subspaces: Int = 4, subDim: Int = 16, pqK: Int = 4,
                 pqIters: Int = 2, rerank: Int = 20): DataFrame = {
     // fail argument errors BEFORE the pqIters training barriers run
-    require(k >= 1 && rerank >= k, s"need rerank >= k >= 1, got k=$k rerank=$rerank")
+    rerankCheck(k, rerank)
     ivfPqSearch(ivfPqIndexBuild(corpus, idCol, vecCol, nCentroids, subspaces,
       subDim, pqK, pqIters), corpus, queries, idCol, vecCol, k, nProbe, rerank)
   }
@@ -2161,7 +2175,7 @@ object Similarity {
                         pqK: Int = 4, pqIters: Int = 2,
                         rerank: Int = 20): DataFrame = {
     // fail argument errors BEFORE the pqIters training barriers run
-    require(k >= 1 && rerank >= k, s"need rerank >= k >= 1, got k=$k rerank=$rerank")
+    rerankCheck(k, rerank)
     ivfPqSearch(ivfPqIndexBuild(corpus, idCol, vecCol, nCentroids, subspaces,
       subDim, pqK, pqIters, residual = true), corpus, queries, idCol, vecCol,
       k, nProbe, rerank)
@@ -2511,6 +2525,7 @@ object Similarity {
   def ivfPqSearchPruned(index: IvfPqIndex, corpus: DataFrame,
                         queries: DataFrame, idCol: String, vecCol: String,
                         k: Int, nProbe: Int = 4, rerank: Int = 20): DataFrame = {
+    rerankCheck(k, rerank)
     val (qs, codes) = probedCells(index.codes, queries, vecCol, index.coarse, nProbe)
     ivfPqSearchWith(index.copy(codes = codes), Some(corpus), qs, idCol,
       vecCol, k, nProbe, rerank)
@@ -2542,6 +2557,7 @@ object Similarity {
     require(index.codes.columns.contains("vec"),
       "index carries no stored vectors — build with storeVectors=true, " +
         "or serve with ivfPqSearch(index, corpus, ...)")
+    rerankCheck(k, rerank)
     val (qs, codes) = probedCells(index.codes, queries, vecCol, index.coarse, nProbe)
     ivfPqSearchWith(index.copy(codes = codes), None, qs, idCol, vecCol,
       k, nProbe, rerank, withScore)
@@ -2557,7 +2573,7 @@ object Similarity {
                               queries: DataFrame, idCol: String, vecCol: String,
                               k: Int, nProbe: Int, rerank: Int,
                               withScore: Boolean = false): DataFrame = {
-    require(k >= 1 && rerank >= k, s"need rerank >= k >= 1, got k=$k rerank=$rerank")
+    rerankCheck(k, rerank)
     val subspaces = index.pq.length
     exactRerank(
       survivors(codedSide(index.codes, subspaces)
@@ -2566,6 +2582,13 @@ object Similarity {
       rerankVectors(index.codes, corpus, idCol, vecCol), queries, idCol,
       vecCol, k, withScore)
   }
+
+  /** A two-stage verb's `k`/`rerank` pair out of range fails here,
+    * before any job: the cell-pruned serves check it ahead of their
+    * probed-cell collect.
+    */
+  private def rerankCheck(k: Int, rerank: Int): Unit =
+    require(k >= 1 && rerank >= k, s"need rerank >= k >= 1, got k=$k rerank=$rerank")
 
   /** Stage-2 rerank vectors `(neighbor_id, __cv, __cn)`: the
     * norm-positive float `corpus` when given, else the `vec` payload
@@ -2882,31 +2905,11 @@ object Similarity {
     // masks generate combinatorially, so any banded plane count stays
     // enumerable at any probe radius
     val masks = probeMasks(planes, probeBits)
-    val ids = bandedBuckets(df, idCol, vecCol, planes, tables)
-    val perTable = (0 until tables).map { t =>
-      val a = ids.select(col("__id").as("id_a"), col(s"__b$t").as("bucket"))
-      val b = ids.select(col("__id").as("id_b"), col(s"__b$t").as("__bb"))
-        .withColumn("bucket",
-          explode(array(masks.map(m => col("__bb").bitwiseXOR(lit(m))): _*)))
-      a.join(b, "bucket")
-        .filter(col("id_a") < col("id_b"))
-        .select("id_a", "id_b")
-    }
-    // a pair colliding in several tables must score once
-    val cands =
-      if (tables == 1) perTable.head
-      else perTable.reduce(_.unionByName(_)).distinct()
-    val vecs = df.select(col(idCol).as("__vid"), kernelVec(df, vecCol).as("__v"))
-      .withColumn("__n", norm(col("__v")))
-      .filter(col("__n") > 0)
+    val cands = bucketPairs(bandedBuckets(df, idCol, vecCol, planes, tables), tables, masks)
     // scored once, read twice (positives + negatives) — localCheckpoint
     // like the q58 dup graph, or each consumer would replan the whole
     // candidate generation
-    val scored = cands
-      .join(vecs.select(col("__vid").as("id_a"), col("__v").as("__va"),
-        col("__n").as("__na")), "id_a")
-      .join(vecs.select(col("__vid").as("id_b"), col("__v").as("__vb"),
-        col("__n").as("__nb")), "id_b")
+    val scored = vectorPairs(cands, df, df, idCol, vecCol)
       .select(col("id_a"), col("id_b"),
         (dot(col("__va"), col("__vb")) / (col("__na") * col("__nb"))).as("__cos"))
       .localCheckpoint()
@@ -2987,7 +2990,7 @@ object Similarity {
       .filter(dot(col("__va"), col("__vb")) / (col("__na") * col("__nb"))
         >= threshold)
       .select("doc_a", "doc_b")
-    semanticAudit(df, idCol, edges)
+    Dedup.clusterAudit(df, idCol, edges, "dropped_semantic")
   }
 
   /** [[semanticDedup]] with the candidate stage BOUNDED by in-cluster
@@ -3021,30 +3024,14 @@ object Similarity {
                           planes: Int = 4, tables: Int = 3): DataFrame = {
     val assigned = kmeansLloyd(df, idCol, vecCol, k, iters)
       .select(col(idCol).as("__id"), col("cluster"))
-    val buckets = bandedBuckets(df, idCol, vecCol, planes, tables)
-    val keyed = assigned.join(buckets, "__id")
-    val cands = (0 until tables).map { t =>
-      keyed.select(col("__id").as("doc_a"), col("cluster"),
-          col(s"__b$t").as("bucket"))
-        .join(keyed.select(col("__id").as("doc_b"), col("cluster"),
-          col(s"__b$t").as("bucket")), Seq("cluster", "bucket"))
-        .filter(col("doc_a") < col("doc_b"))
-        .select("doc_a", "doc_b")
-    }.reduce(_ unionByName _).distinct()
-    val vecs = df.select(col(idCol).as("__vid"), asDouble(col(vecCol)).as("__v"))
-      .withColumn("__n", norm(col("__v")))
-      .filter(col("__n") > 0)
-    val edges = cands
-      .join(vecs.select(col("__vid").as("doc_a"), col("__v").as("__va"),
-        col("__n").as("__na")), "doc_a")
-      .join(vecs.select(col("__vid").as("doc_b"), col("__v").as("__vb"),
-        col("__n").as("__nb")), "doc_b")
+    val keyed = assigned.join(bandedBuckets(df, idCol, vecCol, planes, tables), "__id")
+    val edges = vectorPairs(bucketPairs(keyed, tables, keys = Seq("cluster")), df, df,
+        idCol, vecCol)
       // same inclusive-threshold division as semanticDedup — boundary
       // behavior identical between the flat and banded paths
-      .filter(dot(col("__va"), col("__vb")) / (col("__na") * col("__nb"))
-        >= threshold)
-      .select("doc_a", "doc_b")
-    semanticAudit(df, idCol, edges)
+      .filter(dot(col("__va"), col("__vb")) / (col("__na") * col("__nb")) >= threshold)
+      .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"))
+    Dedup.clusterAudit(df, idCol, edges, "dropped_semantic")
   }
 
   /** [[semanticDedupBanded]] with `planes` SIZED FROM THE DATA — the
@@ -3075,22 +3062,5 @@ object Similarity {
                            tables: Int = 3): Int = {
     require(k >= 1, s"k must be >= 1, got $k")
     bandedPlanesFor(math.max(1L, (n + k - 1) / k), pairBudgetPerVec, tables)
-  }
-
-  /** The shared audit tail of both semantic dedup paths: weld `edges`
-    * into components (driver union-find under 4M edges, RDD hash-min
-    * beyond — [[graft.operators.Dedup.connectedComponents]]), keep each
-    * component's smallest id, and left-join every input row back to the
-    * q58 audit shape `(idCol, status, winner_id)`.
-    */
-  private def semanticAudit(df: DataFrame, idCol: String,
-                            edges: DataFrame): DataFrame = {
-    val comp = graft.operators.Dedup.connectedComponents(edges)
-    df.select(col(idCol))
-      .join(comp.select(col("node").as(idCol), col("component")), Seq(idCol), "left")
-      .select(col(idCol),
-        when(col("component").isNotNull && col("component") =!= col(idCol),
-          lit("dropped_semantic")).otherwise(lit("kept")).as("status"),
-        coalesce(col("component"), col(idCol)).as("winner_id"))
   }
 }

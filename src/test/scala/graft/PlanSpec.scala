@@ -1684,4 +1684,54 @@ class PlanSpec extends SparkSpec {
       "binaryRerankTopK" -> twoStage,
       "binarySearch" -> twoStage))
   }
+
+  test("near-dup verbs: pinned broadcast, shuffle and aggregate census per verb") {
+    import graft.operators.{Dedup, Multimodal, Similarity}
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val media = (1L to 6L).map(id => Multimodal.MediaRow(id, "image",
+      Multimodal.syntheticBlockImage(Multimodal.mix64(id)))).toDS()
+    val got = Map(
+      "nearDupPairs" -> census(Similarity.nearDupPairs(emb, "vec_id",
+        "embedding", 0.4)),
+      "nearDupPairsBanded" -> census(Similarity.nearDupPairsBanded(emb,
+        "vec_id", "embedding", 0.4, planes = 4, tables = 3)),
+      "dropNearDupsAgainst" -> census(Similarity.dropNearDupsAgainst(
+        emb.filter(col("vec_id") % 3 === 0), emb.filter(col("vec_id") % 3 =!= 0),
+        "vec_id", "embedding", 0.4, planes = 4, tables = 3)),
+      "contrastiveTriples" -> census(Similarity.contrastiveTriples(emb, "vec_id",
+        "embedding", posThreshold = 0.4, negMin = 0.05, negMax = 0.35,
+        negPerAnchor = 2)),
+      "semanticDedupBanded" -> census(Similarity.semanticDedupBanded(emb,
+        "vec_id", "embedding", threshold = 0.4, k = 4, iters = 2, planes = 4,
+        tables = 3)),
+      "nearDups" -> census(Dedup.nearDups(docs, "doc_id", "text", 0.1)),
+      "containmentPairs" -> census(Dedup.containmentPairs(docs, "doc_id", "text",
+        minContainment = 0.5)),
+      "jaccardJoinExact" -> census(Dedup.jaccardJoinExact(docs, "doc_id", "text",
+        minJaccardPermille = 600, n = 3)),
+      "dropDuplicatesAgainst" -> census(Dedup.dropDuplicatesAgainst(
+        docs.filter(col("doc_id") % 2 === 1), docs.filter(col("doc_id") % 2 === 0),
+        "doc_id", "text", minJaccard = 0.1)),
+      "simhashNearDups" -> census(Dedup.simhashNearDups(docs, "doc_id", "text",
+        maxHamming = 3)),
+      "hammingNearDups" -> census(Multimodal.hammingNearDups(
+        Multimodal.imageHashes(media).toDF(), "doc_id", "ahash", maxHamming = 3)))
+    // the embedding verbs' bucket tables and the audit's components are
+    // checkpointed, so their scans carry no exchange
+    assert(got == Map(
+      "nearDupPairs" -> (3, 0, 0),
+      "nearDupPairsBanded" -> (5, 1, 2),
+      "dropNearDupsAgainst" -> (5, 3, 4),
+      "contrastiveTriples" -> (0, 2, 2),
+      "semanticDedupBanded" -> (0, 2, 0),
+      "nearDups" -> (2, 2, 4),
+      "containmentPairs" -> (2, 2, 4),
+      "jaccardJoinExact" -> (6, 7, 6),
+      "dropDuplicatesAgainst" -> (6, 6, 10),
+      "simhashNearDups" -> (1, 1, 2),
+      "hammingNearDups" -> (1, 1, 2)))
+  }
 }

@@ -135,6 +135,38 @@ class DedupSpec extends SparkSpec {
     assert(brute.nonEmpty && blocked == brute)
   }
 
+  test("simhashNearDups rejects a maxHamming outside [0, 59] by name") {
+    for (bad <- Seq(-1, -2, -60, 60)) {
+      val e = intercept[IllegalArgumentException](
+        Dedup.simhashNearDups(docs, "doc_id", "text", maxHamming = bad))
+      assert(e.getMessage.contains("maxHamming"), s"$bad: ${e.getMessage}")
+    }
+    // the edges of the range stay legal and lossless: one 60-bit chunk,
+    // sixty 1-bit ones
+    val sh = docs.select($"doc_id",
+        graft.functions.MinHashKernel.md5SimHash60Col(split($"text", " ")))
+      .as[(Long, Long)].collect()
+    for (m <- Seq(0, 59)) {
+      val brute = (for ((ia, ha) <- sh; (ib, hb) <- sh if ia < ib;
+        d = java.lang.Long.bitCount(ha ^ hb) if d <= m) yield (ia, ib, d.toLong)).toSet
+      assert(Dedup.simhashNearDups(docs, "doc_id", "text", maxHamming = m)
+        .as[(Long, Long, Long)].collect().toSet == brute, s"maxHamming = $m")
+    }
+  }
+
+  test("lshBands rejects a rowsPerBand that does not divide k") {
+    val sigs = Dedup.minhashSignatures(docs, "doc_id", "text", k = 8)
+    for (bad <- Seq(0, 3, 5, 9, -2)) {
+      val e = intercept[IllegalArgumentException](
+        Dedup.lshBands(sigs, "doc_id", k = 8, rowsPerBand = bad))
+      assert(e.getMessage.contains("rowsPerBand"), s"$bad: ${e.getMessage}")
+    }
+    // every split bandingPlan offers still bands all k hashes
+    for (r <- Seq(1, 2, 4, 8))
+      assert(Dedup.lshBands(sigs, "doc_id", k = 8, rowsPerBand = r)
+        .select("band_id").distinct().count() == 8 / r)
+  }
+
   test("dedupCorpus keeps one survivor per exact/near-dup cluster") {
     val survivors = Dedup.dedupCorpus(docs, "doc_id", "text", minJaccard = 0.5)
       .select("doc_id").as[Long].collect().sorted.toSeq

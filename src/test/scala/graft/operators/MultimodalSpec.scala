@@ -258,6 +258,29 @@ class MultimodalSpec extends SparkSpec {
       (3L, "dropped_near", 1L), (7L, "kept", 7L)))
   }
 
+  test("imageDedup checkpoints its decoded hashes once: 11 jobs, the audit unchanged") {
+    val p = 0x0F0F123456789ABCL
+    val media = Seq(
+      Multimodal.MediaRow(1L, "image", Multimodal.syntheticBlockImage(p)),
+      Multimodal.MediaRow(2L, "image", Multimodal.syntheticBlockImage(p, flipBlock = 3)),
+      Multimodal.MediaRow(3L, "image", Multimodal.syntheticBlockImage(p, flipBlock = 9)),
+      Multimodal.MediaRow(7L, "image",
+        Multimodal.syntheticBlockImage(0x7777DEAD5555BEEFL)),
+      Multimodal.MediaRow(8L, "image", "junk".getBytes("UTF-8"))).toDS()
+    var got = Seq.empty[(Long, String, Long)]
+    val jobs = jobsRunBy {
+      got = Multimodal.imageDedup(media, maxHamming = 3)
+        .as[(Long, String, Long)].collect().toSeq.sorted
+    }
+    assert(got == Seq((1L, "kept", 1L), (2L, "dropped_near", 1L),
+      (3L, "dropped_near", 1L), (7L, "kept", 7L)))
+    // one checkpoint of the decoded hashes, read by the Hamming join and
+    // the audit; the Hamming join adds none of its own
+    assert(jobs.size == 11, jobs.mkString("; "))
+    assert(jobs.count(_.contains("localCheckpoint at Multimodal.scala")) == 1,
+      jobs.mkString("; "))
+  }
+
   test("audioFingerprint64 recovers the tone-burst pattern from REAL decoded samples") {
     def fp(pattern: Long, flip: Int = -1, amplitude: Int = 8192): Long = {
       val media = Seq(Multimodal.MediaRow(1L, "audio",

@@ -94,6 +94,15 @@ class SimilaritySpec extends SparkSpec {
     assert(banded == inUnion)
   }
 
+  test("one banded table emits each pair once: nearDupPairsBanded at tables = 1 is unprobed nearDupPairs") {
+    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    val banded = Similarity.nearDupPairsBanded(emb, "vec_id", "embedding", 0.4,
+      planes = 4, tables = 1).as[(Long, Long)].collect().toSeq
+    assert(banded.nonEmpty && banded.distinct.size == banded.size)
+    assert(banded.toSet == Similarity.nearDupPairs(emb, "vec_id", "embedding", 0.4,
+      planes = 4, probeBits = 0).as[(Long, Long)].collect().toSet)
+  }
+
   test("bandedPlanesFor: planes track n with no cap; tables amplify, not multiply, the load") {
     assert(Similarity.bandedPlanesFor(0) == 4)  // floor: the fixture default
     // smallest p with 3·n/2^p <= 3, i.e. 2^p >= n
@@ -881,6 +890,9 @@ class SimilaritySpec extends SparkSpec {
 
   test("bad ANN arguments fail before any Spark job runs") {
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    val idx = Similarity.ivfPqIndexBuild(emb, "vec_id", "embedding",
+      nCentroids = 4, subspaces = 4, subDim = 16, pqK = 4, pqIters = 0,
+      storeVectors = true)
     val calls = Seq[(String, String, () => Any)](
       ("ivfPqTopK", "rerank >= k", () => Similarity.ivfPqTopK(emb, emb,
         "vec_id", "embedding", k = 5, rerank = 4)),
@@ -889,7 +901,12 @@ class SimilaritySpec extends SparkSpec {
       ("binaryRerankTopK", "rerank >= k", () => Similarity.binaryRerankTopK(emb,
         emb, "vec_id", "embedding", dim = 64, k = 5, rerank = 4)),
       ("ivfPqIndexBuild", "subspaces out of", () => Similarity.ivfPqIndexBuild(
-        emb, "vec_id", "embedding", subspaces = 0)))
+        emb, "vec_id", "embedding", subspaces = 0)),
+      // the cell-pruned serves check before their probed-cell collect
+      ("ivfPqSearchPruned", "rerank >= k", () => Similarity.ivfPqSearchPruned(idx,
+        emb, emb, "vec_id", "embedding", k = 5, rerank = 4)),
+      ("ivfPqSearchStored", "rerank >= k", () => Similarity.ivfPqSearchStored(idx,
+        emb, "vec_id", "embedding", k = 5, rerank = 4)))
     for ((name, want, call) <- calls) {
       var msg = ""
       val jobs = jobsRunBy {
