@@ -1062,8 +1062,7 @@ object PipelineScaleBench {
     def buildSparseIndex(): Unit =
       TextAnalysis.sparseIndexSave(
         TextAnalysis.sparseIndexBuild(corpus, "doc_id", "text",
-          weighting = "tfidf", minDf = 2, maxDfFrac = 0.5,
-          cap = Some(1000)),
+          minDf = 2, maxDfFrac = 0.5, cap = Some(1000)),
         s"$work/sparseidx$sIdxSfx")
     timed("pipe_sparse_index_build", input = total) {
       buildSparseIndex()

@@ -10,10 +10,9 @@ import scala.concurrent.{Await, ExecutionContext, Future}
   * application; actions are only sequential because driver code calls
   * them sequentially). Used where a verb or query performs several
   * actions with no data dependency — the relation writes of an index
-  * save, the validation reads of an index load, the dense and sparse
-  * arms of a hybrid build — so the next action's tasks back-fill
-  * executors freed by the current action's tail instead of idling
-  * behind a sequential driver loop.
+  * save, the dense and sparse arms of a hybrid build — so the next
+  * action's tasks back-fill executors freed by the current action's
+  * tail instead of idling behind a sequential driver loop.
   *
   * Determinism: concurrency here NEVER reorders data — each action is
   * the same job it was sequentially, writing to its own directory or

@@ -133,8 +133,8 @@ object Retrieval {
     *
     * 100 TB shape: both drift reports are batch-pass + index-metadata
     * priced by their own contracts (the dense side re-aggregates the
-    * codes relation per cell, the sparse side the posting relation per
-    * token — never a corpus rescan); the composition adds only
+    * codes relation per cell, the sparse side reads the index's `vocab`
+    * — never a corpus rescan); the composition adds only
     * two-row unions and one-row broadcasts.
     */
   def hybridHealthReport(dense: Similarity.IvfPqIndex,

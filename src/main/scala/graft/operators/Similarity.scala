@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Row, SaveMode}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, BooleanType, ByteType, DoubleType, FloatType, IntegerType, LongType, ShortType, StructField, StructType}
 
@@ -1015,24 +1016,50 @@ object Similarity {
     */
   private[operators] def saveIndexDir(dir: String, meta: DataFrame,
                                       data: Seq[() => Unit]): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/meta")
+    val p = new Path(s"$dir/meta")
     p.getFileSystem(meta.sparkSession.sparkContext.hadoopConfiguration)
       .delete(p, true)
     Par.run(data)
     meta.write.mode(SaveMode.Overwrite).parquet(s"$dir/meta")
   }
 
+  /** The file system of index directory `dir`, which must hold each of
+    * `rels`: a missing one fails as `<dir>/<rel> is missing — a torn
+    * directory`, not as Spark's path error.
+    */
+  private[operators] def requireRelations(spark: SparkSession, dir: String,
+                                          rels: Seq[String]): FileSystem = {
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    rels.foreach(rel => require(fs.exists(new Path(s"$dir/$rel")),
+      s"$dir/$rel is missing — a torn directory"))
+    fs
+  }
+
+  /** A parquet file directly under `<dir>/<rel>`: a relation left with
+    * none fails as `<dir>/<rel> holds no parquet file — a torn directory`.
+    */
+  private[operators] def parquetFileOf(fs: FileSystem, dir: String, rel: String): Path = {
+    val file = fs.listStatus(new Path(s"$dir/$rel")).map(_.getPath)
+      .find(_.getName.endsWith(".parquet"))
+    require(file.isDefined, s"$dir/$rel holds no parquet file — a torn directory")
+    file.get
+  }
+
   /** Reopen a persisted binary index flag-free: `dim` comes from meta,
     * `n_words` is re-derived from it and REQUIRED to match the stored
     * value, and the words relation must hold exactly (id, words) — a
     * foreign or truncated directory fails here, not as silently wrong
-    * hamming ranks. Metadata-priced (one-row meta read + a schema
-    * check; the words relation is never scanned at open).
+    * hamming ranks. A missing `words/` or `meta/`, or one without a
+    * parquet file, fails as `<dir>/<relation> … a torn directory`.
+    * Metadata-priced (one-row meta read + a schema check; the words
+    * relation is never scanned at open).
     */
   def binaryIndexLoad(spark: org.apache.spark.sql.SparkSession,
                       dir: String): BinaryIndex = {
+    val fs = requireRelations(spark, dir, Seq("words", "meta"))
+    Seq("words", "meta").foreach(parquetFileOf(fs, dir, _))
     val metaRows = spark.read.parquet(s"$dir/meta")
-      .select(col("dim").cast("int"), col("n_words").cast("int")).collect()
+      .select(col("dim").cast("int"), col("n_words").cast("int")).limit(2).collect()
     require(metaRows.length == 1,
       s"$dir/meta must hold exactly one row, got ${metaRows.length}")
     val (dim, nWords) = (metaRows.head.getInt(0), metaRows.head.getInt(1))
@@ -2305,8 +2332,8 @@ object Similarity {
     * pq centroid widths vs `sub_dim` and the codes relation's code
     * columns) is re-derived and REQUIRED to match — a stale meta, a
     * mixed directory, or a truncated codebook fails here, not as
-    * plausible-looking wrong neighbors. A missing relation, or a codes
-    * relation with no parquet file where one is read, fails as
+    * plausible-looking wrong neighbors. A missing relation, or one with
+    * no parquet file where one is read, fails as
     * `<dir>/<relation> … a torn directory`. Cost: one bounded collect of
     * the codebook relations and the one-row meta. A `coarse` or `pq`
     * relation over [[IvfPqCodebookCapBytes]] on disk is refused before
@@ -2327,11 +2354,8 @@ object Similarity {
   private[operators] def ivfPqIndexLoad(spark: org.apache.spark.sql.SparkSession,
                                         dir: String,
                                         codebookCapBytes: Long): IvfPqIndex = {
-    import org.apache.hadoop.fs.Path
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Seq("codes", "coarse", "pq", "meta").foreach { rel =>
-      require(fs.exists(new Path(s"$dir/$rel")), s"$dir/$rel is missing — a torn directory")
-    }
+    val fs = requireRelations(spark, dir, Seq("codes", "coarse", "pq", "meta"))
+    Seq("coarse", "pq", "meta").foreach(parquetFileOf(fs, dir, _))
     // a cell-clustered layout ([[ivfPqIndexSaveClustered]]) reads `cell`
     // back as the partition directory's INFERRED type (int); read with
     // the cell field REQUESTED as long so both layouts expose ONE codes
@@ -2350,16 +2374,12 @@ object Similarity {
       val cellDirs = entries.filter(s =>
         s.isDirectory && s.getPath.getName.startsWith("cell="))
       if (cellDirs.isEmpty) {
-        require(entries.exists(_.getPath.getName.endsWith(".parquet")),
-          s"$dir/codes holds no parquet file — a torn directory")
+        parquetFileOf(fs, dir, "codes")
         spark.read.parquet(s"$dir/codes")
       } else {
         val first = cellDirs.map(_.getPath).minBy(_.getName)
-        val leaf = fs.listStatus(first).map(_.getPath)
-          .find(_.getName.endsWith(".parquet"))
-        require(leaf.isDefined,
-          s"$dir/codes/${first.getName} holds no parquet file — a torn directory")
-        val fileSchema = spark.read.parquet(leaf.get.toString).schema
+        val leaf = parquetFileOf(fs, dir, s"codes/${first.getName}")
+        val fileSchema = spark.read.parquet(leaf.toString).schema
         require(!fileSchema.fieldNames.contains("cell"),
           s"$dir/codes mixes a cell= directory layout with in-file cell " +
             "columns — a torn or foreign directory")

@@ -1133,6 +1133,21 @@ object TextAnalysis {
     */
   def tfidfPostings(df: DataFrame, idCol: String, textCol: String,
                     minDf: Int = 1, maxDfFrac: Double = 1.0): DataFrame = {
+    val (docTerms, docFreq) = termStats(df, idCol, textCol, minDf, maxDfFrac)
+    docTerms.join(docFreq, "token")
+      .select(col(idCol), col("token"),
+        round(col("tf") * log(col("__n").cast("double") / col("df")), 6)
+          .cast("decimal(18,6)").as("weight"))
+  }
+
+  /** The term statistics both posting scorers weigh: `docTerms` is
+    * `(id, token, tf)`, one corpus-sized exchange; `docFreq` is
+    * `(token, df, __n)`, a vocabulary-sized re-aggregation of it with
+    * the corpus count N broadcast as one scalar row, pruned to
+    * `minDf <= df <= maxDfFrac·N`.
+    */
+  private def termStats(df: DataFrame, idCol: String, textCol: String,
+                        minDf: Int, maxDfFrac: Double): (DataFrame, DataFrame) = {
     require(minDf >= 1, s"minDf must be >= 1, got $minDf")
     require(maxDfFrac > 0.0 && maxDfFrac <= 1.0,
       s"maxDfFrac must be in (0, 1], got $maxDfFrac")
@@ -1143,10 +1158,7 @@ object TextAnalysis {
       .crossJoin(broadcast(n))
       .filter(col("df") >= minDf &&
         col("df").cast("double") <= col("__n").cast("double") * maxDfFrac)
-    docTerms.join(docFreq, "token")
-      .select(col(idCol), col("token"),
-        round(col("tf") * log(col("__n").cast("double") / col("df")), 6)
-          .cast("decimal(18,6)").as("weight"))
+    (docTerms, docFreq)
   }
 
   /** BM25-weighted POSTINGS — [[tfidfPostings]] with the [[bm25Rank]]
@@ -1177,19 +1189,10 @@ object TextAnalysis {
                    minDf: Int = 1, maxDfFrac: Double = 1.0): DataFrame = {
     require(k1 > 0.0, s"k1 must be > 0, got $k1")
     require(b >= 0.0 && b <= 1.0, s"b must be in [0, 1], got $b")
-    require(minDf >= 1, s"minDf must be >= 1, got $minDf")
-    require(maxDfFrac > 0.0 && maxDfFrac <= 1.0,
-      s"maxDfFrac must be in (0, 1], got $maxDfFrac")
-    val docTerms = df.select(col(idCol), explode(tokens(textCol)).as("token"))
-      .groupBy(col(idCol), col("token")).agg(count(lit(1)).as("tf"))
+    val (docTerms, docFreq) = termStats(df, idCol, textCol, minDf, maxDfFrac)
     val docLen = docTerms.groupBy(col(idCol)).agg(sum(col("tf")).as("__len"))
-    val n = df.agg(count(lit(1)).as("__n"))
     val avg = docLen.agg((sum(col("__len")).cast("double") /
       count(lit(1)).cast("double")).as("__avgdl"))
-    val docFreq = docTerms.groupBy("token").agg(count(lit(1)).as("df"))
-      .crossJoin(broadcast(n))
-      .filter(col("df") >= minDf &&
-        col("df").cast("double") <= col("__n").cast("double") * maxDfFrac)
     docTerms.join(docLen, idCol)
       .join(docFreq, "token")
       .crossJoin(broadcast(avg))
@@ -1245,11 +1248,12 @@ object TextAnalysis {
 
   /** A persistable LEXICAL retrieval index — the sparse twin of
     * [[graft.operators.Similarity.IvfPqIndex]]: ONE posting relation
-    * `(doc_id, token, weight DECIMAL(18,6))` plus the scalar build
-    * parameters as a one-row meta relation, so what reopening needs is
-    * never a caller-remembered flag. Unlike the PQ index there is NO
-    * incremental `add` verb, by design: TF-IDF/BM25 weights depend on
-    * GLOBAL corpus statistics (df, N, avgdl), so appending documents
+    * `(doc_id, token, weight DECIMAL(18,6))`, its per-token posting
+    * counts `vocab` `(token, df)` — the one place the index counts its
+    * postings per token — and the build parameters, so what reopening
+    * needs is never a caller-remembered flag. Unlike the PQ index there
+    * is NO incremental `add` verb, by design: TF-IDF/BM25 weights depend
+    * on GLOBAL corpus statistics (df, N, avgdl), so appending documents
     * against a frozen index silently mis-weights both old and new
     * postings — the honest lifecycle is build/save/load/search, with
     * [[sparseDriftReport]] as the measured "when must I rebuild" gate
@@ -1257,9 +1261,8 @@ object TextAnalysis {
     * `cap` is set (served by default; the uncapped postings persist
     * beside it for the recall gate).
     */
-  final case class SparseIndex(postings: DataFrame, weighting: String,
+  final case class SparseIndex(postings: DataFrame, weighting: Weighting,
                                minDf: Int, maxDfFrac: Double,
-                               k1: Option[Double], b: Option[Double],
                                nDocs: Long, vocab: DataFrame,
                                cap: Option[Int] = None,
                                capped: Option[DataFrame] = None) {
@@ -1278,79 +1281,78 @@ object TextAnalysis {
     def serving: DataFrame = capped.getOrElse(postings)
 
     /** One-row self-description `(weighting, min_df, max_df_frac, k1,
-      * b, cap, n_docs, n_postings, n_terms, n_capped)`; the counts are stated
-      * redundantly with the posting relations on purpose —
-      * [[sparseIndexLoad]] re-derives them and fails fast on mismatch.
-      * `cap`/`n_capped` persist as NULL for an uncapped index (the
-      * tfidf-k1/b convention: absent, not leftover defaults).
+      * b, cap, n_docs, n_postings, n_terms, n_capped)`: `n_terms` and
+      * `n_postings` are the row count and the `df` sum of `vocab`, and
+      * [[sparseIndexLoad]] checks them against the relations' footer
+      * counts. `k1`/`b` persist as NULL under TF-IDF and `cap`/`n_capped`
+      * for an uncapped index — absent, not leftover defaults.
       */
     def meta: DataFrame = {
-      val base = postings.agg(count(lit(1)).as("n_postings"),
-        countDistinct(col("token")).as("n_terms"))
+      val base = vocab.agg(coalesce(sum(col("df")), lit(0L)).as("n_postings"),
+        count(lit(1)).as("n_terms"))
       val counts = capped match {
         case Some(cp) => base.crossJoin(cp.agg(count(lit(1)).as("n_capped")))
         case None => base.withColumn("n_capped", lit(null).cast("long"))
       }
-      counts.select(lit(weighting).as("weighting"), lit(minDf).as("min_df"),
-        lit(maxDfFrac).as("max_df_frac"),
-        k1.map(lit).getOrElse(lit(null).cast("double")).as("k1"),
-        b.map(lit).getOrElse(lit(null).cast("double")).as("b"),
+      val (name, k1Col, bCol) = weighting match {
+        case Tfidf => ("tfidf", lit(null).cast("double"), lit(null).cast("double"))
+        case Bm25(k1, b) => ("bm25", lit(k1), lit(b))
+      }
+      counts.select(lit(name).as("weighting"), lit(minDf).as("min_df"),
+        lit(maxDfFrac).as("max_df_frac"), k1Col.as("k1"), bCol.as("b"),
         cap.map(lit).getOrElse(lit(null).cast("int")).as("cap"),
         lit(nDocs).as("n_docs"),
         col("n_postings"), col("n_terms"), col("n_capped"))
     }
   }
 
-  /** Build a [[SparseIndex]] from a corpus: `weighting` picks
-    * [[tfidfPostings]] or [[bm25Postings]] (k1/b apply to BM25 only and
-    * are recorded in the index; for TF-IDF they persist as NULL). The
+  /** How a [[SparseIndex]] weighs its postings: [[tfidfPostings]] or
+    * [[bm25Postings]] with its two saturation constants.
+    */
+  sealed trait Weighting
+  case object Tfidf extends Weighting
+  final case class Bm25(k1: Double = 1.2, b: Double = 0.75) extends Weighting
+
+  /** Build a [[SparseIndex]] from a corpus, weighted by `weighting`. The
     * posting relation is localCheckpoint-materialized — a BUILD verb
     * materializes by definition, and every consumer (query-side
     * derivation, capped prune, the dot join) then reads the built
-    * index instead of re-running the weight chain. `cap` bakes the
-    * [[cappedPostings]] impact prune INTO the index (recorded in meta,
-    * served by default, priced once at build) — the uncapped postings
-    * stay beside it for [[sparseRecallReport]]'s exact arm; size the
-    * cap with [[sparseCapPlan]] before trusting it.
+    * index instead of re-running the weight chain — and so is `vocab`,
+    * its per-token posting count. `cap` bakes the [[cappedPostings]]
+    * impact prune INTO the index (recorded in meta, served by default,
+    * priced once at build) — the uncapped postings stay beside it for
+    * [[sparseRecallReport]]'s exact arm; size the cap with
+    * [[sparseCapPlan]] before trusting it. Every argument is checked
+    * before the first Spark job.
     */
   def sparseIndexBuild(df: DataFrame, idCol: String, textCol: String,
-                       weighting: String = "tfidf",
+                       weighting: Weighting = Tfidf,
                        minDf: Int = 1, maxDfFrac: Double = 1.0,
-                       k1: Double = 1.2, b: Double = 0.75,
                        cap: Option[Int] = None): SparseIndex = {
-    val (post, k1o, bo) = weighting match {
-      case "tfidf" =>
-        (tfidfPostings(df, idCol, textCol, minDf, maxDfFrac), None, None)
-      case "bm25" =>
-        (bm25Postings(df, idCol, textCol, k1, b, minDf, maxDfFrac),
-          Some(k1), Some(b))
-      case other =>
-        throw new IllegalArgumentException(
-          s"""weighting must be "tfidf" or "bm25", got "$other"""")
+    cap.foreach(c => require(c >= 1, s"cap must be >= 1, got $c"))
+    val post = weighting match {
+      case Tfidf => tfidfPostings(df, idCol, textCol, minDf, maxDfFrac)
+      case Bm25(k1, b) => bm25Postings(df, idCol, textCol, k1, b, minDf, maxDfFrac)
     }
     // the corpus count (nDocs, a one-task metadata-ish scan) is
     // independent of the posting materializations — overlap it with the
     // checkpoint chain (guide §2.6) instead of paying a sequential job
     // after them; the chain itself is ordered (vocab and capped read the
     // full checkpoint)
-    var n = -1L
-    val (_, mats) = Par.par2(
-      { n = df.count() },
+    val (n, (full, vocab, cappedRel)) = Par.par2(
+      df.count(),
       {
         val full = post.withColumnRenamed(idCol, "doc_id").localCheckpoint()
-        // vocab (token, df) is vocabulary-sized and derivable from the kept
-        // postings (df = the posting-list length — pruning already
-        // applied); it is materialized here and persists with the index,
-        // so [[queryPostings]] reads it instead of re-aggregating the
-        // postings on every batch
+        // df = the posting-list length, pruning already applied; it
+        // persists with the index, so [[queryPostings]], meta and
+        // [[sparseDriftReport]] read it instead of re-aggregating the
+        // postings
         val vocab = full.groupBy(col("token")).agg(count(lit(1)).as("df"))
           .localCheckpoint()
         (full, vocab, cap.map(c =>
           cappedPostings(full, "doc_id", "token", "weight", c).localCheckpoint()))
       })
-    val (full, vocab, cappedRel) = mats
-    SparseIndex(full, weighting, minDf, maxDfFrac, k1o, bo, n, vocab,
-      cap, cappedRel)
+    SparseIndex(full, weighting, minDf, maxDfFrac, n, vocab, cap, cappedRel)
   }
 
   /** Serve top-`k` sparse retrieval from a built (or reopened) index —
@@ -1395,128 +1397,86 @@ object TextAnalysis {
   }
 
   /** Reopen a persisted index — NO caller-supplied parameters (the
-    * [[graft.operators.Similarity.ivfPqIndexLoad]] rule): weighting and
-    * knobs come from meta, `n_postings` is re-derived and REQUIRED to
-    * match, and the posting schema is validated — a stale meta, mixed
-    * directory, or truncated posting file fails here, not as
-    * plausible-looking wrong rankings. Cost: METADATA-priced — the
-    * recount is a filterless parquet count (answered from footers, no
-    * data scan) plus the one-row meta read, so opening a corpus-scale
-    * index is cheap. `n_terms` is verified against the
-    * persisted vocab relation's footer count.
+    * [[graft.operators.Similarity.ivfPqIndexLoad]] rule): the weighting
+    * and its constants come from meta, and a stale meta, mixed
+    * directory or truncated relation fails here, not as
+    * plausible-looking wrong rankings. A missing relation, or one that
+    * holds no parquet file, fails as `<dir>/<relation> … a torn
+    * directory`; `capped/` must exist exactly when meta states a cap.
+    * Cost: METADATA-priced, two Spark queries run one after the other —
+    * the one-row meta read, then one query that counts postings, vocab
+    * and capped from their parquet footers (no data scan) and must
+    * match meta's `n_postings`, `n_terms` and `n_capped`.
     */
   def sparseIndexLoad(spark: org.apache.spark.sql.SparkSession,
                       dir: String): SparseIndex = {
-    val postings = spark.read.parquet(s"$dir/postings")
-    val cols = postings.columns.toSet
-    require(Set("doc_id", "token", "weight").subsetOf(cols),
-      s"$dir/postings must hold (doc_id, token, weight), got ${cols.mkString(", ")}")
-    // the vocab presence probe runs BEFORE any job (it guards the read
-    // below with the contract error, not a path exception), then the
-    // three independent validation reads — the one-row meta collect and
-    // the two footer-priced counts — run as CONCURRENT jobs (guide
-    // §2.6); every require still fires on the driver in the original
-    // order, so failure messages and their precedence are unchanged
-    val vocabPath = new org.apache.hadoop.fs.Path(s"$dir/vocab")
-    require(vocabPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .exists(vocabPath),
-      s"$dir/vocab is missing — a torn save or a pre-vocab-schema index")
-    val vocab = spark.read.parquet(s"$dir/vocab")
-    require(Set("token", "df").subsetOf(vocab.columns.toSet),
-      s"$dir/vocab must hold (token, df), got ${vocab.columns.mkString(", ")}")
-    var metaRows: Array[org.apache.spark.sql.Row] = null
-    var n = -1L
-    var nv = -1L
-    // the capped relation's footer count used to run SEQUENTIALLY after
-    // the meta parse (its presence is meta-gated) — probe the directory
-    // up front instead and read and count it INSIDE the concurrent batch
-    // (a filterless count reads no column); the meta cross-checks below
-    // fire in the original order, and the capped read's outcome (even a
-    // non-parquet file's footer error) is looked at only once meta says
-    // the index is capped, so a stray capped/ under an uncapped meta
-    // fails as the mixed directory it is
-    val cappedPath = new org.apache.hadoop.fs.Path(s"$dir/capped")
-    val cappedExists = cappedPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .exists(cappedPath)
-    var capped: scala.util.Try[(DataFrame, Long)] = null
-    graft.operators.Par.run(Seq(
-      () => metaRows = spark.read.parquet(s"$dir/meta")
-        .select(col("weighting").cast("string"), col("min_df").cast("int"),
-          col("max_df_frac").cast("double"), col("k1").cast("double"),
-          col("b").cast("double"), col("cap").cast("int"),
-          col("n_postings").cast("long"), col("n_terms").cast("long"),
-          col("n_capped").cast("long"), col("n_docs").cast("long"))
-        .collect(),
-      () => n = postings.count(),
-      () => nv = vocab.count()) ++
-      Option.when(cappedExists)(() => capped = scala.util.Try {
-        val cp = spark.read.parquet(s"$dir/capped")
-        (cp, cp.count())
-      }))
+    val fs = Similarity.requireRelations(spark, dir, Seq("postings", "vocab", "meta"))
+    Similarity.parquetFileOf(fs, dir, "meta")
+    val metaRows = spark.read.parquet(s"$dir/meta")
+      .select(col("weighting").cast("string"), col("min_df").cast("int"),
+        col("max_df_frac").cast("double"), col("k1").cast("double"),
+        col("b").cast("double"), col("cap").cast("int"),
+        col("n_postings").cast("long"), col("n_terms").cast("long"),
+        col("n_capped").cast("long"), col("n_docs").cast("long"))
+      .limit(2).collect()
     require(metaRows.length == 1,
       s"$dir/meta must hold exactly one row, got ${metaRows.length}")
     val m = metaRows.head
-    val weighting = m.getString(0)
-    require(weighting == "tfidf" || weighting == "bm25",
-      s"""$dir/meta weighting must be "tfidf" or "bm25", got "$weighting"""")
-    val (k1o, bo) =
-      (if (m.isNullAt(3)) None else Some(m.getDouble(3)),
-        if (m.isNullAt(4)) None else Some(m.getDouble(4)))
-    // k1/b must be BOTH present (bm25) or BOTH absent (tfidf): a
-    // half-populated pair is a corrupt meta in either weighting, and
-    // `(bm25) == (defined && defined)` alone would wave a tfidf meta
-    // with exactly one knob through (false == false)
-    require(k1o.isDefined == bo.isDefined &&
-        (weighting == "bm25") == (k1o.isDefined && bo.isDefined),
-      s"$dir/meta: k1/b must be present exactly for bm25, got " +
-        s"weighting=$weighting k1=$k1o b=$bo")
-    require(n == m.getLong(6),
-      s"meta says ${m.getLong(6)} postings but $dir/postings holds $n")
+    def opt[T](i: Int, get: Int => T): Option[T] = Option.when(!m.isNullAt(i))(get(i))
+    val (k1, b) = (opt(3, m.getDouble), opt(4, m.getDouble))
+    val weighting = (m.getString(0), k1, b) match {
+      case ("tfidf", None, None) => Tfidf
+      case ("bm25", Some(k), Some(bb)) => Bm25(k, bb)
+      case (w, _, _) => throw new IllegalArgumentException(
+        s"""$dir/meta must state weighting "tfidf" without k1/b or "bm25" """ +
+          s"with both, got weighting=$w k1=$k1 b=$b")
+    }
     require(!m.isNullAt(9) && m.getLong(9) >= 1,
       s"$dir/meta must state a positive n_docs")
-    // the vocab relation upgrades n_terms from informational to VERIFIED
-    // at metadata price: its filterless parquet count (collected above)
-    // must match
-    require(nv == m.getLong(7),
-      s"meta says ${m.getLong(7)} terms but $dir/vocab holds $nv")
-    // the capped arm travels with its meta: cap and n_capped must be
-    // both present (a capped index) or both absent, the capped relation
-    // must exist exactly when meta says so (a stray or missing capped
-    // dir is a MIXED directory), and its footer count must match —
-    // all METADATA-priced (filterless parquet counts + one FS probe)
-    val capO = if (m.isNullAt(5)) None else Some(m.getInt(5))
-    val nCapO = if (m.isNullAt(8)) None else Some(m.getLong(8))
+    val (capO, nCapO) = (opt(5, m.getInt), opt(8, m.getLong))
     require(capO.isDefined == nCapO.isDefined,
       s"$dir/meta: cap/n_capped must travel together, got cap=$capO n_capped=$nCapO")
-    val cappedRel = capO match {
-      case Some(c) =>
-        require(c >= 1, s"$dir/meta: cap must be >= 1, got $c")
-        require(cappedExists,
-          s"$dir/meta says cap=$c but $dir/capped is missing — a mixed directory")
-        val (cp, nc) = capped.get
-        require(Set("doc_id", "token", "weight").subsetOf(cp.columns.toSet),
-          s"$dir/capped must hold (doc_id, token, weight), got ${cp.columns.mkString(", ")}")
-        require(nc == nCapO.get,
-          s"meta says ${nCapO.get} capped postings but $dir/capped holds $nc")
-        Some(cp)
-      case None =>
-        require(!cappedExists,
-          s"$dir/meta says uncapped but $dir/capped exists — a mixed directory")
-        None
+    capO.foreach(c => require(c >= 1, s"$dir/meta: cap must be >= 1, got $c"))
+    if (capO.isDefined) Similarity.requireRelations(spark, dir, Seq("capped"))
+    else require(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/capped")),
+      s"$dir/meta says uncapped but $dir/capped exists — a mixed directory")
+    def relation(name: String, cols: String*): DataFrame = {
+      Similarity.parquetFileOf(fs, dir, name)
+      val df = spark.read.parquet(s"$dir/$name")
+      require(cols.toSet.subsetOf(df.columns.toSet), s"$dir/$name must hold " +
+        s"${cols.mkString("(", ", ", ")")}, got ${df.columns.mkString(", ")}")
+      df
     }
-    SparseIndex(postings, weighting, m.getInt(1), m.getDouble(2), k1o, bo,
-      m.getLong(9), vocab, capO, cappedRel)
+    val postings = relation("postings", "doc_id", "token", "weight")
+    val vocab = relation("vocab", "token", "df")
+    val capped = capO.map(_ => relation("capped", "doc_id", "token", "weight"))
+    // one query, one footer-priced count per relation (a filterless
+    // parquet count reads no column)
+    val counts = (Seq("postings" -> postings, "vocab" -> vocab) ++ capped.map("capped" -> _))
+      .map { case (name, rel) => rel.select(lit(name).as("rel")) }
+      .reduce(_ unionByName _)
+      .groupBy(col("rel")).agg(count(lit(1)))
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      .withDefaultValue(0L)
+    require(counts("postings") == m.getLong(6),
+      s"meta says ${m.getLong(6)} postings but $dir/postings holds ${counts("postings")}")
+    require(counts("vocab") == m.getLong(7),
+      s"meta says ${m.getLong(7)} terms but $dir/vocab holds ${counts("vocab")}")
+    nCapO.foreach(nc => require(counts("capped") == nc,
+      s"meta says $nc capped postings but $dir/capped holds ${counts("capped")}"))
+    SparseIndex(postings, weighting, m.getInt(1), m.getDouble(2), m.getLong(9),
+      vocab, capO, capped)
   }
 
   /** Reconstruct a QUERY-side weight profile from raw text against a
     * frozen index — the verb that makes retrieval serve OUT-OF-CORPUS
     * queries: tokenize the query documents, look each term's df up in
     * the index's persisted vocab relation, and restate the index's own
-    * weight formula. For `tfidf`, `weight = round(tf · ln(N/df), 6)`
+    * weight formula. For [[Tfidf]], `weight = round(tf · ln(N/df), 6)`
     * with `N` the frozen build-time corpus count — for an IN-corpus
     * query document this reproduces its index postings BIT-FOR-BIT
     * (spec-pinned), so find-similar-documents no longer needs to scan
-    * the posting relation for the query's rows. For `bm25`, the Okapi
+    * the posting relation for the query's rows. For [[Bm25]], the Okapi
     * convention: UNIT weights on the query's distinct terms (the q251
     * scoring model — the document-side weights already carry the tf/
     * length saturation). Query terms outside the frozen vocabulary DROP
@@ -1534,13 +1494,13 @@ object TextAnalysis {
       .select(col(idCol).as("query_id"), explode(tokens(textCol)).as("token"))
       .groupBy(col("query_id"), col("token")).agg(count(lit(1)).as("__tf"))
     index.weighting match {
-      case "tfidf" =>
+      case Tfidf =>
         qt.join(index.vocab, Seq("token"))
           .select(col("query_id"), col("token"),
             round(col("__tf") *
               log(lit(index.nDocs.toDouble) / col("df")), 6)
               .cast("decimal(18,6)").as("weight"))
-      case _ =>
+      case _: Bm25 =>
         qt.join(index.vocab.select(col("token")), Seq("token"))
           .select(col("query_id"), col("token"),
             lit(1).cast("decimal(18,6)").as("weight"))
@@ -1694,12 +1654,12 @@ object TextAnalysis {
     * index?". TF-IDF/BM25 weights freeze global corpus statistics at
     * build; as the incoming data's vocabulary drifts away from the
     * frozen one, served rankings rot silently. This prices that drift
-    * from the POSTING relation plus one batch pass — no corpus rescan,
+    * from the index's `vocab` plus one batch pass — no corpus rescan,
     * no recall run: one row
     * `(n_index_terms, n_batch_terms, n_oov_terms, oov_mass, tv,
     * rebuild)` where document-frequency relations on both sides are
     * the comparable footing (`df_idx(t)` = the token's posting-list
-    * length; `df_batch(t)` = distinct batch docs containing `t`),
+    * length, `vocab.df`; `df_batch(t)` = distinct batch docs containing `t`),
     * `oov_mass` is the df-mass fraction of the batch landing on tokens
     * the index has NO posting list for (those queries can only be
     * served through their other terms), and `tv` is the
@@ -1719,8 +1679,8 @@ object TextAnalysis {
     * mass — self-drift is zero only at keep-all knobs, and that case
     * is spec-pinned.
     *
-    * 100 TB shape: the index side is a vocabulary-sized re-aggregation
-    * of the posting relation (never a corpus pass); the batch side is
+    * 100 TB shape: the index side is the vocabulary-sized `vocab`
+    * relation as built or loaded (no posting pass); the batch side is
     * one tokenize+distinct pass (map-side combinable); the share join
     * is vocabulary-sized on compact token keys, localCheckpointed once
     * so the tv rollup and the one-row output both read it without
@@ -1734,8 +1694,7 @@ object TextAnalysis {
       s"oovThreshold out of [0,1]: $oovThreshold")
     require(tvThreshold >= 0.0 && tvThreshold <= 1.0,
       s"tvThreshold out of [0,1]: $tvThreshold")
-    val idxDf = index.postings.groupBy(col("token"))
-      .agg(count(lit(1)).as("__di"))
+    val idxDf = index.vocab.select(col("token"), col("df").as("__di"))
     val batDf = batch
       .select(col(idCol).as("__bid"), explode(tokens(textCol)).as("token"))
       .distinct()

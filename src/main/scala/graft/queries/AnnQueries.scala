@@ -543,8 +543,7 @@ private[graft] object AnnQueries {
       val (dIdx, sIdx) = Par.par2(
         Similarity.ivfPqIndexBuild(emb, "vec_id", "embedding",
           nCentroids = 16, subspaces = 4, subDim = 16, pqK = 4, pqIters = 2),
-        TextAnalysis.sparseIndexBuild(docs, "doc_id", "text",
-          weighting = "tfidf", minDf = 2, cap = Some(25)))
+        TextAnalysis.sparseIndexBuild(docs, "doc_id", "text", minDf = 2, cap = Some(25)))
       val qp = sIdx.postings
         .join(evalSampleN(docs, "doc_id", 16).select("doc_id"), "doc_id")
         .withColumnRenamed("doc_id", "query_id")
@@ -685,8 +684,7 @@ private[graft] object AnnQueries {
       val (dIdx, sIdx) = Par.par2(
         Similarity.ivfPqIndexBuild(emb, "vec_id", "embedding",
           nCentroids = 16, subspaces = 4, subDim = 16, pqK = 4, pqIters = 2),
-        TextAnalysis.sparseIndexBuild(docs, "doc_id", "text",
-          weighting = "tfidf", minDf = 2, cap = Some(25)))
+        TextAnalysis.sparseIndexBuild(docs, "doc_id", "text", minDf = 2, cap = Some(25)))
       val qp = sIdx.postings
         .join(evalSampleN(docs, "doc_id", 16).select("doc_id"), "doc_id")
         .withColumnRenamed("doc_id", "query_id")
@@ -805,8 +803,7 @@ private[graft] object AnnQueries {
       val (dIdx, sIdx) = Par.par2(
         Similarity.ivfPqIndexBuild(emb, "vec_id", "embedding",
           nCentroids = 16, subspaces = 4, subDim = 16, pqK = 4, pqIters = 2),
-        TextAnalysis.sparseIndexBuild(docs, "doc_id", "text",
-          weighting = "tfidf", minDf = 2, cap = Some(25)))
+        TextAnalysis.sparseIndexBuild(docs, "doc_id", "text", minDf = 2, cap = Some(25)))
       val qp = sIdx.postings
         .join(evalSampleN(docs, "doc_id", 16).select("doc_id"), "doc_id")
         .withColumnRenamed("doc_id", "query_id")
@@ -846,7 +843,7 @@ private[graft] object AnnQueries {
         {
           TextAnalysis.sparseIndexSave(
             TextAnalysis.sparseIndexBuild(docs, "doc_id", "text",
-              weighting = "tfidf", minDf = 2, cap = Some(25)),
+              minDf = 2, cap = Some(25)),
             s"$base/sparse")
           TextAnalysis.sparseIndexLoad(s, s"$base/sparse")
         })

@@ -901,8 +901,7 @@ private[graft] object SelectionQueries {
       val (dIdx, sIdx) = Par.par2(
         Similarity.ivfPqIndexBuild(base, "vec_id", "embedding",
           nCentroids = 16, subspaces = 4, subDim = 16, pqK = 4, pqIters = 0),
-        TextAnalysis.sparseIndexBuild(docs, "doc_id", "text",
-          weighting = "tfidf", minDf = 2))
+        TextAnalysis.sparseIndexBuild(docs, "doc_id", "text", minDf = 2))
       graft.operators.Retrieval.hybridHealthReport(
         dIdx, delta, "vec_id", "embedding",
         sIdx, evalSampleN(docs, "doc_id", 256), "doc_id", "text",

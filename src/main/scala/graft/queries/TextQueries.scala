@@ -873,8 +873,7 @@ private[graft] object TextQueries {
     // save/load round-trip and its fail-fast refusals are spec-pinned.
     Query("q258_sparse_index_search", (s, dir) => {
       val docs = t(s, dir, "documents")
-      val idx = TextAnalysis.sparseIndexBuild(docs, "doc_id", "text",
-        weighting = "tfidf", minDf = 2)
+      val idx = TextAnalysis.sparseIndexBuild(docs, "doc_id", "text", minDf = 2)
       val qp = idx.postings
         .join(evalSampleN(docs, "doc_id", 16).select("doc_id"), "doc_id")
         .withColumnRenamed("doc_id", "query_id")
@@ -919,8 +918,7 @@ private[graft] object TextQueries {
     // exactly the pruned-hapax mass (oov_mass > 0 by construction).
     Query("q261_sparse_drift", (s, dir) => {
       val docs = t(s, dir, "documents")
-      val idx = TextAnalysis.sparseIndexBuild(docs, "doc_id", "text",
-        weighting = "tfidf", minDf = 2)
+      val idx = TextAnalysis.sparseIndexBuild(docs, "doc_id", "text", minDf = 2)
       TextAnalysis.sparseDriftReport(idx,
         evalSampleN(docs, "doc_id", 256), "doc_id", "text")
     }, Oracle.Sql(
@@ -1032,8 +1030,7 @@ private[graft] object TextQueries {
     // grades against q247's oracle verbatim.
     Query("q264_sparse_query_profile", (s, dir) => {
       val docs = t(s, dir, "documents")
-      val idx = TextAnalysis.sparseIndexBuild(docs, "doc_id", "text",
-        weighting = "tfidf", minDf = 2)
+      val idx = TextAnalysis.sparseIndexBuild(docs, "doc_id", "text", minDf = 2)
       val qp = TextAnalysis.queryPostings(idx,
         evalSampleN(docs, "doc_id", 16), "doc_id", "text")
       TextAnalysis.sparseIndexSearch(idx, qp, "query_id",
@@ -1060,8 +1057,7 @@ private[graft] object TextQueries {
       val (dIdx, sIdx) = Par.par2(
         Similarity.ivfPqIndexBuild(emb, "vec_id", "embedding",
           nCentroids = 16, subspaces = 4, subDim = 16, pqK = 4, pqIters = 2),
-        TextAnalysis.sparseIndexBuild(docs, "doc_id", "text",
-          weighting = "tfidf", minDf = 2, cap = Some(25)))
+        TextAnalysis.sparseIndexBuild(docs, "doc_id", "text", minDf = 2, cap = Some(25)))
       val qp = TextAnalysis.queryPostings(sIdx,
         evalSampleN(docs, "doc_id", 16), "doc_id", "text")
       graft.operators.Retrieval.hybridSearch(dIdx, emb,
@@ -1087,7 +1083,7 @@ private[graft] object TextQueries {
     Query("q266_bm25_query_profile", (s, dir) => {
       val docs = t(s, dir, "documents")
       val idx = TextAnalysis.sparseIndexBuild(docs, "doc_id", "text",
-        weighting = "bm25", minDf = 2)
+        weighting = TextAnalysis.Bm25(), minDf = 2)
       val qp = TextAnalysis.queryPostings(idx,
         evalSampleN(docs, "doc_id", 16), "doc_id", "text")
       TextAnalysis.sparseIndexSearch(idx, qp, "query_id",
@@ -1212,7 +1208,7 @@ private[graft] object TextQueries {
         {
           TextAnalysis.sparseIndexSave(
             TextAnalysis.sparseIndexBuild(docs, "doc_id", "text",
-              weighting = "tfidf", minDf = 2, cap = Some(25)),
+              minDf = 2, cap = Some(25)),
             s"$base/sparse")
           TextAnalysis.sparseIndexLoad(s, s"$base/sparse")
         })

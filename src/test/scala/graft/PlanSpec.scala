@@ -1639,7 +1639,7 @@ class PlanSpec extends SparkSpec {
       nCentroids = 16, subspaces = 4, subDim = 16, pqK = 4, pqIters = 2,
       storeSignWords = true)
     val sparse = TextAnalysis.sparseIndexBuild(docs, "doc_id", "text",
-      weighting = "tfidf", minDf = 2, cap = Some(25))
+      minDf = 2, cap = Some(25))
     val qp = sparse.postings
       .join(docs.filter(col("doc_id") % 50 === 0).select("doc_id"), "doc_id")
       .withColumnRenamed("doc_id", "query_id")
@@ -1733,5 +1733,37 @@ class PlanSpec extends SparkSpec {
       "dropDuplicatesAgainst" -> (6, 6, 10),
       "simhashNearDups" -> (1, 1, 2),
       "hammingNearDups" -> (1, 1, 2)))
+  }
+
+  test("sparse index verbs: pinned shuffle and aggregate census per query; a save's job count") {
+    import graft.operators.TextAnalysis
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    // every plan a query runs — its index or posting build, the drift
+    // gate's checkpoint, the output collect — through AQE stages
+    def ranCensus(name: String): (Int, Int, Int) = {
+      val nodes = plansRunBy(SparkEntry.queries(name)(spark, sfDir).collect())
+        .flatMap(planNodes)
+      (nodes.count(_.isInstanceOf[BroadcastExchangeExec]),
+        nodes.count(_.isInstanceOf[ShuffleExchangeExec]),
+        nodes.count(_.isInstanceOf[BaseAggregateExec]))
+    }
+    val got = Seq("q247_sparse_retrieval", "q251_bm25_retrieval", "q261_sparse_drift",
+      "q264_sparse_query_profile").map(name => name -> ranCensus(name)).toMap
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val saves = Seq(None, Some(25)).map { cap =>
+      val idx = TextAnalysis.sparseIndexBuild(docs, "doc_id", "text", minDf = 2, cap = cap)
+      val dir = java.nio.file.Files.createTempDirectory("graft-sparse-save-").toString
+      cap -> jobsRunBy(TextAnalysis.sparseIndexSave(idx, dir)).size
+    }.toMap
+    // the drift gate's index side scans the built vocab (the full join
+    // still exchanges it by token); no aggregation of the postings runs
+    assert(got == Map(
+      "q247_sparse_retrieval" -> (5, 8, 14),
+      "q251_bm25_retrieval" -> (6, 12, 23),
+      "q261_sparse_drift" -> (6, 14, 26),
+      "q264_sparse_query_profile" -> (5, 11, 20)))
+    // one write per relation plus meta's jobs, which read vocab and,
+    // when capped, count capped — never the postings
+    assert(saves == Map(None -> 4, Some(25) -> 7))
   }
 }

@@ -25,7 +25,7 @@ class RetrievalSpec extends SparkSpec {
     val dIdx = Similarity.ivfPqIndexBuild(emb, "vec_id", "embedding",
       nCentroids = 8, subspaces = 4, subDim = 16, pqK = 4, pqIters = 2)
     val sIdx = TextAnalysis.sparseIndexBuild(docs, "doc_id", "text",
-      weighting = "tfidf", minDf = 2, cap = Some(10))
+      minDf = 2, cap = Some(10))
     val qv = Sampling.hashSampleN(emb, "vec_id", 8)
     val qp = sIdx.postings
       .join(Sampling.hashSampleN(docs, "doc_id", 8).select("doc_id"), "doc_id")
@@ -93,7 +93,7 @@ class RetrievalSpec extends SparkSpec {
 
   test("hybridSearch stored dense arm is an EXPLICIT opt-in: corpus unread when on, respected when off, refused without a payload") {
     val sIdx = TextAnalysis.sparseIndexBuild(docs, "doc_id", "text",
-      weighting = "tfidf", minDf = 2, cap = Some(10))
+      minDf = 2, cap = Some(10))
     val qv = Sampling.hashSampleN(emb, "vec_id", 8)
     val qp = sIdx.postings
       .join(Sampling.hashSampleN(docs, "doc_id", 8).select("doc_id"), "doc_id")
@@ -131,7 +131,7 @@ class RetrievalSpec extends SparkSpec {
     val dIdx = Similarity.ivfPqIndexBuild(emb, "vec_id", "embedding",
       nCentroids = 8, subspaces = 4, subDim = 16, pqK = 4, pqIters = 2)
     val sIdx = TextAnalysis.sparseIndexBuild(docs, "doc_id", "text",
-      weighting = "tfidf", minDf = 2, cap = Some(10))
+      minDf = 2, cap = Some(10))
     val qv = Sampling.hashSampleN(emb, "vec_id", 8)
     val qp = sIdx.postings
       .join(Sampling.hashSampleN(docs, "doc_id", 8).select("doc_id"), "doc_id")
@@ -166,7 +166,7 @@ class RetrievalSpec extends SparkSpec {
     val dIdx = Similarity.ivfPqIndexBuild(emb, "vec_id", "embedding",
       nCentroids = 8, subspaces = 4, subDim = 16, pqK = 4, pqIters = 2)
     val sIdx = TextAnalysis.sparseIndexBuild(docs, "doc_id", "text",
-      weighting = "tfidf", minDf = 2, cap = Some(10))
+      minDf = 2, cap = Some(10))
     val qv = Sampling.hashSampleN(emb, "vec_id", 8)
     val qp = sIdx.postings
       .join(Sampling.hashSampleN(docs, "doc_id", 8).select("doc_id"), "doc_id")
@@ -207,7 +207,7 @@ class RetrievalSpec extends SparkSpec {
       s"$base/dense")
     TextAnalysis.sparseIndexSave(
       TextAnalysis.sparseIndexBuild(docs, "doc_id", "text",
-        weighting = "tfidf", minDf = 2, cap = Some(10)),
+        minDf = 2, cap = Some(10)),
       s"$base/sparse")
     val dRe = Similarity.ivfPqIndexLoad(spark, s"$base/dense")
     val sRe = TextAnalysis.sparseIndexLoad(spark, s"$base/sparse")
@@ -252,7 +252,7 @@ class RetrievalSpec extends SparkSpec {
       s"$base/dense")
     TextAnalysis.sparseIndexSave(
       TextAnalysis.sparseIndexBuild(docs, "doc_id", "text",
-        weighting = "tfidf", minDf = 2, cap = Some(10)),
+        minDf = 2, cap = Some(10)),
       s"$base/sparse")
     val dRe = Similarity.ivfPqIndexLoad(spark, s"$base/dense")
     val sRe = TextAnalysis.sparseIndexLoad(spark, s"$base/sparse")

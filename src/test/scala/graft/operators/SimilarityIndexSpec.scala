@@ -390,6 +390,19 @@ class SimilarityIndexSpec extends SparkSpec {
       Similarity.binaryIndexLoad(spark, alien))
     assert(e2.getMessage.contains("must hold exactly (id, words)"))
 
+    // a directory missing a relation, or its parquet files, names it
+    for (rel <- Seq("words", "meta"); whole <- Seq(true, false)) {
+      val partial = Files.createTempDirectory(s"graft-bin-no-$rel-").toString
+      Similarity.binaryIndexSave(built, partial)
+      val relDir = new java.io.File(s"$partial/$rel")
+      if (whole) org.apache.commons.io.FileUtils.deleteDirectory(relDir)
+      else relDir.listFiles.filter(_.isFile).foreach(_.delete())
+      val e = intercept[IllegalArgumentException](Similarity.binaryIndexLoad(spark, partial))
+      val fault = if (whole) "is missing" else "holds no parquet file"
+      assert(e.getMessage.contains(s"$partial/$rel $fault — a torn directory"),
+        s"$rel/ $fault: ${e.getMessage}")
+    }
+
     // the ivfPqTopK argument-guard convention, extended to the binary
     // entry points: rerank < k refuses instead of silently under-filling
     val e3 = intercept[IllegalArgumentException](
@@ -1211,6 +1224,12 @@ class SimilarityIndexSpec extends SparkSpec {
       ("no meta/", false, d => rm(new java.io.File(s"$d/meta")), d => s"$d/meta is missing"),
       ("flat codes/ without a parquet file", false, d => files(s"$d/codes").foreach(rm),
         d => s"$d/codes holds no parquet file"),
+      ("coarse/ without a parquet file", false, d => files(s"$d/coarse").foreach(rm),
+        d => s"$d/coarse holds no parquet file"),
+      ("pq/ without a parquet file", false, d => files(s"$d/pq").foreach(rm),
+        d => s"$d/pq holds no parquet file"),
+      ("meta/ without a parquet file", false, d => files(s"$d/meta").foreach(rm),
+        d => s"$d/meta holds no parquet file"),
       ("cell= directories without a parquet file", true,
         d => cellDirs(d).foreach(c => files(c.getPath).foreach(rm)),
         d => s"$d/codes/cell="))

@@ -915,7 +915,7 @@ class TextAnalysisSpec extends SparkSpec {
     assert(hits == Set(0L, 1L, 3L)) // exactly the apple docs
     // bm25: unit weights on distinct in-vocabulary terms
     val bidx = TextAnalysis.sparseIndexBuild(corpus, "doc_id", "text",
-      weighting = "bm25", minDf = 2)
+      weighting = TextAnalysis.Bm25(), minDf = 2)
     val bq = rows(TextAnalysis.queryPostings(bidx,
       Seq((7L, "apple apple durian cherry")).toDF("doc_id", "text"),
       "doc_id", "text"))
@@ -963,15 +963,19 @@ class TextAnalysisSpec extends SparkSpec {
     goodMeta.withColumn("cap", lit(null).cast("int"))
       .withColumn("n_capped", lit(null).cast("long"))
       .write.mode(mode).parquet(s"$mixed/meta")
-    intercept[IllegalArgumentException](
+    val eMixed = intercept[IllegalArgumentException](
       TextAnalysis.sparseIndexLoad(spark, mixed))
+    assert(eMixed.getMessage ==
+      s"requirement failed: $mixed/meta says uncapped but $mixed/capped exists — a mixed directory")
     // meta says capped but the capped dir is missing
     val missing = s"$dir/missing"
     re.postings.write.mode(mode).parquet(s"$missing/postings")
     re.vocab.write.mode(mode).parquet(s"$missing/vocab")
     goodMeta.write.mode(mode).parquet(s"$missing/meta")
-    intercept[IllegalArgumentException](
+    val eMissing = intercept[IllegalArgumentException](
       TextAnalysis.sparseIndexLoad(spark, missing))
+    assert(eMissing.getMessage ==
+      s"requirement failed: $missing/capped is missing — a torn directory")
     // tampered n_capped
     val tampered = s"$dir/tampered_cap"
     re.postings.write.mode(mode).parquet(s"$tampered/postings")
@@ -979,8 +983,10 @@ class TextAnalysisSpec extends SparkSpec {
     re.capped.get.write.mode(mode).parquet(s"$tampered/capped")
     goodMeta.withColumn("n_capped", lit(99L)).write.mode(mode)
       .parquet(s"$tampered/meta")
-    intercept[IllegalArgumentException](
+    val eTampered = intercept[IllegalArgumentException](
       TextAnalysis.sparseIndexLoad(spark, tampered))
+    assert(eTampered.getMessage == "requirement failed: meta says 99 capped " +
+      s"postings but $tampered/capped holds ${re.capped.get.count()}")
     // cap without n_capped (half-populated pair)
     val half = s"$dir/half"
     re.postings.write.mode(mode).parquet(s"$half/postings")
@@ -988,14 +994,16 @@ class TextAnalysisSpec extends SparkSpec {
     re.capped.get.write.mode(mode).parquet(s"$half/capped")
     goodMeta.withColumn("n_capped", lit(null).cast("long"))
       .write.mode(mode).parquet(s"$half/meta")
-    intercept[IllegalArgumentException](
+    val eHalf = intercept[IllegalArgumentException](
       TextAnalysis.sparseIndexLoad(spark, half))
+    assert(eHalf.getMessage == s"requirement failed: $half/meta: cap/n_capped " +
+      "must travel together, got cap=Some(2) n_capped=None")
     // the case-class invariants themselves
     intercept[IllegalArgumentException](
-      TextAnalysis.SparseIndex(idx.postings, "tfidf", 1, 1.0, None, None,
+      TextAnalysis.SparseIndex(idx.postings, TextAnalysis.Tfidf, 1, 1.0,
         nDocs = 4L, vocab = idx.vocab, cap = Some(2), capped = None))
     intercept[IllegalArgumentException](
-      TextAnalysis.SparseIndex(idx.postings, "tfidf", 1, 1.0, None, None,
+      TextAnalysis.SparseIndex(idx.postings, TextAnalysis.Tfidf, 1, 1.0,
         nDocs = 0L, vocab = idx.vocab))
 
     // re-saving an UNCAPPED index over a directory that previously held
@@ -1057,11 +1065,11 @@ class TextAnalysisSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("sparseidx").toString
 
     val idx = TextAnalysis.sparseIndexBuild(corpus, "doc_id", "text",
-      weighting = "bm25", minDf = 2)
+      weighting = TextAnalysis.Bm25(), minDf = 2)
     TextAnalysis.sparseIndexSave(idx, dir)
     val re = TextAnalysis.sparseIndexLoad(spark, dir)
-    assert(re.weighting == "bm25" && re.minDf == 2 && re.maxDfFrac == 1.0)
-    assert(re.k1 == Some(1.2) && re.b == Some(0.75))
+    assert(re.minDf == 2 && re.maxDfFrac == 1.0)
+    assert(re.weighting == TextAnalysis.Bm25(1.2, 0.75))
     def rows(p: org.apache.spark.sql.DataFrame) = p
       .collect().map(r => (r.getLong(0), r.getString(1),
         r.getAs[java.math.BigDecimal]("weight").doubleValue)).toSet
@@ -1080,32 +1088,93 @@ class TextAnalysisSpec extends SparkSpec {
     TextAnalysis.sparseIndexSave(
       TextAnalysis.sparseIndexBuild(corpus, "doc_id", "text", minDf = 2), tdir)
     val tre = TextAnalysis.sparseIndexLoad(spark, tdir)
-    assert(tre.weighting == "tfidf" && tre.k1.isEmpty && tre.b.isEmpty)
+    assert(tre.weighting == TextAnalysis.Tfidf)
+    assert(spark.read.parquet(s"$tdir/meta").select("weighting", "k1", "b")
+      .collect().map(_.toSeq).toSeq == Seq(Seq("tfidf", null, null)))
 
-    // refusals: unknown weighting at build; tampered counts, double
-    // meta row, and wrong posting schema at load
-    intercept[IllegalArgumentException](
-      TextAnalysis.sparseIndexBuild(corpus, "doc_id", "text", weighting = "lsa"))
+    // refusals at load, each over an otherwise complete directory: a
+    // weighting meta cannot state, tampered counts, a double meta row
+    // and a wrong posting schema
     val mode = org.apache.spark.sql.SaveMode.Overwrite
     val goodMeta = spark.read.parquet(s"$dir/meta")
-    goodMeta.withColumn("n_postings",
-        org.apache.spark.sql.functions.lit(99L)).write.mode(mode)
-      .parquet(s"$dir/meta2")
-    val tampered = s"$dir/tampered"
-    re.postings.write.mode(mode).parquet(s"$tampered/postings")
-    spark.read.parquet(s"$dir/meta2").write.mode(mode).parquet(s"$tampered/meta")
-    intercept[IllegalArgumentException](
-      TextAnalysis.sparseIndexLoad(spark, tampered))
-    val doubled = s"$dir/doubled"
-    re.postings.write.mode(mode).parquet(s"$doubled/postings")
-    goodMeta.union(goodMeta).write.mode(mode).parquet(s"$doubled/meta")
-    intercept[IllegalArgumentException](
-      TextAnalysis.sparseIndexLoad(spark, doubled))
-    val badSchema = s"$dir/badschema"
-    re.postings.withColumnRenamed("token", "term").write.mode(mode)
-      .parquet(s"$badSchema/postings")
-    goodMeta.write.mode(mode).parquet(s"$badSchema/meta")
-    intercept[IllegalArgumentException](
-      TextAnalysis.sparseIndexLoad(spark, badSchema))
+    def refused(name: String, meta: org.apache.spark.sql.DataFrame,
+                postings: org.apache.spark.sql.DataFrame = re.postings): (String, String) = {
+      val d = s"$dir/$name"
+      postings.write.mode(mode).parquet(s"$d/postings")
+      re.vocab.write.mode(mode).parquet(s"$d/vocab")
+      meta.write.mode(mode).parquet(s"$d/meta")
+      (d, intercept[IllegalArgumentException](TextAnalysis.sparseIndexLoad(spark, d)).getMessage)
+    }
+    val (lsa, eLsa) = refused("lsa", goodMeta.withColumn("weighting", lit("lsa")))
+    assert(eLsa == s"""$lsa/meta must state weighting "tfidf" without k1/b or "bm25" """ +
+      "with both, got weighting=lsa k1=Some(1.2) b=Some(0.75)", eLsa)
+    val (halfK, eHalfK) = refused("half_k1b",
+      goodMeta.withColumn("b", lit(null).cast("double")))
+    assert(eHalfK.startsWith(s"$halfK/meta must state weighting") &&
+      eHalfK.endsWith("got weighting=bm25 k1=Some(1.2) b=None"), eHalfK)
+    val (tampered, eTampered) = refused("tampered",
+      goodMeta.withColumn("n_postings", lit(99L)))
+    assert(eTampered == "requirement failed: meta says 99 postings but " +
+      s"$tampered/postings holds ${re.postings.count()}", eTampered)
+    val (doubled, eDoubled) = refused("doubled", goodMeta.union(goodMeta))
+    assert(eDoubled == s"requirement failed: $doubled/meta must hold exactly one row, got 2",
+      eDoubled)
+    val (badSchema, eBadSchema) = refused("badschema", goodMeta,
+      postings = re.postings.withColumnRenamed("token", "term"))
+    assert(eBadSchema.startsWith(
+      s"requirement failed: $badSchema/postings must hold (doc_id, token, weight), got "),
+      eBadSchema)
+  }
+
+  test("sparseIndexBuild refuses cap < 1 before any Spark job") {
+    val corpus = Seq((0L, "apple banana"), (1L, "apple cherry")).toDF("doc_id", "text")
+    var err: Option[Throwable] = None
+    val jobs = jobsRunBy {
+      err = scala.util.Try(TextAnalysis.sparseIndexBuild(corpus, "doc_id", "text",
+        cap = Some(0))).failed.toOption
+    }
+    assert(err.exists(_.getMessage == "requirement failed: cap must be >= 1, got 0"), err)
+    assert(jobs.isEmpty, s"ran before refusing: ${jobs.mkString("; ")}")
+  }
+
+  test("sparseIndexLoad names the torn relation of a partial directory") {
+    val corpus = Seq(
+      (0L, "apple banana apple"),
+      (1L, "apple cherry"),
+      (2L, "banana cherry"),
+      (3L, "apple banana")).toDF("doc_id", "text")
+    val idx = TextAnalysis.sparseIndexBuild(corpus, "doc_id", "text", minDf = 2)
+    val capped = TextAnalysis.sparseIndexBuild(corpus, "doc_id", "text", minDf = 2,
+      cap = Some(2))
+    def rm(f: java.io.File): Unit = {
+      Option(f.listFiles).foreach(_.foreach(rm))
+      f.delete()
+    }
+    def files(dir: String) =
+      Option(new java.io.File(dir).listFiles).toSeq.flatten.filter(_.isFile)
+    // (case, capped save, how the directory is torn, the message's start)
+    val cases: Seq[(String, Boolean, String => Unit, String => String)] = Seq(
+      ("no postings/", false, d => rm(new java.io.File(s"$d/postings")),
+        d => s"$d/postings is missing"),
+      ("no vocab/", false, d => rm(new java.io.File(s"$d/vocab")), d => s"$d/vocab is missing"),
+      ("no meta/", false, d => rm(new java.io.File(s"$d/meta")), d => s"$d/meta is missing"),
+      ("a capped meta without capped/", true, d => rm(new java.io.File(s"$d/capped")),
+        d => s"$d/capped is missing"),
+      ("postings/ without a parquet file", false, d => files(s"$d/postings").foreach(rm),
+        d => s"$d/postings holds no parquet file"),
+      ("vocab/ without a parquet file", false, d => files(s"$d/vocab").foreach(rm),
+        d => s"$d/vocab holds no parquet file"),
+      ("meta/ without a parquet file", false, d => files(s"$d/meta").foreach(rm),
+        d => s"$d/meta holds no parquet file"),
+      ("capped/ without a parquet file", true, d => files(s"$d/capped").foreach(rm),
+        d => s"$d/capped holds no parquet file"))
+    for ((name, isCapped, tear, relation) <- cases) {
+      val dir = java.nio.file.Files.createTempDirectory("graft-sparse-torn-").toString
+      TextAnalysis.sparseIndexSave(if (isCapped) capped else idx, dir)
+      tear(dir)
+      val e = intercept[IllegalArgumentException](TextAnalysis.sparseIndexLoad(spark, dir))
+      assert(e.getMessage == s"requirement failed: ${relation(dir)} — a torn directory",
+        s"$name: ${e.getMessage}")
+    }
   }
 }
