@@ -6,7 +6,7 @@ import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions.col
 
 import graft.engine._
-import graft.sources.ScoreStore
+import graft.sources.{ChangeLog, ScoreStore}
 
 /** The reference's CLI surface (cli.py:27-163) re-expressed over the engine:
   *
@@ -155,10 +155,16 @@ object EpssCli {
       s""""skipped": ${feeds.size - ingested.size}}""")
   }
 
-  private def scores(spark: SparkSession, a: Args, consoleCapRows: Int): Unit = {
+  /** `scores`, answered and written to its sink; returns how it was
+    * answered. An unfiltered quantize (no `--cve`, epss or percentile
+    * bound, no `--no-drop-unchanged`) is served from the store's
+    * [[ChangeLog]]; every other request, and a quantize over a store the
+    * log cannot be written to, from the store's dense rows.
+    */
+  private[graft] def scores(spark: SparkSession, a: Args, consoleCapRows: Int): ChangeLog.Served = {
     val store = a.one("store").getOrElse(sys.error("--store required"))
-    val latest = ScoreStore.maxDate(spark, store)
-      .getOrElse(sys.error(s"empty store: $store"))
+    val listing = ScoreStore.list(spark, store)
+    val latest = ScoreStore.maxDate(listing).getOrElse(sys.error(s"empty store: $store"))
     val date = a.one("date").map(LocalDate.parse)
     // model-epoch inclusion flags (cli.py include_v{1,2,3}_scores):
     // requested ranges clamp to the selected epoch window
@@ -183,13 +189,14 @@ object EpssCli {
     // (cli.py: --drop-unchanged/--no-drop-unchanged, default=True);
     // changedScores' own O1 sort is dropped by the optimizer under either
     // sink's sort, so every sink sorts once, in DisplayOrder
-    val unordered =
+    def windowed = Changes.changedScores(
+      ScoreStore.readWithBaseline(spark, listing, min, max).transform(q.filter),
+      minDate = Some(min)) -> ChangeLog.Served.Window
+    val (unordered, served) =
       if (a.flag("no-drop-unchanged"))
-        ScoreStore.read(spark, store, min, max).transform(q.filter)
-      else
-        Changes.changedScores(
-          ScoreStore.readWithBaseline(spark, store, min, max).transform(q.filter),
-          minDate = Some(min))
+        ScoreStore.read(spark, listing, min, max).transform(q.filter) -> ChangeLog.Served.Window
+      else if (q == EpssQuery()) ChangeLog.quantize(spark, listing, min, max).getOrElse(windowed)
+      else windowed
     def ordered = unordered.orderBy(DisplayOrder: _*)
     val fmt = a.one("output").map(p => graft.sources.IO.formatOf(p, a.one("output-format")))
       .orElse(a.one("output-format"))
@@ -203,6 +210,7 @@ object EpssCli {
       case (Some(path), f) => Outputs.write(unordered, path, f.getOrElse("parquet"), DisplayOrder)
       case (None, f) => Outputs.printConsole(ordered, f, consoleCapRows)
     }
+    served
   }
 
   def main(argv: Array[String]): Unit = {

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 
 import graft.engine.{Changes, Outputs}
-import graft.sources.ScoreStore
+import graft.sources.{ChangeLog, ScoreStore}
 
 /** Baseline-scale self-check: synthesize an EPSS-shaped dense matrix at the
   * reference's published workload size (NOTES.md:38 — 68.9M rows: ~300k
@@ -15,8 +15,12 @@ import graft.sources.ScoreStore
   * the full window: the change log written as one sorted parquet file
   * through the CLI's file sink. `scale_quantize_store` serves the same
   * change log from the `ScoreStore` layout (one `date=` dir per day) read
-  * through `ScoreStore.readWithBaseline`, as `scores` does. The two
-  * `count()` legs stay for continuity with earlier runs.
+  * through `ScoreStore.readWithBaseline` (the window path).
+  * `scale_quantize_store_build` and `scale_quantize_store_log` send the
+  * same request through `scores`, which serves it from the store's change
+  * log: the first builds the log, the second reads it; both report the
+  * log's bytes as a share of the store's `date=` bytes. The two `count()`
+  * legs stay for continuity with earlier runs.
   *
   * Usage: runMain graft.ScaleBench [nCves] [nDays] [workDir]
   */
@@ -76,6 +80,31 @@ object ScaleBench {
     val changedQ = spark.read.parquet(served2).count()
     require(changedQ == changed, s"store change log disagrees: $changedQ vs $changed")
     println(f"""{"metric":"scale_quantize_store","dense_rows":$rows,"changed_rows":$changedQ,"value":$secsQ%.2f,"unit":"sec","rows_per_sec":${(rows / secsQ).toLong}}""")
+
+    // ── the same request through `scores`, which serves it from the
+    // store's change log: the first request builds the log, the second
+    // reads it
+    val storeFs = new org.apache.hadoop.fs.Path(store).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    storeFs.delete(new org.apache.hadoop.fs.Path(store, ChangeLog.Dir), true) // a log of an earlier run
+    def bytes(p: org.apache.hadoop.fs.Path): Long = {
+      val it = storeFs.listFiles(p, true)
+      Iterator.continually(it).takeWhile(_.hasNext).map(_.next().getLen).sum
+    }
+    for ((leg, expected) <- Seq("build" -> ChangeLog.Served.Rebuilt, "log" -> ChangeLog.Served.Log)) {
+      val out = s"$work/changes_store_$leg.parquet"
+      val t = System.nanoTime()
+      val how = EpssCli.scores(spark, EpssCli.parseArgs(Seq("scores", "--store", store,
+        "-a", first.toString, "-b", first.plusDays(nDays - 1).toString, "--output", out))._2,
+        Outputs.DriverMaxRows)
+      val secsL = (System.nanoTime() - t) / 1e9
+      require(how == expected, s"$leg leg served by ${how.name}")
+      val changedL = spark.read.parquet(out).count()
+      require(changedL == changed, s"$leg leg change log disagrees: $changedL vs $changed")
+      val logBytes = bytes(new org.apache.hadoop.fs.Path(store, ChangeLog.Dir))
+      val storeBytes = storeFs.listStatus(new org.apache.hadoop.fs.Path(store))
+        .filter(_.getPath.getName.startsWith("date=")).map(s => bytes(s.getPath)).sum
+      println(f"""{"metric":"scale_quantize_store_$leg","dense_rows":$rows,"changed_rows":$changedL,"value":$secsL%.2f,"unit":"sec","rows_per_sec":${(rows / secsL).toLong},"log_bytes":$logBytes,"store_bytes":$storeBytes,"log_share":${logBytes.toDouble / storeBytes}%.4f}""")
+    }
 
     // ── bucketed layout: the window's hash distribution on `cve` is
     // satisfied by the bucketing, so quantization runs with NO exchange —

@@ -51,6 +51,27 @@ object Changes {
       .orderBy(col(Schemas.Date).asc, col(Schemas.Cve).desc)           // O1 intent
   }
 
+  /** The column of a change-log row that holds its CVE's previous date. */
+  val PrevDate = "prev_date"
+
+  /** The change log's one window pass over score rows (`date, cve, epss`,
+    * any more columns ride along), in the window [[changedRows]] runs: the
+    * rows whose epss differs from their CVE's previous row, flagged
+    * `changed` and stamped with that row's date as [[PrevDate]], and each
+    * CVE's last row, flagged `last`. A row may be both; every other row is
+    * dropped. The change test is [[changedRows]]' `epss − prev ≠ 0`, so a
+    * CVE's first row is never a change, and quantizing `[a, b]` is the
+    * changed rows with `date ∈ [a, b]` and `prev_date ≥ a − 1`.
+    */
+  def changeLogPass(df: DataFrame): DataFrame = {
+    val w = Window.partitionBy(Schemas.Cve).orderBy(Schemas.Date)
+    df.withColumn(PrevDate, lag(col(Schemas.Date), 1).over(w))
+      .withColumn("changed",
+        coalesce(col(Schemas.Epss) - lag(col(Schemas.Epss), 1).over(w) =!= 0, lit(false)))
+      .withColumn("last", lead(col(Schemas.Date), 1).over(w).isNull)
+      .filter(col("changed") || col("last"))
+  }
+
   /** Direct diff of two specific snapshots (the reference's pairwise
     * `get_changed_scores(a, b)` shape, client.py:453-475, as an explicit
     * API): rows of day `b` whose value differs from day `a`, plus day-`b`

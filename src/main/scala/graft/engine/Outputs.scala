@@ -69,8 +69,27 @@ object Outputs {
   def writeJsonArray(df: DataFrame, path: String, maxRows: Int = DriverMaxRows): Unit = {
     val rows = fetchBounded(df, maxRows, "writeJsonArray", "format=jsonl")(
       _.toJSON.collect())
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(path),
-      rows.mkString("[", ",", "]"))
+    writeDriverFile(df, path)(_.write(rows.mkString("[", ",", "]").getBytes("UTF-8")))
+  }
+
+  /** Write `path` from the driver through its Hadoop FileSystem, as every
+    * other sink does, so `file:`, hdfs:// and s3a:// paths work the same as
+    * plain ones. Checksum sidecars are disabled so a local write yields
+    * report.xlsx, not a stray .report.xlsx.crc next to it (LocalFileSystem
+    * is a ChecksumFileSystem). A PRIVATE FileSystem instance takes the
+    * setting: FileSystem.get returns the JVM-wide cached instance, and
+    * flipping writeChecksum on it would silently disable checksums for
+    * every later write through that FileSystem.
+    */
+  private def writeDriverFile(df: DataFrame, path: String)(body: java.io.OutputStream => Unit): Unit = {
+    val hp = new org.apache.hadoop.fs.Path(path)
+    val fs = org.apache.hadoop.fs.FileSystem.newInstance(hp.toUri,
+      df.sparkSession.sparkContext.hadoopConfiguration)
+    try {
+      fs.setWriteChecksum(false)
+      val out = fs.create(hp, true)
+      try body(out) finally out.close()
+    } finally fs.close()
   }
 
   /** S8 Excel sink — a REAL driver-side xlsx writer, twin of the
@@ -88,21 +107,6 @@ object Outputs {
   def writeExcel(df: DataFrame, path: String, maxRows: Int = DriverMaxRows): Unit = {
     require(path.endsWith(".xlsx"), s"excel sink expects an .xlsx path, got $path")
     val rows = fetchBounded(df, maxRows, "writeExcel", "parquet/csv")(_.collect())
-    // through the Hadoop FS like every other sink, so hdfs:// / s3a://
-    // output paths work the same as local ones; checksum sidecars are
-    // disabled so a local write yields report.xlsx, not a stray
-    // .report.xlsx.crc next to it (LocalFileSystem is a ChecksumFileSystem).
-    // A PRIVATE FileSystem instance takes the setting: FileSystem.get
-    // returns the JVM-wide cached instance, and flipping writeChecksum on
-    // it would silently disable checksums for every later write through
-    // that FileSystem, this sink included among strangers
-    val hp = new org.apache.hadoop.fs.Path(path)
-    val fs = org.apache.hadoop.fs.FileSystem.newInstance(hp.toUri,
-      df.sparkSession.sparkContext.hadoopConfiguration)
-    try {
-      fs.setWriteChecksum(false)
-      val out = fs.create(hp, true)
-      try Xlsx.write(out, df.schema, rows) finally out.close()
-    } finally fs.close()
+    writeDriverFile(df, path)(Xlsx.write(_, df.schema, rows))
   }
 }

@@ -21,7 +21,7 @@ import graft.engine.Schemas
   * util.py:242-247).
   *
   * Listing contract: the days a store holds are the `date=` directory names
-  * of ONE Hadoop-FS `listStatus` of `root` on the driver ([[days]]). That
+  * of ONE Hadoop-FS `listStatus` of `root` on the driver ([[list]]). That
   * listing alone answers [[maxDate]], picks the directories [[read]] scans
   * and is [[ingestMany]]'s skip-if-present set, so the three cannot
   * disagree. A missing root holds no days; a `date=` name that is not an
@@ -33,28 +33,36 @@ object ScoreStore {
 
   private val DatePattern = "(\\d{4}-\\d{2}-\\d{2})"
 
-  /** The store's days with their partition directories, ascending. Runs no
-    * Spark job. Uses the store path's Hadoop FileSystem, not java.io, which
-    * sees nothing on hdfs:// or s3a://.
+  /** One driver-side listing of a store root: its days with their partition
+    * directories, ascending, and the root's Hadoop FileSystem. [[maxDate]],
+    * [[read]] and the [[ChangeLog]]'s validation all take this value, so a
+    * `scores` request lists the root once.
     */
-  private def days(spark: SparkSession, root: String): Seq[(LocalDate, Path)] = {
+  final case class Listing(root: String, fs: FileSystem, days: Seq[(LocalDate, Path)])
+
+  /** List the store root once. Runs no Spark job. Uses the store path's
+    * Hadoop FileSystem, not java.io, which sees nothing on hdfs:// or s3a://.
+    */
+  def list(spark: SparkSession, root: String): Listing = {
     val rootPath = new Path(root)
     val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(rootPath)) Seq.empty
-    else fs.listStatus(rootPath).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("date="))
-      .map { s =>
-        val name = s.getPath.getName
-        val day = Try(LocalDate.parse(name.stripPrefix("date="))).getOrElse(
-          throw new IllegalArgumentException(
-            s"store $root: partition dir $name is not date=YYYY-MM-DD"))
-        day -> s.getPath
-      }
-      .sortBy(_._1.toEpochDay)
+    val days =
+      if (!fs.exists(rootPath)) Seq.empty
+      else fs.listStatus(rootPath).toSeq
+        .filter(s => s.isDirectory && s.getPath.getName.startsWith("date="))
+        .map { s =>
+          val name = s.getPath.getName
+          val day = Try(LocalDate.parse(name.stripPrefix("date="))).getOrElse(
+            throw new IllegalArgumentException(
+              s"store $root: partition dir $name is not date=YYYY-MM-DD"))
+          day -> s.getPath
+        }
+        .sortBy(_._1.toEpochDay)
+    Listing(root, fs, days)
   }
 
   /** Read the store over [min, max]. The scan is built from the driver's
-    * listing alone: [[days]] picks the in-window `date=` directories, each
+    * listing alone: [[list]] picks the in-window `date=` directories, each
     * is listed once more on the driver for its data files, and the frame is
     * a parquet scan over exactly those files with the fixed
     * [[Schemas.storeSchema]], so building it infers no schema and runs no
@@ -69,30 +77,34 @@ object ScoreStore {
     * list more than 32 directories in a parallel job. A window with no
     * partitions yields an empty frame with the canonical columns and types.
     */
-  def read(spark: SparkSession, root: String, min: LocalDate, max: LocalDate): DataFrame = {
-    val dirs = days(spark, root).collect {
-      case (d, p) if !d.isBefore(min) && !d.isAfter(max) => p
+  def read(spark: SparkSession, listing: Listing, min: LocalDate, max: LocalDate): DataFrame = {
+    val dirs = listing.days.collect {
+      case (d, p) if !d.isBefore(min) && !d.isAfter(max) => p -> dataFiles(listing, p)
     }
-    val scan =
-      if (dirs.isEmpty) spark.createDataFrame(java.util.List.of[Row](), Schemas.storeSchema)
-      else {
-        val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-        ListedParquet(spark, new Path(root), dirs.map(dir => dir -> dataFiles(fs, root, dir)),
-          Schemas.storeSchema)
-      }
-    scan
+    scan(spark, listing, dirs)
       .filter(col(Schemas.Date).between(
         lit(java.sql.Date.valueOf(min)), lit(java.sql.Date.valueOf(max))))
       .select(Schemas.scoreColumns.map(col): _*)
   }
 
+  def read(spark: SparkSession, root: String, min: LocalDate, max: LocalDate): DataFrame =
+    read(spark, list(spark, root), min, max)
+
+  /** A parquet scan of `files` (`date=` directory → its data files) with
+    * [[Schemas.storeSchema]]; an empty frame with those columns for none.
+    */
+  private[sources] def scan(spark: SparkSession, listing: Listing,
+                            files: Seq[(Path, Seq[FileStatus])]): DataFrame =
+    if (files.isEmpty) spark.createDataFrame(java.util.List.of[Row](), Schemas.storeSchema)
+    else ListedParquet(spark, new Path(listing.root), files, Schemas.storeSchema)
+
   /** The data files of one `date=` directory; see [[read]] for the rule. */
-  private def dataFiles(fs: FileSystem, root: String, dir: Path): Seq[FileStatus] = {
-    val (subdirs, files) = fs.listStatus(dir).toSeq
+  private[sources] def dataFiles(listing: Listing, dir: Path): Seq[FileStatus] = {
+    val (subdirs, files) = listing.fs.listStatus(dir).toSeq
       .filterNot(s => s.getPath.getName.startsWith("_") || s.getPath.getName.startsWith("."))
       .partition(_.isDirectory)
     require(subdirs.isEmpty,
-      s"store $root: ${dir.getName} holds directory ${subdirs.head.getPath.getName}; " +
+      s"store ${listing.root}: ${dir.getName} holds directory ${subdirs.head.getPath.getName}; " +
         "a date= dir holds only data files")
     files
   }
@@ -101,8 +113,11 @@ object ScoreStore {
     * first requested day has a diff baseline (intent of client.py:213-214,
     * SURVEY.md §2.13.1).
     */
+  def readWithBaseline(spark: SparkSession, listing: Listing, min: LocalDate, max: LocalDate): DataFrame =
+    read(spark, listing, min.minusDays(1), max)
+
   def readWithBaseline(spark: SparkSession, root: String, min: LocalDate, max: LocalDate): DataFrame =
-    read(spark, root, min.minusDays(1), max)
+    readWithBaseline(spark, list(spark, root), min, max)
 
   /** Write snapshots into the partitioned layout. Dynamic overwrite keeps
     * re-ingest of one day idempotent without clobbering other partitions —
@@ -176,14 +191,14 @@ object ScoreStore {
       .select(Schemas.scoreColumns.map(col): _*)
 
   /** S2: bulk idempotent ingest — fan one-day CSV ingests across a date
-    * range, skipping dates whose partition already exists in [[days]] (the
+    * range, skipping dates whose partition already exists in [[list]] (the
     * store-level twin of the reference's exists-check skip,
     * client.py:126-161). The per-file work is Spark-parallel; the loop is
     * driver-side control only.
     */
   def ingestMany(spark: SparkSession, root: String,
                  files: Seq[(LocalDate, String)]): Seq[LocalDate] = {
-    val done = days(spark, root).map(_._1).toSet
+    val done = list(spark, root).days.map(_._1).toSet
     files.filterNot { case (d, _) => done.contains(d) }.map { case (d, path) =>
       write(ingestCsv(spark, path, d), root)
       d
@@ -192,9 +207,10 @@ object ScoreStore {
 
   /** Max date present in the store — the offline twin of the reference's
     * network max-date discovery (client.py:386-402; SURVEY.md §7.6.4): the
-    * last day of the [[days]] listing, with no Spark job. None for a missing
+    * last day of the [[list]] listing, with no Spark job. None for a missing
     * or empty store.
     */
-  def maxDate(spark: SparkSession, root: String): Option[LocalDate] =
-    days(spark, root).lastOption.map(_._1)
+  def maxDate(listing: Listing): Option[LocalDate] = listing.days.lastOption.map(_._1)
+
+  def maxDate(spark: SparkSession, root: String): Option[LocalDate] = maxDate(list(spark, root))
 }

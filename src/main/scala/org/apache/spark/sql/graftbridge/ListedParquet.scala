@@ -4,7 +4,7 @@ import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
+import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex, PartitionSpec}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types.StructType
 
@@ -25,10 +25,20 @@ object ListedParquet {
     * seeded listing, and Spark then lists the directories itself.
     */
   def apply(spark: SparkSession, basePath: Path, files: Seq[(Path, Seq[FileStatus])],
-            schema: StructType): DataFrame = {
-    val options = Map("basePath" -> basePath.toString)
+            schema: StructType): DataFrame =
+    scan(spark, files, schema, Map("basePath" -> basePath.toString), None)
+
+  /** Scan `files` as plain data files with `schema`: their directories name
+    * no partition columns, so files of unrelated directories share one scan.
+    */
+  def files(spark: SparkSession, files: Seq[FileStatus], schema: StructType): DataFrame =
+    scan(spark, files.groupBy(_.getPath.getParent).toSeq, schema, Map.empty,
+      Some(PartitionSpec.emptySpec))
+
+  private def scan(spark: SparkSession, files: Seq[(Path, Seq[FileStatus])], schema: StructType,
+                   options: Map[String, String], partitions: Option[PartitionSpec]): DataFrame = {
     val index = new InMemoryFileIndex(spark, files.map(_._1), options, Some(schema),
-      new ListingCache(files))
+      new ListingCache(files), partitions)
     val partitionSchema = index.partitionSchema
     val dataSchema = StructType(schema.filterNot(f => partitionSchema.fieldNames.contains(f.name)))
     val relation = HadoopFsRelation(index, partitionSchema, dataSchema.asNullable,

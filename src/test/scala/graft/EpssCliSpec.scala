@@ -3,8 +3,8 @@ package graft
 import java.nio.file.Files
 import java.sql.Date
 
-import graft.engine.Score
-import graft.sources.{IO, ScoreStore}
+import graft.engine.{Outputs, Score}
+import graft.sources.{ChangeLog, IO, ScoreStore, SpecFs}
 
 /** CLI surface (cli.py:27-163 twin): scores / urls / date-range. */
 class EpssCliSpec extends SparkSpec {
@@ -114,9 +114,14 @@ class EpssCliSpec extends SparkSpec {
     val dataFiles = new java.io.File(root).listFiles().filter(_.getName.startsWith("date="))
       .flatMap(_.listFiles()).count(f => f.isFile && !f.getName.startsWith(".") && !f.getName.startsWith("_"))
     val out = s"${Files.createTempDirectory("graft-cli-full-out-")}/scores.parquet"
+    // the window path: a store its change log cannot be written to
+    // (ChangeLogSpec and PlanSpec pin the log-served plan)
+    SpecFs.register(spark)
+    SpecFs.readOnly(root)
     val nodes = plansRunBy {
-      EpssCli.run(spark, Seq("scores", "--store", root, "-a", "2024-01-02", "-b", "2024-02-09",
-        "--output", out))
+      val served = EpssCli.scores(spark, EpssCli.parseArgs(Seq("scores", "--store", SpecFs.uri(root),
+        "-a", "2024-01-02", "-b", "2024-02-09", "--output", out))._2, Outputs.DriverMaxRows)
+      assert(served == ChangeLog.Served.Window)
     }.flatMap(planNodes)
     val scans = nodes.collect { case s: FileSourceScanExec => s }
     assert(scans.size == 1, s"one parquet scan, got ${scans.size}")
@@ -223,6 +228,34 @@ class EpssCliSpec extends SparkSpec {
     assert(txt.contains("\"date\":\"2024-01-02\""))
     // and it parses back as a 2-element array via the multiLine reader
     assert(IO.read(spark, p, Some("json")).count() == 2)
+  }
+
+  test("scores --output-format json writes through the Hadoop FileSystem: a file: URI works") {
+    val dir = Files.createTempDirectory("graft-json-uri-")
+    EpssCli.run(spark, Seq("scores", "--store", store, "-a", "2024-01-01", "-b", "2024-01-02",
+      "--no-drop-unchanged", "--output", s"file://$dir/out.json"))
+    val txt = Files.readString(dir.resolve("out.json"))
+    assert(txt.startsWith("[{") && txt.endsWith("}]"), txt)
+    assert(IO.read(spark, s"$dir/out.json", Some("json")).count() == 3)
+    assert(dir.toFile.list().toSeq == Seq("out.json"), "no checksum sidecar")
+  }
+
+  test("scores lists the store root once per request") {
+    SpecFs.register(spark)
+    val dense = for (k <- 0 until 5; i <- 0 until 4)
+      yield Score(d(s"2024-05-0${k + 1}"), s"CVE-$i", ((i + k) % 3) * 0.25, 0.5)
+    val local = s"${Files.createTempDirectory("graft-cli-list-")}/store"
+    ScoreStore.write(dense.toDF(), local)
+    val out = Files.createTempDirectory("graft-cli-list-out-")
+    val full = Seq("scores", "--store", SpecFs.uri(local), "-a", "2024-05-02", "-b", "2024-05-05")
+    for ((extra, i) <- Seq(Nil, Nil, Seq("--min-epss", "0.2"), Seq("--no-drop-unchanged"),
+           Seq("--cve", "CVE-1"), Seq("--output-format", "json")).zipWithIndex) {
+      val before = SpecFs.listed(local)
+      val fmt = if (extra.contains("json")) "json" else "parquet"
+      EpssCli.run(spark, full ++ extra ++ Seq("--output", s"$out/r$i.$fmt"))
+      assert(SpecFs.listed(local) - before == 1, s"request $extra listed the root " +
+        s"${SpecFs.listed(local) - before} times")
+    }
   }
 
   private def zipPart(path: String, part: String): String = {

@@ -1766,4 +1766,61 @@ class PlanSpec extends SparkSpec {
     // when capped, count capped — never the postings
     assert(saves == Map(None -> 4, Some(25) -> 7))
   }
+
+  test("scores census: a log-served quantize reads the log and exchanges once; other requests keep the window plan") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SortExec}
+    import graft.engine.{Outputs, Score}
+    import graft.sources.{ChangeLog, ScoreStore, SpecFs}
+    import spark.implicits._
+    val dense = for (k <- 0 until 40; i <- 0 until 6) yield {
+      val e = ((i + k * (i % 2)) % 3) * 0.25
+      Score(java.sql.Date.valueOf(java.time.LocalDate.parse("2024-01-01").plusDays(k)), s"CVE-$i", e, e)
+    }
+    val tmp = java.nio.file.Files.createTempDirectory("graft-scores-census-")
+    val (root, frozen) = (s"$tmp/store", s"$tmp/frozen")
+    Seq(root, frozen).foreach(ScoreStore.write(dense.toDF(), _))
+    SpecFs.register(spark)
+    // (served, jobs, scans, windows, shuffle exchanges, sorts) of one request
+    def census(store: String, extra: String*): (ChangeLog.Served, Int, Int, Int, Int, Int) = {
+      var served: ChangeLog.Served = null
+      var jobs = 0
+      val nodes = plansRunBy {
+        jobs = jobsRunBy {
+          served = EpssCli.scores(spark, EpssCli.parseArgs(Seq("scores", "--store", store,
+            "-a", "2024-01-02", "-b", "2024-02-09", "--output",
+            s"${java.nio.file.Files.createTempDirectory(tmp, "out-")}/o.parquet") ++ extra)._2,
+            Outputs.DriverMaxRows)
+        }.size
+      }.flatMap(planNodes)
+      (served, jobs, nodes.count(_.isInstanceOf[FileSourceScanExec]), nodes.count(_.isInstanceOf[WindowExec]),
+        nodes.count(_.isInstanceOf[ShuffleExchangeExec]), nodes.count(_.isInstanceOf[SortExec]))
+    }
+    census(root) // builds the log
+    // a stale log over a store it cannot be written to: a covered day
+    // changes after the log was built, then writes are refused
+    census(SpecFs.uri(frozen))
+    ScoreStore.write(dense.filter(_.date == java.sql.Date.valueOf("2024-01-15"))
+      .map(r => r.copy(epss = 1 - r.epss)).toDF(), frozen)
+    SpecFs.readOnly(frozen)
+    val logNodes = plansRunBy {
+      EpssCli.run(spark, Seq("scores", "--store", root, "-a", "2024-01-02", "-b", "2024-02-09",
+        "--output", s"$tmp/log-served.parquet"))
+    }.flatMap(planNodes)
+    assert(!logNodes.exists(_.isInstanceOf[WindowExec]), "a log-served quantize runs a window")
+    val exchanges = logNodes.collect { case e: ShuffleExchangeExec => e.outputPartitioning.numPartitions }
+    assert(exchanges == Seq(1), s"exchanges of a log-served quantize: $exchanges")
+    val got = Seq(
+      "log" -> census(root),
+      "min-epss" -> census(root, "--min-epss", "0.2"),
+      "no-drop-unchanged" -> census(root, "--no-drop-unchanged"),
+      "stale, read-only" -> census(SpecFs.uri(frozen)))
+    // the parent commit ran (jobs, scans, windows, exchanges, sorts) =
+    // (3, 1, 1, 2, 2) for the quantize and --min-epss requests and
+    // (2, 1, 0, 1, 1) for --no-drop-unchanged
+    assert(got.toMap == Map(
+      "log" -> (ChangeLog.Served.Log, 2, 1, 0, 1, 1),
+      "min-epss" -> (ChangeLog.Served.Window, 3, 1, 1, 2, 2),
+      "no-drop-unchanged" -> (ChangeLog.Served.Window, 2, 1, 0, 1, 1),
+      "stale, read-only" -> (ChangeLog.Served.Window, 3, 1, 1, 2, 2)), got)
+  }
 }

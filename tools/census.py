@@ -21,8 +21,6 @@ ALLOW = {  # survivor -> its one reason to stay
                      "ColumnBridge.applyExtensions"], "SURVEY 2.11 UDF surface"),
     "EventStreams.sessionWindows": "spec reference for q36's gaps-and-islands twin",
     "Similarity.lshBucketDeclarative": "spec reference for the LSH bucket kernel",
-    **dict.fromkeys(["ScoreStream.changedScoresStream", "ScoreStream.appendToStore",
-                     "ScoreStream.fromDirectory"], "ROADMAP item 6 decides its fate"),
     **dict.fromkeys(["Bucketing.writeBucketed", "ScoreStore.writeBucketedTable"],
                     "deferred: PlanSpec pins the bucketed join"),
     **dict.fromkeys(["Bucketing.zorderKey", "Bucketing.writeZOrdered"], "deferred: SURVEY 7.5 Z-order layout"),
